@@ -15,52 +15,12 @@ real regression from noise):
   * N_PASSES timed passes INTERLEAVED over the whole query list (a load
     spike hits one pass of many queries, not every rep of one query),
   * per-query "spread" [min, median, max] across passes in the output,
-  * a fixed CALIBRATION job (constant JVM-side work, no repo code) timed
-    once per pass — if calibration swings, the box was loaded and
-    cross-round deltas of similar size are noise by the artifact's own
-    evidence,
   * "extra" timings for alternate operator forms that are NOT part of
     the headline total (dedup_minhash_lsh hashed=True — the operator's
     scale default; the registered bench form is the measured-fastest
     local form, hashed=False — see plans/extension_queries.py).
 "value" remains sum of per-query minimums over the same 15 queries, so
 totals stay comparable with BENCH_r01..r03.
-
-Load normalization (r7, REVISED r8 — the r7 verdict showed the r7 model
-over-correcting): the r7 form, value × (CAL_REF / cal_min), assumed the
-WHOLE total scales with the probe; the two r7 measurements of the same
-build disproved that — driver box raw 7.309 s at load factor 1.69 vs
-quiet box raw 6.553 s at load 1.124 implies only ~20% of the total
-tracks the probe (Spark's per-stage scheduling floor is latency-, not
-throughput-bound, so background load hurts the probe's pure compute far
-more than the many near-idle stage gaps). r8 model: a two-point fit on
-that validated pair gives CAL_SENSITIVITY_SEC = (7.309 − 6.553) /
-(1.69 − 1.124) ≈ 1.336 s of headline total per unit load factor, and
-    value_calnorm = value − CAL_SENSITIVITY_SEC × (load_factor − 1)
-which maps BOTH r7 measurements to the same idle estimate (6.387 s,
-within 2.5% of the quiet-box raw — the r7 model's estimates disagreed
-by 26%). The payload carries the fit points (calnorm_model) so the
-model is auditable, and a band [value_calnorm_lower, value] where the
-lower edge is the old full-proportional form — the true idle total
-provably lies inside. Raw "value" stays the primary comparable series.
-The sensitivity is a property of THIS 15-query headline set on this
-box; refit if the set changes.
-
-REFIT (r9 — the set changed: q1's exact-integer rewrite): four runs of
-the CURRENT build in one round-9 session at different ambient/self-heat
-states fit the damped line at ~1.61 s/load (least squares; points in
-CAL_FIT_POINTS). Two findings from the same session bound the model's
-validity:
-  * the probe is LOAD-BLIND below ~1.6: a 16-busy-loop companion moved
-    NEITHER the probe nor the total on this 32-core box (stage gaps
-    absorb sub-half oversubscription), and a 10-loop run RAISED the
-    total while the probe read LOWER — single-probe load factors in
-    [1.0, 1.6] are indistinguishable from noise, so small cross-round
-    calnorm deltas are not evidence of anything;
-  * load CHARACTER matters: full 32-loop oversubscription scales the
-    total near-proportionally (slope ~7.6 s/load — excluded from the
-    fit as a different regime; ambient drift, the regime the driver
-    actually sees, is the damped ~1.6).
 """
 
 from __future__ import annotations
@@ -79,28 +39,6 @@ from etl_dashboard_project_1_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_PASSES = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
-
-#: pinned calibration reference: the r4 fully-idle run's calibration
-#: minimum (BENCH_r04.json "calibration_sec": [0.097, ...]) — the probe's
-#: cost on this box with nothing else running. cal_min/CAL_REF_SEC is the
-#: run's own load factor.
-CAL_REF_SEC = 0.097
-
-#: seconds of headline-total slowdown per unit load factor. r9 refit on
-#: the CURRENT headline set (the q1 exact-integer rewrite changed the
-#: set, so the r7 cross-box fit of 1.336 was extrapolation): least
-#: squares over four same-session runs of the same build at different
-#: ambient/self-heat states. A fifth run (raw 8.889 at probe 1.134,
-#: 10 busy loops) is EXCLUDED as a probe false-negative, and a 32-loop
-#: full-oversubscription run (slope ~7.6 s/load) as a different load
-#: regime — see the module docstring.
-CAL_SENSITIVITY_SEC = 1.606
-CAL_FIT_POINTS = [
-    {"raw_sec": 8.547, "load_factor": 1.969},
-    {"raw_sec": 7.383, "load_factor": 1.392},
-    {"raw_sec": 8.259, "load_factor": 1.608},
-    {"raw_sec": 8.249, "load_factor": 1.505},
-]
 
 # headline set: scan-agg, join-heavy, window, fuzzy, dedup sketches, text,
 # vector search, streaming-shaped — one per operator family
@@ -148,14 +86,6 @@ def _extra_queries(spark, sf_dir):
     return {"dedup_minhash_lsh_hashed": minhash_hashed}
 
 
-def _calibrate(spark) -> float:
-    """Fixed JVM-side probe: constant work, zero repo code, no shuffle
-    variance — wall-clock changes here are box load, nothing else."""
-    t0 = time.perf_counter()
-    force(spark.range(0, 100_000_000, 1, 32).selectExpr("sum(id % 97) AS s"))
-    return round(time.perf_counter() - t0, 3)
-
-
 def main() -> None:
     m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else None
@@ -186,13 +116,10 @@ def main() -> None:
         force(registry[name](spark, SF_DIR))
     for fn in extras.values():
         force(fn(spark, SF_DIR))
-    _calibrate(spark)
 
     samples: dict[str, list[float]] = {n: [] for n in HEADLINE}
     extra_samples: dict[str, list[float]] = {n: [] for n in extras}
-    calibration: list[float] = []
     for _ in range(N_PASSES):
-        calibration.append(_calibrate(spark))
         for name in HEADLINE:
             t0 = time.perf_counter()
             force(registry[name](spark, SF_DIR))
@@ -208,17 +135,6 @@ def main() -> None:
         for n, v in samples.items()
     }
     total = round(sum(timings.values()), 3)
-    cal_min = min(calibration)
-    # load factor ≥1 on a loaded box; clamp at 1 so an unusually fast probe
-    # can never inflate the normalized number below the raw measurement.
-    load_factor = max(cal_min / CAL_REF_SEC, 1.0)
-    # the damped linear fit is only validated near load factors [1.1, 1.7];
-    # far outside it the extrapolation can fall below the provable envelope
-    # (or below zero) — clamp the estimate into [full-proportional, raw]
-    calnorm = min(
-        max(total - CAL_SENSITIVITY_SEC * (load_factor - 1.0), total / load_factor),
-        total,
-    )
     print(
         json.dumps(
             {
@@ -229,25 +145,6 @@ def main() -> None:
                 "sf": sf,
                 "passes": N_PASSES,
                 "spread": spread,
-                "calibration_sec": calibration,
-                "calibration_ref_sec": CAL_REF_SEC,
-                "load_factor": round(load_factor, 3),
-                # damped linear model (see module docstring), clamped into
-                # the envelope: only the probe-correlated component of the
-                # total is removed
-                "value_calnorm": round(calnorm, 3),
-                # provable envelope: true idle total ∈ [full-proportional
-                # correction, raw]; the r7 full-proportional form is the
-                # lower edge
-                "value_calnorm_band": [
-                    round(total / load_factor, 3),
-                    total,
-                ],
-                "calnorm_model": {
-                    "form": "value - sensitivity * (load_factor - 1)",
-                    "sensitivity_sec_per_load": CAL_SENSITIVITY_SEC,
-                    "fit_points": CAL_FIT_POINTS,
-                },
                 "extra": {n: round(min(v), 3) for n, v in extra_samples.items()},
             }
         )

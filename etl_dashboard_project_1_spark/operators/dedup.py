@@ -363,7 +363,7 @@ def minhash_signatures(
     carry integer gram hashes (``hashed_word_shingles``) and feed the
     universal-hash transforms directly; otherwise string grams are md5'd
     ONCE here — either way no shingle is ever digested num_hashes times.
-    (Measured, tools/diag_minhash.py at sf0.1: the hashing+minhash slice
+    (Measured at sf0.1: the hashing+minhash slice
     is ~5% of the pipeline; the real cost was always gram-STRING
     construction, which hashed=True eliminates at the source.)"""
     ss = (
@@ -696,17 +696,24 @@ def duplicated_spans(
     """
     from pyspark.sql import Window
 
+    # Gram i is composed by a zip_with-shift fold (k-1 elementwise passes,
+    # O(k·len)), NOT transform(sequence(0, n-k), i -> slice(tokens, i, k)):
+    # in that form Catalyst collapses the split() projection into the
+    # lambda and re-tokenizes the whole document once per position —
+    # O(len²), a multi-minute stall on ~218k-char documents. The shifted
+    # tails pad with null and concat_ws skips nulls, so the last k-1 grams
+    # are short; the slice keeps only the n-k+1 full ones.
     w = tokens(text_col)
     n = F.size(w)
-    grams = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.array_join(F.slice(w, i + 1, k), " "),
-        ),
+    grams = w
+    for j in range(1, k):
+        shifted = F.slice(w, j + 1, F.greatest(n - j, F.lit(0)))
+        grams = F.zip_with(grams, shifted, lambda a, b: F.concat_ws(" ", a, b))
+    full = F.when(
+        n >= k, F.slice(grams, 1, F.greatest(n - (k - 1), F.lit(0)))
     ).otherwise(F.array().cast("array<string>"))
     pos_grams = df.select(
-        F.col(id_col).alias("_id"), F.posexplode(grams).alias("_pos", "_gram")
+        F.col(id_col).alias("_id"), F.posexplode(full).alias("_pos", "_gram")
     )
     dup = (
         pos_grams.groupBy("_gram")

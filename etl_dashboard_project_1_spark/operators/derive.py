@@ -150,6 +150,17 @@ def portable_round(col: Column | str, decimals: int) -> Column:
     return F.floor(c * F.lit(scale) + F.lit(0.5)) / F.lit(scale)
 
 
+def cents(col: Column | str) -> Column:
+    """Exact centi-units, ``floor(x*100 + 0.5)`` as BIGINT — the
+    portable_round form; F.round would half-round differently from
+    DuckDB's round on boundary values."""
+    return F.floor(_c(col) * 100 + F.lit(0.5)).cast("long")
+
+
+#: DuckDB spelling of ``cents`` — keep the two in sync.
+CENTS_SQL = "CAST(floor({x} * 100 + 0.5) AS BIGINT)"
+
+
 def numpy_round(col: Column | str, decimals: int) -> Column:
     """numpy/pandas-faithful rounding: ``rint(x * 10^n) / 10^n`` —
     half-even on the SCALED BINARY value, exactly what

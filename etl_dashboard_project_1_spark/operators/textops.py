@@ -501,45 +501,80 @@ def boilerplate_strip(
     """Corpus-level boilerplate removal (the C4/CCNet line-dedup shape,
     re-expressed for whitespace corpora): segment every document into
     non-overlapping ``seg_words``-token windows, find segments whose
-    document frequency exceeds ``max_df_frac`` of the corpus (headers,
+    document frequency is ≥ ``max_df_frac`` of the corpus (headers,
     footers, nav text — anything repeated verbatim across many pages),
     strip those segments from every document, and reassemble the
     remaining text in order.
 
-    Scale shape: one explode + one segment-keyed groupBy for document
-    frequencies; the boilerplate SET is then inherently tiny — a segment
-    needs df ≥ max_df_frac·N, so at most (segments-per-doc / max_df_frac)
-    segments can qualify REGARDLESS of corpus size — and broadcasts as a
-    one-row array. The rebuild is a map-only ``filter``/``concat_ws``
-    over each doc's own segment array: no second shuffle, no sort, order
-    preserved by construction (never ``collect_list`` + re-sort).
+    Scale shape: segments explode once with their position; document
+    frequencies ride one segment-keyed groupBy; the boiler set (at most
+    segments-per-doc / max_df_frac entries regardless of corpus size)
+    broadcasts into a hash LEFT join that marks occurrences at O(1) per
+    probe; one groupBy(id) reassembles in position order (array_sort
+    over (pos, seg, is_boiler) structs — no unpartitioned window, no
+    driver collect). Testing each segment with ``array_contains``
+    against a broadcast boiler ARRAY instead costs O(B) string compares
+    per segment (Spark array lookups are linear scans), which stalls a
+    single task for minutes on 20k-char documents; the hash join trades
+    that for one extra linear shuffle (the reassembly groupBy).
 
     Returns (id_col, text_clean, n_segments, n_removed).
     """
+    # Segmentation is stride-extraction + zip_with, NOT transform over
+    # start offsets with slice(split(text), i, k): in that form Catalyst
+    # collapses the split() projection INTO the lambda, re-tokenizing the
+    # whole document once per segment — O(L²) per doc (measured: 69.8 s
+    # for FIVE 218k-char docs vs 2.9 s for fifty with this form).
+    # filter/zip_with evaluate their input array once per ROW; the
+    # lambdas only touch elements. Semantics identical to the slice
+    # form: parts[j] holds tokens at positions ≡ j (mod k), the zip
+    # chain pads the ragged tail with null, and concat_ws skips nulls —
+    # so the last segment keeps 1..k tokens exactly like a short slice.
     w = F.split(F.col(text_col), " ")
-    n = F.size(w)
-    starts = F.sequence(F.lit(1), n, F.lit(seg_words))
-    segs = F.transform(starts, lambda i: F.concat_ws(" ", F.slice(w, i, seg_words)))
+
+    def stride(j: int):
+        # factory closure: a `j=j` default param would change the
+        # lambda's arity and break PySpark's (element, index) binding
+        return F.filter(w, lambda x, i: i % seg_words == j)
+
+    parts = [stride(j) for j in range(seg_words)]
+    segs = parts[0]
+    for p in parts[1:]:
+        segs = F.zip_with(segs, p, lambda a, b: F.concat_ws(" ", a, b))
     base = df.filter(F.col(text_col).isNotNull() & (F.col(text_col) != "")).select(
         F.col(id_col).alias("_id"), segs.alias("_segs")
     )
-    occ = base.select("_id", F.explode("_segs").alias("_seg"))
+    occ = base.select("_id", F.posexplode("_segs").alias("_pos", "_seg"))
     seg_df = occ.groupBy("_seg").agg(F.countDistinct("_id").alias("_df"))
     total = base.agg(F.count(F.lit(1)).alias("_n_docs"))
     boiler = (
         seg_df.crossJoin(F.broadcast(total))
         .filter(F.col("_df") >= F.lit(max_df_frac) * F.col("_n_docs"))
-        .agg(F.sort_array(F.collect_list("_seg")).alias("_boiler"))
+        .select(F.col("_seg").alias("_bseg"))
     )
-    kept = F.filter(
-        F.col("_segs"), lambda s: ~F.array_contains(F.col("_boiler"), s)
+    marked = occ.join(F.broadcast(boiler), occ["_seg"] == F.col("_bseg"), "left")
+    sp = F.array_sort(
+        F.collect_list(
+            F.struct(
+                F.col("_pos"),
+                F.col("_seg"),
+                F.col("_bseg").isNotNull().alias("_b"),
+            )
+        )
     )
     return (
-        base.crossJoin(F.broadcast(boiler))
+        marked.groupBy("_id")
+        .agg(sp.alias("_sp"))
         .select(
             F.col("_id").alias(id_col),
-            F.concat_ws(" ", kept).alias("text_clean"),
-            F.size("_segs").cast("long").alias("n_segments"),
-            (F.size("_segs") - F.size(kept)).cast("long").alias("n_removed"),
+            F.concat_ws(
+                " ",
+                F.transform(
+                    F.filter(F.col("_sp"), lambda s: ~s["_b"]),
+                    lambda s: s["_seg"],
+                ),
+            ).alias("text_clean"),
+            F.size("_sp").cast("long").alias("n_segments"),
+            F.expr("size(filter(_sp, s -> s._b))").cast("long").alias("n_removed"),
         )
     )

@@ -20,14 +20,6 @@ from pyspark.sql import functions as F
 from ..session import fan_out, load_table
 
 
-def _e2(col: str) -> F.Column:
-    """Exact centi-units — the shared portable-round-to-cents primitive
-    (one definition repo-wide; its SQL mirror is _CENTS_SQL)."""
-    from .round6_queries import _cents
-
-    return _cents(col)
-
-
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan-filter-agg. Filter + the 2 grouping cols + 5
     measure cols reach the parquet scan (pushdown/pruning); the agg is a
@@ -61,7 +53,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     # Whole query via parsed SQL strings (r10): the Column-DSL form cost
     # ~200 ms of py4j round trips per build — paid inside every timed
-    # bench pass. Identical expression trees (the _cents/_CENTS_SQL pair
+    # bench pass. Identical expression trees (the derive.cents/CENTS_SQL pair
     # is the house primitive; note float literals carry the D suffix so
     # nothing silently parses as DECIMAL).
     qty = "CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)"

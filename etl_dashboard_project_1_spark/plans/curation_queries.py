@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import dedup
+from ..operators import dedup, textops
 from ..session import fan_out, load_table
 from .extension_queries import DEDUP_CLUSTERS_SQL
 
@@ -43,8 +43,8 @@ def span_dedup_repeated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # slice(tokens(text), i, k): Catalyst inlines the tokenizer into the
     # lambda, re-splitting the whole document once per span — O(len²)
     # per doc (the --longtext axis measured 477 s over fifty 218k-char
-    # docs; same defect class as the boilerplate rewrite,
-    # operators/boilerplate.py). filter/zip_with evaluate the token
+    # docs; same defect class as textops.boilerplate_strip's
+    # segmentation). filter/zip_with evaluate the token
     # array once per ROW. Only FULL SPAN_K-token windows count (the
     # original's starts stopped at n-SPAN_K+1), so the zip chain's
     # ragged tail is sliced off: floor(n/SPAN_K) full windows.
@@ -128,49 +128,10 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Linear-time mirror of extension_queries._SHINGLES_CTE (distinct word
-# 3-grams per PHYSICAL ROW): the shared CTE builds each shingle with
-# ``array_to_string(w[i:i+2], ' ') FOR i IN range(...)`` — per-position
-# list slicing that re-materializes the whole token list per shingle,
-# O(len²) on the --longtext axis's ~218k-char docs (the same defect class
-# the boilerplate and span oracles had). Here shingles come from token
-# ROWS composed by lead() windows (explicit OVER clauses — DuckDB named
-# WINDOW scoping is fragile under spliced CTE chains); lead(t,2) IS NULL
-# drops the ragged tail, mirroring range(1, len(w)-1). The inner DISTINCT
-# keys on a per-row id, NOT doc_id, so duplicated physical rows keep
-# their per-copy shingle multisets (the dupes-sweep row-faithfulness
-# contract; dedup_keep_best is not dupes-exempt). Defined LOCALLY because
-# editing extension_queries.py flips ~145 unscheduled fingerprints
-# (file-granular re-cert rule); the shared CTE migrates at the r11 seal.
-_FAST_SHINGLES_CTE = r"""
-sh AS (
-  SELECT doc_id, s FROM (
-    SELECT DISTINCT rid, doc_id, s FROM (
-      SELECT rid, doc_id,
-             t || ' ' || lead(t, 1) OVER (PARTITION BY rid ORDER BY pos)
-               || ' ' || lead(t, 2) OVER (PARTITION BY rid ORDER BY pos) AS s,
-             lead(t, 2) OVER (PARTITION BY rid ORDER BY pos) AS t2
-      FROM (
-        SELECT rid, doc_id, generate_subscripts(w, 1) AS pos, unnest(w) AS t
-        FROM (SELECT row_number() OVER () AS rid, doc_id,
-                     regexp_split_to_array(lower(text), '\s+') AS w
-              FROM documents)
-      )
-    ) WHERE t2 IS NOT NULL
-  )
-)
-"""
-
-from .extension_queries import _SHINGLES_CTE  # noqa: E402
-
-assert _SHINGLES_CTE in DEDUP_CLUSTERS_SQL  # splice-point tripwire
-
-# splice the recursive-components oracle: reuse its CTE chain with the
-# scalable shingle build, swap the final per-node select for the
-# per-cluster keep-best argmax
+# reuse the recursive-components oracle's CTE chain, swapping the final
+# per-node select for the per-cluster keep-best argmax
 KEEP_BEST_SQL = (
-    DEDUP_CLUSTERS_SQL.replace(_SHINGLES_CTE, _FAST_SHINGLES_CTE)
-    .rsplit("SELECT node AS doc_id", 1)[0]
+    DEDUP_CLUSTERS_SQL.rsplit("SELECT node AS doc_id", 1)[0]
     + """,
 clusters AS (SELECT node, min(label) AS cluster FROM reach GROUP BY node)
 SELECT cluster, doc_id AS keep_doc_id, n_members
@@ -356,15 +317,10 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the remaining text reassembled in order (C4-style line dedup for
     a whitespace corpus). The boilerplate set is corpus-size-independent
     (≤ segments-per-doc / 0.05 entries) and broadcasts as a hash join
-    build side; the rebuild is one linear groupBy(id) reassembly. r10:
-    switched from textops.boilerplate_strip to the scalable
-    operators.boilerplate form after the --longtext axis caught the
-    original's O(boiler × segments) per-doc membership scan stalling
-    minutes on 20k-char docs (see operators/boilerplate.py)."""
-    from ..operators import boilerplate
-
+    build side; the rebuild is one linear groupBy(id) reassembly (see
+    operators/textops.boilerplate_strip)."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    out = boilerplate.boilerplate_strip(
+    out = textops.boilerplate_strip(
         docs, "doc_id", "text", seg_words=2, max_df_frac=0.05
     )
     return out.orderBy("doc_id")

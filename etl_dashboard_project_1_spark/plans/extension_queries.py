@@ -17,14 +17,32 @@ from pyspark.sql import functions as F
 from ..operators import dedup, derive, multimodal, sampling, textops, vector
 from ..session import fan_out, load_table
 
-# shared oracle CTE: distinct word-3-gram shingles per doc
+# shared oracle CTE: distinct word 3-gram shingles per PHYSICAL ROW.
+# Shingles come from token ROWS composed by lead() windows (linear), not
+# ``array_to_string(w[i:i+2], ' ') FOR i IN range(...)`` list slicing,
+# which re-materializes the whole token list per shingle — O(len²) on
+# ~218k-char documents. lead(t,2) IS NULL drops the ragged tail, so docs
+# under 3 tokens yield nothing. Explicit OVER clauses, not a named WINDOW:
+# DuckDB's named-window scoping is fragile inside the spliced CTE chains
+# built on this. The DISTINCT keys on a per-row id, NOT doc_id, so
+# duplicated physical rows keep their per-copy shingle sets, as the Spark
+# side's per-row arrays do.
 _SHINGLES_CTE = r"""
 sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           CASE WHEN len(w) >= 3
-                THEN [array_to_string(w[i:i+2], ' ') FOR i IN range(1, len(w) - 1)]
-                ELSE [] END)) AS s
-  FROM (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS w FROM documents)
+  SELECT doc_id, s FROM (
+    SELECT DISTINCT rid, doc_id, s FROM (
+      SELECT rid, doc_id,
+             t || ' ' || lead(t, 1) OVER (PARTITION BY rid ORDER BY pos)
+               || ' ' || lead(t, 2) OVER (PARTITION BY rid ORDER BY pos) AS s,
+             lead(t, 2) OVER (PARTITION BY rid ORDER BY pos) AS t2
+      FROM (
+        SELECT rid, doc_id, generate_subscripts(w, 1) AS pos, unnest(w) AS t
+        FROM (SELECT row_number() OVER () AS rid, doc_id,
+                     regexp_split_to_array(lower(text), '\s+') AS w
+              FROM documents)
+      )
+    ) WHERE t2 IS NOT NULL
+  )
 )
 """
 
@@ -324,7 +342,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 (0.40 s vs 0.47 s, value-identical) and doesn't depend on CSE
     # behavior holding across Spark versions. (The r2 bench's 1.49 s for
     # this query was box-load variance: re-measured on 4.1 at 0.47 s with
-    # the then-registered formulation — tools/diag_text_quality.py.)
+    # the then-registered formulation.)
     # Built via selectExpr (r10): the Column-DSL form (isin over the
     # stopword tuple, two lambda folds) cost ~230 ms of py4j round trips
     # per plan build; the parsed trees are identical. Float literals
@@ -1850,15 +1868,33 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.duplicated_spans(docs, "doc_id", "text", k=5, min_docs=2)
 
 
+# Positional 5-grams come from token ROWS composed by lead() windows
+# (linear), not per-position list slicing inside a comprehension, which
+# re-materializes the whole token list per position — O(len²) on
+# ~218k-char documents. lead(t,4) IS NULL marks the ragged tail (full
+# windows only), mirroring the Spark side's n-k+1 slice. The gram windows
+# partition on a PER-ROW id, not doc_id: the Spark side builds grams per
+# physical row (posexplode of a per-row array), so under duplicate-key
+# input two copies of a doc_id must each contribute their own intact gram
+# sequence — doc_id-partitioned windows would interleave the copies'
+# positions and garble the grams. Downstream (dup / f / r) keys on doc_id
+# in BOTH engines.
 DEDUP_SPANS_SQL = r"""
-WITH w AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS w FROM documents),
-g0 AS (
-  SELECT doc_id,
-         unnest([{'pos': i, 'gram': array_to_string(w[i+1:i+5], ' ')}
-                 FOR i IN range(0, greatest(len(w) - 4, 0))]) AS u
-  FROM w
+WITH w AS (SELECT row_number() OVER () AS rid, doc_id,
+                  regexp_split_to_array(lower(text), '\s+') AS w
+           FROM documents),
+tok AS (
+  SELECT rid, doc_id, generate_subscripts(w, 1) - 1 AS pos, unnest(w) AS t FROM w
 ),
-g AS (SELECT doc_id, u.pos AS pos, u.gram AS gram FROM g0),
+g0 AS (
+  SELECT rid, doc_id, pos,
+         t || ' ' || lead(t, 1) OVER win || ' ' || lead(t, 2) OVER win
+           || ' ' || lead(t, 3) OVER win || ' ' || lead(t, 4) OVER win AS gram,
+         lead(t, 4) OVER win AS t4
+  FROM tok
+  WINDOW win AS (PARTITION BY rid ORDER BY pos)
+),
+g AS (SELECT doc_id, pos, gram FROM g0 WHERE t4 IS NOT NULL),
 dup AS (SELECT gram FROM g GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2),
 f AS (SELECT doc_id, pos FROM g JOIN dup USING (gram)),
 r AS (

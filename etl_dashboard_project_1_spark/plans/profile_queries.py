@@ -740,8 +740,7 @@ def column_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     PLAIN vs DICT pages. Code width is ceil(log2(ndv)) computed as
     length(bin(ndv-1)) — pure integer arithmetic, no engine log2.
 
-    Shared-scan shape (adopted after the r4 A/B,
-    tools/diag_shared_scan.py): each table is scanned ONCE and its
+    Shared-scan shape (adopted after the r4 A/B): each table is scanned ONCE and its
     candidate columns unpivot via stack(); the streams union and a
     single groupBy(column_name, v) histogram feeds one keyed summary
     aggregate — 2 exchanges total vs 12 for six independent per-column

@@ -1,6 +1,5 @@
-"""Round-8 wave-13 additions (registered during round 8 after the r8
-seal — tail of _ROUND9_QUEUE, checked in the r9/r10 windows): the
-monitoring/pre-flight members the analysis families still lacked —
+"""Round-8 wave-13 additions: the monitoring/pre-flight members the
+analysis families still lacked —
 
 * CUSUM drift detection over daily revenue (the sequential
   change-point monitor; rolling_zscore flags points, CUSUM accumulates
@@ -29,8 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.derive import CENTS_SQL, cents
 from ..session import load_table
-from .round6_queries import _CENTS_SQL, _cents
 
 # --- CUSUM drift monitor over daily revenue -----------------------------------
 
@@ -68,7 +67,7 @@ def cusum_revenue_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("ts").isNotNull()
     )
     daily = ev.groupBy(F.to_date("ts").alias("_day")).agg(
-        F.sum(_cents("value")).alias("_x")
+        F.sum(cents("value")).alias("_x")
     )
     tot = daily.agg(
         F.count(F.lit(1)).alias("_d"),
@@ -135,7 +134,7 @@ def cusum_revenue_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CUSUM_SQL = f"""
 WITH RECURSIVE daily AS (
-  SELECT ts::DATE AS day, sum({_CENTS_SQL.format(x="value")}) AS x
+  SELECT ts::DATE AS day, sum({CENTS_SQL.format(x="value")}) AS x
   FROM events
   WHERE event_type = 'purchase' AND value IS NOT NULL AND value >= 0
         AND ts IS NOT NULL
@@ -210,7 +209,7 @@ def ab_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("_nev"),
         F.sum(
             F.when(
-                F.col("value").isNotNull() & (F.col("value") >= 0), _cents("value")
+                F.col("value").isNotNull() & (F.col("value") >= 0), cents("value")
             ).otherwise(0)
         ).alias("_sp"),
     ).withColumn("_arm", hash_bucket(F.col("user_id"), "ab") % 2)
@@ -263,7 +262,7 @@ SMD_SQL = f"""
 WITH users AS (
   SELECT user_id, count(*) AS nev,
          sum(CASE WHEN value IS NOT NULL AND value >= 0
-                  THEN {_CENTS_SQL.format(x="value")} ELSE 0 END) AS sp,
+                  THEN {CENTS_SQL.format(x="value")} ELSE 0 END) AS sp,
          ('0x' || substr(md5(user_id::VARCHAR || 'ab'), 1, 8))::BIGINT % 10000 % 2 AS arm
   FROM events WHERE user_id IS NOT NULL GROUP BY user_id
 ),
@@ -401,7 +400,7 @@ def eb_shrunken_group_means(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).alias("_n"),
-            F.sum(_cents("o_totalprice")).alias("_s"),
+            F.sum(cents("o_totalprice")).alias("_s"),
         )
     )
     tot = rev.agg(F.sum("_n").alias("_tn"), F.sum("_s").alias("_ts"))
@@ -422,7 +421,7 @@ def eb_shrunken_group_means(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 EB_SHRINK_SQL = f"""
 WITH rev AS (
-  SELECT c_nationkey, count(*) AS n, sum({_CENTS_SQL.format(x="o_totalprice")}) AS s
+  SELECT c_nationkey, count(*) AS n, sum({CENTS_SQL.format(x="o_totalprice")}) AS s
   FROM orders JOIN customer ON o_custkey = c_custkey
   WHERE o_totalprice IS NOT NULL AND o_totalprice >= 0
   GROUP BY 1

@@ -1,6 +1,5 @@
-"""Round-8 wave-14 additions (registered during round 8 AFTER the r8
-window was sealed — tail of _ROUND9_QUEUE, checked in the r9/r10
-windows): completions of existing analysis families —
+"""Round-8 wave-14 additions: completions of existing analysis
+families —
 
 * t-closeness audit — the third member of the privacy-release triad
   (k-anonymity bounds re-identification, l-diversity bounds attribute
@@ -43,8 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.derive import CENTS_SQL, cents
 from ..session import load_table
-from .round6_queries import _CENTS_SQL, _cents
 
 # --- t-closeness audit ---------------------------------------------------------
 
@@ -327,11 +326,11 @@ def kendall_tau_leaderboards(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.sum(
-                F.when(F.year("o_orderdate") == KT_YEAR_A, _cents("o_totalprice"))
+                F.when(F.year("o_orderdate") == KT_YEAR_A, cents("o_totalprice"))
                 .otherwise(0)
             ).alias("_a"),
             F.sum(
-                F.when(F.year("o_orderdate") == KT_YEAR_B, _cents("o_totalprice"))
+                F.when(F.year("o_orderdate") == KT_YEAR_B, cents("o_totalprice"))
                 .otherwise(0)
             ).alias("_b"),
         )
@@ -381,9 +380,9 @@ KENDALL_SQL = f"""
 WITH rev AS (
   SELECT c_nationkey,
          sum(CASE WHEN year(o_orderdate) = {KT_YEAR_A}
-                  THEN {_CENTS_SQL.format(x="o_totalprice")} ELSE 0 END) AS a,
+                  THEN {CENTS_SQL.format(x="o_totalprice")} ELSE 0 END) AS a,
          sum(CASE WHEN year(o_orderdate) = {KT_YEAR_B}
-                  THEN {_CENTS_SQL.format(x="o_totalprice")} ELSE 0 END) AS b
+                  THEN {CENTS_SQL.format(x="o_totalprice")} ELSE 0 END) AS b
   FROM orders JOIN customer ON o_custkey = c_custkey
   WHERE o_totalprice IS NOT NULL AND o_totalprice >= 0
         AND year(o_orderdate) IN ({KT_YEAR_A}, {KT_YEAR_B})
@@ -589,7 +588,7 @@ def changepoint_mean_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("ts").isNotNull()
     )
     daily = ev.groupBy(F.to_date("ts").alias("_day")).agg(
-        F.sum(_cents("value")).alias("_x")
+        F.sum(cents("value")).alias("_x")
     )
     w_ord = Window.orderBy("_day").rowsBetween(Window.unboundedPreceding, 0)
     w_all = Window.partitionBy()
@@ -621,7 +620,7 @@ def changepoint_mean_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CHANGEPOINT_SQL = f"""
 WITH daily AS (
-  SELECT ts::DATE AS day, sum({_CENTS_SQL.format(x="value")}) AS x
+  SELECT ts::DATE AS day, sum({CENTS_SQL.format(x="value")}) AS x
   FROM events
   WHERE event_type = 'purchase' AND value IS NOT NULL AND value >= 0
         AND ts IS NOT NULL

@@ -1,6 +1,4 @@
-"""Round-8 wave-15 additions (registered during round 8 AFTER the r8
-seal — tail of _ROUND9_QUEUE, checked in the r9/r10 windows): corpus
-and eval-suite completions —
+"""Round-8 wave-15 additions: corpus and eval-suite completions —
 
 * per-source vocabulary richness (Chao1 + Good-Turing) — the corpus
   coverage estimate a data-mixture planner reads before scaling a
@@ -38,9 +36,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import textops
+from ..operators.derive import CENTS_SQL, cents
 from ..session import fan_out, load_table
 from .extension_queries import _LANGID_CASE, _ratio_sql
-from .round6_queries import _CENTS_SQL, _cents
 
 # --- per-source vocabulary richness (Chao1 + Good-Turing) -----------------------
 
@@ -153,7 +151,7 @@ def kruskal_wallis_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").isNotNull() & F.col("event_type").isNotNull()
     )
     pvt = ev.groupBy(
-        _cents("value").alias("_v"), F.col("event_type").alias("_g")
+        cents("value").alias("_v"), F.col("event_type").alias("_g")
     ).agg(F.count(F.lit(1)).alias("_c"))
     per_v = pvt.groupBy("_v").agg(F.sum("_c").alias("_cv"))
     w = Window.orderBy("_v").rowsBetween(Window.unboundedPreceding, -1)
@@ -223,7 +221,7 @@ def kruskal_wallis_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 KRUSKAL_SQL = f"""
 WITH pvt AS (
-  SELECT {_CENTS_SQL.format(x="value")} AS v, event_type AS g, count(*) AS c
+  SELECT {CENTS_SQL.format(x="value")} AS v, event_type AS g, count(*) AS c
   FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL
   GROUP BY 1, 2
 ),

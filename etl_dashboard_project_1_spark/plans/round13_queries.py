@@ -1,6 +1,5 @@
-"""Round-8 wave-16 additions (registered during round 8 AFTER the r8
-seal — tail of _ROUND9_QUEUE, checked in the r9/r10 windows): the
-trend-inference and forecast-verification members —
+"""Round-8 wave-16 additions: the trend-inference and
+forecast-verification members —
 
 * Mann-Kendall trend test over daily revenue — the significance
   companion of theil_sen_trend (Theil-Sen gives the robust SLOPE;
@@ -31,9 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.derive import CENTS_SQL, cents
 from ..operators.sampling import hash_bucket
 from ..session import load_table
-from .round6_queries import _CENTS_SQL, _cents
 
 # --- Mann-Kendall trend test over daily revenue ----------------------------------
 
@@ -68,7 +67,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("ts").isNotNull()
     )
     daily = ev.groupBy(F.to_date("ts").alias("_day")).agg(
-        F.sum(_cents("value")).alias("_x")
+        F.sum(cents("value")).alias("_x")
     )
     a = daily.select(F.col("_day").alias("_da"), F.col("_x").alias("_xa"))
     b = daily.select(F.col("_day").alias("_db"), F.col("_x").alias("_xb"))
@@ -125,7 +124,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MANN_KENDALL_SQL = f"""
 WITH daily AS (
-  SELECT ts::DATE AS day, sum({_CENTS_SQL.format(x="value")}) AS x
+  SELECT ts::DATE AS day, sum({CENTS_SQL.format(x="value")}) AS x
   FROM events
   WHERE event_type = 'purchase' AND value IS NOT NULL AND value >= 0
         AND ts IS NOT NULL
@@ -197,7 +196,7 @@ def runs_test_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("ts").isNotNull()
     )
     daily = ev.groupBy(F.to_date("ts").alias("_day")).agg(
-        F.sum(_cents("value")).alias("_x")
+        F.sum(cents("value")).alias("_x")
     )
     w = Window.orderBy("_day")
     signs = (
@@ -243,7 +242,7 @@ def runs_test_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 RUNS_TEST_SQL = f"""
 WITH daily AS (
-  SELECT ts::DATE AS day, sum({_CENTS_SQL.format(x="value")}) AS x
+  SELECT ts::DATE AS day, sum({CENTS_SQL.format(x="value")}) AS x
   FROM events
   WHERE event_type = 'purchase' AND value IS NOT NULL AND value >= 0
         AND ts IS NOT NULL

@@ -1,6 +1,5 @@
-"""Round-8 wave-17 additions (registered during round 8 AFTER the r8
-seal — tail of _ROUND9_QUEUE, checked in the r9/r10 windows): the two
-remaining inference diagnostics —
+"""Round-8 wave-17 additions: the two remaining inference
+diagnostics —
 
 * Cochran-Armitage trend test — the ORDERED-groups proportion test the
   experimentation suite lacked (ab_test_zscore compares two arms;
@@ -28,8 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.derive import CENTS_SQL, cents
 from ..session import load_table
-from .round6_queries import _CENTS_SQL, _cents
 from .round9_queries import GSQ_CONV_MIN
 
 # --- Cochran-Armitage trend test (conversion vs ordered activity bins) -----------
@@ -200,7 +199,7 @@ def durbin_watson_forecast_errors(spark: SparkSession, sf_dir: str) -> DataFrame
         & F.col("ts").isNotNull()
     )
     daily = ev.groupBy(F.to_date("ts").alias("_day")).agg(
-        F.sum(_cents("value")).alias("_y")
+        F.sum(cents("value")).alias("_y")
     )
     w = Window.orderBy("_day")
     errs = daily.select(
@@ -233,7 +232,7 @@ def durbin_watson_forecast_errors(spark: SparkSession, sf_dir: str) -> DataFrame
 
 DURBIN_WATSON_SQL = f"""
 WITH daily AS (
-  SELECT ts::DATE AS day, sum({_CENTS_SQL.format(x="value")}) AS y
+  SELECT ts::DATE AS day, sum({CENTS_SQL.format(x="value")}) AS y
   FROM events
   WHERE event_type = 'purchase' AND value IS NOT NULL AND value >= 0
         AND ts IS NOT NULL

@@ -1,7 +1,5 @@
-"""Round-9 addition (registered during round 9 AFTER the r9 window was
-sealed at round-open — head of _ROUND10_QUEUE, checked in the r10
-window): the multiple-comparisons capstone the statistical suite
-opened —
+"""Round-9 addition: the multiple-comparisons capstone the statistical
+suite opened —
 
 * Benjamini-Hochberg FDR keep set — the repo now ships ~20
   hypothesis-test queries (MW-U, Kruskal-Wallis, McNemar, log-rank,
@@ -26,8 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.derive import CENTS_SQL, cents
 from ..session import load_table
-from .round6_queries import _CENTS_SQL, _cents
 
 # --- Benjamini-Hochberg FDR keep set over a per-nation test family ---------
 
@@ -94,9 +92,9 @@ def bh_fdr_keep_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("_nk", "nation_name")
         .agg(
             F.count(F.lit(1)).alias("_n"),
-            F.sum(_cents("c_acctbal")).alias("_s"),
+            F.sum(cents("c_acctbal")).alias("_s"),
             F.sum(
-                _cents("c_acctbal").cast("decimal(38,0)") * _cents("c_acctbal")
+                cents("c_acctbal").cast("decimal(38,0)") * cents("c_acctbal")
             ).alias("_q"),
         )
     )
@@ -182,9 +180,9 @@ BH_FDR_SQL = f"""
 WITH per AS (
   SELECT c.c_nationkey AS nk, n.n_name AS nation_name,
          count(*) AS n,
-         sum({_CENTS_SQL.format(x="c_acctbal")}) AS s,
-         sum(CAST({_CENTS_SQL.format(x="c_acctbal")} AS HUGEINT)
-             * {_CENTS_SQL.format(x="c_acctbal")}) AS q
+         sum({CENTS_SQL.format(x="c_acctbal")}) AS s,
+         sum(CAST({CENTS_SQL.format(x="c_acctbal")} AS HUGEINT)
+             * {CENTS_SQL.format(x="c_acctbal")}) AS q
   FROM customer c JOIN nation n ON n.n_nationkey = c.c_nationkey
   WHERE c.c_acctbal IS NOT NULL AND c.c_nationkey IS NOT NULL
   GROUP BY 1, 2

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import dedup, sampling, vector
+from ..operators.derive import CENTS_SQL, cents
 from ..session import fan_out, load_table
 
 _FIXTURES = os.path.join(
@@ -31,17 +32,6 @@ _FIXTURES = os.path.join(
     "tests",
     "fixtures",
 )
-
-
-def _cents(col: Column | str) -> Column:
-    """floor(x*100 + 0.5) — the portable_round form; F.round would
-    half-round differently from DuckDB's round on boundary values."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.floor(c * 100 + F.lit(0.5)).cast("long")
-
-
-#: DuckDB spelling of _cents — keep the two in sync.
-_CENTS_SQL = "CAST(floor({x} * 100 + 0.5) AS BIGINT)"
 
 
 # --- vehicle pipeline summary (reference-parity capstone) -------------------
@@ -117,7 +107,7 @@ def skyline_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = part.select(
         "p_brand",
         "p_partkey",
-        _cents("p_retailprice").alias("price_cents"),
+        cents("p_retailprice").alias("price_cents"),
         F.col("p_size").cast("long").alias("size"),
     )
     return skyline_2d(p, ["p_brand"], "price_cents", "size").select(
@@ -128,7 +118,7 @@ def skyline_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 SKYLINE_SQL = f"""
 WITH p AS (
   SELECT p_brand, p_partkey,
-         {_CENTS_SQL.format(x="p_retailprice")} AS price_cents,
+         {CENTS_SQL.format(x="p_retailprice")} AS price_cents,
          CAST(p_size AS BIGINT) AS size
   FROM part
 ),
@@ -179,7 +169,7 @@ def ks_value_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("user_id").isNotNull()
     )
     g = ev.select(
-        _cents("value").alias("v"),
+        cents("value").alias("v"),
         (sampling.hash_bucket(F.col("user_id"), "ks", 2) == 0).alias("_a"),
     )
     per_v = g.groupBy("v").agg(
@@ -225,7 +215,7 @@ def ks_value_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 KS_DRIFT_SQL = f"""
 WITH g AS (
-  SELECT {_CENTS_SQL.format(x="value")} AS v,
+  SELECT {CENTS_SQL.format(x="value")} AS v,
          ('0x' || substr(md5(user_id::VARCHAR || 'ks'), 1, 8))::BIGINT % 2 = 0 AS a
   FROM events
   WHERE event_type = 'purchase'
@@ -277,7 +267,7 @@ def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     rev = (
         orders.groupBy("o_custkey")
-        .agg(F.sum(_cents("o_totalprice")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
         .join(cust, cust.c_custkey == F.col("o_custkey"), "right")
         .select("c_custkey", F.coalesce("cents", F.lit(0)).alias("cents"))
     )
@@ -312,7 +302,7 @@ def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 GINI_SQL = f"""
 WITH rev AS (
   SELECT c.c_custkey,
-         coalesce(sum({_CENTS_SQL.format(x="o_totalprice")}), 0) AS cents
+         coalesce(sum({CENTS_SQL.format(x="o_totalprice")}), 0) AS cents
   FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
   GROUP BY 1
 ),
@@ -627,8 +617,8 @@ def max_drawdown_user(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "event_id",
-        F.when(F.col("event_type") == "purchase", _cents("value"))
-        .otherwise(-_cents("value"))
+        F.when(F.col("event_type") == "purchase", cents("value"))
+        .otherwise(-cents("value"))
         .alias("delta"),
     )
     w_ord = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -652,8 +642,8 @@ MAX_DRAWDOWN_SQL = f"""
 WITH signed AS (
   SELECT user_id, ts, event_id,
          CASE WHEN event_type = 'purchase'
-              THEN {_CENTS_SQL.format(x="value")}
-              ELSE -{_CENTS_SQL.format(x="value")} END AS delta
+              THEN {CENTS_SQL.format(x="value")}
+              ELSE -{CENTS_SQL.format(x="value")} END AS delta
   FROM events WHERE event_type IN ('purchase', 'error')
 ),
 bal AS (
@@ -912,7 +902,7 @@ def zonemap_skip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold list; everything downstream is metadata-sized."""
     ev = load_table(spark, sf_dir, "events")
     zones = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.max(_cents("value")).alias("zmax")
+        F.max(cents("value")).alias("zmax")
     )
     thresholds = F.explode(
         F.array(*[F.lit(t) for t in ZONEMAP_THRESHOLDS])
@@ -939,7 +929,7 @@ def zonemap_skip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ZONEMAP_SQL = f"""
 WITH zones AS (
-  SELECT ts::DATE AS day, max({_CENTS_SQL.format(x="value")}) AS zmax
+  SELECT ts::DATE AS day, max({CENTS_SQL.format(x="value")}) AS zmax
   FROM events GROUP BY 1
 ),
 th(threshold) AS (VALUES {", ".join(f"({t})" for t in ZONEMAP_THRESHOLDS)})
@@ -1240,7 +1230,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_cust = orders.groupBy("o_custkey").agg(
         F.max(F.to_date("o_orderdate")).alias("last_day"),
         F.count(F.lit(1)).alias("freq"),
-        F.sum(_cents("o_totalprice")).alias("cents"),
+        F.sum(cents("o_totalprice")).alias("cents"),
     )
     ranked = layout.dense_ids_by(per_cust, [F.asc("last_day"), F.asc("o_custkey")], id_name="ri")
     ranked = layout.dense_ids_by(ranked, [F.asc("freq"), F.asc("o_custkey")], id_name="fi")
@@ -1265,7 +1255,7 @@ WITH per_cust AS (
   SELECT o_custkey,
          max(o_orderdate::DATE) AS last_day,
          count(*) AS freq,
-         sum({_CENTS_SQL.format(x="o_totalprice")}) AS cents
+         sum({CENTS_SQL.format(x="o_totalprice")}) AS cents
   FROM orders GROUP BY 1
 ),
 ranked AS (

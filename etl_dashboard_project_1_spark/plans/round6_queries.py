@@ -21,18 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.derive import CENTS_SQL, cents
 from ..session import load_table
-
-
-def _cents(col: Column | str) -> Column:
-    """floor(x*100 + 0.5) — the portable_round form; F.round would
-    half-round differently from DuckDB's round on boundary values."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.floor(c * 100 + F.lit(0.5)).cast("long")
-
-
-#: DuckDB spelling of _cents — keep the two in sync.
-_CENTS_SQL = "CAST(floor({x} * 100 + 0.5) AS BIGINT)"
 
 
 # --- leave-one-out target encoding -------------------------------------------
@@ -61,7 +51,7 @@ def target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact = orders.select(
         "o_orderkey",
         "o_custkey",
-        _cents("o_totalprice").alias("own_cents"),
+        cents("o_totalprice").alias("own_cents"),
     ).join(cust, F.col("o_custkey") == F.col("c_custkey"))
     stats = fact.groupBy("segment").agg(
         F.sum("own_cents").alias("seg_sum"),
@@ -87,7 +77,7 @@ TARGET_ENCODE_SQL = f"""
 WITH fact AS (
   SELECT o_orderkey,
          c_mktsegment AS segment,
-         {_CENTS_SQL.format(x="o_totalprice")} AS own_cents
+         {CENTS_SQL.format(x="o_totalprice")} AS own_cents
   FROM orders JOIN customer ON o_custkey = c_custkey
 ),
 stats AS (
@@ -335,7 +325,7 @@ def twap_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date("ts").alias("day"),
         F.unix_micros("ts").alias("tus"),
         "event_id",
-        _cents("value").alias("v_cents"),
+        cents("value").alias("v_cents"),
     )
     w = Window.partitionBy("user_id", "day").orderBy("tus", "event_id")
     seg = base.withColumn("ntus", F.lead("tus").over(w)).filter(
@@ -367,7 +357,7 @@ WITH base AS (
          ts::DATE AS day,
          epoch_us(ts) AS tus,
          event_id,
-         {_CENTS_SQL.format(x="value")} AS v_cents
+         {CENTS_SQL.format(x="value")} AS v_cents
   FROM events WHERE event_type = 'purchase'
 ),
 seg AS (
@@ -1184,7 +1174,7 @@ def bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = ev.select(
         F.col("event_id").cast("string").alias("_eid"),
-        _cents("value").alias("_v"),
+        cents("value").alias("_v"),
     )
     rep = base.select(
         "_eid", "_v", F.explode(F.sequence(F.lit(0), F.lit(BOOT_B - 1))).alias("_r")
@@ -1234,7 +1224,7 @@ _BOOT_W = " + ".join(
 
 BOOTSTRAP_CI_SQL = f"""
 WITH base AS (
-  SELECT event_id::VARCHAR AS eid, {_CENTS_SQL.format(x="value")} AS v
+  SELECT event_id::VARCHAR AS eid, {CENTS_SQL.format(x="value")} AS v
   FROM events WHERE event_type = 'purchase'
 ),
 rep AS (
@@ -1309,7 +1299,7 @@ def conformal_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = ev.select(
         "event_type",
-        _cents("value").alias("_v"),
+        cents("value").alias("_v"),
         sampling.hash_bucket(F.col("user_id"), "conf", 4).alias("_b"),
     )
     train = base.filter(F.col("_b") <= 1)
@@ -1374,7 +1364,7 @@ def conformal_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CONFORMAL_SQL = f"""
 WITH base AS (
-  SELECT event_type, {_CENTS_SQL.format(x="value")} AS v,
+  SELECT event_type, {CENTS_SQL.format(x="value")} AS v,
          ('0x' || substr(md5(user_id::VARCHAR || 'conf'), 1, 8))::BIGINT % 4 AS b
   FROM events
   WHERE event_type = 'purchase'
@@ -1445,7 +1435,7 @@ def halflife_decay_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_type") == "purchase") & (F.col("value") >= 0)
     )
     base = ev.select(
-        "user_id", F.to_date("ts").alias("_d"), _cents("value").alias("_v")
+        "user_id", F.to_date("ts").alias("_d"), cents("value").alias("_v")
     )
     anchor = base.agg(F.max("_d").alias("_anchor"))
     dec = (
@@ -1471,7 +1461,7 @@ def halflife_decay_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 HALFLIFE_DECAY_SQL = f"""
 WITH base AS (
-  SELECT user_id, ts::DATE AS d, {_CENTS_SQL.format(x="value")} AS v
+  SELECT user_id, ts::DATE AS d, {CENTS_SQL.format(x="value")} AS v
   FROM events WHERE event_type = 'purchase' AND value >= 0
 ),
 anchor AS (SELECT max(d) AS a FROM base),

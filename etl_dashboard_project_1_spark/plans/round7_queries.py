@@ -578,7 +578,7 @@ def mann_whitney_value_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     (price-range-bounded, the ks_value_drift_gate justification); the
     cumulative window runs over that domain, never the events."""
     from ..operators import sampling
-    from .round6_queries import _cents
+    from ..operators.derive import cents
 
     # NULL values cannot be ranked and NULL user ids cannot be assigned
     # a cohort — both excluded in BOTH engines (review finding: a NULL
@@ -591,7 +591,7 @@ def mann_whitney_value_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("user_id").isNotNull()
     )
     g = ev.select(
-        _cents("value").alias("v"),
+        cents("value").alias("v"),
         (sampling.hash_bucket(F.col("user_id"), "mw", 2) == 0).alias("_a"),
     )
     per_v = g.groupBy("v").agg(

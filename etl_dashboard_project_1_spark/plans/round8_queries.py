@@ -37,9 +37,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import layout, textops
+from ..operators.derive import CENTS_SQL, cents
 from ..operators.sampling import hash_bucket
 from ..session import fan_out, load_table
-from .round6_queries import _CENTS_SQL, _cents, _logit_col, _logit_ctes
+from .round6_queries import _logit_col, _logit_ctes
 
 
 # --- difference-in-differences cohort effect ---------------------------------
@@ -77,7 +78,7 @@ def did_cohort_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ev.select(
         hash_bucket(F.col("user_id"), "did", 2).alias("_g"),
         (F.to_date("ts") >= F.lit(DID_CUTOFF).cast("date")).alias("_post"),
-        _cents("value").alias("_v"),
+        cents("value").alias("_v"),
     )
 
     def cell(g: int, post: bool, what: str) -> F.Column:
@@ -117,7 +118,7 @@ DID_SQL = f"""
 WITH base AS (
   SELECT ('0x' || substr(md5(user_id::VARCHAR || 'did'), 1, 8))::BIGINT % 2 AS g,
          ts::DATE >= DATE '{DID_CUTOFF}' AS post,
-         {_CENTS_SQL.format(x="value")} AS v
+         {CENTS_SQL.format(x="value")} AS v
   FROM events
   WHERE event_type = 'purchase'
     AND value IS NOT NULL AND user_id IS NOT NULL
@@ -285,7 +286,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").isNotNull() & F.col("o_totalprice").isNotNull()
     )
     daily = orders.groupBy(F.to_date("o_orderdate").alias("_day")).agg(
-        F.sum(_cents("o_totalprice")).alias("_x")
+        F.sum(cents("o_totalprice")).alias("_x")
     )
     w_all = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     series = daily.select(
@@ -358,7 +359,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ACF_SQL = f"""
 WITH daily AS (
-  SELECT o_orderdate::DATE AS day, sum({_CENTS_SQL.format(x="o_totalprice")}) AS x
+  SELECT o_orderdate::DATE AS day, sum({CENTS_SQL.format(x="o_totalprice")}) AS x
   FROM orders
   WHERE o_orderdate IS NOT NULL AND o_totalprice IS NOT NULL
   GROUP BY 1
@@ -1137,7 +1138,7 @@ def quantile_loss_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     )
-    base = ev.select("event_type", _cents("value").alias("_v"))
+    base = ev.select("event_type", cents("value").alias("_v"))
     per_v = base.groupBy("event_type", "_v").agg(F.count(F.lit(1)).alias("_c"))
     w_cum = (
         Window.partitionBy("event_type")
@@ -1189,7 +1190,7 @@ def quantile_loss_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PINBALL_SQL = f"""
 WITH base AS (
-  SELECT event_type, {_CENTS_SQL.format(x="value")} AS v
+  SELECT event_type, {CENTS_SQL.format(x="value")} AS v
   FROM events WHERE event_type = 'purchase' AND value IS NOT NULL
 ),
 per_v AS (SELECT event_type, v, count(*) AS c FROM base GROUP BY 1, 2),
@@ -1427,7 +1428,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").isNotNull() & F.col("o_totalprice").isNotNull()
     )
     daily = orders.groupBy(F.to_date("o_orderdate").alias("_day")).agg(
-        F.sum(_cents("o_totalprice")).alias("_x")
+        F.sum(cents("o_totalprice")).alias("_x")
     )
     d = daily.select(
         F.datediff("_day", F.lit("1970-01-01").cast("date")).cast("long").alias("_d"),
@@ -1483,7 +1484,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 THEILSEN_SQL = f"""
 WITH daily AS (
-  SELECT o_orderdate::DATE AS day, sum({_CENTS_SQL.format(x="o_totalprice")}) AS x
+  SELECT o_orderdate::DATE AS day, sum({CENTS_SQL.format(x="o_totalprice")}) AS x
   FROM orders
   WHERE o_orderdate IS NOT NULL AND o_totalprice IS NOT NULL
   GROUP BY 1
@@ -1554,7 +1555,7 @@ def hhi_market_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.filter(F.col("o_totalprice").isNotNull() & (F.col("o_totalprice") >= 0))
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("c_nationkey", "c_custkey")
-        .agg(F.sum(_cents("o_totalprice")).alias("_r"))
+        .agg(F.sum(cents("o_totalprice")).alias("_r"))
     )
     tot = rev.groupBy("c_nationkey").agg(
         F.sum("_r").alias("_t"), F.count(F.lit(1)).alias("_nc")
@@ -1584,7 +1585,7 @@ def hhi_market_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 HHI_SQL = f"""
 WITH rev AS (
-  SELECT c_nationkey, c_custkey, sum({_CENTS_SQL.format(x="o_totalprice")}) AS r
+  SELECT c_nationkey, c_custkey, sum({CENTS_SQL.format(x="o_totalprice")}) AS r
   FROM orders JOIN customer ON o_custkey = c_custkey
   WHERE o_totalprice IS NOT NULL AND o_totalprice >= 0
   GROUP BY 1, 2
@@ -1854,7 +1855,7 @@ def ltv_cohort_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_type") == "purchase")
         & F.col("value").isNotNull()
         & (F.col("value") >= 0)
-    ).select("user_id", F.to_date("ts").alias("_pday"), _cents("value").alias("_v"))
+    ).select("user_id", F.to_date("ts").alias("_pday"), cents("value").alias("_v"))
     aged = (
         purchases.join(signup, "user_id")
         .filter(F.col("_pday") >= F.col("_cohort"))
@@ -1896,7 +1897,7 @@ WITH signup AS (
 csize AS (SELECT cohort, count(*) AS sz FROM signup GROUP BY 1),
 aged AS (
   SELECT s.cohort, (e.ts::DATE - s.cohort) AS age_days, e.user_id,
-         {_CENTS_SQL.format(x="e.value")} AS v
+         {CENTS_SQL.format(x="e.value")} AS v
   FROM events e JOIN signup s ON e.user_id = s.user_id
   WHERE e.event_type = 'purchase' AND e.value IS NOT NULL AND e.value >= 0
     AND e.ts::DATE >= s.cohort
@@ -1942,7 +1943,7 @@ def overdispersion_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull() & (F.col("value") >= 0)
     )
-    m = ev.select("event_type", _cents("value").alias("_v")).groupBy("event_type").agg(
+    m = ev.select("event_type", cents("value").alias("_v")).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("_n"),
         F.sum("_v").alias("_s"),
         F.sum(F.col("_v").cast("decimal(38,0)") * F.col("_v")).alias("_q"),
@@ -1970,7 +1971,7 @@ WITH m AS (
   SELECT event_type, count(*) AS n,
          sum(v) AS s,
          sum(CAST(v AS HUGEINT) * v) AS q
-  FROM (SELECT event_type, {_CENTS_SQL.format(x="value")} AS v
+  FROM (SELECT event_type, {CENTS_SQL.format(x="value")} AS v
         FROM events WHERE value IS NOT NULL AND value >= 0)
   GROUP BY 1
 )

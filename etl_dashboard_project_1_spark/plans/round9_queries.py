@@ -1,6 +1,4 @@
-"""Round-8 wave-11 additions (registered during round 8 AFTER the r8
-window was sealed — queued in _ROUND9_QUEUE, never displacing a planned
-check): the three gaps the r7 verdict named —
+"""Round-8 wave-11 additions: the three gaps the r7 verdict named —
 
 * group-sequential monitoring: an O'Brien-Fleming boundary monitor over
   cumulative looks — the fixed-horizon sibling of the SPRT (the SPRT
@@ -33,8 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import md5_int
+from ..operators.derive import CENTS_SQL, cents
 from ..session import fan_out, load_table
-from .round6_queries import _CENTS_SQL, _cents
 
 # --- group-sequential O'Brien-Fleming monitor ---------------------------------
 
@@ -388,7 +386,7 @@ def kll_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").isNotNull() & (F.col("o_totalprice") >= 0)
     )
     vals = orders.select(
-        F.col("o_orderkey").alias("_k"), _cents("o_totalprice").alias("_v")
+        F.col("o_orderkey").alias("_k"), cents("o_totalprice").alias("_v")
     )
     meta = vals.agg(F.count(F.lit(1)).alias("_n")).select(
         "_n",
@@ -468,7 +466,7 @@ _KLL_PROBES_SQL = ", ".join(str(q) for q in KLL_PROBES_BP)
 
 KLL_SQL = f"""
 WITH vals AS (
-  SELECT o_orderkey AS k, {_CENTS_SQL.format(x="o_totalprice")} AS v
+  SELECT o_orderkey AS k, {CENTS_SQL.format(x="o_totalprice")} AS v
   FROM orders WHERE o_totalprice IS NOT NULL AND o_totalprice >= 0
 ),
 meta AS (
@@ -554,7 +552,7 @@ def ipw_ate_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("event_type") == "purchase")
                 & F.col("value").isNotNull()
                 & (F.col("value") >= 0),
-                _cents("value"),
+                cents("value"),
             ).otherwise(0)
         ).alias("_y"),
     )
@@ -604,7 +602,7 @@ WITH users AS (
   SELECT user_id, count(*) AS nev,
          max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS t,
          sum(CASE WHEN event_type = 'purchase' AND value IS NOT NULL AND value >= 0
-                  THEN {_CENTS_SQL.format(x="value")} ELSE 0 END) AS y
+                  THEN {CENTS_SQL.format(x="value")} ELSE 0 END) AS y
   FROM events WHERE user_id IS NOT NULL GROUP BY user_id
 ),
 bins AS (
@@ -662,7 +660,7 @@ def trimmed_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("value") >= 0)
     )
     per_v = (
-        ev.select("event_type", _cents("value").alias("_v"))
+        ev.select("event_type", cents("value").alias("_v"))
         .groupBy("event_type", "_v")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
@@ -707,7 +705,7 @@ def trimmed_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TRIMMED_MEAN_SQL = f"""
 WITH per_v AS (
-  SELECT event_type, {_CENTS_SQL.format(x="value")} AS v, count(*) AS c
+  SELECT event_type, {CENTS_SQL.format(x="value")} AS v, count(*) AS c
   FROM events
   WHERE event_type IS NOT NULL AND value IS NOT NULL AND value >= 0
   GROUP BY 1, 2

@@ -27,7 +27,3 @@ def test_headline_and_extras_execute(spark):
     for name, fn in bench._extra_queries(spark, SF).items():
         bench.force(fn(spark, SF))
 
-
-def test_calibration_probe_runs(spark):
-    dt = bench._calibrate(spark)
-    assert dt > 0

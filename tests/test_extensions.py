@@ -497,13 +497,43 @@ def test_boilerplate_strip_removes_common_segments_in_order(spark):
     assert out[4]["n_removed"] == 0
 
 
+def _boilerplate_strip_quadratic(df, id_col, text_col, seg_words, max_df_frac):
+    """Reference: the original slice-segmented, array_contains-probed
+    boilerplate_strip (O(len²) segmentation, O(boiler) per-segment scan)."""
+    w = F.split(F.col(text_col), " ")
+    n = F.size(w)
+    starts = F.sequence(F.lit(1), n, F.lit(seg_words))
+    segs = F.transform(starts, lambda i: F.concat_ws(" ", F.slice(w, i, seg_words)))
+    base = df.filter(F.col(text_col).isNotNull() & (F.col(text_col) != "")).select(
+        F.col(id_col).alias("_id"), segs.alias("_segs")
+    )
+    occ = base.select("_id", F.explode("_segs").alias("_seg"))
+    seg_df = occ.groupBy("_seg").agg(F.countDistinct("_id").alias("_df"))
+    total = base.agg(F.count(F.lit(1)).alias("_n_docs"))
+    boiler = (
+        seg_df.crossJoin(F.broadcast(total))
+        .filter(F.col("_df") >= F.lit(max_df_frac) * F.col("_n_docs"))
+        .agg(F.sort_array(F.collect_list("_seg")).alias("_boiler"))
+    )
+    kept = F.filter(
+        F.col("_segs"), lambda s: ~F.array_contains(F.col("_boiler"), s)
+    )
+    return base.crossJoin(F.broadcast(boiler)).select(
+        F.col("_id").alias(id_col),
+        F.concat_ws(" ", kept).alias("text_clean"),
+        F.size("_segs").cast("long").alias("n_segments"),
+        (F.size("_segs") - F.size(kept)).cast("long").alias("n_removed"),
+    )
+
+
 def test_boilerplate_scalable_matches_original(spark):
-    """The r10 hash-join rewrite (operators/boilerplate.py — the
-    --longtext axis caught the original's O(boiler × segments) per-doc
-    membership scan) must produce EXACTLY the original's rows on the
-    real documents corpus and on the hand-built edge corpus (all-boiler
-    docs reduced to '')."""
-    from etl_dashboard_project_1_spark.operators import boilerplate, textops
+    """The hash-join boilerplate_strip must produce EXACTLY the rows of
+    the original quadratic form (reference above) on the real documents
+    corpus and on the hand-built edge corpus (all-boiler docs reduced
+    to '')."""
+    from etl_dashboard_project_1_spark.operators import textops
+
+    original = _boilerplate_strip_quadratic
 
     def rows(df):
         return sorted(
@@ -513,8 +543,8 @@ def test_boilerplate_scalable_matches_original(spark):
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     for seg_words, frac in ((2, 0.05), (3, 0.5)):
-        a = textops.boilerplate_strip(docs, "doc_id", "text", seg_words, frac)
-        b = boilerplate.boilerplate_strip(docs, "doc_id", "text", seg_words, frac)
+        a = original(docs, "doc_id", "text", seg_words, frac)
+        b = textops.boilerplate_strip(docs, "doc_id", "text", seg_words, frac)
         assert rows(a) == rows(b), (seg_words, frac)
     edge = spark.createDataFrame(
         [
@@ -525,9 +555,9 @@ def test_boilerplate_scalable_matches_original(spark):
         ],
         ["doc_id", "text"],
     )
-    assert rows(
+    assert rows(original(edge, "doc_id", "text", 2, 0.5)) == rows(
         textops.boilerplate_strip(edge, "doc_id", "text", 2, 0.5)
-    ) == rows(boilerplate.boilerplate_strip(edge, "doc_id", "text", 2, 0.5))
+    )
 
 
 def test_bloom_prefilter_is_exact_safe_and_prunes(spark):
@@ -656,12 +686,18 @@ def test_orc_format_roundtrip(spark, tmp_path):
 def test_duplicated_spans_merges_maximal_run(spark):
     """Two docs sharing one verbatim 8-token span (k=5 → 4 overlapping
     grams) must yield exactly ONE maximal span per doc with exact
-    boundaries; a doc with no cross-doc 5-gram yields nothing."""
+    boundaries; a doc with no cross-doc 5-gram yields nothing. A doc
+    shorter than k yields no grams even though its tokens all lie in the
+    shared span, and two physical rows of one doc_id are one document:
+    grams they share are not cross-document."""
     shared = "alpha beta gamma delta epsilon zeta eta theta"  # 8 tokens
     rows = [
         (1, f"unique one two three {shared} tail1 tailx"),
         (2, f"{shared} other words entirely distinct here"),
         (3, "completely disjoint text with no overlap at all whatsoever"),
+        (4, "alpha beta gamma delta"),
+        (5, "both copies of this row repeat verbatim"),
+        (5, "both copies of this row repeat verbatim"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     out = {
@@ -1346,22 +1382,31 @@ def test_rfm_segments_partition_customers(spark):
         assert all(1 <= d <= r5.RFM_BUCKETS for d in rfm), code
 
 
+# Reference: the original list-slicing shingle CTE (O(len²) per doc).
+_QUADRATIC_SHINGLES_CTE = r"""
+sh AS (
+  SELECT doc_id, unnest(list_distinct(
+           CASE WHEN len(w) >= 3
+                THEN [array_to_string(w[i:i+2], ' ') FOR i IN range(1, len(w) - 1)]
+                ELSE [] END)) AS s
+  FROM (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS w FROM documents)
+)
+"""
+
+
 def test_fast_shingle_cte_matches_shared_cte_multiset():
-    """The r10 keep-best oracle splice (curation_queries._FAST_SHINGLES_CTE)
-    must reproduce extension_queries._SHINGLES_CTE's (doc_id, shingle)
-    MULTISET exactly — per-physical-row distinct, so duplicated rows keep
-    per-copy shingle sets (dedup_keep_best is not dupes-exempt) — on the
-    real corpus, a fully-duplicated corpus, and a hand-built edge corpus
-    (<3 tokens, repeated in-doc shingles, irregular whitespace)."""
+    """The linear lead()-window extension_queries._SHINGLES_CTE must
+    reproduce the original quadratic CTE's (doc_id, shingle) MULTISET
+    exactly — per-physical-row distinct, so duplicated rows keep per-copy
+    shingle sets (dedup_keep_best is not dupes-exempt) — on the real
+    corpus, a fully-duplicated corpus, and a hand-built edge corpus (<3
+    tokens, repeated in-doc shingles, irregular whitespace)."""
     import duckdb
 
-    from etl_dashboard_project_1_spark.plans.curation_queries import (
-        _FAST_SHINGLES_CTE,
-    )
     from etl_dashboard_project_1_spark.plans.extension_queries import _SHINGLES_CTE
 
-    probe_old = "WITH " + _SHINGLES_CTE + " SELECT doc_id, s FROM sh"
-    probe_new = "WITH " + _FAST_SHINGLES_CTE + " SELECT doc_id, s FROM sh"
+    probe_old = "WITH " + _QUADRATIC_SHINGLES_CTE + " SELECT doc_id, s FROM sh"
+    probe_new = "WITH " + _SHINGLES_CTE + " SELECT doc_id, s FROM sh"
 
     def multiset(con, sql):
         return sorted(con.execute(sql).fetchall())

@@ -86,3 +86,44 @@ def test_no_oracle_queries_run(spark, sf_dir):
         rows = df.collect()
         assert df.schema.fields, name
         assert rows is not None, name
+
+
+def test_no_complex_output_columns_anywhere(spark):
+    """Registry-wide driver-shape guard (r4 lesson): the external gate's
+    pandas canonicalizer sorts the result frame by every column, and list
+    /dict cells raise `unhashable type: 'list'` (CORRECTNESS_r04:
+    text_feature_hashing, inverted_index_build). NO registered query may
+    emit an ArrayType/MapType/StructType column — vectors/postings go out
+    as concat_ws scalars or exploded rows."""
+    from tests.oracle_harness import _complex_fields
+
+    sf = "/root/testdata/sf0.001"
+    bad = {}
+    for name, fn in entrymod.queries().items():
+        fields = _complex_fields(fn(spark, sf).schema)
+        if fields:
+            bad[name] = fields
+    assert not bad, f"complex output columns (driver canon cannot hash): {bad}"
+
+
+def test_queries_and_oracles_align():
+    q, o = entrymod.queries(), entrymod.oracle_sql()
+    assert set(o) <= set(q)
+    assert all(callable(fn) for fn in q.values())
+    assert all(isinstance(s, str) and s.strip() for s in o.values())
+
+
+def test_complex_output_guard_rejects_deliberate_array(spark):
+    """The guard must FAIL on an array-typed output, not just pass on a
+    clean registry: both the schema probe and the harness compare() are
+    exercised against a deliberately bad query."""
+    from pyspark.sql import functions as F
+
+    from tests.oracle_harness import _complex_fields, compare
+
+    def bad_query(spark_, sf_dir_):
+        return spark_.range(3).select(F.array(F.col("id")).alias("arr"))
+
+    assert _complex_fields(bad_query(spark, None).schema) == ["arr"]
+    ok, msg = compare(spark, bad_query, "SELECT 1", "/root/testdata/sf0.001")
+    assert not ok and "complex output columns" in msg

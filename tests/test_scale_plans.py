@@ -431,12 +431,11 @@ SWEEP_GATES = [
     # hold on sparse multi-decade series.
     ("longspan", 50, "longspan"),
     # NOT YET GATED: --longtext (tools/tiny_sweep.py LONGTEXT, ~218k-char
-    # docs) is an instrumented MANUAL axis in r10 — its first runs caught
-    # and fixed two live O(len²) classes (boilerplate strip, span dedup),
-    # but remaining offenders live in fingerprint-frozen operators
-    # (textops/dedup: a single edit flips 162/249 re-cert fingerprints),
-    # so the full registry does not yet complete in bounded time under
-    # it. Gate lands with the r11+ operator migrations; staging status
+    # docs) is an instrumented MANUAL axis — its runs caught and fixed
+    # live O(len²) classes (boilerplate strip, span dedup, the shingle
+    # oracle CTE), but other quadratic gram builders remain in
+    # operators/textops and operators/dedup, so the full registry does
+    # not yet complete in bounded time under it. Staging status is
     # documented at tools/tiny_sweep.py LONGTEXT.
 ]
 

@@ -219,22 +219,18 @@ LONGSPAN = {
 #: near-periodic text, and any hidden O(len²) blowup (a crash/timeout
 #: here is a finding).
 #:
-#: STATUS (r10): instrumented manual axis, NOT yet a pytest SWEEP_GATES
-#: member. Its first runs caught and fixed two live O(len²) classes
-#: (text_boilerplate_strip — operators/boilerplate.py rewrite;
-#: span_dedup_repeated — stride segmentation, both engines), but the
-#: remaining offenders live in operators/textops.py and
-#: operators/dedup.py (transform-over-starts gram builders, e.g.
-#: dedup.duplicated_spans; ngram_jaccard verification on 36k-token
-#: docs), whose edits flip 162/249 re-certification fingerprints —
-#: more than one 50-entry driver window absorbs — so they migrate
-#: window-by-window (r11+) and the gate lands when the full registry
-#: completes in bounded time. R10 UPDATE: the full-registry probe
-#: (tools/longtext_probe.py — per-query budget + resume; prefer it over
-#: the plain loop here, which one staller blocks) measured 291 MATCH /
-#: 15 stalls, and the stalls are the ORACLE's quadratic _SHINGLES_CTE,
-#: not the engine (Spark sides of stalled members complete in 7-21 s) —
-#: see the PLANS.md r11 inventory. Run manually:
+#: STATUS: instrumented manual axis, NOT yet a pytest SWEEP_GATES
+#: member. Its runs caught and fixed live O(len²) classes
+#: (textops.boilerplate_strip's membership scan and slice segmentation;
+#: span_dedup_repeated and dedup.duplicated_spans gram building; the
+#: shared shingle oracle CTE), but other transform-over-starts gram
+#: builders remain in operators/textops.py and operators/dedup.py
+#: (e.g. ngram_jaccard verification on 36k-token docs), and the gate
+#: lands when the full registry completes in bounded time. The
+#: full-registry probe (tools/longtext_probe.py — per-query budget +
+#: resume; prefer it over the plain loop here, which one staller
+#: blocks) measured 291 MATCH / 15 stalls before the shingle oracle CTE
+#: went linear — see the PLANS.md r11 inventory. Run manually:
 #:   python tools/longtext_probe.py 50 90        # full inventory
 #:   python tools/tiny_sweep.py 50 --longtext --rebuild  # plain loop
 LONGTEXT = {
