@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import math
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 
@@ -23,6 +24,26 @@ def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     return con
+
+
+#: Threads for registry-wide sweeps. At tiny scale factors each query costs
+#: about its Spark job-scheduling floor, so a few queries in flight on one
+#: shared session finish a sweep ~2x sooner on 4 cores; more threads only
+#: queue behind the same cores.
+SWEEP_WORKERS = 4
+
+
+def map_registry(check, items, workers: int = SWEEP_WORKERS) -> list:
+    """``[check(item) for item in items]``, run on a thread pool.
+
+    Registry queries may share one SparkSession across threads: the only
+    session confs a query sets are load_table's constant time-zone and
+    nanosAsLong values, and each temp view a query registers is written by
+    that query alone. ``check`` must not share a DuckDB connection between
+    calls (``compare`` opens its own).
+    """
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        return list(pool.map(check, items))
 
 
 def _norm_cell(v) -> str:

@@ -37,7 +37,7 @@ def test_output_dtypes_match_oracle(spark, sf_dir):
     HUGEINT sum) back to standard ones."""
     import duckdb
 
-    from tests.oracle_harness import duckdb_connect
+    from tests.oracle_harness import duckdb_connect, map_registry
 
     # NO array/list entries on purpose: the driver's pandas canon cannot
     # hash list cells (r4 failure class) — an array output must mismatch.
@@ -49,12 +49,13 @@ def test_output_dtypes_match_oracle(spark, sf_dir):
         "bigint": "i64", "int": "i32", "smallint": "i16", "double": "f64",
         "float": "f32", "string": "str", "date": "date", "boolean": "bool",
     }
-    con = duckdb_connect(sf_dir)
     q = entrymod.queries()
     o = entrymod.oracle_sql()
+    spark_dtypes = dict(map_registry(lambda name: (name, q[name](spark, sf_dir).dtypes), list(o)))
+    con = duckdb_connect(sf_dir)
     diffs = {}
     for name, sql in o.items():
-        stypes = {c: canon_spark.get(t, t) for c, t in q[name](spark, sf_dir).dtypes}
+        stypes = {c: canon_spark.get(t, t) for c, t in spark_dtypes[name]}
         rel = con.sql(sql)
         dtypes = {c: canon_duck.get(str(t).upper(), str(t)) for c, t in zip(rel.columns, rel.types)}
         bad = {c: (stypes.get(c), dtypes[c]) for c in dtypes if stypes.get(c) != dtypes[c]}

@@ -144,6 +144,8 @@ def test_no_registered_query_plans_a_cartesian_product(spark):
     and the fuzzy join's broadcast catalog cross)."""
     import importlib
 
+    from tests.oracle_harness import map_registry
+
     entrymod = importlib.import_module("__spark_entry__")
     # nested-loop-by-design: the broadcast side is literal/config-sized
     NESTED_LOOP_OK = {
@@ -218,14 +220,19 @@ def test_no_registered_query_plans_a_cartesian_product(spark):
     registered = set(entrymod.queries())
     stale = NESTED_LOOP_OK - registered
     assert not stale, f"whitelist names not in registry (stale entries): {stale}"
-    offenders = {}
-    for name, fn in entrymod.queries().items():
+
+    def plan_of(item):
+        name, fn = item
         try:
-            plan = fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
+            return name, fn(spark, sf)._jdf.queryExecution().executedPlan().toString(), None
         except Exception as e:  # a query failing to BUILD is itself a bug
-            offenders[name] = f"plan build failed: {e}"
-            continue
-        if "CartesianProduct" in plan:
+            return name, None, e
+
+    offenders = {}
+    for name, plan, err in map_registry(plan_of, list(entrymod.queries().items())):
+        if err is not None:
+            offenders[name] = f"plan build failed: {err}"
+        elif "CartesianProduct" in plan:
             offenders[name] = "CartesianProduct"
         elif "BroadcastNestedLoopJoin" in plan and name not in NESTED_LOOP_OK:
             offenders[name] = "BroadcastNestedLoopJoin (not whitelisted)"
@@ -377,18 +384,25 @@ def test_every_registered_query_survives_empty_tables(spark, tmp_path_factory):
     empty frames with their declared schema."""
     import __spark_entry__ as entrymod
 
+    from tests.oracle_harness import map_registry
+
     src = SF
     empty_dir = str(tmp_path_factory.mktemp("empty_sf"))
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
         df = spark.read.parquet(os.path.join(src, f"{t}.parquet"))
         df.limit(0).write.parquet(os.path.join(empty_dir, f"{t}.parquet"))
-    failures = {}
-    for name, fn in entrymod.queries().items():
+
+    def run(item):
+        name, fn = item
         try:
             fn(spark, empty_dir).collect()
         except Exception as e:  # noqa: BLE001 — collecting ALL failures
-            failures[name] = str(e).split("\n")[0][:160]
+            return name, str(e).split("\n")[0][:160]
+        return name, None
+
+    results = map_registry(run, list(entrymod.queries().items()))
+    failures = {name: msg for name, msg in results if msg is not None}
     assert not failures, failures
 
 import pytest
@@ -520,33 +534,42 @@ def test_every_registered_query_survives_adversarial_tables(
     pinned set fails here instead of updating a doc)."""
     import __spark_entry__ as entrymod
 
-    from tests.oracle_harness import compare
+    from tests.oracle_harness import compare, map_registry
     from tools.tiny_sweep import build
 
     out_dir = str(tmp_path_factory.mktemp(f"{label}_sf"))
     build(n_rows, out_dir, mode=mode)
     oracles = entrymod.oracle_sql()
-    crashes, diverged = {}, {}
-    for name, fn in entrymod.queries().items():
+
+    def check(item):
+        """(kind, message) for one query: kind is None (clean), "crash"
+        or "diverged"."""
+        name, fn = item
         sql = oracles.get(name)
         if sql is None:
             try:
                 fn(spark, out_dir).collect()
             except Exception as e:  # noqa: BLE001 — collecting ALL failures
-                crashes[name] = str(e).split("\n")[0][:160]
-            continue
+                return "crash", str(e).split("\n")[0][:160]
+            return None, ""
         try:
             ok, msg = compare(spark, fn, sql, out_dir)
         except Exception:  # noqa: BLE001 — classify by re-running Spark alone
             try:
                 fn(spark, out_dir).collect()
             except Exception as e2:  # noqa: BLE001
-                crashes[name] = str(e2).split("\n")[0][:160]
-                continue
-            diverged[name] = "oracle-side error"
-            continue
-        if not ok:
-            diverged[name] = msg[:120]
+                return "crash", str(e2).split("\n")[0][:160]
+            return "diverged", "oracle-side error"
+        return (None, "") if ok else ("diverged", msg[:120])
+
+    items = list(entrymod.queries().items())
+    results = map_registry(check, items)
+    crashes, diverged = {}, {}
+    for (name, _), (kind, msg) in zip(items, results):
+        if kind == "crash":
+            crashes[name] = msg
+        elif kind == "diverged":
+            diverged[name] = msg
     assert not crashes, crashes
     unexpected = {n: m for n, m in diverged.items() if n not in EXPECTED_DIVERGENCES[label]}
     assert not unexpected, f"NEW cross-engine divergences under --{label}: {unexpected}"
