@@ -33,7 +33,7 @@ def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
 SWEEP_WORKERS = 4
 
 
-def map_registry(check, items, workers: int = SWEEP_WORKERS) -> list:
+def map_registry(check, items) -> list:
     """``[check(item) for item in items]``, run on a thread pool.
 
     Registry queries may share one SparkSession across threads: the only
@@ -42,7 +42,7 @@ def map_registry(check, items, workers: int = SWEEP_WORKERS) -> list:
     that query alone. ``check`` must not share a DuckDB connection between
     calls (``compare`` opens its own).
     """
-    with ThreadPoolExecutor(max_workers=workers) as pool:
+    with ThreadPoolExecutor(max_workers=SWEEP_WORKERS) as pool:
         return list(pool.map(check, items))
 
 

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Full driver-contract sweep: emulate the external correctness check over
-EVERY registry entry (the external driver only covers the first 50).
+"""Full driver-contract sweep: check every registry entry against its
+DuckDB oracle under a bare SparkSession.
 
 Builds a BARE SparkSession on purpose — none of get_spark's configs — so
 any dependence on session-level configuration (nanos shim, timezone)
