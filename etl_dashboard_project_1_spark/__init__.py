@@ -12,6 +12,11 @@ Design principles (see SURVEY.md):
   where semantics genuinely require Python (difflib ratio, model stubs).
 - Broadcast tiny dimensions, partition-aware windows (never a global
   unpartitioned window on a data-sized path), AQE on.
+- Config-sized expressions (CASE tables, IN lists, column families) are
+  rendered as SQL text and parsed once with ``F.expr``
+  (``functions/sqltext.py``): each Column call is a Py4J round-trip, and
+  the 49-branch D6 CASE built call by call cost 5,267 of them (0.71 s)
+  against 3 (0.6 ms) parsed.
 """
 
 __version__ = "0.1.0"

@@ -3,7 +3,7 @@ category-column cleaner (D3), the header canonicalizer (H1) and the fuzzy
 join normalizer (J1).
 
 Two tiers:
-- ``strip_accents_col``: pure Column ``F.translate`` over the Latin accent
+- ``strip_accents_col``: SQL ``translate`` over the Latin accent
   repertoire — JVM-side, codegen'd, zero Python. This is the hot-path
   version (covers every accented char the Chilean dataset and common Latin
   text produce).
@@ -21,6 +21,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sqltext import column, lit, operand
+
 # Latin diacritics → ASCII, one char to one char (translate semantics).
 _ACCENTED = "áàâäãåéèêëíìîïóòôöõúùûüýÿñçÁÀÂÄÃÅÉÈÊËÍÌÎÏÓÒÔÖÕÚÙÛÜÝŸÑÇºª°"
 _PLAIN = "aaaaaaeeeeiiiiooooouuuuyyncAAAAAAEEEEIIIIOOOOOUUUUYYNC   "
@@ -30,9 +32,13 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+def _translate_accents(text: str) -> str:
+    return f"translate({text}, {lit(_ACCENTED)}, {lit(_PLAIN)})"
+
+
 def strip_accents_col(col: Column | str) -> Column:
     """Accent-strip via char translation — JVM-side, no UDF."""
-    return F.translate(_c(col), _ACCENTED, _PLAIN)
+    return column(_translate_accents(operand(col)))
 
 
 @F.pandas_udf(T.StringType())
@@ -51,9 +57,10 @@ def strip_accents_udf(s: pd.Series) -> pd.Series:
 
 def normalize_category_col(col: Column | str) -> Column:
     """D3 (reference: src/transform_pipeline.py:55-66): null→'', lowercase,
-    accent-strip, trim edge whitespace. One codegen'd expression."""
-    c = F.coalesce(_c(col).cast("string"), F.lit(""))
-    return F.trim(strip_accents_col(F.lower(c)))
+    accent-strip, trim edge whitespace. One codegen'd expression, rendered
+    as SQL text (``sqltext``) and parsed once."""
+    c = f"coalesce(CAST({operand(col)} AS STRING), '')"
+    return column(f"trim({_translate_accents(f'lower({c})')})")
 
 
 def collapse_whitespace(col: Column | str) -> Column:

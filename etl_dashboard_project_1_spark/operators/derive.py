@@ -16,7 +16,9 @@ into straight-line JVM code):
 - D10 12-hex sha256 id               (src/header_standarizer_ruler.py:173-175)
 
 All builders are ``config -> Column`` pure functions: no data movement, no
-UDFs, nothing opaque to the optimizer.
+UDFs, nothing opaque to the optimizer. The D1-D9 builders render their
+expression as SQL text and parse it once (``functions/sqltext``): a CASE
+table built call by call costs one Py4J round-trip per node.
 """
 
 from __future__ import annotations
@@ -26,6 +28,8 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import column, lit, operand
+
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
@@ -33,33 +37,37 @@ def _c(col: Column | str) -> Column:
 
 def parse_date(col: Column | str, fmt: str | None = None) -> Column:
     """D1: string → date (non-parsable → null, like pandas coerce)."""
-    return F.to_date(_c(col), fmt) if fmt else F.to_date(_c(col))
+    if fmt:
+        return column(f"to_date({operand(col)}, {lit(fmt)})")
+    return column(f"to_date({operand(col)})")
 
 
 def extract_year(col: Column | str) -> Column:
     """D1: year component as int."""
-    return F.year(_c(col))
+    return column(f"year({operand(col)})")
 
 
 def numeric_cast(col: Column | str) -> Column:
     """D2: string → double; non-numeric → null (≡ pd.to_numeric coerce)."""
-    return _c(col).cast("double")
+    return column(f"CAST({operand(col)} AS DOUBLE)")
 
 
 def case_map(col: Column | str, mapping: Mapping[str, Sequence[str]], default=None) -> Column:
     """D5: {category: [raw values...]} → chained CASE WHEN ... IN (...).
 
     One expression regardless of category count — Catalyst folds it into a
-    single codegen'd switch; no repeated passes over the data.
+    single codegen'd switch; no repeated passes over the data. A category
+    with no raw values never matches and renders no branch.
     """
-    c = _c(col)
-    expr = None
-    for category, values in mapping.items():
-        cond = c.isin(list(values))
-        expr = F.when(cond, F.lit(category)) if expr is None else expr.when(cond, F.lit(category))
-    if expr is None:
-        return F.lit(default)
-    return expr.otherwise(F.lit(default))
+    c = operand(col)
+    branches = [
+        f"WHEN {c} IN ({', '.join(lit(v) for v in values)}) THEN {lit(category)}"
+        for category, values in mapping.items()
+        if len(values)
+    ]
+    if not branches:
+        return column(lit(default))
+    return column(f"CASE {' '.join(branches)} ELSE {lit(default)} END")
 
 
 def factor_product(
@@ -71,22 +79,22 @@ def factor_product(
 
     ``table`` maps a tuple of key values (matched against ``key_cols`` in
     order) to ``(source_col_name, factor)``; the result is
-    ``round(source * factor, decimals)`` for the first matching key.
+    ``round(source * factor, decimals)`` for the first matching key, null
+    when no key matches.
     The reference iterates the 7×7 key space with boolean-mask writes; this
     is the same semantics in a single expression.
     """
-    keys = [_c(k) for k in key_cols]
-    expr = None
+    keys = [operand(k) for k in key_cols]
+    branches = []
     for key_values, (src, factor) in table.items():
-        cond = None
-        for k, v in zip(keys, key_values):
-            term = k == F.lit(v)
-            cond = term if cond is None else (cond & term)
-        val = _c(src).cast("double") * F.lit(float(factor))
+        cond = " AND ".join(f"{k} = {lit(v)}" for k, v in zip(keys, key_values))
+        val = f"CAST({operand(src)} AS DOUBLE) * {lit(float(factor))}"
         if decimals is not None:
-            val = F.round(val, decimals)
-        expr = F.when(cond, val) if expr is None else expr.when(cond, val)
-    return expr if expr is not None else F.lit(None).cast("double")
+            val = f"round({val}, {decimals})"
+        branches.append(f"WHEN {cond} THEN {val}")
+    if not branches:
+        return column("CAST(NULL AS DOUBLE)")
+    return column(f"CASE {' '.join(branches)} END")
 
 
 def keyed_source_select(
@@ -94,14 +102,14 @@ def keyed_source_select(
 ) -> Column:
     """D7: pick the value of a different source column depending on a key
     column's value (e.g. per-fuel CO₂ source columns)."""
-    k = _c(key_col)
-    expr = None
-    for key_value, src in table.items():
-        val = _c(src).cast(cast)
-        expr = F.when(k == F.lit(key_value), val) if expr is None else expr.when(
-            k == F.lit(key_value), val
-        )
-    return expr if expr is not None else F.lit(None).cast(cast)
+    k = operand(key_col)
+    branches = [
+        f"WHEN {k} = {lit(key_value)} THEN CAST({operand(src)} AS {cast})"
+        for key_value, src in table.items()
+    ]
+    if not branches:
+        return column(f"CAST(NULL AS {cast})")
+    return column(f"CASE {' '.join(branches)} END")
 
 
 def bucketize(
@@ -113,12 +121,13 @@ def bucketize(
     (the reference leaves ≥3860 kg unlabelled).
     """
     assert len(labels) == len(edges) - 1, "labels must be one fewer than edges"
-    c = _c(col).cast("double")
-    expr = None
-    for i, lab in enumerate(labels):
-        cond = (c >= F.lit(float(edges[i]))) & (c < F.lit(float(edges[i + 1])))
-        expr = F.when(cond, F.lit(lab)) if expr is None else expr.when(cond, F.lit(lab))
-    return expr.otherwise(F.lit(None))
+    c = f"CAST({operand(col)} AS DOUBLE)"
+    branches = [
+        f"WHEN {c} >= {lit(float(edges[i]))} AND {c} < {lit(float(edges[i + 1]))} "
+        f"THEN {lit(lab)}"
+        for i, lab in enumerate(labels)
+    ]
+    return column(f"CASE {' '.join(branches)} ELSE NULL END")
 
 
 def horizontal_mean(cols: Sequence[Column | str], decimals: int | None = 2) -> Column:
@@ -126,12 +135,10 @@ def horizontal_mean(cols: Sequence[Column | str], decimals: int | None = 2) -> C
     nulls count as 0 in the numerator, the divisor is the NUMBER OF COLUMNS
     (not the non-null count) — pandas ``sum(axis=1)/len(cols)``.
     """
-    total = None
-    for c in cols:
-        term = F.coalesce(_c(c).cast("double"), F.lit(0.0))
-        total = term if total is None else (total + term)
-    mean = total / F.lit(float(len(list(cols))))
-    return F.round(mean, decimals) if decimals is not None else mean
+    cols = list(cols)
+    total = " + ".join(f"coalesce(CAST({operand(c)} AS DOUBLE), 0.0D)" for c in cols)
+    mean = f"({total}) / {lit(float(len(cols)))}"
+    return column(f"round({mean}, {decimals})" if decimals is not None else mean)
 
 
 def portable_round(col: Column | str, decimals: int) -> Column:
@@ -178,9 +185,8 @@ def numpy_round(col: Column | str, decimals: int) -> Column:
     Use when conforming to a pandas/numpy reference output; use
     ``portable_round`` for cross-engine oracle parity.
     """
-    c = _c(col)
-    scale = float(10**decimals)
-    return F.rint(c * F.lit(scale)) / F.lit(scale)
+    scale = lit(float(10**decimals))
+    return column(f"rint({operand(col)} * {scale}) / {scale}")
 
 
 def hash12(col: Column | str) -> Column:

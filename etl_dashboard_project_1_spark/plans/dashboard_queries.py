@@ -205,29 +205,52 @@ WHERE rn <= 3
 """
 
 
+#: Revenue ``l_extendedprice * (1 - l_discount)`` in exact e4 units: both
+#: factors are 2-decimal, so the product of their cents forms is an integer.
+#: Summed as DECIMAL and rounded half-up to cents once, as q1 does, every
+#: engine gets the same cents; a double sum can land on a half cent and
+#: round differently in Spark and DuckDB (seeds 102, 207, 210).
+_REVENUE_E4 = (
+    f"{derive.CENTS_SQL.format(x='l_extendedprice')}"
+    f" * (100 - {derive.CENTS_SQL.format(x='l_discount')})"
+)
+_REVENUE_SUM_E4 = f"sum(CAST({_REVENUE_E4} AS DECIMAL(28,0)))"
+#: e4 sum → cents, half-up (non-negative by TPC-H domain), as a double
+_REVENUE_CENTS = (
+    "CAST(CAST(floor((_rev_e4 + 50) / 100) AS DECIMAL(38,0)) AS DOUBLE) / 100"
+)
+#: DuckDB spelling of the two steps above
+_REVENUE_SQL = (
+    "CAST((sum(CAST(floor(l_extendedprice * 100 + 0.5) AS HUGEINT)"
+    " * (100 - CAST(floor(l_discount * 100 + 0.5) AS HUGEINT))) + 50) // 100"
+    " AS DOUBLE) / 100"
+)
+
+
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: revenue lost to returns, top 20 customers."""
+    """TPC-H Q10 shape: revenue lost to returns, top 20 customers.
+    Revenue is an exact cents sum (``_REVENUE_E4``)."""
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01")) & (F.col("o_orderdate") < F.lit("1997-01-01"))
     )
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     nation = load_table(spark, sf_dir, "nation")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.round(F.sum(revenue), 2).alias("revenue"))
+        .agg(F.expr(_REVENUE_SUM_E4).alias("_rev_e4"))
+        .select("c_custkey", "c_name", "n_name", F.expr(_REVENUE_CENTS).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
         .limit(20)
     )
 
 
-Q10_SQL = """
+Q10_SQL = f"""
 SELECT c_custkey, c_name, n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+       {_REVENUE_SQL} AS revenue
 FROM customer
 JOIN orders   ON o_custkey = c_custkey
 JOIN lineitem ON l_orderkey = o_orderkey
@@ -242,7 +265,8 @@ LIMIT 20
 
 def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: supplier-nation → customer-nation trade volume by
-    year for a nation pair (both directions)."""
+    year for a nation pair (both directions). Revenue is an exact cents
+    sum (``_REVENUE_E4``)."""
     supp = load_table(spark, sf_dir, "supplier")
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
@@ -256,7 +280,6 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair = (
         (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
@@ -265,14 +288,15 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n2), cust.c_nationkey == F.col("c_nk"))
         .filter(pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").cast("long").alias("l_year"))
-        .agg(F.round(F.sum(revenue), 2).alias("revenue"))
+        .agg(F.expr(_REVENUE_SUM_E4).alias("_rev_e4"))
+        .select("supp_nation", "cust_nation", "l_year", F.expr(_REVENUE_CENTS).alias("revenue"))
     )
 
 
-Q7_SQL = """
+Q7_SQL = f"""
 SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
        year(l_shipdate) AS l_year,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+       {_REVENUE_SQL} AS revenue
 FROM supplier
 JOIN lineitem ON s_suppkey = l_suppkey
 JOIN orders   ON o_orderkey = l_orderkey

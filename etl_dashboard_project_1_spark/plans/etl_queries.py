@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import Sql
 from ..operators import cleaning, derive
 from ..session import load_table
 
@@ -116,7 +117,7 @@ def d1_d2_datetime_and_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.withColumn("anio", derive.extract_year("o_orderdate").cast("long"))
-        .withColumn("price_d", derive.numeric_cast(F.col("o_totalprice").cast("string")))
+        .withColumn("price_d", derive.numeric_cast(Sql("CAST(o_totalprice AS STRING)")))
         .groupBy("anio")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),

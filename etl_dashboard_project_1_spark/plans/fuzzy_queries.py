@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.similarity import difflib_ratio_udf
+from ..functions import sqltext
 from ..functions.text import normalize_category_col
 from ..operators import derive
 from ..operators.fuzzy import apply_fuzzy_mapping, fuzzy_match_names
@@ -186,7 +187,8 @@ def d3_text_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3: null-safe lowercase + accent-strip + trim as one JVM expression
     (accented input synthesized so the op has something to do)."""
     docs = load_table(spark, sf_dir, "documents")
-    dirty = F.concat(F.lit("  Ártículo ÑOÑO É "), F.col("lang"), F.lit("  "))
+    dirty = sqltext.Sql(
+        f"concat({sqltext.lit('  Ártículo ÑOÑO É ')}, lang, {sqltext.lit('  ')})")
     return docs.select("doc_id", normalize_category_col(dirty).alias("norm_text"))
 
 

@@ -9,6 +9,7 @@ tests and on a real cluster unchanged (only master/memory differ).
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -44,11 +45,17 @@ def get_spark(
     - UTC session timezone so results are comparable with the DuckDB
       oracle (naive timestamps).
     - Arrow on for every pandas interchange (Pandas UDFs, toPandas).
+
+    ``cpus`` defaults to ``SPARK_GRAFT_CPUS``, else the CPUs this process
+    may run on. ``getOrCreate`` hands back a live session as it is, master
+    included; if that master is not the requested one, this warns once
+    per (requested, live) pair and returns the live session.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS") or _usable_cpus())
     shuffle_partitions = shuffle_partitions or cpus
+    master = f"local[{cpus}]"
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -85,7 +92,27 @@ def get_spark(
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    live = spark.sparkContext.master
+    if live != master and (master, live) not in _MASTER_WARNED:
+        _MASTER_WARNED.add((master, live))
+        warnings.warn(
+            f"get_spark asked for master {master} but reuses the live session "
+            f"on {live}; stop that session first to get {master}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return spark
+
+
+def _usable_cpus() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+#: (requested, live) master pairs already warned about
+_MASTER_WARNED: set[tuple[str, str]] = set()
 
 
 def table_path(sf_dir: str, name: str) -> str:

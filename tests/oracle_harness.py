@@ -8,13 +8,45 @@ shape the driver applies at sf0.01.
 
 from __future__ import annotations
 
+import gc
 import math
 import os
+import threading
+import types
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 import duckdb
+from py4j.java_gateway import GatewayClient
 
 from etl_dashboard_project_1_spark.session import TABLES
+
+
+@contextmanager
+def count_py4j_calls():
+    """Count the Py4J round-trips the calling thread makes inside the
+    block; yields an object whose ``calls`` attribute holds the running
+    count.
+
+    Every Python→JVM call goes through ``GatewayClient.send_command``.
+    ``gc.collect()`` runs first, and calls from other threads are not
+    counted: proxy detaches for earlier garbage are sent by Py4J's
+    finalizer thread and would otherwise be billed to the block."""
+    gc.collect()
+    count = types.SimpleNamespace(calls=0)
+    original = GatewayClient.send_command
+    caller = threading.get_ident()
+
+    def send_command(self, *args, **kwargs):
+        if threading.get_ident() == caller:
+            count.calls += 1
+        return original(self, *args, **kwargs)
+
+    GatewayClient.send_command = send_command
+    try:
+        yield count
+    finally:
+        GatewayClient.send_command = original
 
 
 def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:

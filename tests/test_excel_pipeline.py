@@ -120,24 +120,24 @@ def test_importer_fuzzy_resolution(spark):
 
 
 def test_ffill_global_matches_window(spark):
-    """Scale-safe two-pass global ffill ≡ single-partition window ffill."""
+    """Scale-safe two-pass global ffill ≡ single-partition window ffill,
+    on rows already in order (no shuffle) and on shuffled rows (range
+    partitioned first), also when the result is coalesced afterwards."""
     rng = np.random.RandomState(7)
     n = 5000
     vals = [None if rng.rand() < 0.4 else float(i) for i in range(n)]
     pdf = pd.DataFrame({"ord": range(n), "v": vals})
     df = spark.createDataFrame(pdf)
-
-    got = (
-        cleaning.ffill_global(df, ["v"], ["ord"], num_partitions=7)
-        .orderBy("ord")
-        .collect()
-    )
     # reference result via pandas (NaN -> None for comparison)
     expected = [
         None if pd.isna(v) else v for v in pdf.sort_values("ord")["v"].ffill()
     ]
-    got_vals = [r["v"] for r in got]
-    assert got_vals == expected
+
+    for name, rows in (("in order", df), ("shuffled", df.repartition(5))):
+        filled = cleaning.ffill_global(rows, ["v"], ["ord"], num_partitions=7)
+        for out in (filled, filled.coalesce(1)):
+            got = out.orderBy("ord").collect()
+            assert [r["v"] for r in got] == expected, name
 
 
 def _write_sheet_csv(pdf, path):

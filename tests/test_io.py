@@ -100,6 +100,37 @@ def test_events_readable_from_unconfigured_session(spark):
     assert ev.limit(5).count() == 5
 
 
+def test_get_spark_defaults_to_usable_cpus_and_warns_once_on_master_mismatch(
+    spark, monkeypatch
+):
+    """With SPARK_GRAFT_CPUS unset get_spark asks for local[<usable CPUs>].
+    Reusing the live session on another master returns it with one
+    warning that names both masters; a second call does not warn again."""
+    import warnings
+
+    from etl_dashboard_project_1_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session, "_MASTER_WARNED", set())
+    requested = f"local[{len(os.sched_getaffinity(0))}]"
+    live = spark.sparkContext.master
+    # get_spark re-applies its runtime confs to the live session
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            assert session.get_spark() is spark
+            assert session.get_spark() is spark
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    msgs = [str(w.message) for w in caught if issubclass(w.category, RuntimeWarning)]
+    if live == requested:
+        assert msgs == []
+    else:
+        assert len(msgs) == 1, msgs
+        assert requested in msgs[0] and live in msgs[0], msgs[0]
+
+
 # --- S1-S3 acquisition chain with fake transports ---------------------------
 
 _SAMPLE_HTML = """
