@@ -24,7 +24,6 @@ from typing import Iterable, Sequence
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.sqltext import Sql, column, ident, lit, operand
 
@@ -120,47 +119,49 @@ def ffill_global(
 ) -> DataFrame:
     """N2 at scale, with a *total* order but no single-partition shuffle.
 
-    Two passes over a local checkpoint of the rows:
-      1. one narrow job returns ONE ROW PER PARTITION — its first and last
-         order key, whether it is sorted, and each fill column's last
-         non-null value (driver state is O(partitions), not O(rows));
-      2. the running prefix of those rows is each partition's carry-in,
-         and a mapInPandas pass forward-fills every partition from it,
-         with a carry across Arrow batches.
+    Two passes:
+      1. range-partition by ``order_cols`` (preserves global order across
+         partitions), sort within partitions, forward-fill inside each
+         partition with a carry across Arrow batches;
+      2. collect the per-partition last non-null values (ONE ROW PER
+         PARTITION — driver state is O(partitions), not O(rows)), compute
+         the running carry-in prefix per partition, and patch each
+         partition's leading nulls from the previous partitions' carry.
 
-    If the partitions already hold the rows in global order (a frame
-    ingested in load order), that is all: no shuffle, one job. Otherwise
-    the rows are first range-partitioned by ``order_cols`` into
-    ``num_partitions`` (default: the session's parallelism) and sorted
-    within partitions, and pass 1 runs on that (a sampling job and a
-    shuffle more).
-
-    The checkpoint makes every later action read the very partitions the
-    carries were computed from. Unlike persist(), whose CacheManager entry
-    lives as long as the session, its blocks are freed by the
-    ContextCleaner once the plan is unreferenced.
+    The sorted partitions are locally checkpointed, so every later action
+    reads the very partitions the carries were computed from. Unlike
+    persist(), whose CacheManager entry lives as long as the session, the
+    checkpoint's blocks are left to the ContextCleaner once the plan is
+    unreferenced (but see ROADMAP 4(e): a process's first refresh keeps
+    its checkpoints).
 
     Equivalent to ``last(ignorenulls) over (order by ... rows unbounded
     preceding)`` but scales: work per partition, one tiny collect.
     """
-    part = _checkpoint_with_pid(df)
-    stats = _partition_stats(part, cols, order_cols)
-    if not _in_global_order(stats, len(order_cols)):
-        n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        order_exprs = [F.col(c) for c in order_cols]
-        part = _checkpoint_with_pid(
-            part.drop("_ffill_pid")
-            .repartitionByRange(n, *order_exprs)
-            .sortWithinPartitions(*order_exprs)
-        )
-        stats = _partition_stats(part, cols, order_cols)
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    order_exprs = [F.col(c) for c in order_cols]
+    # the partition id is taken above the checkpoint, so it names the
+    # stored partition each row is read back from
+    part = (
+        df.repartitionByRange(n, *order_exprs)
+        .sortWithinPartitions(*order_exprs)
+        .localCheckpoint(eager=False)
+        .withColumn("_ffill_pid", F.spark_partition_id())
+    )
+    # pass 1 metadata: last non-null per partition (tiny — one row/partition)
+    lasts = (
+        part.groupBy("_ffill_pid")
+        .agg(*[F.last(F.col(c), ignorenulls=True).alias(c) for c in cols])
+        .collect()
+    )
+    last_by_pid = {r["_ffill_pid"]: r for r in sorted(lasts, key=lambda r: r["_ffill_pid"])}
     # carry-in for partition p = last non-null over all partitions < p
     carry_in: dict[int, dict[str, object]] = {}
     running: dict[str, object] = {c: None for c in cols}
-    for row in stats:
-        carry_in[row["pid"]] = dict(running)
-        for j, c in enumerate(cols):
-            v = row[f"fill{j}"]
+    for pid in sorted(last_by_pid):
+        carry_in[pid] = dict(running)
+        for c in cols:
+            v = last_by_pid[pid][c]
             if v is not None:
                 running[c] = v
 
@@ -190,68 +191,6 @@ def ffill_global(
 
     out = part.mapInPandas(fill_part, schema=part.schema)
     return out.drop("_ffill_pid")
-
-
-def _checkpoint_with_pid(df: DataFrame) -> DataFrame:
-    """``df`` lazily checkpointed (the first job that reads it stores the
-    blocks, later actions read them back), plus each row's partition id.
-    The id is taken above the checkpoint: over a local relation the
-    optimizer would evaluate spark_partition_id() on the driver, where
-    every row reads 0."""
-    return df.localCheckpoint(eager=False).withColumn("_ffill_pid", F.spark_partition_id())
-
-
-def _partition_stats(part: DataFrame, cols: Sequence[str], order_cols: Sequence[str]) -> list:
-    """Pass 1 of :func:`ffill_global`: one row per non-empty partition,
-    sorted by partition id — ``pid``, ``sorted``, ``first{i}``/``last{i}``
-    (the order key at each end) and ``fill{j}`` (the last non-null value
-    of ``cols[j]``)."""
-    types = {f.name: f.dataType for f in part.schema.fields}
-    schema = T.StructType(
-        [T.StructField("pid", T.IntegerType()), T.StructField("sorted", T.BooleanType())]
-        + [T.StructField(f"{end}{i}", types[c]) for end in ("first", "last")
-           for i, c in enumerate(order_cols)]
-        + [T.StructField(f"fill{j}", types[c]) for j, c in enumerate(cols)]
-    )
-    keys, fills = list(order_cols), list(cols)
-
-    def stats(batches: Iterable[pd.DataFrame]):
-        pid, first, last, ordered = None, None, None, True
-        fill = [None] * len(fills)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["_ffill_pid"].iloc[0])
-            k = pdf[keys]
-            head, tail = tuple(k.iloc[0]), tuple(k.iloc[-1])
-            ordered = (
-                ordered
-                and not k.isna().any().any()
-                and pd.MultiIndex.from_frame(k).is_monotonic_increasing
-                and (last is None or last <= head)
-            )
-            first = head if first is None else first
-            last = tail
-            for j, c in enumerate(fills):
-                valid = pdf[c].last_valid_index()
-                if valid is not None:
-                    fill[j] = pdf[c].loc[valid]
-        if pid is not None:
-            yield pd.DataFrame([[pid, ordered, *first, *last, *fill]], columns=schema.names)
-
-    selected = list(dict.fromkeys(["_ffill_pid", *keys, *fills]))
-    rows = part.select(*selected).mapInPandas(stats, schema=schema).collect()
-    return sorted(rows, key=lambda r: r["pid"])
-
-
-def _in_global_order(stats: list, n_keys: int) -> bool:
-    """Every partition sorted, and each one's first key at or after the
-    previous one's last key."""
-    if not all(r["sorted"] for r in stats):
-        return False
-    ends = [(tuple(r[f"first{i}"] for i in range(n_keys)),
-             tuple(r[f"last{i}"] for i in range(n_keys))) for r in stats]
-    return all(prev[1] <= cur[0] for prev, cur in zip(ends, ends[1:]))
 
 
 def histogram_disc_percentiles(

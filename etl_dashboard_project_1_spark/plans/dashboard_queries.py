@@ -220,11 +220,7 @@ _REVENUE_CENTS = (
     "CAST(CAST(floor((_rev_e4 + 50) / 100) AS DECIMAL(38,0)) AS DOUBLE) / 100"
 )
 #: DuckDB spelling of the two steps above
-_REVENUE_SQL = (
-    "CAST((sum(CAST(floor(l_extendedprice * 100 + 0.5) AS HUGEINT)"
-    " * (100 - CAST(floor(l_discount * 100 + 0.5) AS HUGEINT))) + 50) // 100"
-    " AS DOUBLE) / 100"
-)
+_REVENUE_SQL = f"CAST((sum(CAST({_REVENUE_E4} AS HUGEINT)) + 50) // 100 AS DOUBLE) / 100"
 
 
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:

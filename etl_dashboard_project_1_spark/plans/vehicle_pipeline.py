@@ -7,8 +7,8 @@ dependency level, each column a parsed SQL expression. A refresh is still
 several Spark jobs, not one stage: the mean imputation and ffill's carry
 pass (which also runs the fuzzy importer join) run jobs while the plan is
 built, and each sink re-executes the fill pass and the projections above
-its checkpoint (a traced perfbench ``vehicle_refresh`` on local[4]: 9 jobs
-and 13 stages per refresh, CSV + parquet sinks).
+its checkpoint (a traced perfbench ``vehicle_refresh`` on local[4]: 12 jobs
+and 19 stages per refresh, CSV + parquet sinks).
 Domain tables (fuel factors, propulsion categories, gas families, the final
 projection) are module-level CONFIG, not code.
 

@@ -133,7 +133,9 @@ def ingest_messy_frame(
     # driver for every plan built on it (ConvertToLocalRelation: ~0.6 s
     # per plan at the workbook's 7,569 rows x 100 columns). A lazy local
     # checkpoint turns it into an RDD scan, stored by the first job that
-    # reads it and freed by the ContextCleaner with the frame.
+    # reads it and freed by the ContextCleaner with the frame (except in a
+    # process's first refresh, whose checkpoints stay reachable: ROADMAP
+    # 4(e)).
     sdf = spark.createDataFrame(body).localCheckpoint(eager=False)
     return sdf.withColumn(row_id_col, F.col(row_id_col).cast("long"))
 

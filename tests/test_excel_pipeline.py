@@ -121,8 +121,8 @@ def test_importer_fuzzy_resolution(spark):
 
 def test_ffill_global_matches_window(spark):
     """Scale-safe two-pass global ffill ≡ single-partition window ffill,
-    on rows already in order (no shuffle) and on shuffled rows (range
-    partitioned first), also when the result is coalesced afterwards."""
+    on rows in order and on shuffled rows, also when the result is
+    coalesced afterwards (one task then fills several partitions)."""
     rng = np.random.RandomState(7)
     n = 5000
     vals = [None if rng.rand() < 0.4 else float(i) for i in range(n)]

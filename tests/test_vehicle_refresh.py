@@ -20,8 +20,8 @@ from tests.oracle_harness import count_py4j_calls  # noqa: E402
 FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
 #: Py4J round-trips allowed for building one refresh plan. The plan built
-#: from per-node Column calls took about 10,500; the parsed-SQL builders
-#: take about 2,000 (ffill, mean imputation and the importer join included).
+#: from per-node Column calls took about 8,750; the parsed-SQL builders
+#: take about 1,600 (ffill, mean imputation and the importer join included).
 PY4J_BUDGET = 3000
 
 
@@ -61,22 +61,30 @@ def test_refresh_plan_py4j_budget(spark, refresh_inputs):
     assert n.calls <= PY4J_BUDGET, n.calls
 
 
-def _settled_persistent_rdds(spark) -> int:
-    """Persisted RDDs once Python and JVM garbage is collected and the
-    ContextCleaner has had time to unpersist what became unreachable."""
-    for _ in range(5):
+def _persistent_rdds(spark, done, deadline_s: float = 30.0) -> int:
+    """Persisted RDDs after a Python and JVM GC, polled until
+    ``done(counts so far)`` holds or the deadline passes: the
+    ContextCleaner unpersists what became unreachable asynchronously."""
+    def count() -> int:
         gc.collect()
         spark.sparkContext._jvm.System.gc()
-        time.sleep(0.5)
-    return len(spark.sparkContext._jsc.getPersistentRDDs())
+        return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+    counts = [count()]
+    end = time.monotonic() + deadline_s
+    while not done(counts) and time.monotonic() < end:
+        time.sleep(0.25)
+        counts.append(count())
+    return counts[-1]
 
 
 def test_repeated_refresh_leaks_no_cache(spark, refresh_inputs):
     """Refreshes on different inputs in one process: never a cached plan,
     and the persisted RDDs stop growing — after two more refreshes and a
-    GC the count is no higher than after the first two. (A refresh's
-    local checkpoints may stay reachable for a while; they must not pile
-    up one set per refresh.)"""
+    GC the count is no higher than after the first two. (The first
+    refresh's local checkpoints stay reachable, for a reason not yet
+    found: ROADMAP 4(e). Later ones must not pile up one set per
+    refresh.)"""
     raw, canon, importers = refresh_inputs
     cache = spark._jsparkSession.sharedState().cacheManager()
     # caches other tests left behind would hide this test's own
@@ -90,7 +98,9 @@ def test_repeated_refresh_leaks_no_cache(spark, refresh_inputs):
 
     refresh(0)
     refresh(1)
-    settled = _settled_persistent_rdds(spark)
+    # the count once it has not changed for a second
+    settled = _persistent_rdds(spark, lambda c: len(c) >= 5 and len(set(c[-5:])) == 1)
     refresh(2)
     refresh(3)
-    assert _settled_persistent_rdds(spark) <= settled
+    after = _persistent_rdds(spark, lambda c: c[-1] <= settled)
+    assert after <= settled, (after, settled)
