@@ -243,8 +243,10 @@ def stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink; multi-batch and out-of-order delivery are exercised in
     tests/test_streaming.py with a split file source.
 
-    Scale shape: per batch, one window over (previous ∪ batch) keyed by
-    user — on a lakehouse table this is a true keyed MERGE; the
+    Scale shape: per batch, one row_number window over (previous ∪
+    batch) keyed by user — one shuffle and two Spark jobs. It orders by
+    ts, then event_id, then the stored row first, so a full tie keeps
+    the stored row. On a lakehouse table this is a true keyed MERGE; the
     parquet-rewrite form here is the portable fallback. Final state is
     |users|-bounded."""
     import os
@@ -303,9 +305,10 @@ def stream_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming face of the corpus datacard. Multi-batch delivery is
     exercised in tests/test_streaming.py with maxFilesPerTrigger=1.
 
-    Scale shape: per batch one groups-sized groupBy plus a merge against
-    the groups-sized table — state lives in storage, never in executor
-    memory, so ingestion is unbounded."""
+    Scale shape: per batch one groupBy over (batch events ∪ the
+    groups-sized table), partially aggregated before its shuffle — state
+    lives in storage, never in executor memory, so ingestion is
+    unbounded."""
     import os
     import shutil
     import tempfile

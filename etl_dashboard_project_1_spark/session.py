@@ -45,6 +45,10 @@ def get_spark(
     - UTC session timezone so results are comparable with the DuckDB
       oracle (naive timestamps).
     - Arrow on for every pandas interchange (Pandas UDFs, toPandas).
+    - Streaming checkpoint logs are written through
+      ``FileSystemBasedCheckpointFileManager``: under a third of the
+      per-batch log cost on a local disk, and the same atomicity for
+      those write-once files (the argument is at the conf below).
 
     ``cpus`` defaults to ``SPARK_GRAFT_CPUS``, else the CPUs this process
     may run on. ``getOrCreate`` hands back a live session as it is, master
@@ -89,6 +93,22 @@ def get_spark(
         # read natively; read as long (ns since epoch) and convert in the
         # loader (micros precision — ties broken by event_id downstream).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Streaming offset/commit/source logs through the FileSystem API:
+        # the latestOffset, walCommit and commitOffsets phases of a
+        # micro-batch took about 30 ms instead of about 105 ms through the
+        # default FileContext manager (local disk, 4 CPUs). Spark 4.1 writes
+        # every batch file of those logs once (HDFSMetadataLog.write,
+        # overwriteIfPossible=false), into a temp file renamed into
+        # place, so readers never see a partial file on local FS or HDFS
+        # under either manager; a second writer of the same batch fails
+        # on the destination-exists check (HDFS rename also refuses an
+        # existing file). Object stores have no atomic rename under
+        # either manager.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -310,21 +310,28 @@ def foreach_batch_upsert(
     the target from (previous ∪ batch); on a lakehouse table this becomes
     a true keyed MERGE with no rewrite.
 
-    ``order_col`` makes within-batch conflict resolution DETERMINISTIC:
-    when one micro-batch carries several rows per key, the row with the
-    greatest ``order_col`` (a version/event-time column) wins. Without
-    it, ``dropDuplicates`` keeps an arbitrary row — fine for
-    at-most-once-per-key sources, wrong for rapid updates.
+    One ``row_number`` window over (batch ∪ target), partitioned by
+    ``key``, keeps rank 1; a ``_src`` column marks batch rows 0 and target
+    rows 1. It settles conflicts within the batch and against the target
+    at once: one shuffle, two Spark jobs (shuffle map, write) per batch.
+    Within a batch the greatest ``order_col`` wins, ties broken on
+    ``tiebreak_col`` descending; without ``order_col`` any row may win.
 
-    ``resolve`` governs CROSS-batch conflicts: ``"replace"`` (default)
-    is last-batch-wins — right when the source is an ordered changelog.
-    ``"max_order"`` is a conditional MERGE: an existing key's row is
-    only replaced when the incoming ``order_col`` is greater (ties
-    break on ``tiebreak_col`` descending) — right when micro-batches
-    may deliver rows out of event-time order, and what makes the final
-    table a pure function of the event set (the streaming-vs-batch
-    equality the oracle gate checks)."""
+    ``resolve`` governs CROSS-batch conflicts. ``"replace"`` (default,
+    ordered by ``_src`` then ``order_col``) is last-batch-wins — right
+    for an ordered changelog. ``"max_order"`` (ordered by ``order_col``,
+    ``tiebreak_col``, then ``_src`` descending) replaces an existing row
+    only with a greater incoming order; on a full tie the existing row is
+    kept. It makes the final table a pure function of the event set,
+    whatever the arrival order (the equality the oracle gate checks).
+
+    The target is read with the schema this sink last wrote, so no batch
+    runs a footer-reading schema job. Only a run's first batch over an
+    existing target infers it, and ``unionByName`` then rejects a target
+    whose columns differ instead of reading missing ones as nulls."""
     import os
+
+    from pyspark.sql import Window
 
     if resolve not in ("replace", "max_order"):
         raise ValueError(f"unknown resolve mode {resolve!r}")
@@ -332,45 +339,27 @@ def foreach_batch_upsert(
         # silently falling back to replace would let an out-of-order batch
         # clobber newer rows — the exact corruption this mode exists to stop
         raise ValueError("resolve='max_order' requires order_col")
-    order_cols = (
-        [F.desc(order_col)] + ([F.desc(tiebreak_col)] if tiebreak_col else [])
-        if order_col is not None
-        else None
-    )
+    order = [F.desc(c) for c in (order_col, tiebreak_col) if c] if order_col else []
+    rank = order + [F.desc("_src")] if resolve == "max_order" else [F.asc("_src")] + order
+    w = Window.partitionBy(key).orderBy(*rank)
+    known = None  # schema of the table this sink last wrote
 
     def do_upsert(batch_df: DataFrame, batch_id: int):
-        from pyspark.sql import Window
-
+        nonlocal known
         spark = batch_df.sparkSession
         _recover_target(target_dir)
-        # a micro-batch can carry several rows per key (rapid updates);
-        # keep exactly one so the merged target never holds duplicates
-        if order_cols is not None:
-            w = Window.partitionBy(key).orderBy(*order_cols)
-            batch_df = (
-                batch_df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        else:
-            batch_df = batch_df.dropDuplicates([key])
-        if os.path.exists(target_dir):
-            current = spark.read.parquet(target_dir)
-            if resolve == "max_order" and order_cols is not None:
-                w = Window.partitionBy(key).orderBy(*order_cols)
-                merged = (
-                    batch_df.unionByName(current)
-                    .withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
-            else:
-                merged = batch_df.unionByName(current.join(
-                    batch_df.select(key), on=key, how="left_anti"
-                ))
-        else:
-            merged = batch_df
+        rows = batch_df.withColumn("_src", F.lit(0))
+        if known is not None or os.path.exists(target_dir):
+            reader = spark.read if known is None else spark.read.schema(known)
+            current = reader.parquet(target_dir).withColumn("_src", F.lit(1))
+            rows = rows.unionByName(current)
+        merged = (
+            rows.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn", "_src")
+        )
         _atomic_swap_write(merged, target_dir)
+        known = merged.schema
 
     q = stream_df.writeStream.outputMode("update").foreachBatch(do_upsert).start()
     _drain_or_stop(q)
@@ -431,9 +420,9 @@ def foreach_batch_stats_merge(
     by: str = "event_type",
     checkpoint_dir: str | None = None,
 ):
-    """Incrementally-maintained summary table: each micro-batch reduces
-    to per-group MONOID aggregates (count, exact-cents sum, min/max
-    event time) and MERGEs them into the persistent stats table —
+    """Incrementally-maintained summary table: each event is a one-row
+    MONOID value (count, exact-cents sum, min/max event time) and one
+    groupBy folds a micro-batch into the persistent stats table —
     sum-of-sums, min-of-mins, max-of-maxes. Because every aggregate is
     associative and commutative, the final table is a pure function of
     the event set, independent of micro-batch boundaries or arrival
@@ -455,7 +444,11 @@ def foreach_batch_stats_merge(
     engine then continues the batch-id sequence instead of restarting
     at 0 and re-reading everything). An UNCHECKPOINTED call against an
     existing target raises up front — its ids would restart at 0 and
-    the replay guard would silently drop every batch of new data."""
+    the replay guard would silently drop every batch of new data.
+
+    As in ``foreach_batch_upsert`` the target is read with its last-written
+    schema. The stored batch id is read only on a run's first batch; later
+    ones compare against the id this sink last wrote (a restart starts over)."""
     import os
 
     if checkpoint_dir is None and (
@@ -475,24 +468,28 @@ def foreach_batch_stats_merge(
             "(resume) or remove the target (rebuild)."
         )
 
-    def agg(df: DataFrame) -> DataFrame:
-        return df.groupBy(by).agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_value_cents"),
-            F.min("ts").alias("min_ts"),
-            F.max("ts").alias("max_ts"),
-        )
+    known = None  # (schema, batch id) of the table this sink last wrote
 
     def do_merge(batch_df: DataFrame, batch_id: int):
+        nonlocal known
         spark = batch_df.sparkSession
         _recover_target(target_dir)
-        current = None
-        if os.path.exists(target_dir):
+        current = stored = None
+        if known is not None:
+            schema, stored = known
+            current = spark.read.schema(schema).parquet(target_dir)
+        elif os.path.exists(target_dir):
             current = spark.read.parquet(target_dir)
             stored = current.agg(F.max("_last_batch_id")).first()[0]
-            if stored is not None and batch_id <= stored:
-                return  # at-least-once replay of an already-applied batch
-        part = agg(batch_df)
+        if stored is not None and batch_id <= stored:
+            return  # at-least-once replay of an already-applied batch
+        part = batch_df.select(
+            by,
+            F.lit(1).cast("long").alias("n_events"),
+            F.round(F.col("value") * 100).cast("long").alias("sum_value_cents"),
+            F.col("ts").alias("min_ts"),
+            F.col("ts").alias("max_ts"),
+        )
         if current is not None:
             part = part.unionByName(current.drop("_last_batch_id"))
         merged = (
@@ -506,6 +503,7 @@ def foreach_batch_stats_merge(
             .withColumn("_last_batch_id", F.lit(batch_id).cast("long"))
         )
         _atomic_swap_write(merged, target_dir)
+        known = (merged.schema, batch_id)
 
     writer = stream_df.writeStream.outputMode("update")
     if checkpoint_dir is not None:

@@ -49,6 +49,32 @@ def count_py4j_calls():
         GatewayClient.send_command = original
 
 
+@contextmanager
+def count_jobs(spark, group: str):
+    """Count the Spark jobs and stages that ``statusTracker`` lists for
+    job group ``group`` during the block; yields an object whose ``jobs``
+    and ``stages`` attributes are set when the block exits. A streaming
+    query's group is ``str(q.runId)``.
+
+    Stages are counted per job as perfbench does, so a shuffle stage a
+    later job skips counts again there. The listener bus is drained
+    before each read: the tracker learns of jobs asynchronously."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(group))
+    count = types.SimpleNamespace(jobs=0, stages=0)
+    yield count
+    bus.waitUntilEmpty()
+    jobs = [j for j in tracker.getJobIdsForGroup(group) if j not in before]
+    count.jobs = len(jobs)
+    for jid in jobs:
+        info = tracker.getJobInfo(jid)
+        stages = info.stageIds if info is not None else []
+        count.stages += sum(tracker.getStageInfo(s) is not None for s in stages)
+
+
 def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:

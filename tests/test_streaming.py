@@ -852,3 +852,140 @@ def test_dedup_ingest_ordered_arrival_equals_batch_exact(spark, tmp_path):
         for r in dedup.exact_dedup_groups(batch, "doc_id", "text").collect()
     }
     assert admitted == want == {1, 2, 4, 12}
+
+
+_KV_SCHEMA = "k bigint, version bigint, seq bigint, payload string"
+_KV_ARROW = [("k", "int64"), ("version", "int64"), ("seq", "int64"), ("payload", "string")]
+
+
+def _stage_files(tmp_path, batches, fields=_KV_ARROW):
+    """One parquet file per list of rows (``(k, version, seq, payload)``
+    by default), staged outside the source directory; returns
+    ``(src, files)``. A file renamed into ``src`` is the next micro-batch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src, staged = tmp_path / "src", tmp_path / "staged"
+    src.mkdir()
+    staged.mkdir()
+    schema = pa.schema([(name, pa.type_for_alias(t)) for name, t in fields])
+    files = []
+    for i, rows in enumerate(batches):
+        files.append(str(staged / f"b{i}.parquet"))
+        pq.write_table(pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema), files[-1])
+    return str(src), files
+
+
+def _land(src, path):
+    os.rename(path, os.path.join(src, os.path.basename(path)))
+
+
+def _stream(spark, src, schema=_KV_SCHEMA):
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+
+
+def _land_batches(spark, q, src, files):
+    """Land each file and drain it as one micro-batch (landing them all
+    at once would order the batches by file mtime, which can tie);
+    returns each batch's (jobs, stages). Stops ``q`` at the end."""
+    from tests.oracle_harness import count_jobs
+
+    budgets = []
+    try:
+        for path in files:
+            _land(src, path)
+            with count_jobs(spark, str(q.runId)) as n:
+                q.processAllAvailable()
+            assert q.lastProgress["numInputRows"] > 0
+            budgets.append((n.jobs, n.stages))
+    finally:
+        q.stop()
+    return budgets
+
+
+def test_upsert_micro_batch_job_budget(spark, tmp_path):
+    """Once the target exists, an upsert micro-batch is one shuffle: at
+    most 2 Spark jobs (shuffle map, write) and 3 stages (the write job
+    lists the map stage again, skipped). A footer-reading schema job or a
+    second window would break the budget."""
+    rows = [[(k, v, v, f"p{v}") for k in range(4)] for v in range(3)]
+    src, files = _stage_files(tmp_path, rows)
+    _land(src, files[0])
+    q = jobs.foreach_batch_upsert(
+        _stream(spark, src), str(tmp_path / "tgt"), key="k", order_col="version",
+        resolve="max_order", tiebreak_col="seq",
+    )
+    budgets = _land_batches(spark, q, src, files[1:])
+    assert all(j <= 2 and s <= 3 for j, s in budgets), budgets
+    got = {r["k"]: r["payload"] for r in spark.read.parquet(str(tmp_path / "tgt")).collect()}
+    assert got == {k: "p2" for k in range(4)}
+
+
+def test_stats_merge_micro_batch_job_budget(spark, tmp_path):
+    """Once the target exists, a stats-merge micro-batch reads neither the
+    schema nor the stored batch id, and one groupBy folds the batch into
+    the table: at most 2 Spark jobs and 3 stages, like the upsert sink."""
+    import datetime as dt
+
+    schema = "event_type string, ts timestamp, value double"
+    rows = [[("click", dt.datetime(2024, 1, 1 + i, 10), 1.0 + i)] for i in range(3)]
+    fields = [("event_type", "string"), ("ts", "timestamp[us]"), ("value", "float64")]
+    src, files = _stage_files(tmp_path, rows, fields)
+    _land(src, files[0])
+    target = str(tmp_path / "tgt")
+    q = jobs.foreach_batch_stats_merge(_stream(spark, src, schema), target)
+    budgets = _land_batches(spark, q, src, files[1:])
+    assert all(j <= 2 and s <= 3 for j, s in budgets), budgets
+    (row,) = spark.read.parquet(target).collect()
+    assert (row["n_events"], row["sum_value_cents"], row["_last_batch_id"]) == (3, 600, 2)
+
+
+def test_upsert_replace_later_batch_wins(spark, tmp_path):
+    """resolve='replace': a later batch replaces the key even with a lower
+    order_col; within a batch the greatest order_col wins."""
+    src, files = _stage_files(tmp_path, [
+        [(1, 9, 0, "first"), (2, 5, 0, "kept")],
+        [(1, 2, 0, "low"), (1, 3, 0, "second"), (1, 1, 0, "lowest")],
+    ])
+    _land(src, files[0])
+    target = str(tmp_path / "tgt")
+    q = jobs.foreach_batch_upsert(_stream(spark, src), target, key="k", order_col="version")
+    _land_batches(spark, q, src, files[1:])
+    got = {r["k"]: (r["version"], r["payload"]) for r in spark.read.parquet(target).collect()}
+    assert got == {1: (3, "second"), 2: (5, "kept")}
+
+
+def test_upsert_max_order_full_tie_keeps_existing_row(spark, tmp_path):
+    """resolve='max_order': an incoming row that ties the stored row on
+    order_col and tiebreak_col does not replace it."""
+    src, files = _stage_files(tmp_path, [
+        [(1, 5, 7, "existing")],
+        [(1, 5, 7, "incoming")],
+    ])
+    _land(src, files[0])
+    target = str(tmp_path / "tgt")
+    q = jobs.foreach_batch_upsert(
+        _stream(spark, src), target, key="k", order_col="version",
+        resolve="max_order", tiebreak_col="seq",
+    )
+    _land_batches(spark, q, src, files[1:])
+    got = [(r["k"], r["payload"]) for r in spark.read.parquet(target).collect()]
+    assert got == [(1, "existing")]
+
+
+def test_upsert_fresh_run_rejects_target_with_other_columns(spark, tmp_path):
+    """A new run over an existing target whose columns differ from the
+    stream's fails its first batch instead of reading the missing column
+    as nulls, and leaves the target as it was."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    target = str(tmp_path / "tgt")
+    spark.createDataFrame([(1, 4)], "k bigint, version bigint").write.parquet(target)
+    src, files = _stage_files(tmp_path, [[(1, 5, 0, "new")]])
+    _land(src, files[0])
+    with pytest.raises(StreamingQueryException, match="payload|seq|UNION|NUM_COLUMNS"):
+        jobs.foreach_batch_upsert(
+            _stream(spark, src), target, key="k", order_col="version").stop()
+    assert [tuple(r) for r in spark.read.parquet(target).collect()] == [(1, 4)]
