@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import sqltext
+
 # deterministic 32-bit universal-hash parameters: h_i(x) = (a_i*x + b_i) % P
 MINHASH_PRIME = 4294967311  # first prime > 2^32
 
@@ -61,40 +63,47 @@ def tokens(text: Column | str) -> Column:
     return F.split(F.lower(c), r"\s+")
 
 
-def word_shingles(text: Column | str, k: int = 3) -> Column:
-    """Distinct word k-grams ('a b c'); empty array when fewer than k words.
+def gram_fold(tokens: str, k: int, combine: str) -> str:
+    """SQL text: the n-k+1 full k-grams of the token array ``tokens`` (SQL
+    text), each folded left to right by ``combine``, a SQL lambda over
+    (gram so far, next token).
 
-    Built by ``zip_with``-folding k-1 shifted copies of the token array
-    (zip pads the short side with null; the trailing partial grams are
-    sliced off). ~4× faster than the transform(sequence)+slice(k)
-    formulation: one pass per shift instead of a per-position array copy,
-    and no per-row sequence materialization.
-
-    When the input is a plain column NAME the whole expression is built
-    as one parsed SQL string (one py4j round trip instead of ~20 — the
-    r10 plan-construction finding; identical Catalyst tree either way)."""
-    if isinstance(text, str):
-        w = f"split(lower({text}), '\\\\s+')"
-        n = f"size({w})"
-        grams = w
-        for j in range(1, k):
-            shifted = f"slice({w}, {j + 1}, greatest({n} - {j}, 0))"
-            grams = f"zip_with({grams}, {shifted}, (a, b) -> concat_ws(' ', a, b))"
-        full = f"slice({grams}, 1, greatest({n} - {k - 1}, 0))"
-        return F.expr(
-            f"array_distinct(CASE WHEN {n} >= {k} THEN {full} "
-            f"ELSE CAST(array() AS array<string>) END)"
-        )
-    w = tokens(text)
-    n = F.size(w)
-    grams = w
+    Built by ``zip_with``-folding k-1 shifted copies of the array: one
+    pass per shift, O(k·len). zip pads the short side with null, so the
+    last k-1 grams are partial and the slice keeps only the full ones. Not
+    ``transform(sequence(0, n-k), i -> slice(tokens, i, k))``: in that form
+    Catalyst collapses the split() projection into the lambda and
+    re-tokenizes the whole document once per position, O(len²), a
+    multi-minute stall on ~218k-char documents."""
+    n = f"size({tokens})"
+    grams = tokens
     for j in range(1, k):
-        shifted = F.slice(w, j + 1, F.greatest(n - j, F.lit(0)))
-        grams = F.zip_with(grams, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    full = F.slice(grams, 1, F.greatest(n - (k - 1), F.lit(0)))
-    return F.array_distinct(
-        F.when(n >= k, full).otherwise(F.array().cast("array<string>"))
+        shifted = f"slice({tokens}, {j + 1}, greatest({n} - {j}, 0))"
+        grams = f"zip_with({grams}, {shifted}, {combine})"
+    return f"slice({grams}, 1, greatest({n} - {k - 1}, 0))"
+
+
+#: ``gram_fold`` combine for word grams: 'a b c'
+JOIN_WORDS = "(a, b) -> concat_ws(' ', a, b)"
+
+
+def _word_array(text_col: str) -> str:
+    """SQL text of ``tokens(text_col)``."""
+    return f"split(lower({sqltext.ident(text_col)}), '\\\\s+')"
+
+
+def _grams_or_empty(tokens: str, k: int, combine: str, elem: str) -> str:
+    return (
+        f"CASE WHEN size({tokens}) >= {k} THEN {gram_fold(tokens, k, combine)} "
+        f"ELSE CAST(array() AS array<{elem}>) END"
     )
+
+
+def word_shingles(text_col: str, k: int = 3) -> Column:
+    """Distinct word k-grams ('a b c') of a column; empty array when fewer
+    than k words. One parsed SQL expression (one Py4J round trip)."""
+    w = _word_array(text_col)
+    return F.expr(f"array_distinct({_grams_or_empty(w, k, JOIN_WORDS, 'string')})")
 
 
 # rolling-polynomial base for composing token hashes into gram hashes;
@@ -103,48 +112,24 @@ def word_shingles(text: Column | str, k: int = 3) -> Column:
 SHINGLE_BASE = 1_000_003
 
 
-def hashed_word_shingles(text: Column | str, k: int = 3) -> Column:
+def hashed_word_shingles(text_col: str, k: int = 3) -> Column:
     """Distinct word k-gram HASHES as a bigint array — the gram string is
     never materialized. Tokens are md5-hashed ONCE each; gram hashes
     compose by rolling polynomial ``g = (g * B + h_next) % P`` over the
-    same zip_with-shift fold ``word_shingles`` uses, swapping per-element
-    string concatenation + per-gram digests for integer arithmetic. Two
-    32-bit gram sets collide with probability ~2⁻³² per pair — the same
+    same fold ``word_shingles`` uses, swapping per-element string
+    concatenation + per-gram digests for integer arithmetic. Two 32-bit
+    gram sets collide with probability ~2⁻³² per pair — the same
     tolerance every md5-prefix step in this module already accepts.
 
     Equality of hashes ≡ equality of grams (modulo that collision bound),
     so Jaccard over hash sets is Jaccard over gram sets; DuckDB mirrors
     the composition bit-for-bit."""
-    if isinstance(text, str):
-        # single parsed expression — see word_shingles' py4j note
-        w = f"split(lower({text}), '\\\\s+')"
-        h = f"transform({w}, t -> CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT))"
-        n = f"size({h})"
-        grams = h
-        for j in range(1, k):
-            shifted = f"slice({h}, {j + 1}, greatest({n} - {j}, 0))"
-            grams = (
-                f"zip_with({grams}, {shifted}, "
-                f"(g, nxt) -> (g * {SHINGLE_BASE} + nxt) % {MINHASH_PRIME}L)"
-            )
-        full = f"slice({grams}, 1, greatest({n} - {k - 1}, 0))"
-        return F.expr(
-            f"array_distinct(CASE WHEN {n} >= {k} THEN {full} "
-            f"ELSE CAST(array() AS array<bigint>) END)"
-        )
-    w = tokens(text)
-    h = F.transform(w, lambda t: md5_int(t))
-    n = F.size(h)
-    grams = h
-    for j in range(1, k):
-        shifted = F.slice(h, j + 1, F.greatest(n - j, F.lit(0)))
-        grams = F.zip_with(
-            grams, shifted, lambda g, nxt: (g * SHINGLE_BASE + nxt) % MINHASH_PRIME
-        )
-    full = F.slice(grams, 1, F.greatest(n - (k - 1), F.lit(0)))
-    return F.array_distinct(
-        F.when(n >= k, full).otherwise(F.array().cast("array<bigint>"))
+    h = (
+        f"transform({_word_array(text_col)}, "
+        "t -> CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT))"
     )
+    combine = f"(g, nxt) -> (g * {SHINGLE_BASE} + nxt) % {MINHASH_PRIME}L"
+    return F.expr(f"array_distinct({_grams_or_empty(h, k, combine, 'bigint')})")
 
 
 def normalized_fingerprint(text: Column | str) -> Column:
@@ -696,22 +681,7 @@ def duplicated_spans(
     """
     from pyspark.sql import Window
 
-    # Gram i is composed by a zip_with-shift fold (k-1 elementwise passes,
-    # O(k·len)), NOT transform(sequence(0, n-k), i -> slice(tokens, i, k)):
-    # in that form Catalyst collapses the split() projection into the
-    # lambda and re-tokenizes the whole document once per position —
-    # O(len²), a multi-minute stall on ~218k-char documents. The shifted
-    # tails pad with null and concat_ws skips nulls, so the last k-1 grams
-    # are short; the slice keeps only the n-k+1 full ones.
-    w = tokens(text_col)
-    n = F.size(w)
-    grams = w
-    for j in range(1, k):
-        shifted = F.slice(w, j + 1, F.greatest(n - j, F.lit(0)))
-        grams = F.zip_with(grams, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    full = F.when(
-        n >= k, F.slice(grams, 1, F.greatest(n - (k - 1), F.lit(0)))
-    ).otherwise(F.array().cast("array<string>"))
+    full = F.expr(_grams_or_empty(_word_array(text_col), k, JOIN_WORDS, "string"))
     pos_grams = df.select(
         F.col(id_col).alias("_id"), F.posexplode(full).alias("_pos", "_gram")
     )

@@ -19,6 +19,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import sqltext
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -53,27 +55,17 @@ def cosine_topk(
     Plan shape: scan → per-row expression → global top-k (takeOrdered-style
     sort-limit, partial per partition). No shuffle of the vectors.
     """
-    if isinstance(vec_col, str):
-        # single parsed expression: the F.array-of-F.lit form cost ~2
-        # py4j round trips per vector element (~0.15 s of plan build for
-        # a 64-dim query) — the parsed tree is identical; repr() floats
-        # round-trip exactly and the D suffix keeps them DOUBLE
-        qlit = "array(" + ", ".join(f"{float(x)!r}D" for x in query) + ")"
-        v = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
-        dot = f"aggregate(zip_with({v}, {qlit}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-        norms = (
-            f"sqrt(aggregate({v}, 0.0D, (acc, x) -> acc + x * x))"
-            f" * sqrt(aggregate({qlit}, 0.0D, (acc, x) -> acc + x * x))"
-        )
-        out = df.select(
-            F.col(id_col), F.expr(f"({dot}) / ({norms})").alias("cosine")
-        )
-    else:
-        q = F.array(*[F.lit(float(x)) for x in query]).cast("array<double>")
-        out = df.select(
-            F.col(id_col),
-            cosine(as_double_vec(vec_col), q).alias("cosine"),
-        )
+    # one parsed expression: the F.array-of-F.lit form cost ~2 py4j round
+    # trips per vector element (~0.15 s of plan build for a 64-dim query);
+    # repr() floats round-trip exactly and the D suffix keeps them DOUBLE
+    qlit = "array(" + ", ".join(f"{float(x)!r}D" for x in query) + ")"
+    v = f"CAST({sqltext.ident(vec_col)} AS ARRAY<DOUBLE>)"
+    dot = f"aggregate(zip_with({v}, {qlit}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+    norms = (
+        f"sqrt(aggregate({v}, 0.0D, (acc, x) -> acc + x * x))"
+        f" * sqrt(aggregate({qlit}, 0.0D, (acc, x) -> acc + x * x))"
+    )
+    out = df.select(F.col(id_col), F.expr(f"({dot}) / ({norms})").alias("cosine"))
     if exclude_id is not None:
         out = out.filter(F.col(id_col) != exclude_id)
     return out.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)

@@ -18,9 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import dedup, textops
+from ..operators import dedup, textops, vector
+from ..operators.dedup import md5_int
+from ..operators.derive import CENTS_SQL, cents
 from ..session import fan_out, load_table
-from .extension_queries import DEDUP_CLUSTERS_SQL
+from .extension_queries import COS_SQL, DEDUP_CLUSTERS_SQL
 
 SPAN_K = 4  # tokens per non-overlapping span window
 
@@ -949,9 +951,9 @@ def dedup_verdict_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_verdict_sql() -> str:
-    from .extension_queries import _JACCARD_CTE
+    from .extension_queries import JACCARD_CTE
 
-    jac_ctes = _JACCARD_CTE[len("WITH ") :]
+    jac_ctes = JACCARD_CTE[len("WITH ") :]
     return f"""
 WITH {jac_ctes},
 keepers AS (
@@ -1160,4 +1162,781 @@ sizes AS (SELECT cluster, count(*)::BIGINT AS cluster_size FROM labeled GROUP BY
 SELECT doc_id, cluster, cluster_size,
        CAST(10000 // cluster_size AS BIGINT) AS weight_bp
 FROM labeled JOIN sizes USING (cluster)
+"""
+
+
+# --- KMV set-intersection estimate ------------------------------------------
+
+KMV_INTER_K = 64
+
+
+def kmv_intersection_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Set-intersection cardinality via KMV sketch algebra: estimate
+    |purchasing user-days ∩ erroring user-days| as est(A) + est(B) −
+    est(A∪B), each from a k-minimum-values sketch over the md5 wheel,
+    next to the exact join answer and the error in basis points — the
+    sketch-vs-exact gate pattern (kmv_weekly_merge_gate) extended to set
+    ALGEBRA, which is what sketches exist for at 100 TB (the exact join
+    is the thing you can no longer afford).
+
+    Scale shape: ONE declarative plan, no driver-side loop. The three
+    sketches (A, B, A∪B) ride one tagged union; each tag's k smallest
+    hashes come from the two-phase distributed top-k (per-(tag, hash
+    bucket) partial top-k, then a final top-k over the 32·k survivors —
+    the cosine_topk_batch pattern, so no single task ever sorts a whole
+    tag). The exact side is one count-over-groupBy on the bounded
+    distinct key set, present only because this IS the gate."""
+    ev = load_table(spark, sf_dir, "events")
+    key = F.concat_ws(
+        "#", F.col("user_id").cast("string"), F.to_date("ts").cast("string")
+    )
+    base = (
+        ev.filter(F.col("event_type").isin("purchase", "error"))
+        .select(F.col("event_type").alias("et"), key.alias("k"))
+        .distinct()
+    )
+    a = base.filter(F.col("et") == "purchase").select(F.lit("a").alias("tag"), "k")
+    b = base.filter(F.col("et") == "error").select(F.lit("b").alias("tag"), "k")
+    u = base.select("k").distinct().select(F.lit("u").alias("tag"), "k")
+    tagged = a.unionByName(b).unionByName(u)
+    hashed = tagged.select(
+        "tag",
+        "k",
+        ((dedup.md5_int(F.col("k")) + F.lit(0.5)) / F.lit(float(2**32))).alias("h"),
+    ).withColumn("_b", F.pmod(F.hash("k"), F.lit(32)))
+    w1 = Window.partitionBy("tag", "_b").orderBy("h")
+    s1 = (
+        hashed.withColumn("_rn", F.row_number().over(w1))
+        .filter(F.col("_rn") <= KMV_INTER_K)
+        .drop("_rn", "_b")
+    )
+    w2 = Window.partitionBy("tag").orderBy("h")
+    topk = s1.withColumn("_rn", F.row_number().over(w2)).filter(
+        F.col("_rn") <= KMV_INTER_K
+    )
+    per_tag = topk.groupBy("tag").agg(
+        F.count(F.lit(1)).alias("kn"), F.max("h").alias("hk")
+    )
+    est = (
+        F.when(F.col("kn") < KMV_INTER_K, F.col("kn").cast("double"))
+        .otherwise(F.lit(float(KMV_INTER_K - 1)) / F.col("hk"))
+        .alias("est")
+    )
+    # coalesce mirrors the oracle's scalar subqueries, which yield 0.0
+    # (count < k branch) for a tag with no rows at all
+    ests = per_tag.select("tag", est).agg(
+        F.coalesce(F.sum(F.when(F.col("tag") == "a", F.col("est"))), F.lit(0.0)).alias("ea"),
+        F.coalesce(F.sum(F.when(F.col("tag") == "b", F.col("est"))), F.lit(0.0)).alias("eb"),
+        F.coalesce(F.sum(F.when(F.col("tag") == "u", F.col("est"))), F.lit(0.0)).alias("eu"),
+    )
+    inter = (
+        base.groupBy("k")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .filter(F.col("c") == 2)
+        .agg(F.count(F.lit(1)).alias("n_exact"))
+    )
+    return inter.crossJoin(F.broadcast(ests)).select(
+        F.col("n_exact").cast("long").alias("n_exact_inter"),
+        F.floor((F.col("ea") + F.col("eb") - F.col("eu")) * 100 + F.lit(0.5))
+        .cast("long")
+        .alias("est_inter_x100"),
+    )
+
+
+KMV_INTER_SQL = f"""
+WITH a AS (SELECT DISTINCT user_id::VARCHAR || '#' || strftime(ts::DATE, '%Y-%m-%d') AS k
+           FROM events WHERE event_type = 'purchase'),
+b AS (SELECT DISTINCT user_id::VARCHAR || '#' || strftime(ts::DATE, '%Y-%m-%d') AS k
+      FROM events WHERE event_type = 'error'),
+u AS (SELECT k FROM a UNION SELECT k FROM b),
+ah AS (SELECT (('0x' || substr(md5(k), 1, 8))::BIGINT + 0.5) / 4294967296.0 AS h
+       FROM a ORDER BY 1 LIMIT {KMV_INTER_K}),
+bh AS (SELECT (('0x' || substr(md5(k), 1, 8))::BIGINT + 0.5) / 4294967296.0 AS h
+       FROM b ORDER BY 1 LIMIT {KMV_INTER_K}),
+uh AS (SELECT (('0x' || substr(md5(k), 1, 8))::BIGINT + 0.5) / 4294967296.0 AS h
+       FROM u ORDER BY 1 LIMIT {KMV_INTER_K}),
+est AS (
+  SELECT
+    (SELECT CASE WHEN count(*) < {KMV_INTER_K} THEN count(*)::DOUBLE
+                 ELSE {KMV_INTER_K - 1}.0 / max(h) END FROM ah) AS ea,
+    (SELECT CASE WHEN count(*) < {KMV_INTER_K} THEN count(*)::DOUBLE
+                 ELSE {KMV_INTER_K - 1}.0 / max(h) END FROM bh) AS eb,
+    (SELECT CASE WHEN count(*) < {KMV_INTER_K} THEN count(*)::DOUBLE
+                 ELSE {KMV_INTER_K - 1}.0 / max(h) END FROM uh) AS eu
+)
+SELECT (SELECT count(*) FROM a JOIN b USING (k))::BIGINT AS n_exact_inter,
+       CAST(floor((ea + eb - eu) * 100 + 0.5) AS BIGINT) AS est_inter_x100
+FROM est
+"""
+
+
+# --- log2 document-length histogram -----------------------------------------
+
+def doclen_log2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus length profile: documents per (source, ⌊log2 token-count⌋)
+    bucket — the standard long-tail length histogram a datacard carries,
+    with the bucket floor emitted as a power of two. Integer-exact log2
+    via the binary-representation length (no libm), per the house
+    no-transcendentals rule.
+
+    Scale shape: tokenize-count map + one (source, bucket) aggregate."""
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    counted = docs.select(
+        "source",
+        F.size(F.filter(dedup.tokens("text"), lambda t: t != "")).alias("n_tok"),
+    ).filter(F.col("n_tok") >= 1)
+    with_bucket = counted.select(
+        "source",
+        (F.length(F.conv(F.col("n_tok").cast("string"), 10, 2)) - 1)
+        .cast("int")
+        .alias("bucket"),
+    )
+    return (
+        with_bucket.groupBy("source", "bucket")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+        .withColumn(
+            "bucket_lo",
+            F.expr("CAST(shiftleft(CAST(1 AS BIGINT), bucket) AS BIGINT)"),
+        )
+    )
+
+
+DOCLEN_HIST_SQL = r"""
+WITH t AS (
+  SELECT source,
+         len(list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> ''))
+           AS n_tok
+  FROM documents
+),
+b AS (
+  SELECT source, CAST(length(to_base(n_tok, 2)) - 1 AS INT) AS bucket
+  FROM t WHERE n_tok >= 1
+)
+SELECT source, bucket,
+       count(*)::BIGINT AS n_docs,
+       CAST(1 << bucket AS BIGINT) AS bucket_lo
+FROM b
+GROUP BY 1, 2
+"""
+
+
+# --- kNN label-vote eval -----------------------------------------------------
+
+KNN_EVAL_K = 64  # fixed eval-set size at ANY corpus scale
+KNN_K = 5
+
+
+def emb_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """kNN classifier evaluation on the embedding corpus: for a
+    FIXED-SIZE md5-chosen eval set (the 64 smallest key hashes — a
+    deterministic sample whose cost does NOT grow with the corpus,
+    unlike a fraction), take each vector's top-5 cosine neighbors (self
+    excluded), majority-vote their labels (ties to the smallest label),
+    and report per-true-label accuracy — the label-quality /
+    embedding-quality probe run before trusting either for curation
+    (complements emb_centroid_classifier_eval: kNN is local, centroids
+    are global).
+
+    Scale shape: the eval batch is a distributed sort-limit (TakeOrdered
+    top-k, never a single-partition sort) and is broadcast; neighbor
+    search is ONE corpus scan via vector.cosine_topk_batch (bucketed
+    partial top-k, no corpus self-join); votes and accuracy are
+    batch-sized aggregates."""
+    emb = fan_out(load_table(spark, sf_dir, "embeddings"))
+    queries = (
+        emb.withColumn(
+            "_h", dedup.md5_int(F.concat(F.col("vec_id").cast("string"), F.lit("knn")))
+        )
+        .sort("_h", "vec_id")
+        .limit(KNN_EVAL_K)
+        .drop("_h")
+    )
+    top = vector.cosine_topk_batch(
+        emb, "vec_id", "embedding", queries, "vec_id", "embedding", k=KNN_K
+    )
+    labels = emb.select(F.col("vec_id").alias("_nid"), F.col("label").alias("_nlabel"))
+    votes = (
+        top.join(labels, top.vec_id == labels._nid)
+        .groupBy("qid", "_nlabel")
+        .agg(F.count(F.lit(1)).alias("_votes"))
+    )
+    w = Window.partitionBy("qid").orderBy(F.desc("_votes"), F.asc("_nlabel"))
+    pred = votes.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
+    truth = queries.select(F.col("vec_id").alias("qid"), F.col("label").alias("true_label"))
+    scored = pred.join(truth, "qid").select(
+        "true_label", (F.col("_nlabel") == F.col("true_label")).alias("_ok")
+    )
+    return scored.groupBy("true_label").agg(
+        F.count(F.lit(1)).cast("long").alias("n_eval"),
+        F.sum(F.when(F.col("_ok"), 1).otherwise(0)).cast("long").alias("n_correct"),
+        F.floor(
+            F.sum(F.when(F.col("_ok"), 1).otherwise(0)) * 10000 / F.count(F.lit(1))
+        )
+        .cast("long")
+        .alias("acc_bp"),
+    )
+
+
+KNN_EVAL_SQL = f"""
+WITH q AS (
+  SELECT vec_id AS qid, embedding AS qv, label AS true_label
+  FROM embeddings
+  ORDER BY ('0x' || substr(md5(vec_id::VARCHAR || 'knn'), 1, 8))::BIGINT, vec_id
+  LIMIT {KNN_EVAL_K}
+),
+scored AS (
+  SELECT q.qid, q.true_label, e.vec_id, e.label AS nlabel,
+         {COS_SQL.format(a="e.embedding", b="q.qv")} AS cos
+  FROM embeddings e, q
+  WHERE e.vec_id != q.qid
+),
+top AS (
+  SELECT qid, true_label, nlabel,
+         row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rn
+  FROM scored
+),
+votes AS (
+  SELECT qid, true_label, nlabel, count(*) AS v
+  FROM top WHERE rn <= {KNN_K}
+  GROUP BY 1, 2, 3
+),
+pred AS (
+  SELECT qid, true_label, nlabel,
+         row_number() OVER (PARTITION BY qid ORDER BY v DESC, nlabel ASC) AS pr
+  FROM votes
+)
+SELECT true_label,
+       count(*)::BIGINT AS n_eval,
+       CAST(sum(CASE WHEN nlabel = true_label THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
+       CAST(sum(CASE WHEN nlabel = true_label THEN 1 ELSE 0 END) * 10000 // count(*)
+            AS BIGINT) AS acc_bp
+FROM pred WHERE pr = 1
+GROUP BY 1
+"""
+
+
+# --- KLL-style level-sampling quantile sketch with exact-rank gate ------------
+
+#: sketch capacity: the kept sample is at most ~2·KLL_CAPACITY rows
+KLL_CAPACITY = 1024
+KLL_SALT = "kll"
+#: probed quantiles in basis points
+KLL_PROBES_BP = [2500, 5000, 7500, 9000]
+#: rank tolerance: |achieved − target| ≤ n·KLL_TOL_BP/10⁴ (plus tie slack)
+KLL_TOL_BP = 1000
+
+
+def kll_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """KLL-style quantile sketch with an exact-rank gate (the
+    cms_heavy_hitters precedent — estimate with a sketch, then verify
+    the sketch's guarantee against exactly-computed truth): rows are
+    subsampled at level L = max(0, ilog2(n) − ilog2(capacity)) by the
+    md5 wheel (keep ⇔ hash ≡ 0 mod 2^L), each survivor carrying weight
+    2^L — the one-shot level-sampling simplification of KLL's compactor
+    hierarchy (Karnin-Lang-Liberty 2016): a uniform 2^-L coin realized
+    deterministically, so BOTH engines build the identical sketch. The
+    quantile estimate for probe q is the smallest kept value whose
+    weighted rank reaches target = (q·n) div 10⁴; the gate then
+    computes the TRUE rank interval of that estimate over the full data
+    ([#rows < v, #rows ≤ v] — exact integers) and asserts the target
+    falls within KLL_TOL_BP of it. Tie-robust by construction: under
+    total ties the interval is [0, n] and every probe passes vacuously;
+    at L = 0 the sketch IS the data and the gate is exact. Every probe
+    ALWAYS emits a row (probes left-join the estimates): an
+    under-sampled sketch that reaches no estimate for a probe reports
+    gate_ok = 0 with NULL estimate — the failure the gate exists to
+    detect is never silently dropped — and n = 0 passes vacuously.
+
+    Exactness: ilog2 via length(bin(x)) (the logprob precedent), the
+    level modulus 2^L via shiftleft, weighted ranks and rank intervals
+    all exact int64; no floats at any point.
+
+    Scale shape: one ungrouped count (map-side), one map-only filter to
+    the ≤2·capacity kept frame (its unpartitioned rank window is
+    capacity-bounded by construction), a broadcast of the |probes|-row
+    estimate table back over ONE full scan for the exact-rank
+    aggregate. Nothing data-sized shuffles; the sketch never exceeds
+    2^(ilog2(capacity)+1) rows in expectation and concentrates sharply
+    (Chernoff) — the gate itself is the evidence."""
+    orders = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_totalprice").isNotNull() & (F.col("o_totalprice") >= 0)
+    )
+    vals = orders.select(
+        F.col("o_orderkey").alias("_k"), cents("o_totalprice").alias("_v")
+    )
+    meta = vals.agg(F.count(F.lit(1)).alias("_n")).select(
+        "_n",
+        F.expr(
+            f"CAST(greatest(0, length(bin(_n)) - length(bin({KLL_CAPACITY})))"
+            " AS INT)"
+        ).alias("_lvl"),
+    ).select("_n", "_lvl", F.expr("shiftleft(CAST(1 AS BIGINT), _lvl)").alias("_mod"))
+    kept = (
+        vals.crossJoin(F.broadcast(meta))
+        .filter(
+            md5_int(F.concat(F.col("_k").cast("string"), F.lit(KLL_SALT)))
+            % F.col("_mod")
+            == 0
+        )
+        .select(
+            "_v",
+            "_k",
+            "_n",
+            "_lvl",
+            "_mod",
+            F.row_number().over(Window.orderBy("_v", "_k")).alias("_rn"),
+        )
+    )
+    probes = spark.createDataFrame(
+        [(q,) for q in KLL_PROBES_BP], ["q_bp"]
+    ).select(F.col("q_bp").cast("long").alias("q_bp"))
+    est = (
+        kept.join(F.broadcast(probes))
+        .filter(
+            F.col("_rn") * F.col("_mod") >= F.expr("(q_bp * _n) div 10000")
+        )
+        .groupBy("q_bp")
+        .agg(F.min("_v").alias("est_cents"))
+    )
+    ranks = (
+        vals.crossJoin(F.broadcast(est))
+        .groupBy("q_bp", "est_cents")
+        .agg(
+            F.sum(F.when(F.col("_v") < F.col("est_cents"), 1).otherwise(0)).alias(
+                "_lo"
+            ),
+            F.sum(F.when(F.col("_v") <= F.col("est_cents"), 1).otherwise(0)).alias(
+                "_hi"
+            ),
+        )
+    )
+    # probes LEFT-join the estimates so a probe NEVER silently vanishes
+    # (review catch): if the sketch under-samples and no kept row's
+    # weighted rank reaches the target, the probe row survives with
+    # gate_ok = 0 — the sketch failure is REPORTED, not dropped. n = 0 is
+    # the vacuous-pass case (the sketch of nothing is exact).
+    base = probes.crossJoin(F.broadcast(meta)).join(ranks, "q_bp", "left")
+    tol = F.expr(f"({KLL_TOL_BP} * _n) div 10000")
+    target = F.expr("(q_bp * _n) div 10000")
+    return base.select(
+        "q_bp",
+        F.col("_n").cast("long").alias("n_rows"),
+        F.col("_lvl").cast("long").alias("level"),
+        F.col("est_cents").cast("long").alias("est_cents"),
+        F.col("_lo").cast("long").alias("rank_lo"),
+        F.col("_hi").cast("long").alias("rank_hi"),
+        target.cast("long").alias("target_rank"),
+        F.when(F.col("_n") == 0, 1)
+        .when(F.col("est_cents").isNull(), 0)
+        .when(
+            (target >= F.col("_lo") + 1 - tol) & (target <= F.col("_hi") + tol),
+            1,
+        )
+        .otherwise(0)
+        .cast("long")
+        .alias("gate_ok"),
+    )
+
+
+_KLL_PROBES_SQL = ", ".join(str(q) for q in KLL_PROBES_BP)
+
+KLL_SQL = f"""
+WITH vals AS (
+  SELECT o_orderkey AS k, {CENTS_SQL.format(x="o_totalprice")} AS v
+  FROM orders WHERE o_totalprice IS NOT NULL AND o_totalprice >= 0
+),
+meta AS (
+  SELECT n, lvl, (1::BIGINT << lvl) AS md FROM (
+    SELECT count(*) AS n,
+           greatest(0, length(bin(count(*))) - length(bin({KLL_CAPACITY}))) AS lvl
+    FROM vals)
+),
+kept AS (
+  SELECT v, k, n, lvl, md,
+         row_number() OVER (ORDER BY v, k) AS rn
+  FROM vals, meta
+  WHERE ('0x' || substr(md5(k::VARCHAR || '{KLL_SALT}'), 1, 8))::BIGINT % md = 0
+),
+probes AS (SELECT unnest([{_KLL_PROBES_SQL}])::BIGINT AS q_bp),
+est AS (
+  SELECT q_bp, min(v) AS est_cents
+  FROM kept JOIN probes ON rn * md >= (q_bp * n) // 10000
+  GROUP BY q_bp
+),
+ranks AS (
+  SELECT q_bp, est_cents,
+         sum(CASE WHEN v < est_cents THEN 1 ELSE 0 END) AS lo,
+         sum(CASE WHEN v <= est_cents THEN 1 ELSE 0 END) AS hi
+  FROM vals, est
+  GROUP BY q_bp, est_cents
+)
+SELECT q_bp,
+       CAST(n AS BIGINT) AS n_rows,
+       CAST(lvl AS BIGINT) AS level,
+       CAST(est_cents AS BIGINT) AS est_cents,
+       CAST(lo AS BIGINT) AS rank_lo,
+       CAST(hi AS BIGINT) AS rank_hi,
+       CAST((q_bp * n) // 10000 AS BIGINT) AS target_rank,
+       CAST(CASE WHEN n = 0 THEN 1
+                 WHEN est_cents IS NULL THEN 0
+                 WHEN (q_bp * n) // 10000 >= lo + 1 - ({KLL_TOL_BP} * n) // 10000
+                  AND (q_bp * n) // 10000 <= hi + ({KLL_TOL_BP} * n) // 10000
+                 THEN 1 ELSE 0 END AS BIGINT) AS gate_ok
+FROM probes CROSS JOIN meta LEFT JOIN ranks USING (q_bp)
+"""
+
+
+# --- curation fairness audit (per-language keep rate + disparate impact) -------
+
+#: exact-integer quality filter: keep docs with at least this many tokens…
+FAIR_MIN_TOKENS = 30
+#: …and punct chars ≤ 1/FAIR_PUNCT_DEN of non-whitespace chars
+FAIR_PUNCT_DEN = 5
+#: four-fifths rule: keep-rate ratio vs the best-treated group, bp floor
+FAIR_DI_MIN_BP = 8000
+
+
+def fairness_keep_rate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Curation-filter fairness audit: per-language keep rate of an
+    exact-integer quality rule (≥ 30 whitespace tokens AND punctuation
+    ≤ 1/5 of non-whitespace chars — the length/punct core of the
+    corpus-quality family in integer cross-multiplied form), plus each
+    language's disparate-impact ratio against the BEST-treated
+    language and the four-fifths-rule verdict. A quality filter tuned
+    on one language silently starves others — this is the bias
+    pre-flight a multilingual corpus release runs.
+
+    Exactness: the keep decision is pure integer comparison (the punct
+    bound is (n_nonws − n_alnum)·5 ≤ n_nonws — no ratio); rates are
+    floor-form basis points; the DI ratio is the exact integer
+    rational (10000·k_g·n_ref) div (n_g·k_ref). The reference group is
+    the argmax of the FLOORED bp rate with lexicographic language
+    tiebreak (documented: ties at bp resolution pick the first
+    language), taken by first_value over the bounded per-language
+    frame with a fully-specified ROWS frame. k_ref = 0 (no language
+    keeps anything) emits NULL di via mirrored CASE.
+
+    Scale shape: one scan computes per-doc integer signals map-side;
+    one shuffle to |languages| rows; the reference window and DI math
+    run on that bounded frame."""
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull() & F.col("lang").isNotNull()
+    )
+    sig = docs.select(
+        "lang",
+        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("_ntok"),
+        F.length(F.regexp_replace("text", r"\s", "")).alias("_nonws"),
+        F.length(
+            F.regexp_replace(
+                F.regexp_replace("text", r"\s", ""), "[^a-zA-Z0-9]", ""
+            )
+        ).alias("_alnum"),
+    )
+    keep = (F.col("_ntok") >= FAIR_MIN_TOKENS) & (
+        (F.col("_nonws") - F.col("_alnum")) * FAIR_PUNCT_DEN <= F.col("_nonws")
+    )
+    per_lang = sig.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.sum(F.when(keep, 1).otherwise(0)).alias("_k"),
+    )
+    rate_bp = F.expr("(10000 * _k) div _n")
+    w_ref = (
+        Window.partitionBy()
+        .orderBy(F.desc("_rate_bp"), F.asc("lang"))
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    ranked = per_lang.withColumn("_rate_bp", rate_bp).select(
+        "lang",
+        "_n",
+        "_k",
+        "_rate_bp",
+        F.first("_n").over(w_ref).alias("_n_ref"),
+        F.first("_k").over(w_ref).alias("_k_ref"),
+    )
+    di_bp = F.expr(
+        "CASE WHEN _k_ref > 0 THEN"
+        " CAST((10000 * CAST(_k AS DECIMAL(38,0)) * _n_ref)"
+        " div (CAST(_n AS DECIMAL(38,0)) * _k_ref) AS BIGINT) END"
+    )
+    return ranked.select(
+        "lang",
+        F.col("_n").cast("long").alias("n_docs"),
+        F.col("_k").cast("long").alias("n_keep"),
+        F.col("_rate_bp").cast("long").alias("keep_rate_bp"),
+        di_bp.alias("di_bp"),
+        F.when(di_bp.isNotNull(), F.when(di_bp >= FAIR_DI_MIN_BP, 1).otherwise(0))
+        .cast("long")
+        .alias("passes_four_fifths"),
+    )
+
+
+FAIRNESS_SQL = f"""
+WITH sig AS (
+  SELECT lang,
+         len(regexp_split_to_array(trim(text), '\\s+')) AS ntok,
+         length(regexp_replace(text, '\\s', '', 'g')) AS nonws,
+         length(regexp_replace(regexp_replace(text, '\\s', '', 'g'),
+                               '[^a-zA-Z0-9]', '', 'g')) AS alnum
+  FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL
+),
+per_lang AS (
+  SELECT lang, count(*) AS n,
+         sum(CASE WHEN ntok >= {FAIR_MIN_TOKENS}
+                   AND (nonws - alnum) * {FAIR_PUNCT_DEN} <= nonws
+                  THEN 1 ELSE 0 END) AS k
+  FROM sig GROUP BY 1
+),
+ranked AS (
+  SELECT lang, n, k, (10000 * k) // n AS rate_bp,
+         first_value(n) OVER w AS n_ref,
+         first_value(k) OVER w AS k_ref
+  FROM per_lang
+  WINDOW w AS (ORDER BY (10000 * k) // n DESC, lang ASC
+               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+)
+SELECT lang,
+       CAST(n AS BIGINT) AS n_docs,
+       CAST(k AS BIGINT) AS n_keep,
+       CAST(rate_bp AS BIGINT) AS keep_rate_bp,
+       CASE WHEN k_ref > 0 THEN
+         CAST((10000 * CAST(k AS HUGEINT) * n_ref)
+              // (CAST(n AS HUGEINT) * k_ref) AS BIGINT) END AS di_bp,
+       CAST(CASE WHEN k_ref > 0 THEN
+              CASE WHEN (10000 * CAST(k AS HUGEINT) * n_ref)
+                        // (CAST(n AS HUGEINT) * k_ref) >= {FAIR_DI_MIN_BP}
+                   THEN 1 ELSE 0 END
+            END AS BIGINT) AS passes_four_fifths
+FROM ranked
+"""
+
+
+# --- per-source vocabulary richness (Chao1 + Good-Turing) -----------------------
+
+
+def chao1_vocab_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source vocabulary richness: observed vocabulary V, hapax
+    (f1) and dis-legomena (f2) counts, the bias-corrected Chao1
+    species-richness estimate V + f1·(f1−1)/(2·(f2+1)) — how much
+    vocabulary the source has NOT yet shown — and the Good-Turing
+    unseen-mass estimate f1/N (the probability the next token is a
+    new type). The data-mixture planner's coverage signal: a source
+    whose Chao1 far exceeds V rewards more sampling; one whose unseen
+    mass is near zero is exhausted.
+
+    Exactness: all counts are exact integers off one (source, token)
+    aggregate; Chao1 is emitted ×100 with its correction as one
+    non-negative integer division (the +1 in the denominator is the
+    standard bias-corrected form — also div-by-zero-proof when
+    f2 = 0); the Good-Turing mass is basis points by integer
+    division. The tokenizer is the corpus convention
+    split(lower(text), '\\s+') — empty text yields one empty-string
+    token in BOTH engines, a documented property of the convention.
+
+    Scale shape: one token explode + (source, token) shuffle (the
+    tf-idf/vocab class — the only data-sized work), then a
+    vocabulary-bounded per-source roll-up; output is |sources| rows."""
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull() & F.col("source").isNotNull()
+    )
+    tt = (
+        docs.select(
+            "source", F.explode(F.split(F.lower("text"), r"\s+")).alias("_tok")
+        )
+        .groupBy("source", "_tok")
+        .agg(F.count(F.lit(1)).alias("_c"))
+    )
+    per_source = tt.groupBy("source").agg(
+        F.count(F.lit(1)).alias("_v"),
+        F.sum("_c").alias("_n"),
+        F.sum(F.when(F.col("_c") == 1, 1).otherwise(0)).alias("_f1"),
+        F.sum(F.when(F.col("_c") == 2, 1).otherwise(0)).alias("_f2"),
+    )
+    return per_source.select(
+        "source",
+        F.col("_n").cast("long").alias("n_tokens"),
+        F.col("_v").cast("long").alias("vocab_size"),
+        F.col("_f1").cast("long").alias("f1_hapax"),
+        F.col("_f2").cast("long").alias("f2_dis"),
+        F.expr(
+            "CAST(100 * _v + (100 * CAST(_f1 AS DECIMAL(38,0)) * (_f1 - 1))"
+            " div (2 * (_f2 + 1)) AS BIGINT)"
+        ).alias("chao1_x100"),
+        F.expr("CAST((10000 * _f1) div _n AS BIGINT)").alias("gt_unseen_bp"),
+    )
+
+
+CHAO1_SQL = r"""
+WITH tt AS (
+  SELECT source, unnest(regexp_split_to_array(lower(text), '\s+')) AS tok
+  FROM documents WHERE text IS NOT NULL AND source IS NOT NULL
+),
+cnt AS (SELECT source, tok, count(*) AS c FROM tt GROUP BY 1, 2),
+per_source AS (
+  SELECT source, count(*) AS v, sum(c) AS n,
+         sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS f1,
+         sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS f2
+  FROM cnt GROUP BY 1
+)
+SELECT source,
+       CAST(n AS BIGINT) AS n_tokens,
+       CAST(v AS BIGINT) AS vocab_size,
+       CAST(f1 AS BIGINT) AS f1_hapax,
+       CAST(f2 AS BIGINT) AS f2_dis,
+       CAST(100 * v + (100 * CAST(f1 AS HUGEINT) * (f1 - 1))
+            // (2 * (f2 + 1)) AS BIGINT) AS chao1_x100,
+       CAST((10000 * f1) // n AS BIGINT) AS gt_unseen_bp
+FROM per_source
+"""
+
+
+# --- centroid silhouette of the labeled embedding clustering ---------------------
+
+#: fixed-point quantizer shared with the PCA / centroid-classifier suite
+SIL_DIM = 64
+SIL_SCALE = 1000
+
+
+def emb_silhouette_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Centroid silhouette of the labeled embedding clustering: per
+    vector, a = squared distance to its OWN label centroid, b = the
+    minimum squared distance to any OTHER label centroid, silhouette
+    s = (b − a)/max(a, b) — the internal clustering-quality statistic
+    (the "simplified silhouette" of Hruschka et al., centroid-based
+    so it needs no pairwise O(n²) distances). The geometry companion
+    of emb_centroid_classifier_eval: the classifier eval scores
+    predictions against labels; this scores how SEPARATED the label
+    clusters are at all.
+
+    Exactness: vectors ride the fixed-point grid (floor(v·1000+0.5));
+    centroids are FLOORED-toward-zero integer means of the exact
+    per-label component sums (sign-adjusted integer division — the
+    centroid-classifier pattern; the floored centroid is the
+    documented center), fitted driver-side from one bounded
+    label×dim moment aggregate and interpolated into BOTH engines as
+    integer literals; squared distances are exact int64; the
+    silhouette is sign-split into two non-negative integer divisions
+    (basis points). A corpus with a single label has no "other"
+    centroid: b is NULL and the silhouette NULL via mirrored CASE
+    (count(s) then counts 0 such rows in both engines).
+
+    Scale shape: the fit is ONE distributed moment aggregation
+    (label×dim rows — driver state is the L·d centroid table, the
+    k-means fit/probe precedent); scoring is a second map-only scan
+    against the broadcast centroid literals; output is |labels| rows.
+
+    Duplicate-PK precondition (pinned in EXPECTED_DIVERGENCES[dupes]):
+    the oracle's per-vec_id distance grouping collapses duplicated
+    vectors while this map-side operator scores each physical row —
+    the emb_centroid/emb_knn adjudication class."""
+    emb = load_table(spark, sf_dir, "embeddings").filter(
+        F.col("label").isNotNull() & F.col("embedding").isNotNull()
+    )
+    d, scale = SIL_DIM, SIL_SCALE
+    qexpr = (
+        f"transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * {scale}"
+        " + 0.5) AS BIGINT))"
+    )
+    qd = emb.withColumn("_q", F.expr(qexpr))
+    moments = (
+        qd.select("label", F.posexplode("_q").alias("_i", "_qv"))
+        .groupBy("label", "_i")
+        .agg(F.sum("_qv").alias("_s"), F.count(F.lit(1)).alias("_n"))
+        .collect()
+    )
+    from pyspark.sql import types as T
+
+    out_schema = T.StructType(
+        [
+            T.StructField("label", T.IntegerType()),
+            T.StructField("n_vecs", T.LongType()),
+            T.StructField("sum_s_bp", T.LongType()),
+            T.StructField("mean_s_bp", T.LongType()),
+        ]
+    )
+    if not moments:  # no labeled vectors -> empty result, declared schema
+        return spark.createDataFrame([], out_schema)
+    labels = sorted({r["label"] for r in moments})
+    cen: dict[int, list[int]] = {}
+    for lab in labels:
+        n_c = next(r["_n"] for r in moments if r["label"] == lab)
+        s = {r["_i"]: r["_s"] for r in moments if r["label"] == lab}
+        cen[lab] = [
+            (1 if s[i] >= 0 else -1) * (abs(s[i]) // n_c) for i in range(d)
+        ]
+    d2_structs = []
+    for lab in labels:
+        lits = ", ".join(f"{x}L" for x in cen[lab])
+        d2 = (
+            f"aggregate(zip_with(_q, array({lits}), (x, y) -> (x - y) * (x - y)),"
+            " 0L, (acc, v) -> acc + v)"
+        )
+        d2_structs.append(f"named_struct('lab', {lab}, 'd2', {d2})")
+    arr = f"array({', '.join(d2_structs)})"
+    own = f"filter({arr}, e -> e.lab = label)[0].d2"
+    other = f"array_min(transform(filter({arr}, e -> e.lab != label), e -> e.d2))"
+    s_bp = (
+        f"CASE WHEN ({other}) IS NULL THEN NULL"
+        f" WHEN ({other}) >= ({own}) THEN"
+        f" ((({other}) - ({own})) * 10000) div greatest({other}, 1)"
+        f" ELSE -(((({own}) - ({other})) * 10000) div greatest({own}, 1)) END"
+    )
+    scored = qd.select("label", F.expr(s_bp).alias("_s_bp"))
+    return scored.groupBy("label").agg(
+        F.count("_s_bp").cast("long").alias("n_vecs"),
+        F.coalesce(F.sum("_s_bp"), F.lit(0)).cast("long").alias("sum_s_bp"),
+        F.expr(
+            "CASE WHEN count(_s_bp) > 0 THEN"
+            " CAST(floor(CAST(sum(_s_bp) AS DOUBLE) / count(_s_bp) + 0.5)"
+            " AS BIGINT) END"
+        ).alias("mean_s_bp"),
+    )
+
+
+#: the oracle fits the SAME floored integer centroids in pure SQL (the
+#: CENTROID_EVAL_SQL precedent): exact integer moments make the fit
+#: reproducible from either engine's scan, so the Spark side's
+#: driver-fitted literals and the SQL cen CTE hold identical integers.
+SILHOUETTE_SQL = f"""
+WITH q AS (
+  SELECT vec_id, label, i,
+         CAST(floor(embedding[i + 1]::DOUBLE * {SIL_SCALE} + 0.5) AS BIGINT)
+           AS qv
+  FROM embeddings, range({SIL_DIM}) t(i)
+  WHERE label IS NOT NULL AND embedding IS NOT NULL
+),
+mo AS (
+  SELECT label, i, CAST(sum(qv) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
+  FROM q GROUP BY 1, 2
+),
+cen AS (
+  SELECT label AS clab, i,
+         (CASE WHEN s >= 0 THEN 1 ELSE -1 END) * (abs(s) // n) AS c
+  FROM mo
+),
+d2 AS (
+  SELECT q.vec_id, q.label, cen.clab,
+         CAST(sum((q.qv - cen.c) * (q.qv - cen.c)) AS BIGINT) AS dd
+  FROM q JOIN cen USING (i)
+  GROUP BY 1, 2, 3
+),
+ab AS (
+  SELECT vec_id, label,
+         max(CASE WHEN clab = label THEN dd END) AS a,
+         min(CASE WHEN clab <> label THEN dd END) AS b
+  FROM d2 GROUP BY 1, 2
+),
+s AS (
+  SELECT label,
+         CASE WHEN b IS NULL THEN NULL
+              WHEN b >= a THEN ((b - a) * 10000) // greatest(b, 1)
+              ELSE -(((a - b) * 10000) // greatest(a, 1)) END AS s_bp
+  FROM ab
+)
+SELECT label,
+       CAST(count(s_bp) AS BIGINT) AS n_vecs,
+       CAST(coalesce(sum(s_bp), 0) AS BIGINT) AS sum_s_bp,
+       CASE WHEN count(s_bp) > 0 THEN
+         CAST(floor(CAST(sum(s_bp) AS DOUBLE) / count(s_bp) + 0.5) AS BIGINT)
+       END AS mean_s_bp
+FROM s GROUP BY 1
 """

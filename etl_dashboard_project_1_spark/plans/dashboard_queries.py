@@ -11,7 +11,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import derive
-from ..session import load_table
+from ..operators.derive import CENTS_SQL, cents
+from ..session import fan_out, load_table
 
 
 def agg_cube_year_status(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -873,3 +874,322 @@ RI_AUDIT_SQL = "\nUNION ALL\n".join(
 FROM {child}"""
     for edge, child, fk, parent, pk in RI_EDGES
 )
+
+
+# --- skyline (pareto-front) query -------------------------------------------
+
+def skyline_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-brand 2-D skyline: the parts not dominated on (cheaper price,
+    larger size) — the pareto front every "best value" dashboard needs.
+    Part a dominates b when a.price <= b.price AND a.size >= b.size with
+    at least one strict; kept rows are those where (1) no strictly
+    cheaper part has size >= ours (RANGE-frame running max over price)
+    and (2) no same-price part has size > ours (partition max).
+
+    Scale shape: the classic O(n log n) sorted-sweep skyline as two
+    window passes — one range-partitioned sort per brand, no self-join,
+    no |parts|² candidate pairs (the anti-join formulation would be
+    quadratic per brand). Core in operators/skyline.py (property-tested
+    against a brute-force dominance model)."""
+    from ..operators.skyline import skyline_2d
+
+    part = fan_out(load_table(spark, sf_dir, "part"))
+    p = part.select(
+        "p_brand",
+        "p_partkey",
+        cents("p_retailprice").alias("price_cents"),
+        F.col("p_size").cast("long").alias("size"),
+    )
+    return skyline_2d(p, ["p_brand"], "price_cents", "size").select(
+        F.col("p_brand").alias("brand"), "p_partkey", "price_cents", "size"
+    )
+
+
+SKYLINE_SQL = f"""
+WITH p AS (
+  SELECT p_brand, p_partkey,
+         {CENTS_SQL.format(x="p_retailprice")} AS price_cents,
+         CAST(p_size AS BIGINT) AS size
+  FROM part
+),
+flagged AS (
+  SELECT p_brand, p_partkey, price_cents, size,
+         max(size) OVER (PARTITION BY p_brand ORDER BY price_cents
+                         RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+           AS cheaper_max,
+         max(size) OVER (PARTITION BY p_brand, price_cents) AS same_max
+  FROM p
+)
+SELECT p_brand AS brand, p_partkey, price_cents, size
+FROM flagged
+WHERE (cheaper_max IS NULL OR size > cheaper_max) AND size = same_max
+"""
+
+
+# --- RFM segmentation ---------------------------------------------------------
+
+RFM_BUCKETS = 4
+
+
+def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RFM customer segmentation: quartile-code each ordering customer on
+    Recency (latest order date), Frequency (order count) and Monetary
+    (total cents), then report the segment grid (code = R·100+F·10+M,
+    4=best) with sizes and value — the classic multi-dimension quantile
+    coding behind every CRM/value dashboard (quality_tier_inventory is
+    the single-measure cousin).
+
+    Quartile code = floor((i−1)·4/n)+1 over the dense rank i of
+    (metric, custkey) — a row_number-based formula interpolated into
+    BOTH engines (deliberately NOT ntile: remainder distribution is
+    engine-defined there, and a global ntile would single-partition the
+    sort anyway). Ascending metric order, so 4 = most recent / most
+    frequent / highest spend.
+
+    Scale shape: one per-customer aggregate, then THREE range-partitioned
+    dense ranks (layout.dense_ids_by — O(partitions) driver state, no
+    single-partition window), one 1-row count broadcast, and a ≤64-group
+    aggregate."""
+    from ..operators import layout
+
+    orders = load_table(spark, sf_dir, "orders")
+    per_cust = orders.groupBy("o_custkey").agg(
+        F.max(F.to_date("o_orderdate")).alias("last_day"),
+        F.count(F.lit(1)).alias("freq"),
+        F.sum(cents("o_totalprice")).alias("cents"),
+    )
+    ranked = layout.dense_ids_by(per_cust, [F.asc("last_day"), F.asc("o_custkey")], id_name="ri")
+    ranked = layout.dense_ids_by(ranked, [F.asc("freq"), F.asc("o_custkey")], id_name="fi")
+    ranked = layout.dense_ids_by(ranked, [F.asc("cents"), F.asc("o_custkey")], id_name="mi")
+    tot = ranked.agg(F.count(F.lit(1)).alias("n"))
+
+    def code(i: str) -> Column:
+        return (F.floor((F.col(i) - 1) * RFM_BUCKETS / F.col("n")) + 1).cast("int")
+
+    coded = ranked.crossJoin(F.broadcast(tot)).select(
+        "cents",
+        (code("ri") * 100 + code("fi") * 10 + code("mi")).alias("segment"),
+    )
+    return coded.groupBy("segment").agg(
+        F.count(F.lit(1)).cast("long").alias("n_customers"),
+        F.sum("cents").cast("long").alias("total_cents"),
+    )
+
+
+RFM_SQL = f"""
+WITH per_cust AS (
+  SELECT o_custkey,
+         max(o_orderdate::DATE) AS last_day,
+         count(*) AS freq,
+         sum({CENTS_SQL.format(x="o_totalprice")}) AS cents
+  FROM orders GROUP BY 1
+),
+ranked AS (
+  SELECT cents,
+         row_number() OVER (ORDER BY last_day ASC, o_custkey ASC) AS ri,
+         row_number() OVER (ORDER BY freq ASC, o_custkey ASC) AS fi,
+         row_number() OVER (ORDER BY cents ASC, o_custkey ASC) AS mi
+  FROM per_cust
+),
+tot AS (SELECT count(*) AS n FROM ranked)
+SELECT CAST((floor((ri - 1) * {RFM_BUCKETS} / n) + 1) * 100
+       + (floor((fi - 1) * {RFM_BUCKETS} / n) + 1) * 10
+       + (floor((mi - 1) * {RFM_BUCKETS} / n) + 1) AS INTEGER) AS segment,
+       count(*)::BIGINT AS n_customers,
+       CAST(sum(cents) AS BIGINT) AS total_cents
+FROM ranked, tot
+GROUP BY 1
+"""
+
+
+# --- empirical-Bayes shrunken group means ---------------------------------------
+
+#: prior strength (pseudo-observations pulled toward the global mean)
+EB_PRIOR_K = 20
+
+
+def eb_shrunken_group_means(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Empirical-Bayes shrunken per-nation mean order value: the raw
+    per-nation mean overfits thin nations (3 orders can top any
+    leaderboard); shrinking toward the global mean with prior strength
+    k — shrunk = (S_g + k·m̄)/(n_g + k) — is the standard correction
+    (a Beta/Normal-prior posterior mean). Reports raw vs shrunk so the
+    shrinkage is visible.
+
+    Exactness: m̄ is the FLOORED global mean (documented: the prior
+    mean is the integer-cents global mean), and the shrunk mean is one
+    non-negative integer division of exact int64 — no floats anywhere.
+
+    Scale shape: one (nation, ·) revenue aggregate (the only data-sized
+    shuffle after the customer broadcast join), a 1-row global frame
+    broadcast back over the |nations|-row frame."""
+    orders = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_totalprice").isNotNull() & (F.col("o_totalprice") >= 0)
+    )
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    rev = (
+        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .groupBy("c_nationkey")
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.sum(cents("o_totalprice")).alias("_s"),
+        )
+    )
+    tot = rev.agg(F.sum("_n").alias("_tn"), F.sum("_s").alias("_ts"))
+    return (
+        rev.crossJoin(F.broadcast(tot))
+        .filter(F.col("_tn") > 0)
+        .select(
+            "c_nationkey",
+            F.col("_n").cast("long").alias("n_orders"),
+            F.expr("CAST(_s div _n AS BIGINT)").alias("raw_mean_cents"),
+            F.expr(
+                f"CAST((_s + {EB_PRIOR_K} * (_ts div _tn)) div (_n + {EB_PRIOR_K})"
+                " AS BIGINT)"
+            ).alias("shrunk_mean_cents"),
+        )
+    )
+
+
+EB_SHRINK_SQL = f"""
+WITH rev AS (
+  SELECT c_nationkey, count(*) AS n, sum({CENTS_SQL.format(x="o_totalprice")}) AS s
+  FROM orders JOIN customer ON o_custkey = c_custkey
+  WHERE o_totalprice IS NOT NULL AND o_totalprice >= 0
+  GROUP BY 1
+),
+tot AS (SELECT sum(n) AS tn, sum(s) AS ts FROM rev)
+SELECT c_nationkey,
+       CAST(n AS BIGINT) AS n_orders,
+       CAST(s // n AS BIGINT) AS raw_mean_cents,
+       CAST((s + {EB_PRIOR_K} * (ts // tn)) // (n + {EB_PRIOR_K}) AS BIGINT)
+         AS shrunk_mean_cents
+FROM rev CROSS JOIN tot WHERE tn > 0
+"""
+
+
+# --- Kendall tau-b between two period leaderboards ------------------------------
+
+KT_YEAR_A = 1996
+KT_YEAR_B = 1997
+
+
+def kendall_tau_leaderboards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kendall tau-b rank correlation between the per-nation revenue
+    leaderboards of two calendar years (1996 vs 1997) — the
+    full-order, tie-corrected rank-stability statistic
+    (rbo_leaderboard_drift is top-weighted and set-based; tau-b scores
+    EVERY pair's relative order): concordant/discordant/tied pair
+    counts over the |nations|² pair frame, tau_b = (C − D) /
+    sqrt((n0 − T_a)·(n0 − T_b)).
+
+    Exactness: yearly revenues are exact integer cents (conditional
+    sums — a nation absent from a year holds revenue 0, a legitimate
+    leaderboard value); pair classification is integer comparison;
+    tau_b is one fixed-shape sqrt/divide over exact integer counts
+    (the ab_covariate_balance precedent), round-half-up at 4 dp.
+    Degenerate (all pairs tied in either year, or no pairs) emits NULL
+    via mirrored CASE; on an empty pair frame the ungrouped aggregate
+    yields one row of NULL sums and count 0 in BOTH engines.
+
+    Scale shape: one keyed join (orders×customer) + one |nations|-row
+    aggregate are the only data-sized work; the pair self-join is
+    non-equi by construction but bounded at |nations|² ≈ 300 rows —
+    broadcast nested-loop by design (whitelisted)."""
+    orders = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_totalprice").isNotNull()
+        & (F.col("o_totalprice") >= 0)
+        & F.year("o_orderdate").isin(KT_YEAR_A, KT_YEAR_B)
+    )
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    rev = (
+        orders.join(cust, orders.o_custkey == cust.c_custkey)
+        .groupBy("c_nationkey")
+        .agg(
+            F.sum(
+                F.when(F.year("o_orderdate") == KT_YEAR_A, cents("o_totalprice"))
+                .otherwise(0)
+            ).alias("_a"),
+            F.sum(
+                F.when(F.year("o_orderdate") == KT_YEAR_B, cents("o_totalprice"))
+                .otherwise(0)
+            ).alias("_b"),
+        )
+    )
+    x = rev.select(
+        F.col("c_nationkey").alias("_nx"), F.col("_a").alias("_ax"), F.col("_b").alias("_bx")
+    )
+    y = rev.select(
+        F.col("c_nationkey").alias("_ny"), F.col("_a").alias("_ay"), F.col("_b").alias("_by")
+    )
+    pairs = x.join(F.broadcast(y), F.col("_nx") < F.col("_ny"))
+    agg = pairs.agg(
+        F.count(F.lit(1)).alias("_n0"),
+        F.sum(
+            F.when(
+                ((F.col("_ax") < F.col("_ay")) & (F.col("_bx") < F.col("_by")))
+                | ((F.col("_ax") > F.col("_ay")) & (F.col("_bx") > F.col("_by"))),
+                1,
+            ).otherwise(0)
+        ).alias("_c"),
+        F.sum(
+            F.when(
+                ((F.col("_ax") < F.col("_ay")) & (F.col("_bx") > F.col("_by")))
+                | ((F.col("_ax") > F.col("_ay")) & (F.col("_bx") < F.col("_by"))),
+                1,
+            ).otherwise(0)
+        ).alias("_d"),
+        F.sum(F.when(F.col("_ax") == F.col("_ay"), 1).otherwise(0)).alias("_ta"),
+        F.sum(F.when(F.col("_bx") == F.col("_by"), 1).otherwise(0)).alias("_tb"),
+    )
+    tau = F.expr(
+        "CASE WHEN _n0 - _ta > 0 AND _n0 - _tb > 0 THEN"
+        " floor((_c - _d) / sqrt(CAST(_n0 - _ta AS DOUBLE) * (_n0 - _tb))"
+        " * 10000 + 0.5) / 10000 END"
+    )
+    return agg.select(
+        F.col("_n0").cast("long").alias("n_pairs"),
+        F.col("_c").cast("long").alias("concordant"),
+        F.col("_d").cast("long").alias("discordant"),
+        F.col("_ta").cast("long").alias("ties_a"),
+        F.col("_tb").cast("long").alias("ties_b"),
+        tau.alias("tau_b"),
+    )
+
+
+KENDALL_SQL = f"""
+WITH rev AS (
+  SELECT c_nationkey,
+         sum(CASE WHEN year(o_orderdate) = {KT_YEAR_A}
+                  THEN {CENTS_SQL.format(x="o_totalprice")} ELSE 0 END) AS a,
+         sum(CASE WHEN year(o_orderdate) = {KT_YEAR_B}
+                  THEN {CENTS_SQL.format(x="o_totalprice")} ELSE 0 END) AS b
+  FROM orders JOIN customer ON o_custkey = c_custkey
+  WHERE o_totalprice IS NOT NULL AND o_totalprice >= 0
+        AND year(o_orderdate) IN ({KT_YEAR_A}, {KT_YEAR_B})
+  GROUP BY 1
+),
+pairs AS (
+  SELECT x.a AS ax, x.b AS bx, y.a AS ay, y.b AS by_
+  FROM rev x JOIN rev y ON x.c_nationkey < y.c_nationkey
+),
+agg AS (
+  SELECT count(*) AS n0,
+         sum(CASE WHEN (ax < ay AND bx < by_) OR (ax > ay AND bx > by_)
+                  THEN 1 ELSE 0 END) AS c,
+         sum(CASE WHEN (ax < ay AND bx > by_) OR (ax > ay AND bx < by_)
+                  THEN 1 ELSE 0 END) AS d,
+         sum(CASE WHEN ax = ay THEN 1 ELSE 0 END) AS ta,
+         sum(CASE WHEN bx = by_ THEN 1 ELSE 0 END) AS tb
+  FROM pairs
+)
+SELECT CAST(n0 AS BIGINT) AS n_pairs,
+       CAST(c AS BIGINT) AS concordant,
+       CAST(d AS BIGINT) AS discordant,
+       CAST(ta AS BIGINT) AS ties_a,
+       CAST(tb AS BIGINT) AS ties_b,
+       CASE WHEN n0 - ta > 0 AND n0 - tb > 0 THEN
+         floor((c - d) / sqrt(CAST(n0 - ta AS DOUBLE) * (n0 - tb))
+               * 10000 + 0.5) / 10000 END AS tau_b
+FROM agg
+"""

@@ -1,8 +1,9 @@
 """Correctness-gate pairs for the training-data-pipeline extensions:
 dedup (exact / n-gram Jaccard / MinHash+LSH / SimHash / embedding-cosine),
 text analysis (lang-id / quality / token counts / fingerprint), similarity
-search (brute-force cosine top-k, hyperplane-LSH ANN) and multimodal
-binary plumbing — SURVEY.md §7 module 10.
+search (brute-force cosine top-k, hyperplane-LSH ANN, IVF) and its
+retrieval evaluation, deterministic sampling, and multimodal binary
+plumbing — SURVEY.md §7 module 10.
 
 Every hash step is md5-derived integer arithmetic so the DuckDB oracle can
 reproduce Spark bit-for-bit; float outputs are rounded at the end; pair
@@ -11,10 +12,13 @@ outputs carry ids (ints), keeping the value-hash float-stable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import math
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import dedup, derive, multimodal, sampling, textops, vector
+from ..operators import dedup, derive, layout, multimodal, sampling, textops, vector
+from ..operators.dedup import md5_int
 from ..session import fan_out, load_table
 
 # shared oracle CTE: distinct word 3-gram shingles per PHYSICAL ROW.
@@ -46,7 +50,7 @@ sh AS (
 )
 """
 
-_JACCARD_CTE = (
+JACCARD_CTE = (
     "WITH "
     + _SHINGLES_CTE
     + r""",
@@ -97,7 +101,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DEDUP_NGRAM_SQL = (
-    _JACCARD_CTE
+    JACCARD_CTE
     + "SELECT id_a, id_b, floor(jaccard * 10000 + 0.5) / 10000 AS jaccard FROM jac WHERE jaccard >= 0.2"
 )
 
@@ -303,7 +307,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ratio_sql(words: tuple[str, ...]) -> str:
+def ratio_sql(words: tuple[str, ...]) -> str:
     inlist = ", ".join(f"'{w}'" for w in words)
     return (
         r"len(list_filter(regexp_split_to_array(lower(text), '\s+'), "
@@ -315,10 +319,10 @@ def _ratio_sql(words: tuple[str, ...]) -> str:
 TEXT_LANGID_SQL = rf"""
 WITH r AS (
   SELECT doc_id,
-         {_ratio_sql(textops.LANG_PROFILES['en'])} AS r_en,
-         {_ratio_sql(textops.LANG_PROFILES['es'])} AS r_es,
-         {_ratio_sql(textops.LANG_PROFILES['de'])} AS r_de,
-         {_ratio_sql(textops.LANG_PROFILES['fr'])} AS r_fr
+         {ratio_sql(textops.LANG_PROFILES['en'])} AS r_en,
+         {ratio_sql(textops.LANG_PROFILES['es'])} AS r_es,
+         {ratio_sql(textops.LANG_PROFILES['de'])} AS r_de,
+         {ratio_sql(textops.LANG_PROFILES['fr'])} AS r_fr
   FROM documents
 )
 SELECT doc_id,
@@ -387,7 +391,7 @@ WITH t AS (
          length(regexp_replace(regexp_replace(text, '\s', '', 'g'), '[^a-zA-Z0-9]', '', 'g')) AS n_alnum,
          list_sum(list_transform(regexp_split_to_array(lower(text), '\s+'), w -> length(w))) AS sum_wlen,
          len(regexp_split_to_array(lower(text), '\s+')) AS n_tok_raw,
-         {_ratio_sql(textops.LANG_PROFILES['en'])} AS stop_r
+         {ratio_sql(textops.LANG_PROFILES['en'])} AS stop_r
   FROM documents
 )
 SELECT doc_id, n_tokens,
@@ -519,7 +523,7 @@ QUALIFY rank <= 3
 
 # --- similarity search ------------------------------------------------------
 
-_COS_SQL = """
+COS_SQL = """
 list_sum(list_transform(range(1, len({a}) + 1), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))
  / (sqrt(list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE)))
   * sqrt(list_sum(list_transform({b}, x -> x::DOUBLE * x::DOUBLE))))
@@ -543,10 +547,10 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SIM_COSINE_TOPK_SQL = f"""
 WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-SELECT vec_id, floor(({_COS_SQL.format(a='embedding', b='qv')}) * 10000 + 0.5) / 10000 AS cosine
+SELECT vec_id, floor(({COS_SQL.format(a='embedding', b='qv')}) * 10000 + 0.5) / 10000 AS cosine
 FROM embeddings, q
 WHERE vec_id != 0
-ORDER BY {_COS_SQL.format(a='embedding', b='qv')} DESC, vec_id ASC
+ORDER BY {COS_SQL.format(a='embedding', b='qv')} DESC, vec_id ASC
 LIMIT 10
 """
 
@@ -568,7 +572,7 @@ def sim_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 SIM_BATCH_TOPK_SQL = f"""
 WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
 scored AS (
-  SELECT q.qid, e.vec_id, {_COS_SQL.format(a='e.embedding', b='q.qv')} AS cos
+  SELECT q.qid, e.vec_id, {COS_SQL.format(a='e.embedding', b='q.qv')} AS cos
   FROM embeddings e, q
   WHERE e.vec_id != q.qid
 )
@@ -601,7 +605,7 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTRASTIVE_NEG_SQL = f"""
 WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 4),
 scored AS (
-  SELECT q.qid, e.vec_id, {_COS_SQL.format(a='e.embedding', b='q.qv')} AS cos
+  SELECT q.qid, e.vec_id, {COS_SQL.format(a='e.embedding', b='q.qv')} AS cos
   FROM embeddings e, q
   WHERE e.vec_id != q.qid
 )
@@ -642,14 +646,14 @@ def _band_bucket_sql(e: str, band: int, band_size: int) -> str:
     )
 
 
-_EMB_BANDS_SQL = "\nUNION ALL\n".join(
+EMB_BANDS_SQL = "\nUNION ALL\n".join(
     f"SELECT vec_id, {t} AS _band, {_band_bucket_sql('embedding', t, 4)} AS _bucket FROM embeddings"
     for t in range(8)
 )
 
 DEDUP_EMB_COSINE_SQL = f"""
 WITH bands AS (
-{_EMB_BANDS_SQL}
+{EMB_BANDS_SQL}
 ),
 cand AS (
   SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
@@ -660,7 +664,7 @@ SELECT id_a, id_b
 FROM cand
 JOIN embeddings ea ON ea.vec_id = cand.id_a
 JOIN embeddings eb ON eb.vec_id = cand.id_b
-WHERE {_COS_SQL.format(a='ea.embedding', b='eb.embedding')} >= 0.4
+WHERE {COS_SQL.format(a='ea.embedding', b='eb.embedding')} >= 0.4
 """
 
 
@@ -692,10 +696,10 @@ v AS (
   SELECT vec_id, embedding, {_band_bucket_sql('embedding', 0, 4)} AS bucket
   FROM embeddings
 )
-SELECT vec_id, floor(({_COS_SQL.format(a='embedding', b='qv')}) * 10000 + 0.5) / 10000 AS cosine
+SELECT vec_id, floor(({COS_SQL.format(a='embedding', b='qv')}) * 10000 + 0.5) / 10000 AS cosine
 FROM v, q, qb
 WHERE vec_id != 0 AND bit_count(xor(bucket::BIGINT, qbucket::BIGINT)) <= 2
-ORDER BY {_COS_SQL.format(a='embedding', b='qv')} DESC, vec_id ASC
+ORDER BY {COS_SQL.format(a='embedding', b='qv')} DESC, vec_id ASC
 LIMIT 10
 """
 
@@ -777,7 +781,7 @@ exact AS (
   SELECT qid, vec_id FROM (
     SELECT q.qid, v.vec_id,
            row_number() OVER (PARTITION BY q.qid
-             ORDER BY {_COS_SQL.format(a='v.embedding', b='q.qv')} DESC, v.vec_id ASC) AS r
+             ORDER BY {COS_SQL.format(a='v.embedding', b='q.qv')} DESC, v.vec_id ASC) AS r
     FROM v, q WHERE v.vec_id != q.qid
   ) WHERE r <= 10
 ),
@@ -785,7 +789,7 @@ ann AS (
   SELECT qid, vec_id FROM (
     SELECT q.qid, v.vec_id,
            row_number() OVER (PARTITION BY q.qid
-             ORDER BY {_COS_SQL.format(a='v.embedding', b='q.qv')} DESC, v.vec_id ASC) AS r
+             ORDER BY {COS_SQL.format(a='v.embedding', b='q.qv')} DESC, v.vec_id ASC) AS r
     FROM v, q
     WHERE v.vec_id != q.qid
       AND bit_count(xor(v.b::BIGINT, q.qb::BIGINT)) <= 2
@@ -962,7 +966,7 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DEDUP_CLUSTERS_SQL = (
-    _JACCARD_CTE.replace("WITH ", "WITH RECURSIVE ", 1)
+    JACCARD_CTE.replace("WITH ", "WITH RECURSIVE ", 1)
     + """,
 edges AS (
   SELECT id_a AS a, id_b AS b FROM jac WHERE jaccard >= 0.2
@@ -1149,10 +1153,10 @@ WITH t AS (
          len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
          length(regexp_replace(text, '\s', '', 'g')) AS n_nonws,
          length(regexp_replace(regexp_replace(text, '\s', '', 'g'), '[^a-zA-Z0-9]', '', 'g')) AS n_alnum,
-         {_ratio_sql(textops.LANG_PROFILES['en'])} AS r_en,
-         {_ratio_sql(textops.LANG_PROFILES['es'])} AS r_es,
-         {_ratio_sql(textops.LANG_PROFILES['de'])} AS r_de,
-         {_ratio_sql(textops.LANG_PROFILES['fr'])} AS r_fr
+         {ratio_sql(textops.LANG_PROFILES['en'])} AS r_en,
+         {ratio_sql(textops.LANG_PROFILES['es'])} AS r_es,
+         {ratio_sql(textops.LANG_PROFILES['de'])} AS r_de,
+         {ratio_sql(textops.LANG_PROFILES['fr'])} AS r_fr
   FROM documents
 ),
 scored AS (
@@ -1284,7 +1288,7 @@ cent AS (
   SELECT label, list(m ORDER BY pos) AS centroid FROM cells GROUP BY label
 )
 SELECT e.label, count(*)::BIGINT AS n_vecs,
-       floor(avg({_COS_SQL.format(a='e.embedding', b='c.centroid')}) * 10000 + 0.5) / 10000
+       floor(avg({COS_SQL.format(a='e.embedding', b='c.centroid')}) * 10000 + 0.5) / 10000
          AS mean_cosine
 FROM embeddings e JOIN cent c USING (label)
 GROUP BY e.label
@@ -1341,10 +1345,10 @@ WITH t AS (
          len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
          length(regexp_replace(text, '\s', '', 'g')) AS n_nonws,
          length(regexp_replace(regexp_replace(text, '\s', '', 'g'), '[^a-zA-Z0-9]', '', 'g')) AS n_alnum,
-         {_ratio_sql(textops.LANG_PROFILES['en'])} AS r_en,
-         {_ratio_sql(textops.LANG_PROFILES['es'])} AS r_es,
-         {_ratio_sql(textops.LANG_PROFILES['de'])} AS r_de,
-         {_ratio_sql(textops.LANG_PROFILES['fr'])} AS r_fr
+         {ratio_sql(textops.LANG_PROFILES['en'])} AS r_en,
+         {ratio_sql(textops.LANG_PROFILES['es'])} AS r_es,
+         {ratio_sql(textops.LANG_PROFILES['de'])} AS r_de,
+         {ratio_sql(textops.LANG_PROFILES['fr'])} AS r_fr
   FROM documents
 ),
 flags AS (
@@ -1526,6 +1530,19 @@ HAVING avg(CASE WHEN bench.gram IS NOT NULL THEN 1 ELSE 0 END) >= 0.1
 """
 
 
+def quality_logit() -> Column:
+    """The quality classifier's logit over ``text``, weights "trained
+    offline": length saturation, punctuation penalty, stopword-presence
+    evidence, word-length prior, bias."""
+    return (
+        2.0 * F.least(textops.token_count("text") / 200.0, F.lit(1.0))
+        - 6.0 * textops.punct_ratio("text")
+        + 10.0 * textops.stopword_ratio("text")
+        - 0.2 * textops.mean_word_length("text")
+        - 0.3
+    )
+
+
 def quality_logit_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fused in-engine ML inference (ICDE'25 operator-fusion style): a
     trained-offline logistic quality classifier executed as ONE fused
@@ -1540,15 +1557,7 @@ def quality_logit_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     and decision (sigmoid is monotone).
     """
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # weights "trained offline": length saturation, punctuation penalty,
-    # stopword-presence evidence, word-length prior, bias
-    logit = (
-        2.0 * F.least(textops.token_count("text") / 200.0, F.lit(1.0))
-        - 6.0 * textops.punct_ratio("text")
-        + 10.0 * textops.stopword_ratio("text")
-        - 0.2 * textops.mean_word_length("text")
-        - 0.3
-    )
+    logit = quality_logit()
     return docs.select(
         "doc_id",
         derive.portable_round(logit, 4).alias("logit"),
@@ -1578,7 +1587,7 @@ s AS (
 )
 SELECT doc_id, floor(logit * 10000 + 0.5) / 10000 AS logit, logit > 0 AS keep
 FROM s
-""".format(stop_r=_ratio_sql(textops.LANG_PROFILES["en"]))
+""".format(stop_r=ratio_sql(textops.LANG_PROFILES["en"]))
 
 
 def mm_audio_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1663,7 +1672,7 @@ def hybrid_retrieval_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 HYBRID_RERANK_SQL = f"""
 WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 4),
 scored AS (
-  SELECT q.qid, e.vec_id, {_COS_SQL.format(a='e.embedding', b='q.qv')} AS cos
+  SELECT q.qid, e.vec_id, {COS_SQL.format(a='e.embedding', b='q.qv')} AS cos
   FROM embeddings e, q
   WHERE e.vec_id != q.qid
 ),
@@ -1798,7 +1807,7 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 RRF_FUSION_SQL = rf"""
 WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 4),
 dscore AS (
-  SELECT q.qid, e.vec_id AS doc_id, {_COS_SQL.format(a='e.embedding', b='q.qv')} AS cos
+  SELECT q.qid, e.vec_id AS doc_id, {COS_SQL.format(a='e.embedding', b='q.qv')} AS cos
   FROM embeddings e, q
   WHERE e.vec_id != q.qid
 ),
@@ -1985,13 +1994,7 @@ def quality_logit_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic until the single final division — bit-identical
     across engines."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    logit = (
-        2.0 * F.least(textops.token_count("text") / 200.0, F.lit(1.0))
-        - 6.0 * textops.punct_ratio("text")
-        + 10.0 * textops.stopword_ratio("text")
-        - 0.2 * textops.mean_word_length("text")
-        - 0.3
-    )
+    logit = quality_logit()
     scored = docs.select(
         derive.portable_round(logit, 2).alias("_b"),
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("_y"),
@@ -2059,7 +2062,7 @@ SELECT CASE WHEN sum(pos) > 0 AND sum(neg) > 0
        sum(pos)::BIGINT AS n_pos,
        sum(neg)::BIGINT AS n_neg
 FROM c
-""".format(stop_r=_ratio_sql(textops.LANG_PROFILES["en"]))
+""".format(stop_r=ratio_sql(textops.LANG_PROFILES["en"]))
 
 
 HEAVY_HITTERS_CMS_SQL = r"""
@@ -2654,10 +2657,10 @@ _LANGID_CASE = """CASE WHEN greatest(r_en, r_es, r_de, r_fr) <= 0.05 THEN 'und'
 LANGID_EVAL_SQL = rf"""
 WITH r AS (
   SELECT lang,
-         {_ratio_sql(textops.LANG_PROFILES['en'])} AS r_en,
-         {_ratio_sql(textops.LANG_PROFILES['es'])} AS r_es,
-         {_ratio_sql(textops.LANG_PROFILES['de'])} AS r_de,
-         {_ratio_sql(textops.LANG_PROFILES['fr'])} AS r_fr
+         {ratio_sql(textops.LANG_PROFILES['en'])} AS r_en,
+         {ratio_sql(textops.LANG_PROFILES['es'])} AS r_es,
+         {ratio_sql(textops.LANG_PROFILES['de'])} AS r_de,
+         {ratio_sql(textops.LANG_PROFILES['fr'])} AS r_fr
   FROM documents
 ),
 p AS (SELECT lang AS true_lang, {_LANGID_CASE} AS detected_lang FROM r)
@@ -2716,7 +2719,7 @@ MRR_EVAL_SQL = f"""
 WITH q AS (SELECT vec_id AS qid, label AS qlabel, embedding AS qv
            FROM embeddings WHERE vec_id < 8),
 scored AS (
-  SELECT q.qid, q.qlabel, e.vec_id, e.label, {_COS_SQL.format(a='e.embedding', b='q.qv')} AS cos
+  SELECT q.qid, q.qlabel, e.vec_id, e.label, {COS_SQL.format(a='e.embedding', b='q.qv')} AS cos
   FROM embeddings e, q
   WHERE e.vec_id != q.qid
 ),
@@ -3098,4 +3101,1388 @@ SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(bit_count(xor(a.p, b.p)) AS BIGINT) AS hamming
 FROM blk a JOIN blk b ON a.b = b.b AND a.doc_id < b.doc_id
 WHERE bit_count(xor(a.p, b.p)) <= 2
+"""
+
+
+# --- deterministic fixed-k sample per stratum --------------------------------
+
+SAMPLE_K = 25
+
+
+def sample_fixed_k_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic fixed-size sample per stratum: exactly k events per
+    event type, chosen as the k smallest md5 hashes — the distributed
+    stand-in for reservoir sampling (same fixed-k guarantee, but stable
+    under reordering and re-runs, and mergeable across partitions: the
+    k smallest of a union is computable from each side's k smallest).
+    Emitted as per-stratum membership aggregates so the gate pins the
+    exact chosen set, not just its size.
+
+    Scale shape: one type-partitioned window rank over the hash (top-k
+    per group — sort-based, spillable), then a 5-row aggregate. The rank
+    key is the FULL-RESOLUTION md5 integer, not the 10k-bucket wheel: a
+    bucketed key would degenerate at scale into "the smallest event_ids
+    inside bucket 0" — earliest-ingested bias, not a uniform sample."""
+    ev = load_table(spark, sf_dir, "events")
+    h = dedup.md5_int(F.concat(F.col("event_id").cast("string"), F.lit("fixk")))
+    w = Window.partitionBy("event_type").orderBy(h.asc(), F.col("event_id").asc())
+    picked = ev.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= SAMPLE_K
+    )
+    return picked.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("k_actual"),
+        F.sum("event_id").cast("long").alias("sum_ids"),
+        F.min("event_id").cast("long").alias("min_id"),
+        F.max("event_id").cast("long").alias("max_id"),
+    )
+
+
+SAMPLE_FIXED_K_SQL = f"""
+WITH ranked AS (
+  SELECT event_type, event_id,
+         row_number() OVER (
+           PARTITION BY event_type
+           ORDER BY ('0x' || substr(md5(event_id::VARCHAR || 'fixk'), 1, 8))::BIGINT
+                    ASC,
+                    event_id ASC) AS rn
+  FROM events
+)
+SELECT event_type,
+       count(*)::BIGINT AS k_actual,
+       CAST(sum(event_id) AS BIGINT) AS sum_ids,
+       CAST(min(event_id) AS BIGINT) AS min_id,
+       CAST(max(event_id) AS BIGINT) AS max_id
+FROM ranked WHERE rn <= {SAMPLE_K}
+GROUP BY 1
+"""
+
+
+# --- nDCG@10 retrieval eval --------------------------------------------------
+
+NDCG_K = 10
+#: integer micro-scaled log2 discounts, computed ONCE in Python and
+#: interpolated into BOTH engines — no runtime log2, whose libm values
+#: differ between engines (the same trick MRR_SCALE plays for 1/rank).
+_NDCG_W = [round(1_000_000 / math.log2(r + 1)) for r in range(1, NDCG_K + 1)]
+_NDCG_PREFIX = [0]
+for _w in _NDCG_W:
+    _NDCG_PREFIX.append(_NDCG_PREFIX[-1] + _w)
+
+_W_CASE = "CASE rank " + " ".join(
+    f"WHEN {r} THEN {w}" for r, w in enumerate(_NDCG_W, start=1)
+) + " ELSE 0 END"
+_IDCG_CASE = "CASE least(n_relevant, {k}) ".format(k=NDCG_K) + " ".join(
+    f"WHEN {i} THEN {p}" for i, p in enumerate(_NDCG_PREFIX)
+) + " END"
+
+
+def retrieval_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """nDCG@10 of cosine retrieval with label agreement as the relevance
+    judgment — the position-sensitive retrieval metric MRR can't provide
+    (MRR sees only the FIRST hit; nDCG credits every hit, discounted by
+    log2 rank). Per query: hit count, DCG, ideal DCG and nDCG in basis
+    points.
+
+    Exactness: the log2 discounts are integer micro-weights computed
+    once in Python (``_NDCG_W``) and interpolated into BOTH engines, so
+    DCG = Σ rel·w(rank) and IDCG = prefix(min(hits, 10)) are exact
+    integer sums, and nDCG is one non-negative integer division —
+    bit-stable cross-engine with zero runtime transcendentals.
+
+    Scale shape: identical to retrieval_mrr_eval — the ranked list is
+    request-sized (|Q|·k) from ONE corpus scan (vector.cosine_topk_batch
+    bucketed partial top-k); relevance attaches by broadcasting the
+    ranked list against the corpus label projection; the metric
+    aggregate groups |Q| rows."""
+    from ..operators import vector
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 8)
+    top = vector.cosine_topk_batch(
+        emb, "vec_id", "embedding", queries, "vec_id", "embedding", k=NDCG_K
+    )
+    lab = emb.select("vec_id", "label")
+    qlab = queries.select(F.col("vec_id").alias("qid"), F.col("label").alias("qlabel"))
+    judged = (
+        lab.join(F.broadcast(top.select("qid", "rank", "vec_id")), "vec_id")
+        .join(F.broadcast(qlab), "qid")
+        .withColumn(
+            # F.when mirrors the oracle CASE: NULL labels -> 0, never
+            # NULL (nulls-sweep class — bare == propagates NULL)
+            "rel",
+            F.when(F.col("label") == F.col("qlabel"), 1).otherwise(0).cast("long"),
+        )
+    )
+    per_q = judged.groupBy("qid", "qlabel").agg(
+        F.sum("rel").cast("long").alias("n_relevant"),
+        F.sum(F.expr(f"rel * ({_W_CASE})")).cast("long").alias("dcg_e6"),
+    )
+    return per_q.select(
+        "qid",
+        "qlabel",
+        "n_relevant",
+        "dcg_e6",
+        F.expr(_IDCG_CASE).cast("long").alias("idcg_e6"),
+        F.expr(
+            f"CASE WHEN ({_IDCG_CASE}) > 0"
+            f" THEN (dcg_e6 * 10000) div ({_IDCG_CASE}) ELSE 0 END"
+        )
+        .cast("long")
+        .alias("ndcg_bp"),
+    )
+
+
+NDCG_EVAL_SQL = f"""
+WITH q AS (SELECT vec_id AS qid, label AS qlabel, embedding AS qv
+           FROM embeddings WHERE vec_id < 8),
+scored AS (
+  SELECT q.qid, q.qlabel, e.vec_id, e.label,
+         {COS_SQL.format(a='e.embedding', b='q.qv')} AS cos
+  FROM embeddings e, q
+  WHERE e.vec_id != q.qid
+),
+topk AS (
+  SELECT qid, qlabel, label,
+         row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rank
+  FROM scored
+  QUALIFY rank <= {NDCG_K}
+),
+per_q AS (
+  SELECT qid, qlabel,
+         CAST(sum(CASE WHEN label = qlabel THEN 1 ELSE 0 END) AS BIGINT) AS n_relevant,
+         CAST(sum(CASE WHEN label = qlabel THEN ({_W_CASE}) ELSE 0 END) AS BIGINT)
+           AS dcg_e6
+  FROM topk GROUP BY 1, 2
+)
+SELECT qid, qlabel, n_relevant, dcg_e6,
+       CAST({_IDCG_CASE} AS BIGINT) AS idcg_e6,
+       CAST(CASE WHEN ({_IDCG_CASE}) > 0
+                 THEN (dcg_e6 * 10000) // ({_IDCG_CASE}) ELSE 0 END AS BIGINT)
+         AS ndcg_bp
+FROM per_q
+"""
+
+
+# --- IVF-ANN recall gate -------------------------------------------------------
+
+#: IVF gate config — one Python constant set interpolated into BOTH engines.
+IVF_GATE_C = 8          #: coarse-quantizer cells (seeds = vec_id < C)
+IVF_GATE_NPROBE = 3     #: cells probed per query
+IVF_GATE_K = 10         #: top-k depth for recall
+_IVF_Q = 1000           #: quantization scale (integer grid = floor(x*Q))
+_IVF_OFF = 10000        #: non-negativity offset (|x| << OFF for any normalized embedding)
+IVF_RECALL_MIN_BP = 7000  #: pinned recall floor (observed 9125/9125/9875 bp at sf0.001/0.01/0.1)
+
+
+def _int_sqdist(a: Column, b: Column) -> Column:
+    """Exact integer squared L2 between two array<long> columns — folded
+    left-to-right in array order, so both engines produce the identical
+    (exact) integer."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def ann_ivf_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-ANN recall gate — the driver-checkable certificate for the
+    ``sim_ann_ivf`` production path (which stays no-oracle because its
+    float k-means is order-sensitive). This gate rebuilds the SAME IVF
+    mechanism — coarse-quantize, probe the n_probe nearest cells, exact
+    cosine re-rank — on an ENGINE-PORTABLE quantizer, then measures
+    probe-recall against the exact top-k in-query and emits a boolean,
+    the ``dedup_minhash_estimate_gate`` pattern (estimate → exact gate).
+
+    Portability: vectors quantize to an integer grid (floor(x·1000));
+    the quantizer is one exact Lloyd step from the C lowest-id seeds —
+    cluster means as FLOOR-DIVIDED integers at scale Q·1000, shifted by
+    +OFF before dividing so Spark ``div`` (truncate) equals DuckDB ``//``
+    (floor); floor(a + c·n)/n = c + floor(a/n) for integer c, so the
+    shift cancels in every distance comparison. All assignments are exact
+    integer argmins with (dist, cell) tiebreaks; only the final re-rank
+    uses the double cosine, whose fold order is identical in both engines
+    (the proven sim/knn-eval pattern). Distance terms are per-row:
+    worst-case |term| ≈ dim·(2·578e3)² ≈ 8.6e13, int64-safe regardless of
+    corpus size. The one data-sized integer is the Lloyd numerator
+    (_s + _n·OFF)·Q, which leaves int64 only past ~8e11 vectors in a
+    single cell (≈200 PB of fp32 64-d embeddings); past that the margin
+    moves to decimal(38) like the KS gate did.
+
+    Scale shape: every distance computation is corpus × C-row broadcast
+    (C=8, config-sized — the whitelisted nested-loop class); the Lloyd
+    update is ONE (cell, dim)-key aggregate (C·dim rows); candidate
+    probing is an equi-join on the cell id (cost ∝ n_probe/C of the
+    corpus per query); the exact baseline rides cosine_topk_batch's
+    bucketed one-scan top-k. Nothing quadratic, nothing driver-side."""
+    from ..operators import vector
+    from ..session import fan_out
+
+    emb = fan_out(load_table(spark, sf_dir, "embeddings"))
+    corp = emb.select(
+        "vec_id", vector.as_double_vec("embedding").alias("_v")
+    ).withColumn(
+        "_qv", F.transform(F.col("_v"), lambda x: F.floor(x * _IVF_Q).cast("long"))
+    )
+    seeds = corp.filter(F.col("vec_id") < IVF_GATE_C).select(
+        F.col("vec_id").alias("_j"), F.col("_qv").alias("_sv")
+    )
+    d1 = (
+        corp.select("vec_id", "_qv")
+        .crossJoin(F.broadcast(seeds))
+        .select("vec_id", "_j", _int_sqdist(F.col("_qv"), F.col("_sv")).alias("_d"))
+    )
+    a1 = (
+        d1.groupBy("vec_id")
+        .agg(F.min(F.struct("_d", "_j")).alias("_m"))
+        .select("vec_id", F.col("_m._j").alias("_c"))
+    )
+    ex = a1.join(corp.select("vec_id", "_qv"), "vec_id").select(
+        "_c", F.posexplode("_qv").alias("_p", "_x")
+    )
+    cent = (
+        ex.groupBy("_c", "_p")
+        .agg(F.sum("_x").alias("_s"), F.count(F.lit(1)).alias("_n"))
+        .withColumn("_m", F.expr(f"((_s + _n * {_IVF_OFF}) * {_IVF_Q}) div _n"))
+        .groupBy("_c")
+        .agg(F.array_sort(F.collect_list(F.struct("_p", "_m"))).alias("_pm"))
+        .select("_c", F.transform(F.col("_pm"), lambda s: s["_m"]).alias("_cv"))
+    )
+    xo = corp.withColumn(
+        "_xo", F.transform(F.col("_qv"), lambda v: (v + _IVF_OFF) * _IVF_Q)
+    )
+    d2 = (
+        xo.select("vec_id", "_xo")
+        .crossJoin(F.broadcast(cent))
+        .select("vec_id", "_c", _int_sqdist(F.col("_xo"), F.col("_cv")).alias("_d"))
+    )
+    a2 = (
+        d2.groupBy("vec_id")
+        .agg(F.min(F.struct("_d", "_c")).alias("_m"))
+        .select(F.col("vec_id").alias("_cid"), F.col("_m._c").alias("_cell"))
+    )
+    qs = xo.filter(F.col("vec_id") < IVF_GATE_C)
+    qd = (
+        qs.select(F.col("vec_id").alias("_qid"), "_xo")
+        .crossJoin(F.broadcast(cent))
+        .select("_qid", "_c", _int_sqdist(F.col("_xo"), F.col("_cv")).alias("_d"))
+    )
+    w_probe = Window.partitionBy("_qid").orderBy("_d", "_c")
+    probes = (
+        qd.withColumn("_rn", F.row_number().over(w_probe))
+        .filter(F.col("_rn") <= IVF_GATE_NPROBE)
+        .select("_qid", F.col("_c").alias("_cell"))
+    )
+    cand = a2.join(F.broadcast(probes), "_cell").filter(
+        F.col("_cid") != F.col("_qid")
+    )
+    qvecs = qs.select(F.col("vec_id").alias("_qid"), F.col("_v").alias("_qvec"))
+    scored = (
+        cand.join(corp.select(F.col("vec_id").alias("_cid"), "_v"), "_cid")
+        .join(F.broadcast(qvecs), "_qid")
+        .select(
+            "_qid", "_cid", vector.cosine(F.col("_v"), F.col("_qvec")).alias("_cos")
+        )
+    )
+    w_k = Window.partitionBy("_qid").orderBy(F.desc("_cos"), F.asc("_cid"))
+    probe_topk = (
+        scored.withColumn("_rn", F.row_number().over(w_k))
+        .filter(F.col("_rn") <= IVF_GATE_K)
+        .select("_qid", "_cid")
+    )
+    exact = vector.cosine_topk_batch(
+        emb,
+        "vec_id",
+        "embedding",
+        emb.filter(F.col("vec_id") < IVF_GATE_C),
+        "vec_id",
+        "embedding",
+        k=IVF_GATE_K,
+    ).select(F.col("qid").alias("_qid"), F.col("vec_id").alias("_cid"))
+    hits = probe_topk.join(exact, ["_qid", "_cid"])
+    nq = qs.agg(F.count(F.lit(1)).alias("_nq"))
+    return (
+        hits.agg(F.count(F.lit(1)).alias("_nh"))
+        .crossJoin(F.broadcast(nq))
+        .select(
+            F.col("_nq").cast("long").alias("n_queries"),
+            F.col("_nh").cast("long").alias("n_hits"),
+            # _nq = 0 only on empty input (ANSI div-by-zero guard; the
+            # -1 sentinel mirrors the oracle's CASE exactly)
+            F.expr(
+                f"CASE WHEN _nq > 0 THEN (_nh * 10000) div (_nq * {IVF_GATE_K})"
+                " ELSE -1 END"
+            )
+            .cast("long")
+            .alias("recall_bp"),
+            F.expr(
+                f"CASE WHEN _nq > 0 AND (_nh * 10000) div (_nq * {IVF_GATE_K})"
+                f" >= {IVF_RECALL_MIN_BP} THEN 1 ELSE 0 END"
+            )
+            .cast("long")
+            .alias("gate_pass"),
+        )
+    )
+
+
+#: self-sizing like the Spark side's zip_with fold — no hardcoded dim,
+#: so a testdata dimensionality change can never silently truncate
+_IVF_DIST = (
+    "list_sum(list_transform(range(1, len({a}) + 1),"
+    " i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
+)
+
+ANN_IVF_GATE_SQL = f"""
+WITH corp AS (
+  SELECT vec_id, embedding,
+         list_transform(embedding,
+                        x -> CAST(floor(x::DOUBLE * {_IVF_Q}) AS BIGINT)) AS qv
+  FROM embeddings
+),
+seeds AS (SELECT vec_id AS j, qv AS sv FROM corp WHERE vec_id < {IVF_GATE_C}),
+d1 AS (
+  SELECT c.vec_id, s.j,
+         {_IVF_DIST.format(a='c.qv', b='s.sv')} AS d
+  FROM corp c, seeds s
+),
+a1 AS (
+  SELECT vec_id, j AS c FROM (
+    SELECT vec_id, j,
+           row_number() OVER (PARTITION BY vec_id ORDER BY d, j) AS rn
+    FROM d1) WHERE rn = 1
+),
+sums AS (
+  SELECT a1.c, t.i AS p, sum(corp.qv[t.i]) AS s, count(*) AS n
+  FROM a1 JOIN corp USING (vec_id)
+       CROSS JOIN unnest(range(1, len(corp.qv) + 1)) AS t(i)
+  GROUP BY 1, 2
+),
+cent AS (
+  SELECT c, list(((s + n * {_IVF_OFF}) * {_IVF_Q}) // n ORDER BY p) AS cv
+  FROM sums GROUP BY c
+),
+xo AS (
+  SELECT vec_id, embedding,
+         list_transform(qv, v -> (v + {_IVF_OFF}) * {_IVF_Q}) AS xv
+  FROM corp
+),
+d2 AS (
+  SELECT x.vec_id, ct.c,
+         {_IVF_DIST.format(a='x.xv', b='ct.cv')} AS d
+  FROM xo x, cent ct
+),
+a2 AS (
+  SELECT vec_id AS cid, c AS cell FROM (
+    SELECT vec_id, c,
+           row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn
+    FROM d2) WHERE rn = 1
+),
+probes AS (
+  SELECT qid, c AS cell FROM (
+    SELECT vec_id AS qid, c,
+           row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn
+    FROM d2 WHERE vec_id < {IVF_GATE_C}) WHERE rn <= {IVF_GATE_NPROBE}
+),
+cand AS (
+  SELECT p.qid, a2.cid FROM probes p JOIN a2 USING (cell) WHERE a2.cid != p.qid
+),
+scoredp AS (
+  SELECT cand.qid, cand.cid,
+         {COS_SQL.format(a='e.embedding', b='q.embedding')} AS cos
+  FROM cand JOIN corp e ON cand.cid = e.vec_id
+            JOIN corp q ON cand.qid = q.vec_id
+),
+probe_topk AS (
+  SELECT qid, cid FROM (
+    SELECT qid, cid,
+           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid ASC) AS rn
+    FROM scoredp) WHERE rn <= {IVF_GATE_K}
+),
+exact_scored AS (
+  SELECT q.vec_id AS qid, e.vec_id AS cid,
+         {COS_SQL.format(a='e.embedding', b='q.embedding')} AS cos
+  FROM embeddings e, embeddings q
+  WHERE q.vec_id < {IVF_GATE_C} AND e.vec_id != q.vec_id
+),
+exact_topk AS (
+  SELECT qid, cid FROM (
+    SELECT qid, cid,
+           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid ASC) AS rn
+    FROM exact_scored) WHERE rn <= {IVF_GATE_K}
+),
+hits AS (SELECT pt.qid, pt.cid FROM probe_topk pt JOIN exact_topk et
+         ON pt.qid = et.qid AND pt.cid = et.cid)
+SELECT (SELECT count(*) FROM seeds)::BIGINT AS n_queries,
+       count(*)::BIGINT AS n_hits,
+       CAST(CASE WHEN (SELECT count(*) FROM seeds) > 0
+                 THEN (count(*) * 10000)
+                      // ((SELECT count(*) FROM seeds) * {IVF_GATE_K})
+                 ELSE -1 END AS BIGINT)
+         AS recall_bp,
+       CAST(CASE WHEN (SELECT count(*) FROM seeds) > 0
+                  AND (count(*) * 10000)
+                      // ((SELECT count(*) FROM seeds) * {IVF_GATE_K})
+                      >= {IVF_RECALL_MIN_BP} THEN 1 ELSE 0 END AS BIGINT)
+         AS gate_pass
+FROM hits
+"""
+
+
+# --- reciprocal best match (mutual nearest neighbors) -------------------------
+
+RBM_EVAL_K = 64  #: fixed md5-chosen A-side size at ANY corpus scale
+
+
+def reciprocal_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mutual-nearest-neighbor matching — the bitext-mining / cross-split
+    alignment primitive: a FIXED-SIZE md5-chosen probe set A is matched
+    against the rest of the corpus B; a pair (a, b) survives only if b is
+    a's cosine-best in B AND a is b's cosine-best in A. One-directional
+    top-1 produces many-to-one false matches; reciprocity is the
+    standard filter (Artetxe & Schwenk's margin-based mining keeps the
+    same mutual skeleton).
+
+    Exactness: both argmaxes tiebreak by id ascending; the emitted
+    cosine is floor(cos·1e6) — double cosine fold order is engine-
+    identical (the proven sim/knn pattern), floor portable.
+
+    Scale shape: a's best-in-B rides cosine_topk_batch (ONE corpus scan,
+    broadcast 64-query batch, bucketed partial top-k); b's best-in-A is
+    computed ONLY for the ≤64 winning b's (equi-join pulls their
+    vectors, then a 64×64 broadcast cross) — never corpus×A. Output is
+    ≤64 rows."""
+    from ..operators import dedup, vector
+    from ..session import fan_out
+
+    emb = fan_out(load_table(spark, sf_dir, "embeddings"))
+    a_side = (
+        emb.withColumn(
+            "_h",
+            dedup.md5_int(F.concat(F.col("vec_id").cast("string"), F.lit("rbm"))),
+        )
+        .sort("_h", "vec_id")
+        .limit(RBM_EVAL_K)
+        .drop("_h")
+    )
+    a_ids = a_side.select("vec_id")
+    b_side = emb.join(F.broadcast(a_ids), "vec_id", "left_anti")
+    best_b = vector.cosine_topk_batch(
+        b_side, "vec_id", "embedding", a_side, "vec_id", "embedding", k=1
+    ).select(
+        F.col("qid").alias("a_id"),
+        F.col("vec_id").alias("b_id"),
+        F.col("cosine").alias("_cos_ab"),
+    )
+    # pull the <=64 winning b vectors (equi-join), cross them with the
+    # broadcast A batch, and take each b's best a
+    b_vecs = best_b.select("b_id").join(
+        b_side.select(F.col("vec_id").alias("b_id"), "embedding"), "b_id"
+    ).select("b_id", vector.as_double_vec("embedding").alias("_bv"))
+    a_vecs = a_side.select(
+        F.col("vec_id").alias("_aid"), vector.as_double_vec("embedding").alias("_av")
+    )
+    back = b_vecs.crossJoin(F.broadcast(a_vecs)).select(
+        "b_id", "_aid", vector.cosine(F.col("_bv"), F.col("_av")).alias("_cos")
+    )
+    w_back = Window.partitionBy("b_id").orderBy(F.desc("_cos"), F.asc("_aid"))
+    best_a = (
+        back.withColumn("_rn", F.row_number().over(w_back))
+        .filter(F.col("_rn") == 1)
+        .select("b_id", F.col("_aid").alias("a_id"))
+    )
+    mutual = best_b.join(best_a, ["a_id", "b_id"])
+    # a-labels ride the (already <=64-row) A batch; b-labels attach by
+    # streaming the column-pruned corpus ONCE against the broadcast
+    # mutual frame — the expensive topk subtree is never recomputed
+    a_lab = a_side.select(F.col("vec_id").alias("a_id"), F.col("label").alias("_al"))
+    b_lab = emb.select(F.col("vec_id").alias("b_id"), F.col("label").alias("_bl"))
+    m_lab = mutual.join(F.broadcast(a_lab), "a_id")
+    return b_lab.join(F.broadcast(m_lab), "b_id").select(
+        "a_id",
+        "b_id",
+        F.floor(F.col("_cos_ab") * 1000000).cast("long").alias("cos_e6"),
+        # F.when mirrors the oracle's CASE exactly: NULL labels -> 0,
+        # never NULL (a bare == comparison would propagate NULL)
+        F.when(F.col("_al") == F.col("_bl"), 1)
+        .otherwise(0)
+        .cast("long")
+        .alias("same_label"),
+    )
+
+
+RBM_SQL = f"""
+WITH a_side AS (
+  SELECT vec_id, embedding, label
+  FROM embeddings
+  ORDER BY ('0x' || substr(md5(vec_id::VARCHAR || 'rbm'), 1, 8))::BIGINT, vec_id
+  LIMIT {RBM_EVAL_K}
+),
+b_side AS (
+  SELECT e.vec_id, e.embedding, e.label FROM embeddings e
+  WHERE e.vec_id NOT IN (SELECT vec_id FROM a_side)
+),
+fwd AS (
+  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+         {COS_SQL.format(a='b.embedding', b='a.embedding')} AS cos
+  FROM a_side a, b_side b
+),
+best_b AS (
+  SELECT a_id, b_id, cos FROM (
+    SELECT a_id, b_id, cos,
+           row_number() OVER (PARTITION BY a_id ORDER BY cos DESC, b_id ASC) AS rn
+    FROM fwd) WHERE rn = 1
+),
+back AS (
+  SELECT bb.b_id, a.vec_id AS a_id,
+         {COS_SQL.format(a='b.embedding', b='a.embedding')} AS cos
+  FROM (SELECT DISTINCT b_id FROM best_b) bb
+       JOIN b_side b ON bb.b_id = b.vec_id
+       CROSS JOIN a_side a
+),
+best_a AS (
+  SELECT b_id, a_id FROM (
+    SELECT b_id, a_id,
+           row_number() OVER (PARTITION BY b_id ORDER BY cos DESC, a_id ASC) AS rn
+    FROM back) WHERE rn = 1
+)
+SELECT bb.a_id, bb.b_id,
+       CAST(floor(bb.cos * 1000000) AS BIGINT) AS cos_e6,
+       CAST(CASE WHEN al.label = bl.label THEN 1 ELSE 0 END AS BIGINT) AS same_label
+FROM best_b bb
+JOIN best_a ba ON bb.a_id = ba.a_id AND bb.b_id = ba.b_id
+JOIN embeddings al ON bb.a_id = al.vec_id
+JOIN embeddings bl ON bb.b_id = bl.vec_id
+"""
+
+
+# --- edit-distance near-dup under deterministic blocking ---------------------
+
+LEV_PREFIX = 60      #: chars compared (bounds the O(len²) DP per pair)
+LEV_EDIT_MAX = 8     #: max edit distance to report
+LEV_MAX_BLOCK = 64   #: skew guard — blocks larger than this are dropped
+
+
+def dedup_levenshtein_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Edit-distance near-duplicate detection under deterministic
+    blocking: candidate pairs share a block key (first token,
+    token-count÷8 bucket) and match when the Levenshtein distance of
+    their LEV_PREFIX-char prefixes is ≤ LEV_EDIT_MAX — the classical
+    typo/OCR-noise ER strategy the token-set family (Jaccard, MinHash,
+    SimHash) cannot express, because edit distance sees character
+    ORDER.
+
+    Exactness: integer distances, integer block keys; the pair set is
+    fully determined by the blocking rule. ORACLE CONTRACT — ASCII
+    text only (the mm_audio_peaks precedent): Spark's ``levenshtein``
+    counts CODE-POINT edits while DuckDB's counts UTF-8 BYTE edits
+    (verified live: 'häst'↔'hast' = 1 vs 2; '中文文本'↔'中文文字' = 1
+    vs 3), so the two builtins agree exactly on ASCII and diverge on
+    multi-byte text. The operator's Spark-side semantics (code-point
+    edits) are the correct ones at any scale; the DuckDB pairing is a
+    certification device whose equivalence holds on the ASCII corpus
+    contract, documented here rather than silently assumed.
+
+    Scale shape: one shuffle to blocks; the self-join is equi on the
+    block key, and the ``LEV_MAX_BLOCK`` guard (the max_shingle_df
+    pattern) drops pathological blocks so per-block work is
+    O(LEV_MAX_BLOCK²·LEV_PREFIX²) bounded — no quadratic blowup on a
+    skewed key. Dropped blocks are a documented coverage cap (the
+    no-silent-caps rule: the guard is part of the operator contract,
+    like max_shingle_df)."""
+    docs = fan_out(load_table(spark, sf_dir, "documents")).filter(
+        F.col("text").isNotNull()
+    )
+    d = docs.select(
+        "doc_id",
+        F.substring("text", 1, LEV_PREFIX).alias("_p"),
+        F.split(F.trim(F.col("text")), r"\s+").getItem(0).alias("_t0"),
+        F.expr(
+            f"CAST(size(split(trim(text), '\\\\s+')) AS BIGINT) div 8"
+        ).alias("_g"),
+    )
+    w_blk = Window.partitionBy("_t0", "_g")
+    small = d.withColumn("_bn", F.count(F.lit(1)).over(w_blk)).filter(
+        F.col("_bn") <= LEV_MAX_BLOCK
+    )
+    a = small.select(
+        F.col("doc_id").alias("id_a"), F.col("_p").alias("_pa"), "_t0", "_g"
+    )
+    b = small.select(
+        F.col("doc_id").alias("id_b"), F.col("_p").alias("_pb"), "_t0", "_g"
+    )
+    pairs = (
+        a.join(b, ["_t0", "_g"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .withColumn("lev", F.levenshtein("_pa", "_pb"))
+        .filter(F.col("lev") <= LEV_EDIT_MAX)
+    )
+    return pairs.select(
+        F.col("id_a").cast("long"),
+        F.col("id_b").cast("long"),
+        F.col("lev").cast("long"),
+    )
+
+
+LEVENSHTEIN_SQL = rf"""
+WITH d AS (
+  SELECT doc_id,
+         substr(text, 1, {LEV_PREFIX}) AS p,
+         regexp_split_to_array(trim(text), '\s+')[1] AS t0,
+         len(regexp_split_to_array(trim(text), '\s+')) // 8 AS g
+  FROM documents WHERE text IS NOT NULL
+),
+small AS (
+  SELECT * FROM (
+    SELECT *, count(*) OVER (PARTITION BY t0, g) AS bn FROM d
+  ) WHERE bn <= {LEV_MAX_BLOCK}
+)
+,
+pairs AS (
+  SELECT a.doc_id AS ida, b.doc_id AS idb, levenshtein(a.p, b.p) AS lv
+  FROM small a JOIN small b
+    ON a.t0 = b.t0 AND a.g = b.g AND a.doc_id < b.doc_id
+)
+SELECT CAST(ida AS BIGINT) AS id_a,
+       CAST(idb AS BIGINT) AS id_b,
+       CAST(lv AS BIGINT) AS lev
+FROM pairs WHERE lv <= {LEV_EDIT_MAX}
+"""
+
+
+# --- sorted-neighborhood near-dup --------------------------------------------
+
+SNM_WINDOW = 3       #: rank-distance window (pairs within W positions)
+SNM_PREFIX = 40      #: sort-key prefix length
+#: report pairs with token Jaccard ≥ 90% (in bp) — the corpus draws from
+#: a small shared vocabulary, so distinct-token Jaccard has a high random
+#: baseline (median ~0.55 between ADJACENT-key docs); 0.9 keeps the
+#: operator's output at genuinely-near-dup pairs
+SNM_JACC_BP = 9000
+
+
+def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sorted-neighborhood near-duplicate detection (Hernández &
+    Stolfo): sort the corpus by a blocking key (lower-cased
+    SNM_PREFIX-char prefix, doc_id tiebreak), then verify ONLY pairs
+    within SNM_WINDOW rank positions — the linear-candidate ER
+    strategy that complements hash blocking (LSH buckets can split
+    near-dups across buckets; a sorted scan catches everything whose
+    keys SORT adjacently). Verification is exact distinct-token
+    Jaccard in basis points.
+
+    Exactness: ranks, rank gaps, and the Jaccard bp are integers. The
+    global order (prefix, doc_id) carries a BMP-ordering CONTRACT (the
+    dedup_levenshtein_blocked pattern): Spark/Java sorts strings by
+    UTF-16 code units while DuckDB sorts UTF-8 bytes — the two orders
+    agree on all Basic-Multilingual-Plane text (every code point the
+    testdata and unicode sweep contain: ASCII, accents, CJK, Greek)
+    but DIVERGE on supplementary-plane characters (emoji, rare CJK-B),
+    where UTF-16 surrogates (0xD800–0xDFFF) sort below U+E000-range
+    code points that UTF-8 bytes sort above. Corpora with
+    supplementary-plane prefixes need a prefix normalization (e.g.
+    strip non-BMP) before this operator; the oracle pair asserts
+    equality only under the contract.
+
+    Scale shape: the global rank rides ``layout.dense_ids_by``
+    (range-partition + per-partition rank + offset carry — no
+    single-partition sort); the neighbor pairing is an integer
+    equi-join on rank+offset (SNM_WINDOW·n pairs, linear); token sets
+    stay JVM-side arrays (array_intersect), never exploded."""
+    docs = fan_out(load_table(spark, sf_dir, "documents")).filter(
+        F.col("text").isNotNull()
+    )
+    keyed = docs.select(
+        "doc_id",
+        F.substring(F.lower("text"), 1, SNM_PREFIX).alias("_p"),
+        F.array_distinct(
+            F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+        ).alias("_tk"),
+    )
+    ranked = layout.dense_ids_by(keyed, ["_p", "doc_id"], "_rn")
+    offs = spark.range(1, SNM_WINDOW + 1).select(F.col("id").alias("_off"))
+    left = ranked.join(F.broadcast(offs)).select(
+        F.col("doc_id").alias("_ida"),
+        F.col("_tk").alias("_ta"),
+        (F.col("_rn") + F.col("_off")).alias("_tgt"),
+        F.col("_off").alias("gap"),
+    )
+    right = ranked.select(
+        F.col("doc_id").alias("_idb"),
+        F.col("_tk").alias("_tb"),
+        F.col("_rn").alias("_tgt"),
+    )
+    pairs = (
+        left.join(right, "_tgt")
+        .withColumn("_i", F.size(F.array_intersect("_ta", "_tb")))
+        .withColumn("_u", F.size("_ta") + F.size("_tb") - F.col("_i"))
+        .withColumn("jacc_bp", F.expr("(CAST(_i AS BIGINT) * 10000) div _u"))
+        .filter(F.col("jacc_bp") >= SNM_JACC_BP)
+    )
+    return pairs.select(
+        F.least("_ida", "_idb").cast("long").alias("id_a"),
+        F.greatest("_ida", "_idb").cast("long").alias("id_b"),
+        F.col("gap").cast("long").alias("gap"),
+        F.col("jacc_bp").cast("long").alias("jacc_bp"),
+    )
+
+
+SNM_SQL = rf"""
+WITH d AS (
+  SELECT doc_id,
+         substr(lower(text), 1, {SNM_PREFIX}) AS p,
+         list_distinct(regexp_split_to_array(lower(trim(text)), '\s+')) AS tk
+  FROM documents WHERE text IS NOT NULL
+),
+r AS (
+  SELECT *, row_number() OVER (ORDER BY p, doc_id) AS rn FROM d
+),
+pairs AS (
+  SELECT ida, idb, gap, i, la + lb - i AS u FROM (
+    SELECT a.doc_id AS ida, b.doc_id AS idb,
+           b.rn - a.rn AS gap,
+           len(list_intersect(a.tk, b.tk)) AS i,
+           len(a.tk) AS la, len(b.tk) AS lb
+    FROM r a JOIN r b ON b.rn BETWEEN a.rn + 1 AND a.rn + {SNM_WINDOW})
+)
+SELECT CAST(least(ida, idb) AS BIGINT) AS id_a,
+       CAST(greatest(ida, idb) AS BIGINT) AS id_b,
+       CAST(gap AS BIGINT) AS gap,
+       CAST((i * 10000) // u AS BIGINT) AS jacc_bp
+FROM pairs
+WHERE (i * 10000) // u >= {SNM_JACC_BP}
+"""
+
+
+# --- tokenizer fertility by language -----------------------------------------
+
+
+def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer fertility audit per language: characters per
+    word-token and word-tokens per whitespace-token (both in exact e3
+    integer ratios) — the compression-rate number a tokenizer team
+    tracks per language, since a tokenizer that is frugal on English
+    and profligate on CJK silently skews both cost and mixture weights
+    (the per-lang companion of text_token_count, which reports per-doc
+    counts without the language rollup).
+
+    Exactness: counts are exact integers; ratios are non-negative
+    integer divisions with CASE NULL sentinels for empty denominators
+    (a language whose every doc has zero word tokens).
+
+    Scale shape: map-side counting, ONE aggregate to the |langs|-row
+    frame."""
+    docs = fan_out(load_table(spark, sf_dir, "documents")).filter(
+        F.col("text").isNotNull()
+    )
+    per = docs.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum(F.length("text")).cast("long").alias("sum_chars"),
+        F.sum(textops.token_count("text")).cast("long").alias("sum_ws_tokens"),
+        F.sum(textops.word_token_count("text")).cast("long").alias("sum_word_tokens"),
+    )
+    return per.select(
+        "lang",
+        "n_docs",
+        "sum_chars",
+        "sum_ws_tokens",
+        "sum_word_tokens",
+        F.expr(
+            "CASE WHEN sum_word_tokens > 0 THEN"
+            " CAST((sum_chars * 1000) div sum_word_tokens AS BIGINT) END"
+        ).alias("chars_per_token_e3"),
+        F.expr(
+            "CASE WHEN sum_ws_tokens > 0 THEN"
+            " CAST((sum_word_tokens * 1000) div sum_ws_tokens AS BIGINT) END"
+        ).alias("tokens_per_word_e3"),
+    )
+
+
+FERTILITY_SQL = r"""
+WITH per AS (
+  SELECT lang, count(*)::BIGINT AS n_docs,
+         sum(length(text))::BIGINT AS sum_chars,
+         sum(len(regexp_split_to_array(trim(text), '\s+')))::BIGINT
+           AS sum_ws_tokens,
+         sum(len(regexp_extract_all(text, '[a-zA-Z0-9]+|[^a-zA-Z0-9\s]', 0)))::BIGINT
+           AS sum_word_tokens
+  FROM documents WHERE text IS NOT NULL
+  GROUP BY 1
+)
+SELECT lang, n_docs, sum_chars, sum_ws_tokens, sum_word_tokens,
+       CASE WHEN sum_word_tokens > 0
+            THEN CAST((sum_chars * 1000) // sum_word_tokens AS BIGINT) END
+         AS chars_per_token_e3,
+       CASE WHEN sum_ws_tokens > 0
+            THEN CAST((sum_word_tokens * 1000) // sum_ws_tokens AS BIGINT) END
+         AS tokens_per_word_e3
+FROM per
+"""
+
+
+# --- intra-document repetition audit (Gopher-style) --------------------------
+
+
+def text_repetition_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-style intra-document repetition ratios: per document, the
+    duplicate fraction of its 1-, 2- and 3-grams (in basis points) —
+    the within-doc quality filter (Rae et al.'s repetition rules) that
+    catches boilerplate loops and degenerate generations, which the
+    CROSS-doc operators (ngram_novelty, dedup_*) cannot see by
+    construction.
+
+    Exactness: gram totals and distinct counts are exact integers;
+    duplicate fractions are non-negative integer divisions; documents
+    shorter than the gram order emit NULL for that order via CASE in
+    both engines.
+
+    Scale shape: entirely map-side — grams are built by
+    ``dedup.gram_fold`` over the token array and deduplicated with
+    array_distinct INSIDE the row (no explode, no shuffle at all)."""
+    docs = fan_out(load_table(spark, sf_dir, "documents")).filter(
+        F.col("text").isNotNull()
+    )
+    toks = "split(lower(trim(text)), '\\\\s+')"
+
+    def uniq(k: int) -> str:
+        if k == 1:
+            return f"size(array_distinct({toks}))"
+        return (
+            f"CASE WHEN size({toks}) >= {k} THEN size(array_distinct("
+            f"{dedup.gram_fold(toks, k, dedup.JOIN_WORDS)})) END"
+        )
+
+    def total(k: int) -> str:
+        return f"CASE WHEN size({toks}) >= {k} THEN size({toks}) - {k} + 1 END"
+
+    cols = [F.col("doc_id").cast("long").alias("doc_id"),
+            F.expr(f"CAST(size({toks}) AS BIGINT)").alias("n_tokens")]
+    for k in (1, 2, 3):
+        cols.append(F.expr(f"CAST({uniq(k)} AS BIGINT)").alias(f"uniq{k}"))
+        cols.append(
+            F.expr(
+                f"CASE WHEN {total(k)} > 0 THEN CAST((({total(k)} - {uniq(k)})"
+                f" * 10000) div ({total(k)}) AS BIGINT) END"
+            ).alias(f"dup{k}_bp")
+        )
+    return docs.select(*cols)
+
+
+REPETITION_SQL = r"""
+WITH w AS (
+  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS w
+  FROM documents WHERE text IS NOT NULL
+),
+g AS (
+  SELECT doc_id,
+         len(w) AS nt,
+         len(list_distinct(w)) AS u1,
+         CASE WHEN len(w) >= 2 THEN len(list_distinct(
+           [array_to_string(w[i:i+1], ' ') FOR i IN range(1, len(w))])) END AS u2,
+         CASE WHEN len(w) >= 3 THEN len(list_distinct(
+           [array_to_string(w[i:i+2], ' ') FOR i IN range(1, len(w) - 1)])) END AS u3
+  FROM w
+)
+SELECT CAST(doc_id AS BIGINT) AS doc_id,
+       CAST(nt AS BIGINT) AS n_tokens,
+       CAST(u1 AS BIGINT) AS uniq1,
+       CASE WHEN nt >= 1 THEN CAST(((nt - u1) * 10000) // nt AS BIGINT) END
+         AS dup1_bp,
+       CAST(u2 AS BIGINT) AS uniq2,
+       CASE WHEN nt >= 2 THEN CAST(((nt - 1 - u2) * 10000) // (nt - 1) AS BIGINT) END
+         AS dup2_bp,
+       CAST(u3 AS BIGINT) AS uniq3,
+       CASE WHEN nt >= 3 THEN CAST(((nt - 2 - u3) * 10000) // (nt - 2) AS BIGINT) END
+         AS dup3_bp
+FROM g
+"""
+
+
+# --- count-min-sketch heavy hitters + exact gate -----------------------------
+
+CMS_DEPTH = 4        #: independent hash rows
+CMS_WIDTH = 64       #: buckets per row
+CMS_TOP_K = 20       #: heavy hitters reported (by exact count)
+
+
+def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Count-min-sketch heavy-hitter estimates with an exact gate: the
+    CMS (depth 4 × width 64, md5-wheel hashing — deterministic, no
+    engine RNG) summarizes per-user event counts in a 256-cell table;
+    the top-K users BY EXACT COUNT are then probed against the sketch
+    and the audit reports estimate vs truth and the one-sided error —
+    the streaming-frequency primitive (Cormode & Muthukrishnan) behind
+    bounded-memory hot-key detection, with the same estimate+exact-gate
+    pattern as the KMV and MinHash gates: the sketch's never-
+    underestimate property is asserted per row (``gate_ok``).
+
+    Exactness: cell counters, exact counts and estimates are integers;
+    the estimate is min over the 4 probed cells; overestimate share is
+    a non-negative integer division in bp.
+
+    Scale shape: TWO aggregates over events — the 256-cell sketch
+    (config-bounded output, map-side partial agg does the heavy
+    lifting) and the exact per-user counts whose top-K is a distributed
+    sort-limit; the probe joins the K×4 candidate frame (broadcast) to
+    the 256-cell table. At 100 TB the sketch build is the cheap
+    pass; the exact side exists because this is the GATE form (the
+    production form is the sketch alone)."""
+    from ..operators.dedup import md5_int
+
+    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
+    rows = spark.range(0, CMS_DEPTH).select(F.col("id").cast("int").alias("_i"))
+    hashed = ev.join(F.broadcast(rows)).select(
+        "_i",
+        (
+            md5_int(F.concat(F.col("user_id").cast("string"), F.lit("cms"), F.col("_i")))
+            % CMS_WIDTH
+        ).alias("_b"),
+    )
+    cells = hashed.groupBy("_i", "_b").agg(F.count(F.lit(1)).alias("_c"))
+    exact = (
+        ev.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .orderBy(F.desc("_n"), F.asc("user_id"))
+        .limit(CMS_TOP_K)
+    )
+    probes = exact.join(F.broadcast(rows)).select(
+        "user_id",
+        "_n",
+        "_i",
+        (
+            md5_int(F.concat(F.col("user_id").cast("string"), F.lit("cms"), F.col("_i")))
+            % CMS_WIDTH
+        ).alias("_b"),
+    )
+    est = (
+        probes.join(F.broadcast(cells), ["_i", "_b"])
+        .groupBy("user_id", "_n")
+        .agg(F.min("_c").alias("_est"))
+    )
+    return est.select(
+        F.col("user_id").cast("long").alias("user_id"),
+        F.col("_n").cast("long").alias("exact_count"),
+        F.col("_est").cast("long").alias("cms_estimate"),
+        F.expr("CAST(((_est - _n) * 10000) div _n AS BIGINT)").alias("over_bp"),
+        F.when(F.col("_est") >= F.col("_n"), 1).otherwise(0).cast("long").alias("gate_ok"),
+    )
+
+
+CMS_SQL = f"""
+WITH rows_d AS (SELECT i::INT AS i FROM range({CMS_DEPTH}) t(i)),
+ev AS (SELECT user_id FROM events WHERE user_id IS NOT NULL),
+hashed AS (
+  SELECT i,
+         ('0x' || substr(md5(user_id::VARCHAR || 'cms' || i::VARCHAR), 1, 8))::BIGINT
+           % {CMS_WIDTH} AS b
+  FROM ev, rows_d
+),
+cells AS (SELECT i, b, count(*) AS c FROM hashed GROUP BY 1, 2),
+exact AS (
+  SELECT user_id, count(*) AS n FROM ev GROUP BY 1
+  ORDER BY n DESC, user_id ASC LIMIT {CMS_TOP_K}
+),
+probes AS (
+  SELECT user_id, n, i,
+         ('0x' || substr(md5(user_id::VARCHAR || 'cms' || i::VARCHAR), 1, 8))::BIGINT
+           % {CMS_WIDTH} AS b
+  FROM exact, rows_d
+),
+est AS (
+  SELECT user_id, n, min(c) AS est
+  FROM probes JOIN cells USING (i, b)
+  GROUP BY 1, 2
+)
+SELECT CAST(user_id AS BIGINT) AS user_id,
+       CAST(n AS BIGINT) AS exact_count,
+       CAST(est AS BIGINT) AS cms_estimate,
+       CAST(((est - n) * 10000) // n AS BIGINT) AS over_bp,
+       CAST(CASE WHEN est >= n THEN 1 ELSE 0 END AS BIGINT) AS gate_ok
+FROM est
+"""
+
+
+# --- systematic (every-k-th) sampling ----------------------------------------
+
+SYSTEMATIC_K = 10    #: keep every K-th document
+SYSTEMATIC_OFFSET = 3  #: deterministic phase
+
+
+def sample_systematic_every_k(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Systematic sampling: rank the corpus in a fixed total order
+    (doc_id) and keep every K-th row at a fixed phase — the classical
+    equal-interval design that guarantees EXACTLY ⌈n/K⌉ ± 1 rows and
+    perfect stride coverage, which Bernoulli/hash sampling
+    (sample_hash_10pct) only achieves in expectation. The sampler an
+    eval pipeline uses when it needs a deterministic, evenly-spaced
+    holdout.
+
+    Exactness: ranks and the modulus are exact integers; the sample is
+    fully determined by (K, offset, doc_id order).
+
+    Scale shape: the rank rides ``layout.dense_ids_by`` (range
+    partition + offset carry — no single-partition sort); the keep
+    predicate is map-side."""
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    ranked = layout.dense_ids_by(docs.select("doc_id", "lang"), ["doc_id"], "_rk")
+    return (
+        ranked.filter(
+            F.col("_rk") % SYSTEMATIC_K == SYSTEMATIC_OFFSET
+        )
+        .select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("_rk").cast("long").alias("rank"),
+            "lang",
+        )
+    )
+
+
+SYSTEMATIC_SQL = f"""
+WITH r AS (
+  SELECT doc_id, lang, row_number() OVER (ORDER BY doc_id) AS rk FROM documents
+)
+SELECT CAST(doc_id AS BIGINT) AS doc_id,
+       CAST(rk AS BIGINT) AS rank,
+       lang
+FROM r WHERE rk % {SYSTEMATIC_K} = {SYSTEMATIC_OFFSET}
+"""
+
+
+# --- weighted stratified sample: largest-remainder proportional allocation ----
+
+#: total sample budget allocated across strata
+WALLOC_BUDGET = 100
+WALLOC_SALT = "walloc"
+
+
+def sample_weighted_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stratified weighted sample by PROPORTIONAL ALLOCATION with
+    largest-remainder rounding (Hamilton's method): a fixed budget of
+    WALLOC_BUDGET documents is split across language strata exactly
+    proportional to each stratum's total character mass, fractional
+    seats resolved by largest remainder (ties by lang); within each
+    stratum the allocated rows are picked in deterministic md5-wheel
+    order. The sampling module's missing member: stratified_topn is
+    equal-n per stratum, sample_sqrt_mixture is per-row rate-based —
+    neither hits an exact global budget ∝ weight. Budget contract: when
+    a stratum's seat count exceeds its ROW count (one huge document),
+    the whole stratum is taken and the global sample under-delivers —
+    reported, not silent: the output carries stratum_size next to
+    stratum_alloc, so alloc > size IS the shortfall signal (Hamilton's
+    method is single-pass proportional; redistributing shortfalls would
+    be a different estimator).
+
+    Exactness: seats and remainders are exact integers — base_s =
+    (B·w_s) div W and rem_s = (B·w_s) mod W on non-negative int64
+    (headroom: B·w_s ≤ 100·total_chars, safe below ~9.2×10¹⁶ corpus
+    chars; at larger corpora lift to decimal(38,0)); the remainder rank
+    and the within-stratum pick rank are integer row_numbers with full
+    tiebreaks. No floats anywhere.
+
+    Scale shape: one |strata|-row weight aggregate; allocation math
+    lives entirely on that bounded frame (its unpartitioned windows are
+    |strata|-sized by construction); the pick is one PARTITIONED
+    row_number per stratum joined to the broadcast allocation — a
+    single data-sized shuffle on the stratum key."""
+    docs = fan_out(load_table(spark, sf_dir, "documents")).filter(
+        F.col("lang").isNotNull()
+        & F.col("n_chars").isNotNull()
+        & (F.col("n_chars") >= 0)
+    )
+    w_s = docs.groupBy("lang").agg(F.sum("n_chars").alias("_w"))
+    tot = w_s.agg(F.sum("_w").alias("_tot"))
+    seats = (
+        w_s.crossJoin(F.broadcast(tot))
+        .filter(F.col("_tot") > 0)
+        .select(
+            "lang",
+            "_w",
+            F.expr(f"(_w * {WALLOC_BUDGET}) div _tot").alias("_base"),
+            F.expr(f"(_w * {WALLOC_BUDGET}) % _tot").alias("_rem"),
+        )
+    )
+    # bounded |strata|-row frame: deficit + largest-remainder top-up
+    w_all = Window.partitionBy()  # whole-frame total over the |strata| rows
+    w_rem = Window.orderBy(F.desc("_rem"), F.asc("lang"))
+    alloc = seats.select(
+        "lang",
+        "_w",
+        "_base",
+        (F.lit(WALLOC_BUDGET) - F.sum("_base").over(w_all)).alias("_deficit"),
+        F.row_number().over(w_rem).alias("_rk"),
+    ).select(
+        "lang",
+        "_w",
+        (F.col("_base") + F.when(F.col("_rk") <= F.col("_deficit"), 1).otherwise(0)).alias(
+            "_alloc"
+        ),
+    )
+    w_lang = Window.partitionBy("lang")
+    picked = (
+        docs.select(
+            "lang",
+            "doc_id",
+            md5_int(
+                F.concat(F.col("doc_id").cast("string"), F.lit(WALLOC_SALT))
+            ).alias("_h"),
+        )
+        .withColumn(
+            "_pick",
+            F.row_number().over(w_lang.orderBy("_h", "doc_id")),
+        )
+        .withColumn("_sz", F.count(F.lit(1)).over(w_lang))
+        .join(F.broadcast(alloc), "lang")
+        .filter(F.col("_pick") <= F.col("_alloc"))
+    )
+    return picked.select(
+        "lang",
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("_alloc").cast("long").alias("stratum_alloc"),
+        F.col("_sz").cast("long").alias("stratum_size"),
+        F.col("_pick").cast("long").alias("pick_rank"),
+    )
+
+
+WALLOC_SQL = f"""
+WITH docs AS (
+  SELECT lang, doc_id, n_chars,
+         ('0x' || substr(md5(doc_id::VARCHAR || '{WALLOC_SALT}'), 1, 8))::BIGINT AS h
+  FROM documents
+  WHERE lang IS NOT NULL AND n_chars IS NOT NULL AND n_chars >= 0
+),
+w AS (SELECT lang, sum(n_chars) AS ws FROM docs GROUP BY lang),
+tot AS (SELECT sum(ws) AS wt FROM w),
+seats AS (
+  SELECT lang, ws,
+         (ws * {WALLOC_BUDGET}) // wt AS base,
+         (ws * {WALLOC_BUDGET}) % wt AS rem
+  FROM w, tot WHERE wt > 0
+),
+ranked AS (
+  SELECT lang, base,
+         row_number() OVER (ORDER BY rem DESC, lang ASC) AS rk,
+         {WALLOC_BUDGET} - sum(base) OVER () AS deficit
+  FROM seats
+),
+alloc AS (
+  SELECT lang, base + CASE WHEN rk <= deficit THEN 1 ELSE 0 END AS alloc
+  FROM ranked
+),
+picked AS (
+  SELECT d.lang, d.doc_id, a.alloc,
+         row_number() OVER (PARTITION BY d.lang ORDER BY d.h, d.doc_id) AS pick,
+         count(*) OVER (PARTITION BY d.lang) AS sz
+  FROM docs d JOIN alloc a ON d.lang = a.lang
+)
+SELECT lang,
+       CAST(doc_id AS BIGINT) AS doc_id,
+       CAST(alloc AS BIGINT) AS stratum_alloc,
+       CAST(sz AS BIGINT) AS stratum_size,
+       CAST(pick AS BIGINT) AS pick_rank
+FROM picked WHERE pick <= alloc
+"""
+
+
+# --- Cohen's kappa over the langid eval ----------------------------------------
+
+
+def langid_kappa_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cohen's kappa between the n-gram language detector and the
+    corpus's labeled `lang` column — the chance-corrected agreement
+    SCALAR on top of langid_eval_confusion's per-cell matrix (a
+    detector can score 80% raw accuracy on a skewed corpus while doing
+    no better than chance; kappa is the number that catches it).
+
+    Exactness: kappa = (N·Σdiag − Σ row_t·col_t) / (N² − Σ row_t·col_t)
+    over exact integer confusion counts; the products ride
+    decimal(38,0)/HUGEINT (N² needs ~26 digits at 10¹³ docs), and kappa
+    is ONE division of exact-integer-valued doubles (numerator may be
+    negative — worse-than-chance — so no integer floor division; the
+    DiD fixed-shape-double precedent), floor-rounded to 6 dp. The
+    single-class degenerate case (N² = Σrc) emits NULL via mirrored
+    CASE.
+
+    Scale shape: one corpus scan into the ≤|langs|²-row confusion
+    frame; every window/aggregate after that is confusion-frame-sized."""
+    from ..operators import textops
+
+    # NULL text cannot be scored: Spark detect_language maps it to
+    # 'und' while the SQL mirror's CASE would fall through NULL ratios
+    # to its ELSE branch — excluded in BOTH engines (review catch; the
+    # mcnemar_langid_test filter)
+    docs = fan_out(load_table(spark, sf_dir, "documents")).filter(
+        F.col("lang").isNotNull() & F.col("text").isNotNull()
+    )
+    conf = docs.groupBy(
+        F.col("lang").alias("_t"),
+        textops.detect_language("text").alias("_d"),
+    ).agg(F.count(F.lit(1)).alias("_c"))
+    g = conf.agg(
+        F.sum("_c").cast("long").alias("_n"),
+        F.sum(F.when(F.col("_t") == F.col("_d"), F.col("_c")).otherwise(0))
+        .cast("long")
+        .alias("_diag"),
+    )
+    # marginal-product term: Σ_k row_k · col_k pairs the SAME label k on
+    # both sides (the equi-join below) — computed from the marginals on
+    # the ≤|langs|-row frames
+    rows = conf.groupBy("_t").agg(F.sum("_c").alias("_r"))
+    cols = conf.groupBy("_d").agg(F.sum("_c").alias("_k"))
+    rc = (
+        rows.join(cols, rows._t == cols._d)
+        .agg(
+            F.sum(
+                F.col("_r").cast("decimal(38,0)") * F.col("_k")
+            ).alias("_src")
+        )
+    )
+    out = g.crossJoin(F.broadcast(rc)).select(
+        F.col("_n").alias("n_docs"),
+        F.col("_diag").alias("n_agree"),
+        F.col("_src").cast("decimal(38,0)").alias("_src2"),
+        F.expr(
+            "CASE WHEN _n > 0 AND CAST(_n AS DECIMAL(38,0)) * _n <> _src THEN"
+            " floor((CAST(CAST(_n AS DECIMAL(38,0)) * _diag - _src AS DOUBLE))"
+            " / (CAST(CAST(_n AS DECIMAL(38,0)) * _n - _src AS DOUBLE))"
+            " * 1000000 + 0.5) / 1000000 END"
+        ).alias("kappa"),
+    )
+    return out.select(
+        "n_docs",
+        "n_agree",
+        F.expr("CAST(_src2 AS DOUBLE)").alias("sum_marginal_products"),
+        "kappa",
+    )
+
+
+def _langid_kappa_sql() -> str:
+    from ..operators import textops
+    return rf"""
+WITH r AS (
+  SELECT lang,
+         {ratio_sql(textops.LANG_PROFILES['en'])} AS r_en,
+         {ratio_sql(textops.LANG_PROFILES['es'])} AS r_es,
+         {ratio_sql(textops.LANG_PROFILES['de'])} AS r_de,
+         {ratio_sql(textops.LANG_PROFILES['fr'])} AS r_fr
+  FROM documents WHERE lang IS NOT NULL AND text IS NOT NULL
+),
+p AS (SELECT lang AS t, {_LANGID_CASE} AS d FROM r),
+conf AS (SELECT t, d, count(*) AS c FROM p GROUP BY 1, 2),
+g AS (
+  SELECT CAST(sum(c) AS BIGINT) AS n,
+         CAST(sum(CASE WHEN t = d THEN c ELSE 0 END) AS BIGINT) AS diag
+  FROM conf
+),
+rows_ AS (SELECT t, sum(c) AS r FROM conf GROUP BY 1),
+cols_ AS (SELECT d, sum(c) AS k FROM conf GROUP BY 1),
+rc AS (
+  SELECT sum(CAST(r AS HUGEINT) * k) AS src
+  FROM rows_ JOIN cols_ ON rows_.t = cols_.d
+)
+SELECT n AS n_docs, diag AS n_agree,
+       CAST(src AS DOUBLE) AS sum_marginal_products,
+       CASE WHEN n > 0 AND CAST(n AS HUGEINT) * n <> src THEN
+         floor(CAST(CAST(n AS HUGEINT) * diag - src AS DOUBLE)
+               / CAST(CAST(n AS HUGEINT) * n - src AS DOUBLE)
+               * 1000000 + 0.5) / 1000000 END AS kappa
+FROM g CROSS JOIN rc
+"""
+
+
+LANGID_KAPPA_SQL = _langid_kappa_sql()
+
+
+# --- McNemar's test: n-gram detector vs majority-class baseline ------------------
+
+#: χ²₁ critical value at α = 0.05 (plan-build literal), e6-scaled
+MCNEMAR_CRIT_E6 = 3_841_459
+
+
+def mcnemar_langid_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """McNemar's paired test of the n-gram language detector against
+    the fixed majority-class baseline (predict 'en' always — the
+    documented constant prior): on the SAME documents, b = docs only
+    the detector gets right, c = docs only the baseline gets right,
+    χ² = (b−c)²/(b+c). langid_eval_confusion reports the error
+    structure; this answers the inference question a model gate needs
+    — is the detector actually better than a constant guess, or is
+    its accuracy edge within discordant-pair noise?
+
+    Exactness: counts are exact integers from one scan; (b−c)² is a
+    non-negative exact integer (square), so the e6-scaled χ² is ONE
+    non-negative integer division in decimal(38,0)/HUGEINT; the
+    significance flag compares against the χ²₁ literal. b + c = 0
+    (no discordant pairs) emits NULL χ² and NULL verdict via mirrored
+    CASE.
+
+    Scale shape: one map-side scan (the langid profile ratios), one
+    ungrouped 1-row aggregate — nothing after the scan is data-sized."""
+    docs = fan_out(load_table(spark, sf_dir, "documents")).filter(
+        F.col("text").isNotNull() & F.col("lang").isNotNull()
+    )
+    det_ok = textops.detect_language("text") == F.col("lang")
+    base_ok = F.col("lang") == F.lit("en")
+    agg = docs.agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.sum(F.when(det_ok & base_ok, 1).otherwise(0)).alias("_n11"),
+        F.sum(F.when(~det_ok & ~base_ok, 1).otherwise(0)).alias("_n00"),
+        F.sum(F.when(det_ok & ~base_ok, 1).otherwise(0)).alias("_b"),
+        F.sum(F.when(~det_ok & base_ok, 1).otherwise(0)).alias("_c"),
+    )
+    chi = F.expr(
+        "CASE WHEN _b + _c > 0 THEN"
+        " CAST((1000000 * CAST(_b - _c AS DECIMAL(38,0)) * (_b - _c))"
+        " div (_b + _c) AS BIGINT) END"
+    )
+    return agg.select(
+        F.col("_n").cast("long").alias("n_docs"),
+        F.col("_n11").cast("long").alias("both_right"),
+        F.col("_n00").cast("long").alias("both_wrong"),
+        F.col("_b").cast("long").alias("det_only_right"),
+        F.col("_c").cast("long").alias("base_only_right"),
+        chi.alias("mcnemar_chi2_e6"),
+        F.when(
+            chi.isNotNull(),
+            F.when(
+                (chi >= MCNEMAR_CRIT_E6) & (F.col("_b") > F.col("_c")), 1
+            ).otherwise(0),
+        )
+        .cast("long")
+        .alias("det_signif_better"),
+    )
+
+
+MCNEMAR_SQL = rf"""
+WITH r AS (
+  SELECT lang,
+         {ratio_sql(textops.LANG_PROFILES['en'])} AS r_en,
+         {ratio_sql(textops.LANG_PROFILES['es'])} AS r_es,
+         {ratio_sql(textops.LANG_PROFILES['de'])} AS r_de,
+         {ratio_sql(textops.LANG_PROFILES['fr'])} AS r_fr
+  FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL
+),
+p AS (
+  SELECT lang = ({_LANGID_CASE}) AS det_ok, lang = 'en' AS base_ok FROM r
+),
+agg AS (
+  SELECT count(*) AS n,
+         sum(CASE WHEN det_ok AND base_ok THEN 1 ELSE 0 END) AS n11,
+         sum(CASE WHEN NOT det_ok AND NOT base_ok THEN 1 ELSE 0 END) AS n00,
+         sum(CASE WHEN det_ok AND NOT base_ok THEN 1 ELSE 0 END) AS b,
+         sum(CASE WHEN NOT det_ok AND base_ok THEN 1 ELSE 0 END) AS c
+  FROM p
+)
+SELECT CAST(n AS BIGINT) AS n_docs,
+       CAST(n11 AS BIGINT) AS both_right,
+       CAST(n00 AS BIGINT) AS both_wrong,
+       CAST(b AS BIGINT) AS det_only_right,
+       CAST(c AS BIGINT) AS base_only_right,
+       CASE WHEN b + c > 0 THEN
+         CAST((1000000 * CAST(b - c AS HUGEINT) * (b - c)) // (b + c)
+              AS BIGINT) END AS mcnemar_chi2_e6,
+       CAST(CASE WHEN b + c > 0 THEN
+              CASE WHEN (1000000 * CAST(b - c AS HUGEINT) * (b - c)) // (b + c)
+                        >= {MCNEMAR_CRIT_E6} AND b > c
+                   THEN 1 ELSE 0 END
+            END AS BIGINT) AS det_signif_better
+FROM agg
 """

@@ -14,7 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import cleaning, derive
+from ..operators import cleaning, derive, sampling
+from ..operators.derive import CENTS_SQL, cents
 from ..session import load_table
 
 CUTOFF = "2000-01-01"
@@ -274,7 +275,7 @@ def winsorize_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the --bigmoney class crossed with large n, which no physical-row
     # sweep can reach). The moment now rides decimal(38,0)/HUGEINT and
     # the BIGINT output carries the theil_sen representation bound
-    # (mirrored NULL) — round8_queries.py:1477 pattern.
+    # (mirrored NULL), the timeseries_queries.theil_sen_trend pattern.
     return (
         hist.join(F.broadcast(th), "event_type")
         .groupBy("event_type", "lo_cents", "hi_cents")
@@ -587,4 +588,216 @@ FROM (
                          ROWS BETWEEN {MEDIAN_WINDOW} PRECEDING AND CURRENT ROW)) AS l
   FROM events
 )
+"""
+
+
+# --- two-sample KS drift gate ------------------------------------------------
+
+def ks_value_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-sample Kolmogorov–Smirnov drift statistic between the purchase
+    value distributions of two md5-split user cohorts: D = max over the
+    pooled value domain of |F_a(v) - F_b(v)|, the standard distribution-
+    equality test a data pipeline runs between a new ingest batch and its
+    history (value_drift_tv bins first; KS works on the exact CDF and
+    catches shifts binning smears).
+
+    Exactness: D is computed in pure integer arithmetic —
+    max |cum_a·N_b − cum_b·N_a| over distinct cents values, scaled to
+    basis points only at the end — so both engines agree bit-for-bit.
+
+    Scale shape: one groupBy to (cents, cohort) counts, then running
+    sums over the DISTINCT VALUE DOMAIN (cents of a bounded price range
+    — domain-bounded like column_encoding_advisor, not data-bounded);
+    the cohort split is a map-side hash.
+
+    Empty input (zero rankable purchase events) emits ZERO rows in both
+    engines: the trailing isNotNull filter drops Spark's all-NULL
+    ungrouped-agg row to match the oracle's empty GROUP BY."""
+    # NULL values have no CDF position and NULL user ids no cohort —
+    # both excluded in BOTH engines (review finding: a NULL value group
+    # sorts NULLS FIRST in Spark / NULLS LAST in DuckDB, shifting every
+    # cumulative count; a NULL cohort key hits the when/otherwise-vs-
+    # CASE-ELSE asymmetry)
+    ev = load_table(spark, sf_dir, "events").filter(
+        (F.col("event_type") == "purchase")
+        & F.col("value").isNotNull()
+        & F.col("user_id").isNotNull()
+    )
+    g = ev.select(
+        cents("value").alias("v"),
+        (sampling.hash_bucket(F.col("user_id"), "ks", 2) == 0).alias("_a"),
+    )
+    per_v = g.groupBy("v").agg(
+        F.sum(F.when(F.col("_a"), 1).otherwise(0)).alias("na"),
+        F.sum(F.when(~F.col("_a"), 1).otherwise(0)).alias("nb"),
+    )
+    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
+    cum = per_v.select(
+        F.sum("na").over(w).alias("ca"), F.sum("nb").over(w).alias("cb")
+    )
+    tot = cum.agg(F.max("ca").alias("na"), F.max("cb").alias("nb"))
+    joined = cum.crossJoin(F.broadcast(tot))
+    # Integer division end-to-end, in decimal(38,0) for headroom: the
+    # numerator max|ca·nb − cb·na|·10000 exceeds int64 once each cohort
+    # holds ~1e6+ events (~sf1+), and double division would silently
+    # diverge from the oracle's HUGEINT `//`. All operands are
+    # non-negative so Spark `div` (truncate) == DuckDB `//` (floor),
+    # and the quotient is ≤ 10000 bp so the long result can't overflow.
+    agg = joined.agg(
+        F.max("na").cast("long").alias("n_a"),
+        F.max("nb").cast("long").alias("n_b"),
+        F.max(
+            F.abs(
+                F.col("ca").cast("decimal(38,0)") * F.col("nb")
+                - F.col("cb").cast("decimal(38,0)") * F.col("na")
+            )
+        ).alias("_max_abs"),
+    )
+    # KS is undefined when a cohort is empty (possible only on tiny
+    # inputs) — -1 sentinel, mirrored in the oracle (tiny-sweep class).
+    # The trailing filter drops Spark's all-NULL ungrouped-agg row on
+    # EMPTY input, matching the oracle's 0-row GROUP BY exactly (this
+    # retires the docstring's former known-divergence).
+    return agg.select(
+        "n_a",
+        "n_b",
+        F.expr(
+            "CAST(CASE WHEN n_a > 0 AND n_b > 0 THEN (_max_abs * 10000)"
+            " div (CAST(n_a AS DECIMAL(38,0)) * n_b) ELSE -1 END AS BIGINT)"
+        ).alias("ks_bp"),
+    ).where(F.col("n_a").isNotNull())
+
+
+KS_DRIFT_SQL = f"""
+WITH g AS (
+  SELECT {CENTS_SQL.format(x="value")} AS v,
+         ('0x' || substr(md5(user_id::VARCHAR || 'ks'), 1, 8))::BIGINT % 2 = 0 AS a
+  FROM events
+  WHERE event_type = 'purchase'
+    AND value IS NOT NULL AND user_id IS NOT NULL
+),
+per_v AS (
+  SELECT v,
+         sum(CASE WHEN a THEN 1 ELSE 0 END) AS na,
+         sum(CASE WHEN a THEN 0 ELSE 1 END) AS nb
+  FROM g GROUP BY 1
+),
+cum AS (
+  SELECT sum(na) OVER (ORDER BY v) AS ca,
+         sum(nb) OVER (ORDER BY v) AS cb
+  FROM per_v
+),
+tot AS (SELECT max(ca) AS na, max(cb) AS nb FROM cum)
+SELECT CAST(na AS BIGINT) AS n_a,
+       CAST(nb AS BIGINT) AS n_b,
+       CAST(CASE WHEN na > 0 AND nb > 0
+                 THEN max(abs(ca * nb - cb * na)) * 10000 // (na * nb)
+                 ELSE -1 END AS BIGINT) AS ks_bp
+FROM cum, tot
+GROUP BY na, nb
+"""
+
+
+# --- exact trimmed mean (robust-stats member) ----------------------------------
+
+TRIM_LO_PCT = 5
+TRIM_HI_PCT = 95
+
+
+def trimmed_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact 5–95% trimmed mean of purchase cents per event type — the
+    robust-location member winsorize_event_values (which CLIPS) and
+    rolling_median (which windows) don't provide: drop the tail ranks
+    entirely, average the middle 90%.
+
+    Exactness: cut ranks are integer ``(pct·n) div 100``; each distinct
+    value's kept multiplicity is the exact integer overlap of its
+    cumulative-rank span [cum − c, cum) with (klo, khi]; the trimmed
+    mean is a non-negative integer division. No per-row ranks anywhere.
+
+    Scale shape: one (type, value) groupBy off the scan, then windows
+    over the DISTINCT-CENTS domain per type (the ks/quantile_loss
+    justification: bounded by the value domain, not the row count)."""
+    ev = load_table(spark, sf_dir, "events").filter(
+        (F.col("event_type").isNotNull())
+        & F.col("value").isNotNull()
+        & (F.col("value") >= 0)
+    )
+    per_v = (
+        ev.select("event_type", cents("value").alias("_v"))
+        .groupBy("event_type", "_v")
+        .agg(F.count(F.lit(1)).alias("_c"))
+    )
+    w_dom = (
+        Window.partitionBy("event_type")
+        .orderBy("_v")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    w_all = Window.partitionBy("event_type")
+    cum = per_v.select(
+        "event_type",
+        "_v",
+        "_c",
+        F.sum("_c").over(w_dom).alias("_cum"),
+        F.sum("_c").over(w_all).alias("_n"),
+        F.sum(F.col("_v").cast("decimal(38,0)") * F.col("_c")).over(w_all).alias("_s"),
+    )
+    klo = F.expr(f"({TRIM_LO_PCT} * _n) div 100")
+    khi = F.expr(f"({TRIM_HI_PCT} * _n) div 100")
+    kept = F.greatest(
+        F.lit(0),
+        F.least(F.col("_cum"), khi) - F.greatest(F.col("_cum") - F.col("_c"), klo),
+    )
+    g = cum.groupBy("event_type").agg(
+        F.max("_n").cast("long").alias("n_events"),
+        F.max(khi - klo).cast("long").alias("n_kept"),
+        F.sum(F.col("_v").cast("decimal(38,0)") * kept).alias("_ts"),
+        F.max("_s").alias("_sall"),
+    )
+    return g.select(
+        "event_type",
+        "n_events",
+        "n_kept",
+        F.expr("CASE WHEN n_kept > 0 THEN CAST(_ts div n_kept AS BIGINT) END").alias(
+            "trimmed_mean_cents"
+        ),
+        F.expr("CASE WHEN n_events > 0 THEN CAST(_sall div n_events AS BIGINT) END").alias(
+            "mean_cents"
+        ),
+    )
+
+
+TRIMMED_MEAN_SQL = f"""
+WITH per_v AS (
+  SELECT event_type, {CENTS_SQL.format(x="value")} AS v, count(*) AS c
+  FROM events
+  WHERE event_type IS NOT NULL AND value IS NOT NULL AND value >= 0
+  GROUP BY 1, 2
+),
+cum AS (
+  SELECT event_type, v, c,
+         sum(c) OVER (PARTITION BY event_type ORDER BY v
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+         sum(c) OVER (PARTITION BY event_type) AS n,
+         sum(CAST(v AS HUGEINT) * c) OVER (PARTITION BY event_type) AS s
+  FROM per_v
+),
+k AS (
+  SELECT *, ({TRIM_LO_PCT} * n) // 100 AS klo, ({TRIM_HI_PCT} * n) // 100 AS khi
+  FROM cum
+),
+g AS (
+  SELECT event_type,
+         max(n) AS n, max(khi - klo) AS kept,
+         sum(CAST(v AS HUGEINT)
+             * greatest(0, least(cum, khi) - greatest(cum - c, klo))) AS ts,
+         max(s) AS sall
+  FROM k GROUP BY 1
+)
+SELECT event_type,
+       CAST(n AS BIGINT) AS n_events,
+       CAST(kept AS BIGINT) AS n_kept,
+       CASE WHEN kept > 0 THEN CAST(ts // kept AS BIGINT) END AS trimmed_mean_cents,
+       CASE WHEN n > 0 THEN CAST(sall // n AS BIGINT) END AS mean_cents
+FROM g
 """

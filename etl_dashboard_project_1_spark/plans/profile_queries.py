@@ -6,7 +6,9 @@
 - event-type co-occurrence lift (market-basket association on user
   behavior),
 - day-of-week × hour activity heatmap,
-- deterministic training-shard manifest (md5-bucketed, rerun-stable).
+- deterministic training-shard manifest (md5-bucketed, rerun-stable),
+- privacy and data-quality audits (k-anonymity, l-diversity, t-closeness,
+  noisy counts, Benford, id continuity, zone-map skipping).
 
 All single-pass Catalyst aggregations; the profiler computes every
 column's stats in ONE scan (stack/unpivot after the aggregate, never
@@ -15,12 +17,16 @@ one scan per column).
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import derive
+from ..operators.derive import CENTS_SQL, cents
 from ..operators.sampling import hash_bucket
 from ..session import fan_out, load_table
+from .training_queries import MD5_BIGINT
 
 PROFILE_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 
@@ -816,3 +822,621 @@ FROM (SELECT {col} AS v, count(*) AS c, octet_length(encode({col})) AS b
       FROM {table} GROUP BY 1, 3)"""
     for label, table, col in ENC_COLUMNS
 )
+
+
+# --- Gini concentration ------------------------------------------------------
+
+def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Revenue concentration as a Gini coefficient over per-customer
+    order totals (customers with no orders count as zero) — the
+    inequality scalar behind "top-x% of customers drive y%" claims
+    (user_value_pareto gives the curve; this gives the index).
+
+    G = Σᵢ (2i − n − 1)·xᵢ / (n·Σx) with x ascending — rank-weighted and
+    tie-invariant on VALUE ties because the tiebreaker (c_custkey) is
+    part of the declared total order on both engines. Output in
+    floor-form basis points.
+
+    Scale shape: per-customer cents is one shuffle; the ascending rank
+    uses layout.dense_ids_by — a range-partitioned sort with
+    O(partitions) driver state, NOT a single-partition window; the
+    rank-weighted sum accumulates in decimal(38) (an int64 sum would
+    overflow past ~sf100)."""
+    from ..operators import layout
+
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
+    orders = load_table(spark, sf_dir, "orders")
+    rev = (
+        orders.groupBy("o_custkey")
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
+        .join(cust, cust.c_custkey == F.col("o_custkey"), "right")
+        .select("c_custkey", F.coalesce("cents", F.lit(0)).alias("cents"))
+    )
+    ranked = layout.dense_ids_by(
+        rev, [F.asc("cents"), F.asc("c_custkey")], id_name="i"
+    )
+    tot = ranked.agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("t"))
+    joined = ranked.crossJoin(F.broadcast(tot))
+    return joined.agg(
+        F.max("n").cast("long").alias("n_customers"),
+        F.max("t").cast("long").alias("total_cents"),
+        # zero total revenue (tiny-sweep class: every sampled customer
+        # may be orderless) leaves Gini undefined — -1 sentinel, mirrored
+        F.when(
+            F.max("t") > 0,
+            F.floor(
+                F.lit(10000.0)
+                * F.sum(
+                    ((2 * F.col("i") - F.col("n") - 1) * F.col("cents")).cast(
+                        "decimal(38,0)"
+                    )
+                ).cast("double")
+                / (F.max("n").cast("double") * F.max("t").cast("double"))
+            ),
+        )
+        .otherwise(-1)
+        .cast("long")
+        .alias("gini_bp"),
+    )
+
+
+GINI_SQL = f"""
+WITH rev AS (
+  SELECT c.c_custkey,
+         coalesce(sum({CENTS_SQL.format(x="o_totalprice")}), 0) AS cents
+  FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
+  GROUP BY 1
+),
+ranked AS (
+  SELECT cents, row_number() OVER (ORDER BY cents ASC, c_custkey ASC) AS i FROM rev
+),
+tot AS (SELECT count(*) AS n, sum(cents) AS t FROM ranked)
+SELECT CAST(n AS BIGINT) AS n_customers,
+       CAST(t AS BIGINT) AS total_cents,
+       CAST(CASE WHEN t > 0
+                 THEN floor(10000.0 * CAST(sum((2 * i - n - 1) * cents) AS DOUBLE)
+                            / (CAST(n AS DOUBLE) * CAST(t AS DOUBLE)))
+                 ELSE -1 END AS BIGINT) AS gini_bp
+FROM ranked, tot
+GROUP BY n, t
+"""
+
+
+# --- id-sequence continuity audit -------------------------------------------
+
+def id_continuity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sequence-allocation audit over the event-id space, per event type
+    plus an __all__ rollup row: span occupancy (missing = span − distinct
+    ids) and duplication (dups = rows − distinct ids). The ingestion
+    health check that catches dropped batches (holes in the global
+    sequence) and at-least-once replays (duplicate ids) before they skew
+    downstream counts.
+
+    Scale shape: one ROLLUP aggregate — count / distinct / min / max per
+    group, no sort, no window."""
+    ev = load_table(spark, sf_dir, "events")
+    return (
+        ev.rollup("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.countDistinct("event_id").alias("n_ids"),
+            F.min("event_id").cast("long").alias("min_id"),
+            F.max("event_id").cast("long").alias("max_id"),
+        )
+        .select(
+            F.coalesce("event_type", F.lit("__all__")).alias("scope"),
+            "n_rows",
+            "n_ids",
+            "min_id",
+            "max_id",
+            (F.col("max_id") - F.col("min_id") + 1 - F.col("n_ids"))
+            .cast("long")
+            .alias("n_missing_in_span"),
+            (F.col("n_rows") - F.col("n_ids")).cast("long").alias("n_dup_rows"),
+        )
+    )
+
+
+ID_CONTINUITY_SQL = """
+SELECT coalesce(event_type, '__all__') AS scope,
+       count(*)::BIGINT AS n_rows,
+       count(DISTINCT event_id)::BIGINT AS n_ids,
+       CAST(min(event_id) AS BIGINT) AS min_id,
+       CAST(max(event_id) AS BIGINT) AS max_id,
+       CAST(max(event_id) - min(event_id) + 1 - count(DISTINCT event_id) AS BIGINT)
+         AS n_missing_in_span,
+       CAST(count(*) - count(DISTINCT event_id) AS BIGINT) AS n_dup_rows
+FROM events
+GROUP BY ROLLUP(event_type)
+"""
+
+
+# --- Benford first-digit audit ----------------------------------------------
+
+#: round(log10(1 + 1/d) * 10000) for d = 1..9 — sums to exactly 10000.
+BENFORD_BP = [3010, 1761, 1249, 969, 792, 669, 580, 512, 458]
+
+
+def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benford's-law audit of order totals: the observed first-digit
+    share of o_totalprice against the Benford expectation — the
+    fraud/synthetic-data smell test for any financial measure column.
+    Expected shares are interpolated into BOTH engines from the same
+    Python constant (BENFORD_BP), per the shared-constant house rule.
+
+    Scale shape: one digit-extraction map + one 9-group aggregate."""
+    orders = load_table(spark, sf_dir, "orders")
+    # Benford applies to MAGNITUDES: the first significant digit of
+    # |x|. The first form took substr(floor(x)) directly — on a
+    # negative price (a credited order) the leading char is '-' and the
+    # ANSI int cast CRASHES (caught by the --negatives sweep); and a
+    # |x| < 1 magnitude yields digit 0, which has no Benford
+    # expectation (and would crash element_at's 1-based index) —
+    # excluded in BOTH engines alongside NULLs.
+    digit = F.substring(
+        F.floor(F.abs(F.col("o_totalprice"))).cast("string"), 1, 1
+    ).cast("int")
+    exp = F.element_at(F.array(*[F.lit(v) for v in BENFORD_BP]), F.col("digit"))
+    counted = (
+        orders.select(digit.alias("digit"))
+        .filter(F.col("digit").isNotNull() & (F.col("digit") >= 1))
+        .groupBy("digit")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    tot = counted.agg(F.sum("n").alias("t"))
+    return (
+        counted.crossJoin(F.broadcast(tot))
+        .select(
+            "digit",
+            F.col("n").cast("long").alias("n_orders"),
+            F.floor(F.col("n") * 10000 / F.col("t")).cast("long").alias("observed_bp"),
+            exp.cast("long").alias("expected_bp"),
+            F.abs(F.floor(F.col("n") * 10000 / F.col("t")) - exp)
+            .cast("long")
+            .alias("dev_bp"),
+        )
+    )
+
+
+BENFORD_SQL = f"""
+WITH exp(digit, expected_bp) AS (
+  VALUES {", ".join(f"({d + 1}, {v})" for d, v in enumerate(BENFORD_BP))}
+),
+counted AS (
+  SELECT digit, count(*) AS n
+  FROM (
+    SELECT CAST(substr(CAST(CAST(floor(abs(o_totalprice)) AS BIGINT) AS VARCHAR),
+                       1, 1) AS INT) AS digit
+    FROM orders WHERE o_totalprice IS NOT NULL
+  ) WHERE digit >= 1
+  GROUP BY 1
+),
+tot AS (SELECT sum(n) AS t FROM counted)
+SELECT c.digit,
+       CAST(c.n AS BIGINT) AS n_orders,
+       CAST(c.n * 10000 // t AS BIGINT) AS observed_bp,
+       CAST(e.expected_bp AS BIGINT) AS expected_bp,
+       CAST(abs(c.n * 10000 // t - e.expected_bp) AS BIGINT) AS dev_bp
+FROM counted c JOIN exp e USING (digit), tot
+"""
+
+
+# --- zone-map skip audit -----------------------------------------------------
+
+#: value_cents thresholds audited for partition skipping
+ZONEMAP_THRESHOLDS = [5000, 10000, 20000, 30000]
+
+
+def zonemap_skip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Data-skipping effectiveness audit: build the per-day zone map
+    (min/max of value-cents per daily partition of events) and report,
+    for each audited predicate `value_cents >= T`, how many daily
+    partitions a reader could skip outright (zone max < T) — the
+    file-pruning payoff estimate that decides whether a layout/partition
+    scheme earns its keep (layout_zorder_locality's cousin for min/max
+    stats).
+
+    Scale shape: one per-day min/max aggregate (the zone map is
+    partition-count-sized), cross-joined against the config-literal
+    threshold list; everything downstream is metadata-sized."""
+    ev = load_table(spark, sf_dir, "events")
+    zones = ev.groupBy(F.to_date("ts").alias("day")).agg(
+        F.max(cents("value")).alias("zmax")
+    )
+    thresholds = F.explode(
+        F.array(*[F.lit(t) for t in ZONEMAP_THRESHOLDS])
+    ).alias("threshold")
+    audited = zones.select("day", "zmax", thresholds)
+    return (
+        audited.groupBy("threshold")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_partitions"),
+            F.sum(F.when(F.col("zmax") < F.col("threshold"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_skippable"),
+        )
+        .select(
+            F.col("threshold").cast("long").alias("threshold_cents"),
+            "n_partitions",
+            "n_skippable",
+            F.floor(F.col("n_skippable") * 10000 / F.col("n_partitions"))
+            .cast("long")
+            .alias("skip_bp"),
+        )
+    )
+
+
+ZONEMAP_SQL = f"""
+WITH zones AS (
+  SELECT ts::DATE AS day, max({CENTS_SQL.format(x="value")}) AS zmax
+  FROM events GROUP BY 1
+),
+th(threshold) AS (VALUES {", ".join(f"({t})" for t in ZONEMAP_THRESHOLDS)})
+SELECT CAST(threshold AS BIGINT) AS threshold_cents,
+       count(*)::BIGINT AS n_partitions,
+       CAST(sum(CASE WHEN zmax < threshold THEN 1 ELSE 0 END) AS BIGINT) AS n_skippable,
+       CAST(sum(CASE WHEN zmax < threshold THEN 1 ELSE 0 END) * 10000 // count(*)
+            AS BIGINT) AS skip_bp
+FROM zones, th
+GROUP BY threshold
+"""
+
+
+# --- deterministic discrete-Laplace noisy counts ------------------------------
+
+#: discrete Laplace (two-sided geometric) with alpha = 1/2, tails
+#: clamped to [-8, 8]: P(X=k) = (1/3)(1/2)^|k|, an EXACT rational law.
+#: Thresholds are floor(P(X' <= k) * 2^30) computed once in exact
+#: Fraction arithmetic and interpolated into BOTH engines — zero
+#: runtime transcendentals, zero float probability anywhere.
+DP_NOISE_MAX = 8
+_DP_WHEEL = 1 << 30
+
+
+def _dp_thresholds() -> list[int]:
+    a = Fraction(1, 2)
+    p0 = (1 - a) / (1 + a)
+    # clamped law: mass of |k| >= MAX collapses onto +/-MAX
+    probs = {}
+    for k in range(-DP_NOISE_MAX + 1, DP_NOISE_MAX):
+        probs[k] = p0 * a ** abs(k)
+    tail = (p0 * a**DP_NOISE_MAX) / (1 - a)  # sum_{j >= MAX} p0*a^j
+    probs[-DP_NOISE_MAX] = tail
+    probs[DP_NOISE_MAX] = tail
+    cum, out = Fraction(0), []
+    for k in range(-DP_NOISE_MAX, DP_NOISE_MAX + 1):
+        cum += probs[k]
+        out.append(min(int(cum * _DP_WHEEL), _DP_WHEEL))
+    out[-1] = _DP_WHEEL  # exact total mass
+    return out
+
+
+_DP_T = _dp_thresholds()
+
+#: CASE ladder mapping u in [0, 2^30) to the noise value — one string,
+#: valid in BOTH engines (plain CASE WHEN / ELSE).
+_DP_CASE = (
+    "CASE "
+    + " ".join(
+        f"WHEN {{u}} < {t} THEN {k}"
+        for k, t in zip(range(-DP_NOISE_MAX, DP_NOISE_MAX), _DP_T[:-1])
+    )
+    + f" ELSE {DP_NOISE_MAX} END"
+)
+
+
+def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Differential-privacy-style noisy release of the per
+    (event_type, day) activity counts: each cell's true count, a
+    discrete-Laplace noise draw (alpha=1/2, clamped +/-8, the geometric
+    mechanism for eps = ln 2 count queries), and the clamped-at-zero
+    noisy count. The draw is DETERMINISTIC — the md5 wheel keyed on the
+    cell — so releases are reproducible and engine-portable, the same
+    policy every "randomized" house query follows (epoch shuffle,
+    bootstrap, poisson mixing all ride the same wheel).
+
+    Exactness: the inverse CDF is a precomputed EXACT rational ladder
+    (Fraction arithmetic, floor to the 2^30 wheel) interpolated into
+    both engines; u = md5(type|day|salt) % 2^30. No runtime
+    transcendental, no float probability.
+
+    Scale shape: one groupBy to the |types| x |days| cell frame;
+    the noise map is a scalar CASE ladder — map-only after the
+    aggregate."""
+    ev = load_table(spark, sf_dir, "events")
+    cells = ev.groupBy(
+        "event_type", F.to_date("ts").alias("day")
+    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
+    from ..operators import dedup
+
+    u = (
+        dedup.md5_int(
+            F.concat(
+                F.col("event_type"),
+                F.lit("|"),
+                F.col("day").cast("string"),
+                F.lit("|dplap"),
+            )
+        )
+        % _DP_WHEEL
+    )
+    noisy = cells.withColumn("_u", u).withColumn(
+        "noise", F.expr(_DP_CASE.format(u="_u")).cast("long")
+    )
+    return noisy.select(
+        "event_type",
+        "day",
+        "n",
+        "noise",
+        F.greatest(F.col("n") + F.col("noise"), F.lit(0))
+        .cast("long")
+        .alias("noisy_n"),
+    )
+
+
+DP_NOISY_SQL = f"""
+WITH cells AS (
+  SELECT event_type, CAST(ts AS DATE) AS day, count(*)::BIGINT AS n
+  FROM events GROUP BY 1, 2
+),
+drawn AS (
+  SELECT event_type, day, n,
+         {MD5_BIGINT.format(expr="event_type || '|' || day::VARCHAR || '|dplap'")}
+           % {_DP_WHEEL} AS u
+  FROM cells
+)
+SELECT event_type, day, n,
+       CAST({_DP_CASE.format(u="u")} AS BIGINT) AS noise,
+       CAST(greatest(n + {_DP_CASE.format(u="u")}, 0) AS BIGINT) AS noisy_n
+FROM drawn
+"""
+
+
+# Mirror note: the Spark side filters `text IS NOT NULL`; the oracle's
+# shared `s` CTE carries no text column, so it filters `logit IS NOT
+# NULL` instead — equivalent, since the logit is NULL exactly when text
+# is (every component NULLs through; non-NULL text yields a non-NULL
+# logit via the greatest() guards).
+
+
+# --- l-diversity audit --------------------------------------------------------
+
+L_DIVERSITY = 3
+#: sensitive-attribute coarsening: account balance in 1000-unit buckets
+L_DIV_BUCKET = 1000
+
+
+def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """l-diversity audit over the customer table: within each
+    quasi-identifier equivalence class (market segment × nation — the
+    k_anonymity_audit QI set), count the DISTINCT sensitive values
+    (account balance coarsened to 1000-unit buckets) and flag classes
+    below l = 3 — the attribute-disclosure companion of k-anonymity
+    (a class can be k-large yet reveal everyone's balance band if all
+    members share it).
+
+    Exactness: the bucket is floor(balance / 1000) — one IEEE divide +
+    floor, engine-identical — and everything else is exact counting.
+    NULL balances carry no sensitive value and are ignored by
+    count(DISTINCT) in both engines.
+
+    Scale shape: one shuffle to QI classes (|segments|×|nations|
+    bounded output); the distinct-count runs inside that aggregate."""
+    cust = load_table(spark, sf_dir, "customer")
+    classes = cust.groupBy("c_mktsegment", "c_nationkey").agg(
+        F.count(F.lit(1)).cast("long").alias("class_size"),
+        F.countDistinct(
+            F.floor(F.col("c_acctbal") / F.lit(float(L_DIV_BUCKET))).cast("long")
+        ).cast("long").alias("n_sensitive"),
+    )
+    return classes.select(
+        "c_mktsegment",
+        "c_nationkey",
+        "class_size",
+        "n_sensitive",
+        F.when(F.col("n_sensitive") >= L_DIVERSITY, 1)
+        .otherwise(0)
+        .cast("long")
+        .alias("meets_l"),
+    )
+
+
+L_DIVERSITY_SQL = f"""
+SELECT c_mktsegment, c_nationkey,
+       count(*)::BIGINT AS class_size,
+       count(DISTINCT CAST(floor(c_acctbal / {float(L_DIV_BUCKET)}) AS BIGINT))::BIGINT
+         AS n_sensitive,
+       CAST(CASE WHEN count(DISTINCT CAST(floor(c_acctbal / {float(L_DIV_BUCKET)})
+                                          AS BIGINT)) >= {L_DIVERSITY}
+                 THEN 1 ELSE 0 END AS BIGINT) AS meets_l
+FROM customer
+GROUP BY 1, 2
+"""
+
+
+# --- overdispersion (index of dispersion) check -------------------------------
+
+
+def overdispersion_check(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Index-of-dispersion check per event type over purchase cents:
+    D = s²/x̄ = (n·Σx² − S²) / ((n−1)·S), the variance-to-mean ratio
+    that decides Poisson vs negative-binomial modeling (D ≈ 1 Poisson;
+    D ≫ 1 overdispersed — use NB). The count-model diagnostic the
+    anomaly/forecast family (rolling_zscore, seasonal_naive) assumes
+    but never tests.
+
+    Exactness: S and Q = Σx² are exact integer moments (Q accumulates
+    in decimal(38,0) — cents² ≈ 10¹² per row leaves int64 past ~10⁶
+    rows); the numerator n·Q − S² ≥ 0 by Cauchy-Schwarz, so the e6
+    index is a NON-NEGATIVE integer division — Spark decimal div ==
+    DuckDB HUGEINT // (the decision_stump_gini house rule). Degenerate
+    groups (n < 2 or S = 0) emit a NULL index via CASE in both
+    engines.
+
+    Scale shape: one map-side moment aggregate to the |types|-row
+    frame; nothing else."""
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("value").isNotNull() & (F.col("value") >= 0)
+    )
+    m = ev.select("event_type", cents("value").alias("_v")).groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.sum("_v").alias("_s"),
+        F.sum(F.col("_v").cast("decimal(38,0)") * F.col("_v")).alias("_q"),
+    )
+    return m.select(
+        "event_type",
+        F.col("_n").cast("long").alias("n_events"),
+        F.col("_s").cast("long").alias("sum_cents"),
+        F.expr(
+            "CASE WHEN _n >= 2 AND _s > 0 THEN"
+            " CAST(((_n * _q - CAST(_s AS DECIMAL(38,0)) * _s) * 1000000)"
+            " div ((_n - 1) * CAST(_s AS DECIMAL(38,0))) AS BIGINT) END"
+        ).alias("dispersion_e6"),
+        F.expr(
+            "CASE WHEN _n >= 2 AND _s > 0 THEN"
+            " CASE WHEN ((_n * _q - CAST(_s AS DECIMAL(38,0)) * _s) * 1000000)"
+            " div ((_n - 1) * CAST(_s AS DECIMAL(38,0))) > 1000000"
+            " THEN 1 ELSE 0 END END"
+        ).cast("long").alias("overdispersed"),
+    )
+
+
+OVERDISPERSION_SQL = f"""
+WITH m AS (
+  SELECT event_type, count(*) AS n,
+         sum(v) AS s,
+         sum(CAST(v AS HUGEINT) * v) AS q
+  FROM (SELECT event_type, {CENTS_SQL.format(x="value")} AS v
+        FROM events WHERE value IS NOT NULL AND value >= 0)
+  GROUP BY 1
+)
+SELECT event_type,
+       CAST(n AS BIGINT) AS n_events,
+       CAST(s AS BIGINT) AS sum_cents,
+       CASE WHEN n >= 2 AND s > 0 THEN
+         CAST(((n * q - CAST(s AS HUGEINT) * s) * 1000000)
+              // ((n - 1) * CAST(s AS HUGEINT)) AS BIGINT) END AS dispersion_e6,
+       CAST(CASE WHEN n >= 2 AND s > 0 THEN
+         CASE WHEN ((n * q - CAST(s AS HUGEINT) * s) * 1000000)
+              // ((n - 1) * CAST(s AS HUGEINT)) > 1000000
+              THEN 1 ELSE 0 END END AS BIGINT) AS overdispersed
+FROM m
+"""
+
+
+# --- t-closeness audit ---------------------------------------------------------
+
+#: TV distance (basis points) at or below which a class counts as close
+T_CLOSENESS_BP = 2000
+#: sensitive-attribute coarsening — same bucket as l_diversity_audit
+T_CLOSE_BUCKET = 1000
+
+
+def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """t-closeness audit over the customer table: within each
+    quasi-identifier equivalence class (market segment × nation — the
+    k_anonymity_audit QI set), the total-variation distance between
+    the class's sensitive-value distribution (account balance in
+    1000-unit buckets — the l_diversity_audit coarsening) and the
+    GLOBAL distribution, in basis points; classes farther than
+    t = 0.2 fail. Completes the privacy triad: a class can be k-large
+    and l-diverse yet still leak (all its members sit in the extreme
+    balance buckets) — only a distributional distance catches that.
+
+    Exactness: with class size C, global size G, class bucket count
+    c_v and global bucket count g_v, TV = Σ_v |c_v·G − g_v·C| /
+    (2·C·G) — every numerator term is an exact integer product in
+    decimal(38,0)/HUGEINT, and the absent-bucket tail Σ_{v∉class}
+    g_v·C collapses algebraically to C·(G − Σ_{v∈class} g_v) (the
+    source_unigram_tv precedent), so no dense bucket×class frame is
+    materialized. tv_bp is ONE non-negative integer division.
+    NULL balances / segments / nations are excluded by mirrored
+    filters (a NULL bucket carries no sensitive value).
+
+    Scale shape: one shuffle to (segment, nation, bucket) cells —
+    bounded by |segments|·|nations|·|buckets| regardless of corpus
+    size; the three windows (class total, global-bucket total, grand
+    total) run on that bounded cell frame, which is the written
+    justification for their partitioning."""
+    cust = load_table(spark, sf_dir, "customer").filter(
+        F.col("c_acctbal").isNotNull()
+        & F.col("c_mktsegment").isNotNull()
+        & F.col("c_nationkey").isNotNull()
+    )
+    cells = cust.groupBy(
+        "c_mktsegment",
+        "c_nationkey",
+        F.floor(F.col("c_acctbal") / F.lit(float(T_CLOSE_BUCKET)))
+        .cast("long")
+        .alias("_bkt"),
+    ).agg(F.count(F.lit(1)).alias("_cv"))
+    w_class = Window.partitionBy("c_mktsegment", "c_nationkey")
+    w_bucket = Window.partitionBy("_bkt")
+    w_all = Window.partitionBy()
+    cells2 = cells.select(
+        "c_mktsegment",
+        "c_nationkey",
+        "_cv",
+        F.sum("_cv").over(w_class).alias("_C"),
+        F.sum("_cv").over(w_bucket).alias("_gv"),
+        F.sum("_cv").over(w_all).alias("_G"),
+    )
+    per_class = cells2.groupBy("c_mktsegment", "c_nationkey").agg(
+        F.max("_C").alias("_C"),
+        F.max("_G").alias("_G"),
+        F.sum(
+            F.abs(
+                F.col("_cv").cast("decimal(38,0)") * F.col("_G")
+                - F.col("_gv").cast("decimal(38,0)") * F.col("_C")
+            )
+        ).alias("_num_present"),
+        F.sum("_gv").alias("_gsum"),
+    )
+    tv_bp = F.expr(
+        "CAST((10000 * (_num_present"
+        " + CAST(_C AS DECIMAL(38,0)) * (_G - _gsum)))"
+        " div (2 * CAST(_C AS DECIMAL(38,0)) * _G) AS BIGINT)"
+    )
+    return per_class.select(
+        "c_mktsegment",
+        "c_nationkey",
+        F.col("_C").cast("long").alias("class_size"),
+        tv_bp.alias("tv_bp"),
+        F.when(tv_bp <= T_CLOSENESS_BP, 1).otherwise(0).cast("long").alias("meets_t"),
+    )
+
+
+T_CLOSENESS_SQL = f"""
+WITH cells AS (
+  SELECT c_mktsegment, c_nationkey,
+         CAST(floor(c_acctbal / {float(T_CLOSE_BUCKET)}) AS BIGINT) AS bkt,
+         count(*) AS cv
+  FROM customer
+  WHERE c_acctbal IS NOT NULL AND c_mktsegment IS NOT NULL
+        AND c_nationkey IS NOT NULL
+  GROUP BY 1, 2, 3
+),
+w AS (
+  SELECT c_mktsegment, c_nationkey, cv,
+         sum(cv) OVER (PARTITION BY c_mktsegment, c_nationkey) AS C,
+         sum(cv) OVER (PARTITION BY bkt) AS gv,
+         sum(cv) OVER () AS G
+  FROM cells
+),
+per_class AS (
+  SELECT c_mktsegment, c_nationkey,
+         max(C) AS C, max(G) AS G,
+         sum(abs(CAST(cv AS HUGEINT) * G - CAST(gv AS HUGEINT) * C))
+           AS num_present,
+         sum(gv) AS gsum
+  FROM w GROUP BY 1, 2
+)
+SELECT c_mktsegment, c_nationkey,
+       CAST(C AS BIGINT) AS class_size,
+       CAST((10000 * (num_present + CAST(C AS HUGEINT) * (G - gsum)))
+            // (2 * CAST(C AS HUGEINT) * G) AS BIGINT) AS tv_bp,
+       CAST(CASE WHEN (10000 * (num_present + CAST(C AS HUGEINT) * (G - gsum)))
+                      // (2 * CAST(C AS HUGEINT) * G) <= {T_CLOSENESS_BP}
+                 THEN 1 ELSE 0 END AS BIGINT) AS meets_t
+FROM per_class
+"""

@@ -27,9 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def get_spark(
     app_name: str = "etl_dashboard_project_1_spark",
     cpus: int | None = None,
@@ -253,15 +250,3 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
         return df.repartition(target)
     return df
 
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES, register: bool = True
-) -> dict[str, DataFrame]:
-    """Load every testdata table; optionally register temp views for SQL."""
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        df = load_table(spark, sf_dir, name)
-        if register:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -202,17 +202,6 @@ def union_sheets(frames: list[DataFrame]) -> DataFrame:
     return out
 
 
-def add_load_order(df: DataFrame, col: str = "_row_id") -> DataFrame:
-    """Attach a monotonically increasing load-order id (NOT globally
-    contiguous — unique and ascending per partition; sufficient as an
-    ordering key for ffill-style operators)."""
-    return df.withColumn(col, F.monotonically_increasing_id())
-
-
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """JSON-lines scan — the interchange format most raw LLM-corpus dumps
     arrive in. An explicit schema skips Spark's inference pass (which

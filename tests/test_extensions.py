@@ -1281,14 +1281,14 @@ def test_quota_largest_remainder_sums_to_budget(spark):
     """Hamilton-method invariants: quotas sum to EXACTLY the slot budget,
     every source gets at least its floor share and at most floor+1, and
     the +1s go to the largest remainders (tie: source asc)."""
-    from etl_dashboard_project_1_spark.plans import round5_queries as r5
+    from etl_dashboard_project_1_spark.plans import training_queries
 
-    rows = r5.quota_largest_remainder(spark, SF).collect()
+    rows = training_queries.quota_largest_remainder(spark, SF).collect()
     total_docs = sum(r["n_docs"] for r in rows)
-    assert sum(r["quota"] for r in rows) == r5.QUOTA_SLOTS
+    assert sum(r["quota"] for r in rows) == training_queries.QUOTA_SLOTS
     bumped, unbumped = [], []
     for r in rows:
-        fl = r["n_docs"] * r5.QUOTA_SLOTS // total_docs
+        fl = r["n_docs"] * training_queries.QUOTA_SLOTS // total_docs
         assert r["quota"] in (fl, fl + 1)
         (bumped if r["quota"] == fl + 1 else unbumped).append(
             (r["remainder"], r["source"])
@@ -1306,10 +1306,10 @@ def test_interval_overlap_join_invariants(spark):
     non-negative, every reported user really has both purchase and error
     activity — and the gate is non-degenerate (rows exist at sf0.01,
     where 35 purchase/error event pairs sit within 30 min)."""
-    from etl_dashboard_project_1_spark.plans import round5_queries as r5
+    from etl_dashboard_project_1_spark.plans import timeseries_queries
 
     sf = "/root/testdata/sf0.01"
-    rows = r5.interval_overlap_join(spark, sf).collect()
+    rows = timeseries_queries.interval_overlap_join(spark, sf).collect()
     assert rows, "proximity join degenerated to empty — gate proves nothing"
     ev = load_table(spark, sf, "events")
     both = {
@@ -1321,7 +1321,7 @@ def test_interval_overlap_join_invariants(spark):
         for r in ev.filter(F.col("event_type") == "error")
         .select("user_id").distinct().collect()
     }
-    gap_us = r5.OVERLAP_GAP_S * 1_000_000
+    gap_us = timeseries_queries.OVERLAP_GAP_S * 1_000_000
     for r in rows:
         assert r["n_pairs"] >= 1
         assert 0 <= r["n_intersecting"] <= r["n_pairs"]
@@ -1336,9 +1336,9 @@ def test_ols_trend_internal_consistency(spark):
     from collections import Counter
     import math
 
-    from etl_dashboard_project_1_spark.plans import round5_queries as r5
+    from etl_dashboard_project_1_spark.plans import timeseries_queries
 
-    rows = {r["event_type"]: r for r in r5.ols_daily_trend_by_type(spark, SF).collect()}
+    rows = {r["event_type"]: r for r in timeseries_queries.ols_daily_trend_by_type(spark, SF).collect()}
     ev = load_table(spark, SF, "events").select(
         "event_type", F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date")).alias("x")
     ).collect()
@@ -1365,9 +1365,9 @@ def test_ols_trend_internal_consistency(spark):
 def test_rfm_segments_partition_customers(spark):
     """Segment codes are valid (digits 1..4), every ordering customer
     lands in exactly one segment, and total cents is conserved."""
-    from etl_dashboard_project_1_spark.plans import round5_queries as r5
+    from etl_dashboard_project_1_spark.plans import dashboard_queries
 
-    rows = r5.rfm_segments(spark, SF).collect()
+    rows = dashboard_queries.rfm_segments(spark, SF).collect()
     orders = load_table(spark, SF, "orders")
     n_active = orders.select("o_custkey").distinct().count()
     assert sum(r["n_customers"] for r in rows) == n_active
@@ -1379,7 +1379,7 @@ def test_rfm_segments_partition_customers(spark):
     for r in rows:
         code = r["segment"]
         rfm = (code // 100, (code // 10) % 10, code % 10)
-        assert all(1 <= d <= r5.RFM_BUCKETS for d in rfm), code
+        assert all(1 <= d <= dashboard_queries.RFM_BUCKETS for d in rfm), code
 
 
 # Reference: the original list-slicing shingle CTE (O(len²) per doc).
@@ -1431,11 +1431,17 @@ def test_fast_shingle_cte_matches_shared_cte_multiset():
 
 
 def test_shingle_expr_and_dsl_forms_identical(spark):
-    """r10 optimization guard: the shingle builders have two construction
-    paths — a single parsed SQL expression for plain column names (one
-    py4j round trip) and the original Column-DSL fold for Column inputs.
-    Both must yield byte-identical arrays and schemas, including the
-    <k-word empty-array contract, on edge-shaped text."""
+    """The shingle builders render one SQL-text gram fold
+    (``dedup.gram_fold``). On edge-shaped text (fewer than k words, empty,
+    repeated grams, whitespace runs, case) they must yield exactly the
+    distinct grams, and the md5-rolled gram hashes, that a Python split
+    computes, in first-occurrence order, including the <k-word
+    empty-array contract."""
+    import hashlib
+    import re
+
+    from pyspark.sql import types as T
+
     rows = [
         (1, "a b c d e"),
         (2, "a b c a b c a b c"),
@@ -1446,12 +1452,48 @@ def test_shingle_expr_and_dsl_forms_identical(spark):
         (7, "A B c D e"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    for fn in (dedup.word_shingles, dedup.hashed_word_shingles):
+
+    def md5_int(t):
+        return int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
+
+    def grams(text, k, hashed):
+        w = re.split(r"\s+", text.lower())  # Java split, limit -1
+        out = []
+        for i in range(len(w) - k + 1):
+            if hashed:
+                g = md5_int(w[i])
+                for t in w[i + 1 : i + k]:
+                    g = (g * dedup.SHINGLE_BASE + md5_int(t)) % dedup.MINHASH_PRIME
+            else:
+                g = " ".join(w[i : i + k])
+            if g not in out:
+                out.append(g)
+        return out
+
+    for fn, hashed, elem in (
+        (dedup.word_shingles, False, T.StringType()),
+        (dedup.hashed_word_shingles, True, T.LongType()),
+    ):
         for k in (2, 3):
-            a = df.select("doc_id", fn("text", k).alias("x")).orderBy("doc_id")
-            b = df.select("doc_id", fn(F.col("text"), k).alias("x")).orderBy("doc_id")
-            assert a.schema == b.schema, (fn.__name__, k)
-            assert a.collect() == b.collect(), (fn.__name__, k)
+            got = df.select("doc_id", fn("text", k).alias("x")).orderBy("doc_id")
+            assert got.schema["x"].dataType.elementType == elem, (fn.__name__, k)
+            want = [grams(text, k, hashed) for _, text in rows]
+            assert [r["x"] for r in got.collect()] == want, (fn.__name__, k)
+
+
+def test_text_builders_quote_spaced_column_names(spark):
+    """The SQL-text builders quote the column names they are given: a
+    name with a space parses and reads the same values as a plain name."""
+    df = spark.createDataFrame(
+        [(1, "a b c", [1.0, 0.0]), (2, "c b a", [0.0, 1.0])], ["id", "doc text", "emb v"]
+    )
+    plain = df.withColumnRenamed("doc text", "t")
+    for fn in (dedup.word_shingles, dedup.hashed_word_shingles):
+        got = [r[0] for r in df.select(fn("doc text", 2)).collect()]
+        assert got == [r[0] for r in plain.select(fn("t", 2)).collect()], fn.__name__
+        assert [len(g) for g in got] == [2, 2], fn.__name__
+    top = vector.cosine_topk(df, "id", "emb v", [1.0, 0.0], k=1).collect()
+    assert [(r["id"], r["cosine"]) for r in top] == [(1, 1.0)]
 
 
 def test_shingle_sets_tokencount_filter_matches_old_size_filter(spark):

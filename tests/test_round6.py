@@ -9,7 +9,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from etl_dashboard_project_1_spark.plans import round6_queries as r6
+from etl_dashboard_project_1_spark.plans import (
+    experiment_queries,
+    extension_queries,
+    timeseries_queries,
+    training_queries,
+)
 from etl_dashboard_project_1_spark.session import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -18,7 +23,7 @@ SF = "/root/testdata/sf0.001"
 def test_decile_lift_conservation_and_bounds(spark):
     """Deciles are 1..10, doc counts sum to the corpus, positives sum to
     the en-doc count, and cumulative capture ends at exactly 10000 bp."""
-    rows = sorted(r6.score_decile_lift(spark, SF).collect(), key=lambda r: r["decile"])
+    rows = sorted(training_queries.score_decile_lift(spark, SF).collect(), key=lambda r: r["decile"])
     docs = load_table(spark, SF, "documents")
     n = docs.count()
     p = docs.filter(F.col("lang") == "en").count()
@@ -37,9 +42,9 @@ def test_threshold_sweep_confusion_conservation(spark):
     tp+fn = positives, fp+tn = negatives; recall is non-increasing and
     tn non-decreasing as the threshold rises."""
     rows = sorted(
-        r6.threshold_sweep_pr(spark, SF).collect(), key=lambda r: r["threshold_e2"]
+        training_queries.threshold_sweep_pr(spark, SF).collect(), key=lambda r: r["threshold_e2"]
     )
-    assert [r["threshold_e2"] for r in rows] == sorted(r6.PR_THRESHOLDS_E2)
+    assert [r["threshold_e2"] for r in rows] == sorted(training_queries.PR_THRESHOLDS_E2)
     docs = load_table(spark, SF, "documents")
     p = docs.filter(F.col("lang") == "en").count()
     npos_neg = docs.count() - p
@@ -58,12 +63,12 @@ def test_ann_ivf_recall_gate_passes_and_is_bounded(spark):
     """The gate emits one row; recall is a valid basis-point value at or
     above the pinned floor, so gate_pass is 1; the query set is the C
     seed vectors."""
-    rows = r6.ann_ivf_recall_gate(spark, SF).collect()
+    rows = extension_queries.ann_ivf_recall_gate(spark, SF).collect()
     assert len(rows) == 1
     r = rows[0]
-    assert r["n_queries"] == r6.IVF_GATE_C
-    assert 0 <= r["n_hits"] <= r["n_queries"] * r6.IVF_GATE_K
-    assert r6.IVF_RECALL_MIN_BP <= r["recall_bp"] <= 10000
+    assert r["n_queries"] == extension_queries.IVF_GATE_C
+    assert 0 <= r["n_hits"] <= r["n_queries"] * extension_queries.IVF_GATE_K
+    assert extension_queries.IVF_RECALL_MIN_BP <= r["recall_bp"] <= 10000
     assert r["gate_pass"] == 1
 
 
@@ -71,8 +76,8 @@ def test_reciprocal_best_match_is_one_to_one(spark):
     """Mutual-NN matching is injective on both sides, never self-matches,
     emits at most the probe-set size, and survives a brute-force
     reciprocity check on the small corpus."""
-    rows = r6.reciprocal_best_match(spark, SF).collect()
-    assert 0 < len(rows) <= r6.RBM_EVAL_K
+    rows = extension_queries.reciprocal_best_match(spark, SF).collect()
+    assert 0 < len(rows) <= extension_queries.RBM_EVAL_K
     a_ids = [r["a_id"] for r in rows]
     b_ids = [r["b_id"] for r in rows]
     assert len(a_ids) == len(set(a_ids)), "an a matched twice"
@@ -86,8 +91,8 @@ def test_reciprocal_best_match_is_one_to_one(spark):
 def test_bootstrap_ci_brackets_the_mean(spark):
     """Deterministic md5-wheel bootstrap: exactly B resamples, lo ≤ hi,
     and (for this fixed corpus) the CI brackets the point estimate."""
-    r = r6.bootstrap_ci_mean(spark, SF).first()
-    assert r["n_resamples"] == r6.BOOT_B
+    r = experiment_queries.bootstrap_ci_mean(spark, SF).first()
+    assert r["n_resamples"] == experiment_queries.BOOT_B
     assert r["ci_lo_cents"] <= r["ci_hi_cents"]
     assert r["ci_lo_cents"] <= r["mean_cents"] <= r["ci_hi_cents"]
     assert r["n_events"] > 0
@@ -97,7 +102,7 @@ def test_conformal_gate_coverage(spark):
     """Split sizes are positive and disjoint-by-construction (they sum to
     at most the purchase count); coverage meets the pinned floor on the
     fixed corpus so the gate passes."""
-    r = r6.conformal_quantile_gate(spark, SF).first()
+    r = experiment_queries.conformal_quantile_gate(spark, SF).first()
     total = (
         load_table(spark, SF, "events")
         .filter(F.col("event_type") == "purchase")
@@ -106,7 +111,7 @@ def test_conformal_gate_coverage(spark):
     assert r["n_train"] > 0 and r["n_cal"] > 0 and r["n_test"] > 0
     assert r["n_train"] + r["n_cal"] + r["n_test"] <= total
     assert 0 <= r["coverage_bp"] <= 10000
-    assert r["coverage_bp"] >= r6.CONF_COVERAGE_MIN_BP
+    assert r["coverage_bp"] >= experiment_queries.CONF_COVERAGE_MIN_BP
     assert r["gate_pass"] == 1
     assert r["qhat_cents"] >= 0
 
@@ -115,8 +120,8 @@ def test_halflife_decay_bounds(spark):
     """Decayed value never exceeds raw value, output is the top-N by
     decayed value descending, and a user's decayed total is positive when
     any purchase falls in the newest half-life window."""
-    rows = r6.halflife_decay_user_value(spark, SF).collect()
-    assert 0 < len(rows) <= r6.DECAY_TOP_N
+    rows = timeseries_queries.halflife_decay_user_value(spark, SF).collect()
+    assert 0 < len(rows) <= timeseries_queries.DECAY_TOP_N
     keys = [(-r["decayed_cents"], r["user_id"]) for r in rows]
     assert keys == sorted(keys)
     for r in rows:
@@ -127,7 +132,7 @@ def test_halflife_decay_bounds(spark):
 def test_class_weights_inverse_frequency(spark):
     """Weights reproduce sklearn's balanced formula in exact ppm integer
     form; the cap binds from above; shares are a partition of ~10000 bp."""
-    rows = r6.class_weight_table(spark, SF).collect()
+    rows = training_queries.class_weight_table(spark, SF).collect()
     docs = load_table(spark, SF, "documents")
     n = docs.count()
     k = len(rows)
@@ -135,7 +140,7 @@ def test_class_weights_inverse_frequency(spark):
     for r in rows:
         expect = (n * 1_000_000) // (k * r["n_docs"])
         assert r["weight_ppm"] == expect
-        assert r["capped_ppm"] == min(expect, r6.CLASS_WEIGHT_CAP_PPM)
+        assert r["capped_ppm"] == min(expect, training_queries.CLASS_WEIGHT_CAP_PPM)
     share = sum(r["share_bp"] for r in rows)
     assert 10000 - k <= share <= 10000  # floor-division undershoot only
 
@@ -160,13 +165,13 @@ def test_bootstrap_tiny_input_null_rank_agrees_with_duckdb(spark, tmp_path):
         rows, "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string"
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    got = r6.bootstrap_ci_mean(spark, sf).collect()[0]
+    got = experiment_queries.bootstrap_ci_mean(spark, sf).collect()[0]
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW events AS SELECT * FROM"
         f" read_parquet('{sf}/events.parquet/*.parquet')"
     )
-    want = con.execute(r6.BOOTSTRAP_CI_SQL).fetchone()
+    want = con.execute(experiment_queries.BOOTSTRAP_CI_SQL).fetchone()
     assert (
         got["n_events"],
         got["mean_cents"],

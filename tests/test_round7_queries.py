@@ -10,7 +10,12 @@ from fractions import Fraction
 
 import pytest
 
-from etl_dashboard_project_1_spark.plans import round7_queries as r7
+from etl_dashboard_project_1_spark.plans import (
+    experiment_queries,
+    profile_queries,
+    timeseries_queries,
+    training_queries,
+)
 
 
 # --- isotonic calibration ------------------------------------------------------
@@ -43,7 +48,7 @@ def _reference_pav(bins):
 
 def test_isotonic_matches_reference_pav(spark, sf_dir):
     rows = sorted(
-        r7.isotonic_calibration(spark, sf_dir).collect(),
+        training_queries.isotonic_calibration(spark, sf_dir).collect(),
         key=lambda r: r["bin_e2"],
     )
     ref = _reference_pav([(r["n_docs"], r["n_pos"]) for r in rows])
@@ -57,7 +62,7 @@ def test_isotonic_matches_reference_pav(spark, sf_dir):
 
 def test_isotonic_fit_is_monotone_and_bounded(spark, sf_dir):
     rows = sorted(
-        r7.isotonic_calibration(spark, sf_dir).collect(),
+        training_queries.isotonic_calibration(spark, sf_dir).collect(),
         key=lambda r: r["bin_e2"],
     )
     assert rows, "empty calibration frame"
@@ -74,7 +79,7 @@ def test_isotonic_fit_is_monotone_and_bounded(spark, sf_dir):
 def test_curriculum_conserves_and_balances(spark, sf_dir):
     from etl_dashboard_project_1_spark.session import load_table
 
-    rows = r7.curriculum_interleave(spark, sf_dir).collect()
+    rows = training_queries.curriculum_interleave(spark, sf_dir).collect()
     docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.count()
     n_src = docs.select("source").distinct().count()
@@ -82,11 +87,11 @@ def test_curriculum_conserves_and_balances(spark, sf_dir):
     # round-robin property: within any CURRICULUM_BLOCK consecutive
     # positions a source appears at most ceil(BLOCK / n_sources) + 1
     # times (the +1 covers block boundaries splitting a cycle)
-    cap = -(-r7.CURRICULUM_BLOCK // n_src) + 1
+    cap = -(-training_queries.CURRICULUM_BLOCK // n_src) + 1
     for r in rows:
         assert r["n_docs"] <= cap, (r["block"], r["source"], r["n_docs"])
-        assert r["min_pos"] >= r["block"] * r7.CURRICULUM_BLOCK + 1
-        assert r["max_pos"] <= (r["block"] + 1) * r7.CURRICULUM_BLOCK
+        assert r["min_pos"] >= r["block"] * training_queries.CURRICULUM_BLOCK + 1
+        assert r["max_pos"] <= (r["block"] + 1) * training_queries.CURRICULUM_BLOCK
     # block shares sum to 10000 up to per-source floor loss
     by_block = {}
     for r in rows:
@@ -98,30 +103,30 @@ def test_curriculum_conserves_and_balances(spark, sf_dir):
 # --- discrete-Laplace noisy counts ---------------------------------------------
 
 def test_dp_threshold_ladder_is_the_exact_rational_law():
-    t = r7._dp_thresholds()
-    assert len(t) == 2 * r7.DP_NOISE_MAX + 1
-    assert t[-1] == r7._DP_WHEEL
+    t = profile_queries._dp_thresholds()
+    assert len(t) == 2 * profile_queries.DP_NOISE_MAX + 1
+    assert t[-1] == profile_queries._DP_WHEEL
     assert sorted(t) == t
     # per-outcome mass = exact law mass, floored onto the wheel: the
     # k-th slot width must be within 1 of P(k) * wheel
     a = Fraction(1, 2)
     p0 = (1 - a) / (1 + a)
-    tail = (p0 * a**r7.DP_NOISE_MAX) / (1 - a)
+    tail = (p0 * a**profile_queries.DP_NOISE_MAX) / (1 - a)
     prev = 0
-    for k, thr in zip(range(-r7.DP_NOISE_MAX, r7.DP_NOISE_MAX + 1), t):
+    for k, thr in zip(range(-profile_queries.DP_NOISE_MAX, profile_queries.DP_NOISE_MAX + 1), t):
         width = thr - prev
-        mass = tail if abs(k) == r7.DP_NOISE_MAX else p0 * a ** abs(k)
-        exact = mass * r7._DP_WHEEL
+        mass = tail if abs(k) == profile_queries.DP_NOISE_MAX else p0 * a ** abs(k)
+        exact = mass * profile_queries._DP_WHEEL
         assert abs(width - exact) < 1, (k, width, float(exact))
         prev = thr
 
 
 def test_dp_noisy_counts_clamped_and_deterministic(spark, sf_dir):
-    df1 = {(r["event_type"], r["day"]): r for r in r7.dp_noisy_counts(spark, sf_dir).collect()}
-    df2 = {(r["event_type"], r["day"]): r for r in r7.dp_noisy_counts(spark, sf_dir).collect()}
+    df1 = {(r["event_type"], r["day"]): r for r in profile_queries.dp_noisy_counts(spark, sf_dir).collect()}
+    df2 = {(r["event_type"], r["day"]): r for r in profile_queries.dp_noisy_counts(spark, sf_dir).collect()}
     assert df1.keys() == df2.keys() and df1
     for k, r in df1.items():
-        assert -r7.DP_NOISE_MAX <= r["noise"] <= r7.DP_NOISE_MAX
+        assert -profile_queries.DP_NOISE_MAX <= r["noise"] <= profile_queries.DP_NOISE_MAX
         assert r["noisy_n"] == max(r["n"] + r["noise"], 0)
         assert df2[k]["noise"] == r["noise"], "noise must be a pure key function"
 
@@ -129,7 +134,7 @@ def test_dp_noisy_counts_clamped_and_deterministic(spark, sf_dir):
 # --- adjacent-day churn --------------------------------------------------------
 
 def test_churn_jaccard_invariants(spark, sf_dir):
-    rows = r7.churn_jaccard_daily(spark, sf_dir).collect()
+    rows = timeseries_queries.churn_jaccard_daily(spark, sf_dir).collect()
     assert rows, "expected at least one adjacent-day pair"
     for r in rows:
         assert 0 <= r["n_both"] <= min(r["n_day"], r["n_next"])
@@ -141,7 +146,7 @@ def test_churn_jaccard_invariants(spark, sf_dir):
 def test_cv_fold_scores_confusion_closes(spark, sf_dir):
     from etl_dashboard_project_1_spark.session import load_table
 
-    rows = r7.cv_fold_scores(spark, sf_dir).collect()
+    rows = training_queries.cv_fold_scores(spark, sf_dir).collect()
     docs = load_table(spark, sf_dir, "documents")
     assert sum(r["n_docs"] for r in rows) == docs.count()
     assert {r["fold"] for r in rows} <= set(range(5))
@@ -163,7 +168,7 @@ def test_mann_whitney_matches_pairwise_definition(spark, sf_dir):
     from etl_dashboard_project_1_spark.operators import sampling
     from etl_dashboard_project_1_spark.session import load_table
 
-    r = r7.mann_whitney_value_test(spark, sf_dir).collect()[0]
+    r = experiment_queries.mann_whitney_value_test(spark, sf_dir).collect()[0]
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
@@ -187,20 +192,20 @@ def test_mann_whitney_matches_pairwise_definition(spark, sf_dir):
 
 def test_sprt_llr_recomputes_and_decisions_respect_boundaries(spark, sf_dir):
     rows = sorted(
-        r7.sprt_conversion_monitor(spark, sf_dir).collect(),
+        experiment_queries.sprt_conversion_monitor(spark, sf_dir).collect(),
         key=lambda r: r["day"],
     )
     assert rows
     cum = 0
     for r in rows:
-        cum += r["n_succ"] * r7.SPRT_L_SUCC + (
+        cum += r["n_succ"] * experiment_queries.SPRT_L_SUCC + (
             r["n_trials"] - r["n_succ"]
-        ) * r7.SPRT_L_FAIL
+        ) * experiment_queries.SPRT_L_FAIL
         assert r["llr_e6"] == cum
         want = (
             "accept_h1"
-            if cum >= r7.SPRT_A_E6
-            else ("accept_h0" if cum <= r7.SPRT_B_E6 else "continue")
+            if cum >= experiment_queries.SPRT_A_E6
+            else ("accept_h0" if cum <= experiment_queries.SPRT_B_E6 else "continue")
         )
         assert r["decision"] == want
         assert 0 <= r["n_succ"] <= r["n_trials"]
@@ -237,15 +242,15 @@ def test_rbo_extremes_on_constructed_days(spark, tmp_path):
         " value double, props string"
     ).coalesce(1).write.mode("overwrite").parquet(_os.path.join(sf, "events.parquet"))
     got = {r["day"].isoformat(): (r["n_common"], r["rbo_e6"])
-           for r in r7.rbo_leaderboard_drift(spark, sf).collect()}
-    assert got["2024-01-01"] == (10, sum(r7._RBO_C))
+           for r in timeseries_queries.rbo_leaderboard_drift(spark, sf).collect()}
+    assert got["2024-01-01"] == (10, sum(timeseries_queries._RBO_C))
     assert got["2024-01-02"] == (0, 0)
 
 
 def test_rbo_bounds_on_testdata(spark, sf_dir):
-    full = sum(r7._RBO_C)
-    for r in r7.rbo_leaderboard_drift(spark, sf_dir).collect():
-        assert 0 <= r["n_common"] <= r7.RBO_K
+    full = sum(timeseries_queries._RBO_C)
+    for r in timeseries_queries.rbo_leaderboard_drift(spark, sf_dir).collect():
+        assert 0 <= r["n_common"] <= timeseries_queries.RBO_K
         assert 0 <= r["rbo_e6"] <= full
 
 
@@ -261,7 +266,7 @@ def test_cuped_theta_and_adjustment_recompute(spark, sf_dir):
     from etl_dashboard_project_1_spark.operators import sampling
     from etl_dashboard_project_1_spark.session import load_table
 
-    rows = {r["cohort"]: r for r in r7.cuped_adjusted_ab(spark, sf_dir).collect()}
+    rows = {r["cohort"]: r for r in experiment_queries.cuped_adjusted_ab(spark, sf_dir).collect()}
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(

@@ -76,7 +76,7 @@ def test_logrank_terms_match_hand_computation(spark):
     match cannot catch a formula slip mirrored into both engines)."""
     import math
 
-    from etl_dashboard_project_1_spark.plans.round11_queries import (
+    from etl_dashboard_project_1_spark.plans.experiment_queries import (
         LOGRANK_CENSOR_DAYS,
         logrank_survival_test,
     )
@@ -139,7 +139,7 @@ def test_kruskal_hand_oracle(spark, tmp_path):
     textbook example that caught the mirrored /4 slip)."""
     import duckdb
 
-    from etl_dashboard_project_1_spark.plans.round12_queries import (
+    from etl_dashboard_project_1_spark.plans.experiment_queries import (
         kruskal_wallis_value_by_type,
     )
 
@@ -214,7 +214,7 @@ def test_cochran_armitage_matches_textbook_conditional_form(spark):
 
     import duckdb
 
-    from etl_dashboard_project_1_spark.plans.round14_queries import (
+    from etl_dashboard_project_1_spark.plans.experiment_queries import (
         cochran_armitage_trend,
     )
 

@@ -14,7 +14,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from etl_dashboard_project_1_spark.plans.round15_queries import (
+from etl_dashboard_project_1_spark.plans.experiment_queries import (
     BH_ALPHA_E6,
     bh_fdr_keep_set,
 )
@@ -164,7 +164,7 @@ def test_bh_degenerate_zero_variance_family_is_empty(spark, tmp_path):
 
 
 def test_bh_z2_e6_int64_bound_is_null_not_saturated(spark, tmp_path):
-    """Pins the r10 ADVICE fix (round15_queries.py z2_e6): valid
+    """Pins the r10 ADVICE fix (bh_fdr_keep_set z2_e6): valid
     low-variance/large-separation balances push 1e6·z² past int64,
     where Spark's floor(double)→BIGINT used to SILENTLY SATURATE to
     9223372036854775807 while the DuckDB oracle raised
@@ -210,7 +210,7 @@ def test_theilsen_exact_floor_division_and_int64_bound(spark, tmp_path):
     floor(double)→long saturation."""
     import duckdb
 
-    from etl_dashboard_project_1_spark.plans.round8_queries import (
+    from etl_dashboard_project_1_spark.plans.timeseries_queries import (
         theil_sen_trend,
     )
 

@@ -447,10 +447,12 @@ SWEEP_GATES = [
     # NOT YET GATED: --longtext (tools/tiny_sweep.py LONGTEXT, ~218k-char
     # docs) is an instrumented MANUAL axis — its runs caught and fixed
     # live O(len²) classes (boilerplate strip, span dedup, the shingle
-    # oracle CTE), but other quadratic gram builders remain in
-    # operators/textops and operators/dedup, so the full registry does
-    # not yet complete in bounded time under it. Staging status is
-    # documented at tools/tiny_sweep.py LONGTEXT.
+    # oracle CTE). Every word k-gram builder now goes through the linear
+    # dedup.gram_fold; the per-document builder still quadratic in
+    # document length is textops.repetition_signals (a filter over the
+    # token array per distinct token, in the text_repetition query),
+    # so the full registry does not yet complete in bounded time under
+    # it. Staging status is documented at tools/tiny_sweep.py LONGTEXT.
 ]
 
 #: r8 upgrade (r7 verdict item 4): the adjudicated cross-engine

@@ -5,6 +5,8 @@ the events parquet with a memory sink."""
 import os
 import sys
 
+import pyarrow as pa
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_dashboard_project_1_spark.session import load_table
@@ -131,10 +133,12 @@ def test_foreach_batch_upsert_latest_wins(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        [(1, 1, "old"), (1, 2, "new"), (2, 7, "only")], ["k", "version", "payload"]
-    ).coalesce(1).write.parquet(src)  # one file -> one micro-batch
+    src, files = _stage_files(
+        tmp_path,
+        [[(1, 1, "old"), (1, 2, "new"), (2, 7, "only")]],
+        [("k", "int64"), ("version", "int64"), ("payload", "string")],
+    )
+    _land(src, files[0])  # one file -> one micro-batch
     schema = T.StructType([
         T.StructField("k", T.LongType()),
         T.StructField("version", T.LongType()),
@@ -157,21 +161,19 @@ def test_foreach_batch_upsert_max_order_out_of_order_batches(spark, tmp_path):
     files with maxFilesPerTrigger=1 force two out-of-order batches."""
     from pyspark.sql import types as T
 
-    src = str(tmp_path / "src")
     schema = T.StructType([
         T.StructField("k", T.LongType()),
         T.StructField("version", T.LongType()),
         T.StructField("seq", T.LongType()),
         T.StructField("payload", T.StringType()),
     ])
-    # batch files named so the file source lists b1 before b2
-    spark.createDataFrame(
-        [(1, 5, 10, "newer"), (2, 3, 20, "tie-low")], schema
-    ).coalesce(1).write.parquet(src + "/b1=a")
-    spark.createDataFrame(
+    # staged mtimes ascend, so the file source takes b0 before b1
+    src, files = _stage_files(tmp_path, [
+        [(1, 5, 10, "newer"), (2, 3, 20, "tie-low")],
         [(1, 4, 11, "stale"), (2, 3, 21, "tie-high"), (3, 1, 30, "fresh-key")],
-        schema,
-    ).coalesce(1).write.parquet(src + "/b1=b")
+    ])
+    for path in files:
+        _land(src, path)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -547,7 +549,6 @@ def test_foreach_batch_stats_merge_multi_batch_equals_batch(spark, tmp_path):
     through the incremental stats sink must equal the one-shot batch
     aggregation of the union — monoid merge makes the final table
     independent of batching."""
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     schema = T.StructType([
@@ -555,18 +556,11 @@ def test_foreach_batch_stats_merge_multi_batch_equals_batch(spark, tmp_path):
         T.StructField("ts", T.TimestampType()),
         T.StructField("value", T.DoubleType()),
     ])
-    src = str(tmp_path / "src")
     rows_b1 = [("click", "2024-01-02 10:00:00", 2.50), ("view", "2024-01-02 11:00:00", 0.75)]
     rows_b2 = [("click", "2024-01-01 09:00:00", 1.25), ("error", "2024-01-03 08:00:00", None)]
-
-    def write(rows, sub):
-        df = spark.createDataFrame(rows, ["event_type", "ts", "value"]).withColumn(
-            "ts", F.to_timestamp("ts")
-        )
-        df.coalesce(1).write.parquet(src + sub)
-
-    write(rows_b1, "/b=a")
-    write(rows_b2, "/b=b")
+    src, files = _stage_files(tmp_path, [_utc(rows_b1), _utc(rows_b2)], _EVENT_ARROW)
+    for path in files:
+        _land(src, path)
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
     target = str(tmp_path / "tgt")
     q = jobs.foreach_batch_stats_merge(stream, target)
@@ -658,7 +652,6 @@ def test_stats_merge_recovers_mid_swap_crash(spark, tmp_path):
     file merges instead of being mistaken for a replay."""
     import os
 
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     schema = T.StructType([
@@ -666,22 +659,19 @@ def test_stats_merge_recovers_mid_swap_crash(spark, tmp_path):
         T.StructField("ts", T.TimestampType()),
         T.StructField("value", T.DoubleType()),
     ])
-    src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     target = str(tmp_path / "tgt")
-
-    def add_file(rows, sub):
-        spark.createDataFrame(rows, ["event_type", "ts", "value"]).withColumn(
-            "ts", F.to_timestamp("ts")
-        ).coalesce(1).write.parquet(src + sub)
-
-    add_file([("click", "2024-01-01 10:00:00", 1.00)], "/b=a")
+    src, files = _stage_files(tmp_path, [
+        _utc([("click", "2024-01-01 10:00:00", 1.00)]),
+        _utc([("click", "2024-01-02 10:00:00", 2.00)]),
+    ], _EVENT_ARROW)
+    _land(src, files[0])
     jobs.foreach_batch_stats_merge(
         spark.readStream.schema(schema).parquet(src), target, checkpoint_dir=ckpt
     ).stop()
     # simulate the crash window: target moved aside, promotion never happened
     os.rename(target, target + "__old")
-    add_file([("click", "2024-01-02 10:00:00", 2.00)], "/b=b")
+    _land(src, files[1])
     jobs.foreach_batch_stats_merge(
         spark.readStream.schema(schema).parquet(src), target, checkpoint_dir=ckpt
     ).stop()
@@ -705,16 +695,13 @@ def test_stats_merge_replayed_batch_id_is_noop(spark, tmp_path):
         T.StructField("ts", T.TimestampType()),
         T.StructField("value", T.DoubleType()),
     ])
-    src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     target = str(tmp_path / "tgt")
-
-    def add_file(rows, sub):
-        spark.createDataFrame(rows, ["event_type", "ts", "value"]).withColumn(
-            "ts", F.to_timestamp("ts")
-        ).coalesce(1).write.parquet(src + sub)
-
-    add_file([("click", "2024-01-01 10:00:00", 1.00)], "/b=a")
+    src, files = _stage_files(tmp_path, [
+        _utc([("click", "2024-01-01 10:00:00", 1.00)]),
+        _utc([("click", "2024-01-02 10:00:00", 2.00)]),
+    ], _EVENT_ARROW)
+    _land(src, files[0])
     jobs.foreach_batch_stats_merge(
         spark.readStream.schema(schema).parquet(src), target, checkpoint_dir=ckpt
     ).stop()
@@ -731,7 +718,7 @@ def test_stats_merge_replayed_batch_id_is_noop(spark, tmp_path):
     os.rename(tmp_out, target)
     before = {r["event_type"]: (r["n_events"], r["sum_value_cents"])
               for r in spark.read.parquet(target).collect()}
-    add_file([("click", "2024-01-02 10:00:00", 2.00)], "/b=b")
+    _land(src, files[1])
     jobs.foreach_batch_stats_merge(
         spark.readStream.schema(schema).parquet(src), target, checkpoint_dir=ckpt
     ).stop()
@@ -858,22 +845,45 @@ _KV_SCHEMA = "k bigint, version bigint, seq bigint, payload string"
 _KV_ARROW = [("k", "int64"), ("version", "int64"), ("seq", "int64"), ("payload", "string")]
 
 
+#: the events columns Spark stages for the stats-merge sink (TimestampType
+#: is a UTC-adjusted microsecond timestamp in parquet)
+_EVENT_ARROW = [("event_type", "string"), ("ts", pa.timestamp("us", tz="UTC")), ("value", "double")]
+
+
+def _utc(rows):
+    """``(event_type, "YYYY-mm-dd HH:MM:SS", value)`` rows with ``ts`` as
+    a UTC datetime (the session time zone)."""
+    import datetime as dt
+
+    return [
+        (e, dt.datetime.strptime(ts, "%Y-%m-%d %H:%M:%S").replace(tzinfo=dt.timezone.utc), v)
+        for e, ts, v in rows
+    ]
+
+
 def _stage_files(tmp_path, batches, fields=_KV_ARROW):
     """One parquet file per list of rows (``(k, version, seq, payload)``
     by default), staged outside the source directory; returns
-    ``(src, files)``. A file renamed into ``src`` is the next micro-batch."""
-    import pyarrow as pa
+    ``(src, files)``. A file renamed into ``src`` is the next micro-batch;
+    files landed together are taken in staging order (their mtimes
+    ascend one second apart)."""
+    import time
+
     import pyarrow.parquet as pq
 
     src, staged = tmp_path / "src", tmp_path / "staged"
     src.mkdir()
     staged.mkdir()
-    schema = pa.schema([(name, pa.type_for_alias(t)) for name, t in fields])
+    schema = pa.schema(
+        [(name, pa.type_for_alias(t) if isinstance(t, str) else t) for name, t in fields]
+    )
+    t0 = time.time_ns() - len(batches) * 10**9
     files = []
     for i, rows in enumerate(batches):
         files.append(str(staged / f"b{i}.parquet"))
         pq.write_table(pa.Table.from_pylist(
             [dict(zip(schema.names, r)) for r in rows], schema), files[-1])
+        os.utime(files[-1], ns=(t0 + i * 10**9, t0 + i * 10**9))
     return str(src), files
 
 
