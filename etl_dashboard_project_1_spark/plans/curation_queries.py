@@ -22,7 +22,7 @@ from ..operators import dedup, textops, vector
 from ..operators.dedup import md5_int
 from ..operators.derive import CENTS_SQL, cents
 from ..session import fan_out, load_table
-from .extension_queries import COS_SQL, DEDUP_CLUSTERS_SQL
+from .extension_queries import COS_SQL, DEDUP_CLUSTERS_SQL, JACCARD_CTE
 
 SPAN_K = 4  # tokens per non-overlapping span window
 
@@ -494,7 +494,6 @@ def kmv_weekly_merge_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one distinct shuffle, day- and week-keyed windows on
     the distinct table, all joins on the ~|weeks| result."""
     from ..operators import derive
-    from ..operators.dedup import md5_int
 
     k = 128
     ev = load_table(spark, sf_dir, "events")
@@ -951,8 +950,6 @@ def dedup_verdict_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_verdict_sql() -> str:
-    from .extension_queries import JACCARD_CTE
-
     jac_ctes = JACCARD_CTE[len("WITH ") :]
     return f"""
 WITH {jac_ctes},

@@ -153,9 +153,7 @@ def bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep = base.select(
         "_eid", "_v", F.explode(F.sequence(F.lit(0), F.lit(BOOT_B - 1))).alias("_r")
     )
-    from ..operators import dedup
-
-    u = dedup.md5_int(
+    u = md5_int(
         F.concat(F.col("_eid"), F.lit(":"), F.col("_r").cast("string"), F.lit(":boot"))
     ) % F.lit(2**30)
     w = sum(
@@ -264,8 +262,6 @@ def conformal_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; q̂'s running sum operates on the distinct-residual-cents
     domain (price-range-bounded, the ks_value_drift_gate justification);
     test coverage is one aggregate against the 1-row broadcast q̂."""
-    from ..operators import dedup, sampling
-
     ev = load_table(spark, sf_dir, "events").filter(
         (F.col("event_type") == "purchase")
         & F.col("value").isNotNull()
@@ -274,7 +270,7 @@ def conformal_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ev.select(
         "event_type",
         cents("value").alias("_v"),
-        sampling.hash_bucket(F.col("user_id"), "conf", 4).alias("_b"),
+        hash_bucket(F.col("user_id"), "conf", 4).alias("_b"),
     )
     train = base.filter(F.col("_b") <= 1)
     model = train.groupBy("event_type").agg(
@@ -396,9 +392,6 @@ def mann_whitney_value_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one groupBy to the distinct-cents VALUE DOMAIN
     (price-range-bounded, the ks_value_drift_gate justification); the
     cumulative window runs over that domain, never the events."""
-    from ..operators import sampling
-    from ..operators.derive import cents
-
     # NULL values cannot be ranked and NULL user ids cannot be assigned
     # a cohort — both excluded in BOTH engines (review finding: a NULL
     # value group would sort NULLS FIRST in Spark / NULLS LAST in
@@ -411,7 +404,7 @@ def mann_whitney_value_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = ev.select(
         cents("value").alias("v"),
-        (sampling.hash_bucket(F.col("user_id"), "mw", 2) == 0).alias("_a"),
+        (hash_bucket(F.col("user_id"), "mw", 2) == 0).alias("_a"),
     )
     per_v = g.groupBy("v").agg(
         F.sum(F.when(F.col("_a"), 1).otherwise(0)).alias("na"),
@@ -612,8 +605,6 @@ def cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE shuffle to the per-user frame; the pooled moments
     are a 1-row broadcast; cohorts are a 2-row aggregate. Nothing else
     moves."""
-    from ..operators import sampling
-
     ev = load_table(spark, sf_dir, "events").filter(
         (F.col("event_type") == "purchase")
         & F.col("value").isNotNull()
@@ -628,7 +619,7 @@ def cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.to_date("ts") >= F.lit(CUPED_CUTOFF), cents).otherwise(0)
         ).alias("_post"),
     ).withColumn(
-        "_g", sampling.hash_bucket(F.col("user_id"), "cuped", 2).cast("long")
+        "_g", hash_bucket(F.col("user_id"), "cuped", 2).cast("long")
     )
     mom = per_user.agg(
         F.count(F.lit(1)).alias("_n"),
@@ -1354,7 +1345,6 @@ def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(0)
         ).alias("_conv")
     )
-    from ..operators.sampling import hash_bucket
 
     arms = users.withColumn("_arm", hash_bucket(F.col("user_id"), "ab") % 2)
     stats = arms.agg(
@@ -1459,7 +1449,6 @@ def ab_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user-keyed aggregate, one 2-row-per-covariate
     roll-up — output is |covariates| rows regardless of corpus size."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    from ..operators.sampling import hash_bucket
 
     users = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("_nev"),
@@ -1591,8 +1580,6 @@ def logrank_survival_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1-row corpus-end anchor broadcast (whitelisted — the
     survival_hazard_daily shape); all windows run on the
     calendar-bounded distinct-duration frame."""
-    from ..operators.sampling import hash_bucket
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     users = ev.groupBy("user_id").agg(
         F.min(F.to_date("ts")).alias("_first"),

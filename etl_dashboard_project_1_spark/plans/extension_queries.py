@@ -736,7 +736,6 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     vb = emb.select(
         "vec_id", vector.as_double_vec("embedding").alias("_v")
     ).withColumn("_b", vector.hyperplane_signs(F.col("_v"), dim, 4))
-    from pyspark.sql import Window
 
     w = Window.partitionBy("qid").orderBy(F.desc("_cos"), F.asc("vec_id"))
     ann = (
@@ -1123,8 +1122,6 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold → per-source kept counts. Catalyst fuses the three scoring
     expressions into one scan projection; the only shuffles are the
     fingerprint window and the final small groupBy."""
-    from pyspark.sql import Window
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     scored = docs.select(
         "doc_id",
@@ -1301,8 +1298,6 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     four stage counts are conditional sums over ONE scan (the same
     single-pass shape as the DQ rule engine) — the monitoring view a
     curation run emits alongside its output."""
-    from pyspark.sql import Window
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     scored = docs.select(
         "doc_id",
@@ -1657,7 +1652,6 @@ def hybrid_retrieval_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter = F.size(F.array_intersect("_qt", "_ct")).cast("double")
     union = (F.size("_qt") + F.size("_ct")).cast("double") - inter
     hybrid = 0.7 * F.col("cosine") + 0.3 * (inter / union)
-    from pyspark.sql import Window
 
     w = Window.partitionBy("qid").orderBy(F.desc("_h"), F.asc("vec_id"))
     qcand = qt.join(F.broadcast(cand), "qid")  # docs scan 1: query tokens
@@ -1794,7 +1788,6 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.coalesce(1.0 / (60 + F.col("_rs")), F.lit(0.0))
         ).alias("_rrf"),
     )
-    from pyspark.sql import Window
 
     w = Window.partitionBy("qid").orderBy(F.desc("_rrf"), F.asc("doc_id"))
     return (
@@ -2003,7 +1996,6 @@ def quality_logit_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("_y").cast("long").alias("_pos"),
         F.sum(1 - F.col("_y")).cast("long").alias("_neg"),
     )
-    from pyspark.sql import Window
 
     w = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
     cum = hist.withColumn("_nb", F.coalesce(F.sum("_neg").over(w), F.lit(0)))
@@ -2106,8 +2098,6 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     then one doc-keyed aggregate. The 0/1 mean is a sum of exact small
     integers in double space, so it is order-independent cross-engine.
     """
-    from pyspark.sql import Window
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     grams = docs.select(
         "doc_id", F.explode(dedup.word_shingles("text", 3)).alias("_g")
@@ -2331,8 +2321,6 @@ def vocab_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition global sort, so the vocabulary can be arbitrarily
     large. The encode join is token-keyed; per-doc reassembly sorts the
     (position, id) pairs inside one doc-keyed aggregate."""
-    from ..operators import layout
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     tok = docs.select(
         "doc_id", F.posexplode(dedup.tokens("text")).alias("pos", "_t")
@@ -2397,8 +2385,6 @@ def vocab_roundtrip_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``vocab_encode_docs``; the decode direction is one more token-keyed
     equi-join (id → token), and both reassemblies are per-doc aggregates
     — nothing beyond the encode query's shuffle budget."""
-    from ..operators import layout
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     tok = docs.select(
         "doc_id", F.posexplode(dedup.tokens("text")).alias("pos", "_t")
@@ -2515,7 +2501,6 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tokens_saved")
         )
     )
-    from pyspark.sql import Window
 
     rank_w = Window.orderBy(F.col("pair_count").desc(), "pair")  # 10-row result
     return (
@@ -3194,8 +3179,6 @@ def retrieval_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed partial top-k); relevance attaches by broadcasting the
     ranked list against the corpus label projection; the metric
     aggregate groups |Q| rows."""
-    from ..operators import vector
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     top = vector.cosine_topk_batch(
@@ -3315,9 +3298,6 @@ def ann_ivf_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     probing is an equi-join on the cell id (cost ∝ n_probe/C of the
     corpus per query); the exact baseline rides cosine_topk_batch's
     bucketed one-scan top-k. Nothing quadratic, nothing driver-side."""
-    from ..operators import vector
-    from ..session import fan_out
-
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
     corp = emb.select(
         "vec_id", vector.as_double_vec("embedding").alias("_v")
@@ -3551,9 +3531,6 @@ def reciprocal_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed ONLY for the ≤64 winning b's (equi-join pulls their
     vectors, then a 64×64 broadcast cross) — never corpus×A. Output is
     ≤64 rows."""
-    from ..operators import dedup, vector
-    from ..session import fan_out
-
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
     a_side = (
         emb.withColumn(
@@ -4026,8 +4003,6 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 256-cell table. At 100 TB the sketch build is the cheap
     pass; the exact side exists because this is the GATE form (the
     production form is the sketch alone)."""
-    from ..operators.dedup import md5_int
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     rows = spark.range(0, CMS_DEPTH).select(F.col("id").cast("int").alias("_i"))
     hashed = ev.join(F.broadcast(rows)).select(
@@ -4303,8 +4278,6 @@ def langid_kappa_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one corpus scan into the ≤|langs|²-row confusion
     frame; every window/aggregate after that is confusion-frame-sized."""
-    from ..operators import textops
-
     # NULL text cannot be scored: Spark detect_language maps it to
     # 'und' while the SQL mirror's CASE would fall through NULL ratios
     # to its ELSE branch — excluded in BOTH engines (review catch; the
@@ -4355,7 +4328,6 @@ def langid_kappa_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _langid_kappa_sql() -> str:
-    from ..operators import textops
     return rf"""
 WITH r AS (
   SELECT lang,

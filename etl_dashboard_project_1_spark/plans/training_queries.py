@@ -41,7 +41,14 @@ from ..operators.derive import CENTS_SQL, cents
 from ..operators.sampling import hash_bucket
 from ..session import fan_out, load_table
 from .experiment_queries import GSQ_CONV_MIN as BRIER_CONV_MIN
-from .extension_queries import EMB_BANDS_SQL, JACCARD_CTE, quality_logit, ratio_sql
+from .extension_queries import (
+    EMB_BANDS_SQL,
+    JACCARD_CTE,
+    TEXT_QUALITY_SQL,
+    quality_logit,
+    ratio_sql,
+    text_quality,
+)
 
 MD5_BIGINT = "(('0x' || substr(md5({expr}), 1, 8))::BIGINT)"
 
@@ -340,16 +347,14 @@ def dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: the exact all-pairs ground truth is the expensive side
     and exists FOR the eval (run on a sample at corpus scale); the
     production path stays the banded pipeline being evaluated."""
-    from ..operators import dedup as _dedup
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    truth = _dedup.ngram_jaccard_pairs(
+    truth = dedup.ngram_jaccard_pairs(
         docs, "doc_id", "text", k=3, threshold=0.2, method="allpairs"
     ).select(
         "id_a", "id_b",
         F.floor(F.col("jaccard") * 10000 + F.lit(0.5)).cast("long").alias("_jx"),
     )
-    caught = _dedup.minhash_lsh_pairs(
+    caught = dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", k=3, num_hashes=8, band_size=2,
         threshold=0.2, hashed=False,
     ).select("id_a", "id_b", F.lit(1).alias("_c"))
@@ -424,10 +429,6 @@ def quality_tier_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     inventory aggregate all run on that compressed table. The global
     window orders ≤10k histogram rows — bounded by the score space,
     never row count."""
-    from pyspark.sql import Window
-
-    from .extension_queries import text_quality
-
     q = text_quality(spark, sf_dir).select(
         "doc_id",
         "n_tokens",
@@ -467,8 +468,6 @@ def quality_tier_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quality_tier_sql() -> str:
-    from .extension_queries import TEXT_QUALITY_SQL
-
     return f"""
 WITH q AS ({TEXT_QUALITY_SQL}),
 base AS (
@@ -741,9 +740,6 @@ def score_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     NO single-partition sort); the grand totals attach as a broadcast
     1-row frame; every downstream window runs on the 10-row decile
     frame."""
-    from ..operators import layout
-    from ..session import fan_out
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     scored = docs.select(
         "doc_id",
@@ -850,8 +846,6 @@ def threshold_sweep_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 7-threshold grid attaches to that bounded frame with a broadcast
     nested-loop (config-sized side, the house scalar-subquery form) —
     the corpus is scanned ONCE for all thresholds."""
-    from ..session import fan_out
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     hist = (
         docs.select(
@@ -948,8 +942,6 @@ def class_weight_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one groupBy to the |langs|-row frame; totals attach via
     an unpartitioned window over that domain-bounded frame (the house
     bounded-aggregate-window form) — the corpus shuffles once."""
-    from ..session import fan_out
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     per = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("_n"))
     w_all = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)

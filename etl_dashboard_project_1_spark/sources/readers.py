@@ -10,7 +10,6 @@ control flow — try-primary → fallback-source — preserved and testable.
 from __future__ import annotations
 
 import json
-import os
 from pathlib import Path
 from typing import Callable
 
