@@ -14,11 +14,7 @@ real regression from noise):
     broadcast pool, Arrow allocators — amortized on a real cluster),
   * N_PASSES timed passes INTERLEAVED over the whole query list (a load
     spike hits one pass of many queries, not every rep of one query),
-  * per-query "spread" [min, median, max] across passes in the output,
-  * "extra" timings for alternate operator forms that are NOT part of
-    the headline total (dedup_minhash_lsh hashed=True — the operator's
-    scale default; the registered bench form is the measured-fastest
-    local form, hashed=False — see plans/extension_queries.py).
+  * per-query "spread" [min, median, max] across passes in the output.
 "value" remains sum of per-query minimums over the same 15 queries, so
 totals stay comparable with BENCH_r01..r03.
 """
@@ -65,27 +61,6 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _extra_queries(spark, sf_dir):
-    """Alternate forms measured but excluded from the headline total."""
-    from pyspark.sql import functions as F
-
-    from etl_dashboard_project_1_spark.operators import dedup, derive
-    from etl_dashboard_project_1_spark.session import fan_out, load_table
-
-    def minhash_hashed(spark, sf_dir):
-        docs = fan_out(load_table(spark, sf_dir, "documents"))
-        pairs = dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", k=3, num_hashes=8, band_size=2,
-            threshold=0.2, reuse="checkpoint", hashed=True,
-            broadcast_candidates=True,
-        )
-        return pairs.select(
-            "id_a", "id_b", derive.portable_round(F.col("jaccard"), 4).alias("jaccard")
-        )
-
-    return {"dedup_minhash_lsh_hashed": minhash_hashed}
-
-
 def main() -> None:
     m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else None
@@ -109,25 +84,17 @@ def main() -> None:
     )
 
     registry = entrymod.queries()
-    extras = _extra_queries(spark, SF_DIR)
 
-    # warmup: every query (headline + extras) once, untimed
+    # warmup: every headline query once, untimed
     for name in HEADLINE:
         force(registry[name](spark, SF_DIR))
-    for fn in extras.values():
-        force(fn(spark, SF_DIR))
 
     samples: dict[str, list[float]] = {n: [] for n in HEADLINE}
-    extra_samples: dict[str, list[float]] = {n: [] for n in extras}
     for _ in range(N_PASSES):
         for name in HEADLINE:
             t0 = time.perf_counter()
             force(registry[name](spark, SF_DIR))
             samples[name].append(time.perf_counter() - t0)
-        for name, fn in extras.items():
-            t0 = time.perf_counter()
-            force(fn(spark, SF_DIR))
-            extra_samples[name].append(time.perf_counter() - t0)
 
     timings = {n: round(min(v), 3) for n, v in samples.items()}
     spread = {
@@ -145,7 +112,6 @@ def main() -> None:
                 "sf": sf,
                 "passes": N_PASSES,
                 "spread": spread,
-                "extra": {n: round(min(v), 3) for n, v in extra_samples.items()},
             }
         )
     )

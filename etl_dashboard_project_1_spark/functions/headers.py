@@ -33,7 +33,7 @@ MAX_TERMS = 10
 MIN_NAME_LEN = 3
 
 
-def _ascii_fold(text: str) -> str:
+def ascii_fold(text: str) -> str:
     """Accent strip via NFD decomposition (stdlib; no external deps)."""
     return "".join(
         ch for ch in unicodedata.normalize("NFD", text) if not unicodedata.combining(ch)
@@ -45,28 +45,23 @@ def _load_vocab() -> dict:
         return json.load(f)
 
 
-class HeaderCanonicalizer:
-    """Rule-driven canonical-name generator with a persistent hash cache."""
+class HeaderCatalog:
+    """The persistent header catalog both standardizers share (this rules
+    engine and ``llm_headers.LLMHeaderStandardizer``): canonical name ->
+    {"original_names": [...], "hashes": [...]}, keyed for lookup by the
+    sha256[:12] of the raw header, so the two engines are drop-in
+    alternatives over one JSON file. A miss admits the generated name,
+    suffixed ``_1, _2, …`` on collision, and saves the file when one is
+    configured."""
 
     def __init__(self, catalog_file: str | Path | None = None):
-        v = _load_vocab()
-        self.priority_terms = set(v["priority_terms"])
-        # fallback unit scan walks the list in declaration order — when a
-        # header contains several plausible units (e.g. "kg/100 km" has
-        # both kg and km) the earlier one wins; declaration order is what
-        # reproduces the golden catalog
-        self.measure_units = list(v["measure_units"])
-        self.special_abbreviations = [tuple(p) for p in v["special_abbreviations"]]
-        self.word_abbreviations = dict(v["word_abbreviations"])
-        self.remove_patterns = [re.compile(p) for p in v["remove_patterns"]]
-        self.stopwords = set(v["stopwords"])
         self.catalog_file = Path(catalog_file) if catalog_file else None
         self.catalog: dict[str, dict] = {}
         self._hash_index: dict[str, str] = {}
         if self.catalog_file is not None and self.catalog_file.exists():
             self.load_catalog(self.catalog_file)
 
-    # -- catalog persistence (F4 format; reads both old and new shapes) ----
+    # -- persistence (F4 format; reads both old and new shapes) -----------
 
     def load_catalog(self, path: str | Path) -> None:
         with open(path, encoding="utf-8") as f:
@@ -80,7 +75,9 @@ class HeaderCanonicalizer:
             if isinstance(hashes, str):
                 hashes = [hashes]
             self.catalog[std] = {"original_names": list(originals), "hashes": list(hashes)}
-        self._rebuild_hash_index()
+        self._hash_index = {
+            h: std for std, info in self.catalog.items() for h in info["hashes"]
+        }
 
     def save_catalog(self, path: str | Path | None = None) -> None:
         target = Path(path) if path else self.catalog_file
@@ -89,23 +86,72 @@ class HeaderCanonicalizer:
         with open(target, "w", encoding="utf-8") as f:
             json.dump(self.catalog, f, indent=2, ensure_ascii=False)
 
-    def _rebuild_hash_index(self) -> None:
-        self._hash_index = {
-            h: std for std, info in self.catalog.items() for h in info["hashes"]
-        }
-
-    # -- H1-H6: the name generator ----------------------------------------
+    # -- H7: hash-cache lookup and collision-suffixed admission -----------
 
     @staticmethod
     def header_hash(text: str) -> str:
         return hashlib.sha256(text.encode("utf-8")).hexdigest()[:HASH_LEN]
+
+    def lookup(self, original: str) -> str | None:
+        """The cached canonical name of ``original``, or None."""
+        return self._hash_index.get(self.header_hash(original))
+
+    def _admit(self, original: str, generated: str) -> str:
+        """Collision-suffix ``generated`` and record it in the catalog."""
+        base, name, n = generated, generated, 1
+        while name in self.catalog:
+            name = f"{base}_{n}"
+            n += 1
+        h = self.header_hash(original)
+        self.catalog[name] = {"original_names": [original], "hashes": [h]}
+        self._hash_index[h] = name
+        return name
+
+    def _cached(self, original: str, generate) -> str:
+        """Cache hit, else admit ``generate(original)`` and save."""
+        hit = self.lookup(original)
+        if hit is not None:
+            return hit
+        name = self._admit(original, generate(original))
+        if self.catalog_file is not None:
+            self.save_catalog()
+        return name
+
+    def catalog_rows(self) -> list[tuple[str, str, str]]:
+        """K6: explode the catalog to (standard, original, hash) rows for
+        audit export."""
+        return [
+            (std, orig, h)
+            for std, info in self.catalog.items()
+            for orig, h in zip(info["original_names"], info["hashes"])
+        ]
+
+
+class HeaderCanonicalizer(HeaderCatalog):
+    """Rule-driven canonical-name generator over the shared catalog."""
+
+    def __init__(self, catalog_file: str | Path | None = None):
+        v = _load_vocab()
+        self.priority_terms = set(v["priority_terms"])
+        # fallback unit scan walks the list in declaration order — when a
+        # header contains several plausible units (e.g. "kg/100 km" has
+        # both kg and km) the earlier one wins; declaration order is what
+        # reproduces the golden catalog
+        self.measure_units = list(v["measure_units"])
+        self.special_abbreviations = [tuple(p) for p in v["special_abbreviations"]]
+        self.word_abbreviations = dict(v["word_abbreviations"])
+        self.remove_patterns = [re.compile(p) for p in v["remove_patterns"]]
+        self.stopwords = set(v["stopwords"])
+        super().__init__(catalog_file)
+
+    # -- H1-H6: the name generator ----------------------------------------
 
     def normalize(self, text: str) -> str:
         """H1: lowercase, strip noise patterns, fold accents, collapse ws."""
         out = text.lower()
         for pat in self.remove_patterns:
             out = pat.sub(" ", out)
-        out = _ascii_fold(out)
+        out = ascii_fold(out)
         return " ".join(out.split())
 
     def extract_unit(self, original: str) -> str | None:
@@ -166,35 +212,13 @@ class HeaderCanonicalizer:
             name = f"col_{self.header_hash(original)[:8]}"
         return name.upper()
 
-    # -- H7/H8: cache + collision suffixing + batch ------------------------
+    # -- H7/H8: cached standardization + batch ---------------------------
 
     def standardize(self, original: str) -> str:
         """H7: hash-cache lookup; on miss generate, suffix ``_1, _2, …`` on
         name collision, record in the catalog."""
-        h = self.header_hash(original)
-        hit = self._hash_index.get(h)
-        if hit is not None:
-            return hit
-        name = self.canonical_name(original)
-        base, n = name, 1
-        while name in self.catalog:
-            name = f"{base}_{n}"
-            n += 1
-        self.catalog[name] = {"original_names": [original], "hashes": [h]}
-        self._hash_index[h] = name
-        if self.catalog_file is not None:
-            self.save_catalog()
-        return name
+        return self._cached(original, self.canonical_name)
 
     def standardize_all(self, headers: list[str]) -> dict[str, str]:
         """H8: fold the cache-aware standardizer over a header list."""
         return {h: self.standardize(h) for h in headers}
-
-    def catalog_rows(self) -> list[tuple[str, str, str]]:
-        """K6: explode the catalog to (standard, original, hash) rows for
-        audit export."""
-        return [
-            (std, orig, h)
-            for std, info in self.catalog.items()
-            for orig, h in zip(info["original_names"], info["hashes"])
-        ]

@@ -25,20 +25,11 @@ collision ordering) stays on the driver.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import re
-import unicodedata
 from pathlib import Path
 from typing import Callable, Iterable
 
-HASH_LEN = 12  # reference: hash_length=12 (header_standarizer_llm.py:53)
-
-
-def _ascii_fold(text: str) -> str:
-    return "".join(
-        ch for ch in unicodedata.normalize("NFD", text) if not unicodedata.combining(ch)
-    )
+from .headers import HeaderCatalog, ascii_fold
 
 
 class FakeSeq2Seq:
@@ -53,7 +44,7 @@ class FakeSeq2Seq:
         self.max_words = max_words
 
     def __call__(self, header: str) -> str:
-        folded = _ascii_fold(header)
+        folded = ascii_fold(header)
         words = re.findall(r"[A-Za-z0-9]+", folded)
         return "_".join(w.upper() for w in words[: self.max_words])
 
@@ -135,7 +126,7 @@ class Seq2SeqModel:
         return tok.decode(out[0], skip_special_tokens=True)
 
 
-class LLMHeaderStandardizer:
+class LLMHeaderStandardizer(HeaderCatalog):
     """Model-backed standardizer behind the shared hash cache.
 
     Mirrors the reference class surface (header_standarizer_llm.py):
@@ -144,9 +135,10 @@ class LLMHeaderStandardizer:
     last line/colon segment → sanitize to ``[A-Za-z0-9_]`` → collapse
     underscores → ``col_<hash8>`` fallback when degenerate,
     header_standarizer_llm.py:144-159) and identical collision suffixing
-    (``_1, _2, …``, :186-190). The catalog JSON shape is the one
-    ``headers.HeaderCanonicalizer`` reads and writes, so the two engines
-    are interchangeable over one mapping file.
+    (``_1, _2, …``, :186-190). The catalog is ``headers.HeaderCatalog``,
+    the one ``headers.HeaderCanonicalizer`` uses (the reference's
+    hash_length=12 included), so the two engines are interchangeable over
+    one mapping file.
     """
 
     def __init__(
@@ -155,42 +147,9 @@ class LLMHeaderStandardizer:
         catalog_file: str | Path | None = None,
     ):
         self.model_fn = model_fn or FakeSeq2Seq()
-        self.catalog_file = Path(catalog_file) if catalog_file else None
-        self.catalog: dict[str, dict] = {}
-        self._hash_index: dict[str, str] = {}
-        if self.catalog_file is not None and self.catalog_file.exists():
-            self.load_catalog(self.catalog_file)
-
-    # -- catalog persistence (shared format with HeaderCanonicalizer) ------
-
-    def load_catalog(self, path: str | Path) -> None:
-        with open(path, encoding="utf-8") as f:
-            raw = json.load(f)
-        self.catalog = {}
-        for std, info in raw.items():
-            originals = info.get("original_names", info.get("default", []))
-            hashes = info.get("hashes", info.get("hash", []))
-            if isinstance(originals, str):
-                originals = [originals]
-            if isinstance(hashes, str):
-                hashes = [hashes]
-            self.catalog[std] = {"original_names": list(originals), "hashes": list(hashes)}
-        self._hash_index = {
-            h: std for std, info in self.catalog.items() for h in info["hashes"]
-        }
-
-    def save_catalog(self, path: str | Path | None = None) -> None:
-        target = Path(path) if path else self.catalog_file
-        if target is None:
-            raise ValueError("no catalog file configured")
-        with open(target, "w", encoding="utf-8") as f:
-            json.dump(self.catalog, f, indent=2, ensure_ascii=False)
+        super().__init__(catalog_file)
 
     # -- generation --------------------------------------------------------
-
-    @staticmethod
-    def header_hash(text: str) -> str:
-        return hashlib.sha256(text.encode("utf-8")).hexdigest()[:HASH_LEN]
 
     def _postprocess(self, raw: str, original: str) -> str:
         """Reference post-processing, header_standarizer_llm.py:144-159."""
@@ -208,36 +167,11 @@ class LLMHeaderStandardizer:
 
     # -- cache-aware standardization (reference :161-190) ------------------
 
-    def _admit(self, original: str, generated: str) -> str:
-        """Collision-suffix ``generated`` and record it in the catalog."""
-        h = self.header_hash(original)
-        base, name, counter = generated, generated, 1
-        while name in self.catalog:
-            name = f"{base}_{counter}"
-            counter += 1
-        self.catalog[name] = {"original_names": [original], "hashes": [h]}
-        self._hash_index[h] = name
-        return name
-
     def standardize_header(self, original: str) -> str:
-        h = self.header_hash(original)
-        hit = self._hash_index.get(h)
-        if hit is not None:
-            return hit
-        name = self._admit(original, self.generate_name(original))
-        if self.catalog_file is not None:
-            self.save_catalog()
-        return name
+        return self._cached(original, self.generate_name)
 
     def batch_standardize(self, headers: Iterable[str]) -> dict[str, str]:
         return {h: self.standardize_header(h) for h in headers}
-
-    def catalog_rows(self) -> list[tuple[str, str, str]]:
-        return [
-            (std, orig, h)
-            for std, info in self.catalog.items()
-            for orig, h in zip(info["original_names"], info["hashes"])
-        ]
 
 
 def generate_names_spark(spark, headers: list[str], model_fn=None):
@@ -274,10 +208,10 @@ def batch_standardize_spark(
     """Two-phase batch standardization: (1) distributed inference for the
     cache-missing headers, (2) driver-side catalog admission in a stable
     order (sorted by header) so collision suffixes are deterministic."""
-    misses = [h for h in dict.fromkeys(headers) if std.header_hash(h) not in std._hash_index]
+    misses = [h for h in dict.fromkeys(headers) if std.lookup(h) is None]
     generated = generate_names_spark(spark, misses, std.model_fn) if misses else {}
     for h in sorted(misses):
         std._admit(h, std._postprocess(generated[h], h))
     if std.catalog_file is not None and misses:
         std.save_catalog()
-    return {h: std._hash_index[std.header_hash(h)] for h in dict.fromkeys(headers)}
+    return {h: std.lookup(h) for h in dict.fromkeys(headers)}

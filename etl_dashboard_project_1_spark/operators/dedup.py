@@ -6,16 +6,17 @@ designed Spark-first for 100 TB corpora:
 
 - exact dedup        — hash-groupBy on a normalized fingerprint; fully
                        distributed, one shuffle on the hash.
-- n-gram Jaccard     — shingle explode → self-equi-join on shingle →
-                       pair aggregation. Exact but O(sum df²) — the
-                       quadratic baseline the sketches below replace.
-- MinHash + LSH      — shingle→minhash signature→banded bucket join;
-                       candidates are verified with true Jaccard. The
-                       pair-generation join is on (band, bucket-hash), so
+- n-gram Jaccard     — exact: prefix-filtered shingle join (or the naive
+                       O(sum df²) all-pairs join) → candidate verify.
+- MinHash + LSH      — shingle→minhash signature→banded bucket join, so
                        cost tracks true near-dup density, not n².
 - SimHash            — per-token hash bits weighted ±1 → fingerprint;
                        near-dups = hamming ≤ k. Banding by fingerprint
                        prefix keeps the self-join from being n².
+
+Every Jaccard pipeline verifies its candidates the same way
+(``verified_pairs``: each side's shingle set joined in by id, exact set
+intersection).
 
 All hashing is md5-derived (``conv(substr(md5(x),1,8),16,10)``) so results
 are engine-independent and reproducible in the DuckDB oracle. No UDFs —
@@ -24,7 +25,7 @@ every step is built-in expressions (codegen'd, Arrow-free).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import sqltext
@@ -92,44 +93,19 @@ def _word_array(text_col: str) -> str:
     return f"split(lower({sqltext.ident(text_col)}), '\\\\s+')"
 
 
-def _grams_or_empty(tokens: str, k: int, combine: str, elem: str) -> str:
+def _word_grams(text_col: str, k: int) -> str:
+    """SQL text: the word k-grams of a column; empty when fewer than k."""
+    w = _word_array(text_col)
     return (
-        f"CASE WHEN size({tokens}) >= {k} THEN {gram_fold(tokens, k, combine)} "
-        f"ELSE CAST(array() AS array<{elem}>) END"
+        f"CASE WHEN size({w}) >= {k} THEN {gram_fold(w, k, JOIN_WORDS)} "
+        "ELSE CAST(array() AS array<string>) END"
     )
 
 
 def word_shingles(text_col: str, k: int = 3) -> Column:
     """Distinct word k-grams ('a b c') of a column; empty array when fewer
     than k words. One parsed SQL expression (one Py4J round trip)."""
-    w = _word_array(text_col)
-    return F.expr(f"array_distinct({_grams_or_empty(w, k, JOIN_WORDS, 'string')})")
-
-
-# rolling-polynomial base for composing token hashes into gram hashes;
-# small enough that (MINHASH_PRIME-1) * SHINGLE_BASE stays well inside
-# int64 (≈4.3e15), so the per-step mod never overflows in any engine
-SHINGLE_BASE = 1_000_003
-
-
-def hashed_word_shingles(text_col: str, k: int = 3) -> Column:
-    """Distinct word k-gram HASHES as a bigint array — the gram string is
-    never materialized. Tokens are md5-hashed ONCE each; gram hashes
-    compose by rolling polynomial ``g = (g * B + h_next) % P`` over the
-    same fold ``word_shingles`` uses, swapping per-element string
-    concatenation + per-gram digests for integer arithmetic. Two 32-bit
-    gram sets collide with probability ~2⁻³² per pair — the same
-    tolerance every md5-prefix step in this module already accepts.
-
-    Equality of hashes ≡ equality of grams (modulo that collision bound),
-    so Jaccard over hash sets is Jaccard over gram sets; DuckDB mirrors
-    the composition bit-for-bit."""
-    h = (
-        f"transform({_word_array(text_col)}, "
-        "t -> CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT))"
-    )
-    combine = f"(g, nxt) -> (g * {SHINGLE_BASE} + nxt) % {MINHASH_PRIME}L"
-    return F.expr(f"array_distinct({_grams_or_empty(h, k, combine, 'bigint')})")
+    return F.expr(f"array_distinct({_word_grams(text_col, k)})")
 
 
 def normalized_fingerprint(text: Column | str) -> Column:
@@ -138,25 +114,17 @@ def normalized_fingerprint(text: Column | str) -> Column:
     return F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tokens(text)))))
 
 
-def exact_dedup_groups(
-    df: DataFrame, id_col: str, text_col: str, normalized: bool = True
-) -> DataFrame:
-    """Exact dedup: one row per distinct content fingerprint with the
-    keeper id (min) and the duplicate count. One shuffle, fully scalable."""
-    fp = normalized_fingerprint(text_col) if normalized else F.md5(F.col(text_col))
+def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Exact dedup: one row per distinct ``normalized_fingerprint`` with
+    the keeper id (min) and the duplicate count. One shuffle, fully
+    scalable."""
     return (
-        df.withColumn("fingerprint", fp)
+        df.withColumn("fingerprint", normalized_fingerprint(text_col))
         .groupBy("fingerprint")
         .agg(
             F.min(id_col).alias("keep_id"),
             F.count(F.lit(1)).alias("n_docs"),
         )
-    )
-
-
-def _shingle_table(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("_id"), F.explode(word_shingles(text_col, k)).alias("_s")
     )
 
 
@@ -184,27 +152,105 @@ def _pair_jaccard(sh: DataFrame) -> DataFrame:
     )
 
 
+def _shared_sets(ss: DataFrame, reuse: str) -> DataFrame:
+    """The per-doc shingle-set frame that several branches of one plan
+    read. 'recompute' re-derives it per branch: the scale-safe mode when
+    the shingle table (~k× the corpus) exceeds cluster storage, since
+    re-shingling is an embarrassingly parallel scan+projection.
+    'checkpoint' localCheckpoints it so the shingle expression runs once
+    (Spark 4.1 measures it ~25% faster at bench SFs); the ContextCleaner
+    frees it when unreferenced, but its blocks are not recomputable after
+    executor loss."""
+    if reuse == "checkpoint":
+        return ss.localCheckpoint(eager=False)
+    if reuse != "recompute":
+        raise ValueError(f"unknown reuse mode {reuse!r}")
+    return ss
+
+
+def _prefix_postings(sh: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
+    """(_id, _s): each doc's PREFIX shingles out of the postings ``sh``
+    (_id, _s), given set sizes (_id, _n). Under one global order (document
+    frequency ascending, then shingle), a doc whose overlap with another
+    set must reach ⌈t·|S|⌉ shares one of its first |S| - ⌈t·|S|⌉ + 1
+    shingles with it, so joining prefixes alone loses no verified pair.
+    Prefixes hold the RAREST shingles: stopword grams seldom enter."""
+    dfreq = sh.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
+    ranked = (
+        sh.join(dfreq, "_s")
+        .withColumn(
+            "_rn",
+            F.row_number().over(
+                Window.partitionBy("_id").orderBy(F.asc("_df"), F.asc("_s"))
+            ),
+        )
+        .join(sizes, "_id")
+    )
+    # epsilon before ceil: when t·n is an exact integer the binary product
+    # can land a hair ABOVE it (fl(t) > t), ceil then rounds up one too
+    # high and the prefix comes out one short — a silent false negative
+    # exactly at the threshold boundary. 1e-9 is far below any
+    # meaningful threshold granularity at realistic |S|.
+    return ranked.filter(
+        F.col("_rn")
+        <= F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n") - F.lit(1e-9)) + 1
+    ).select("_id", "_s")
+
+
+def _verify(
+    cand: DataFrame, a: str, sets_a: DataFrame, b: str, sets_b: DataFrame,
+    name: str, metric, threshold: float,
+) -> DataFrame:
+    """(a, b, name) for the candidate pairs ``cand`` whose metric(|A∩B|)
+    is ≥ threshold. Each side's set and size (_sha, _na, _shb, _nb) come
+    in by id equi-join, so verification costs |candidates|, never n², and
+    no pair touches a shuffled shingle table."""
+    shared = F.size(F.array_intersect(F.col("_sha"), F.col("_shb")))
+    return (
+        cand.join(
+            sets_a.select(F.col("_id").alias(a), F.col("_sh").alias("_sha"), F.col("_n").alias("_na")),
+            a,
+        )
+        .join(
+            sets_b.select(F.col("_id").alias(b), F.col("_sh").alias("_shb"), F.col("_n").alias("_nb")),
+            b,
+        )
+        .select(a, b, metric(shared).alias(name))
+        .filter(F.col(name) >= threshold)
+    )
+
+
+def verified_pairs(
+    cand: DataFrame, a: str, sets_a: DataFrame, b: str, sets_b: DataFrame, threshold: float
+) -> DataFrame:
+    """(a, b, jaccard) for the candidate pairs ``cand`` (columns a, b)
+    whose true shingle-set Jaccard is ≥ threshold. ``sets_a``/``sets_b``
+    are ``shingle_sets`` frames (_id, _sh, _n) holding each side's docs.
+    The one verify step of every Jaccard pipeline here: prefix n-gram
+    Jaccard, MinHash+LSH (one-shot and incremental) and the streaming LSH
+    ingest."""
+    return _verify(
+        cand, a, sets_a, b, sets_b, "jaccard",
+        lambda shared: shared / (F.col("_na") + F.col("_nb") - shared), threshold,
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     k: int = 3,
     threshold: float = 0.2,
-    max_shingle_df: int | None = None,
     method: str = "prefix",
     reuse: str = "recompute",
 ) -> DataFrame:
     """Exact near-dup pairs by word-k-gram Jaccard ≥ threshold.
 
     ``method='prefix'`` (default) is the scale path: AllPairs/PPJoin-style
-    prefix filtering (Bayardo et al., WWW'07). Under one global shingle
-    order (document frequency ascending, then shingle value), a pair with
-    Jaccard ≥ t MUST share a shingle inside both docs' prefixes of length
-    ``|S| - ceil(t·|S|) + 1`` — so candidate generation joins ONLY on
-    prefix shingles and the exact Jaccard verifies candidates. Lossless
-    (identical output to the naive join, same oracle) but the join's hot
-    keys are gone by construction: a doc's prefix keeps its RAREST
-    shingles, so stopword grams (the df² cost) never generate candidates.
+    prefix filtering (Bayardo et al., WWW'07): candidates join ONLY on
+    both docs' ``_prefix_postings`` and ``verified_pairs`` computes their
+    exact Jaccard. Lossless (identical output to the naive join, same
+    oracle), but the join's hot keys are gone by construction.
 
     ``method='allpairs'`` keeps the naive inverted-index join (cost
     Σ_shingle df²) as the small-SF cross-check baseline. Honest local
@@ -218,112 +264,46 @@ def ngram_jaccard_pairs(
     explode the join, which is the failure mode that matters at 100 TB.
     Pick allpairs for small selective corpora, prefix for scale/skew.
 
-    ``max_shingle_df`` is the orthogonal skew guard: shingles appearing in
-    more than that many documents are dropped from the UNIVERSE before
-    anything else, and Jaccard is computed over the filtered universe
-    (intersection and union shrink together — semantics change, use when
-    stopword grams should not count as similarity at all).
-
-    ``reuse`` mirrors ``minhash_lsh_pairs``: the per-doc shingle-set
-    frame feeds several consumers (document frequencies, prefix ranking,
-    candidate verify); 'recompute' (default) re-derives it per consumer —
-    the scale-safe mode when the shingle frame (~k× the corpus) exceeds
-    cluster storage — while 'checkpoint' localCheckpoints it so the
-    shingle expression runs once (measured faster at bench SFs).
+    ``reuse`` (see ``_shared_sets``): the per-doc shingle-set frame feeds
+    the document frequencies, the prefix ranking and the candidate
+    verify.
     """
-    # Derive everything from the ARRAY-form shingle sets (r10): the old
-    # formulation re-built the exploded table from raw text per consumer
-    # AND paid a collect_set shuffle to re-assemble per-doc sets for the
-    # verify step that shingle_sets already provides (guide §2.4: one
-    # shuffle removed outright; §2.3: aggregate before you shuffle).
-    ss = shingle_sets(df, id_col, text_col, k)
-    if reuse == "checkpoint":
-        ss = ss.localCheckpoint(eager=False)
-    elif reuse != "recompute":
-        raise ValueError(f"unknown reuse mode {reuse!r}")
+    # Everything derives from the ARRAY-form shingle sets (r10): the
+    # exploded postings come from them, and the verify step reads them
+    # directly instead of re-assembling per-doc sets with a collect_set
+    # shuffle (guide §2.4: one shuffle removed outright).
+    ss = _shared_sets(shingle_sets(df, id_col, text_col, k), reuse)
     sh = ss.select("_id", F.explode("_sh").alias("_s"))
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("_s")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_shingle_df)
-            .select("_s")
-        )
-        sh = sh.join(hot, "_s", "left_anti")
-        # the filtered universe invalidates ss's arrays/sizes — rebuild
-        # per-doc sets from the filtered exploded table (pre-r10 shape)
-        ss = sh.groupBy("_id").agg(
-            F.collect_set("_s").alias("_sh"), F.count(F.lit(1)).alias("_n")
-        )
     if method == "allpairs":
         return _pair_jaccard(sh).filter(F.col("jaccard") >= threshold)
     if method != "prefix":
         raise ValueError(f"unknown method {method!r}")
 
-    from pyspark.sql import Window
-
-    dfreq = sh.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
-    ranked = (
-        sh.join(dfreq, "_s")
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("_id").orderBy(F.asc("_df"), F.asc("_s"))
-            ),
-        )
-        .join(ss.select("_id", "_n"), "_id")
-    )
-    # epsilon before ceil: when t·n is an exact integer the binary product
-    # can land a hair ABOVE it (fl(t) > t), ceil then rounds up one too
-    # high and the prefix comes out one short — a silent false negative
-    # exactly at the Jaccard threshold boundary. 1e-9 is far below any
-    # meaningful threshold granularity at realistic |S|.
-    prefix = ranked.filter(
-        F.col("_rn")
-        <= F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n") - F.lit(1e-9)) + 1
-    ).select("_id", "_s")
+    prefix = _prefix_postings(sh, ss.select("_id", "_n"), threshold)
     cand = (
         prefix.alias("a")
         .join(prefix.alias("b"), (F.col("a._s") == F.col("b._s")) & (F.col("a._id") < F.col("b._id")))
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .distinct()
     )
-    # exact verify on candidate pairs only: set arrays stay inside rows
-    # (ss IS the per-doc set frame — no collect_set re-aggregation)
-    sets = ss
-    inter = F.size(F.array_intersect(F.col("_sha"), F.col("_shb")))
-    return (
-        cand.join(sets.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"), F.col("_n").alias("_na")), "id_a")
-        .join(sets.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"), F.col("_n").alias("_nb")), "id_b")
-        .withColumn("jaccard", inter / (F.col("_na") + F.col("_nb") - inter))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return verified_pairs(cand, "id_a", ss, "id_b", ss, threshold)
 
 
-def shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, hashed: bool = False
-) -> DataFrame:
+def shingle_sets(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """(_id, _sh, _n): the distinct word-k-gram set per doc as an ARRAY
     column plus its size. Pure projection — zero shuffle; the whole
     shingle set stays inside one row (docs are bounded, corpora are not,
     so this is the scale-safe orientation). Docs with fewer than k words
     are dropped (they have no shingles, mirroring the exploded form where
-    they simply contribute no rows). ``hashed=True`` carries gram HASHES
-    (bigint) instead of gram strings — see ``hashed_word_shingles``."""
-    sh = hashed_word_shingles(text_col, k) if hashed else word_shingles(text_col, k)
-    # Drop <k-word docs via the CHEAP equivalent predicate on the token
-    # count, BEFORE the shingle projection. size(_sh) > 0 is exactly
-    # size(tokens) >= k (n>=k tokens yield n-k+1 >= 1 grams; distinct of
-    # a non-empty array is non-empty), but filtering on size(_sh) let
-    # Catalyst inline the WHOLE shingle expression into a filter and push
-    # it below an upstream fan_out exchange — evaluating the zip_with/
-    # concat/array_distinct chain twice, once of those single-threaded in
-    # the scan stage (r10 executed-plan audit; guide §4.4's duplicate-
-    # evaluation trap, built-in-expression edition).
+    they simply contribute no rows)."""
+    # Drop <k-word docs on the token count, BEFORE the shingle projection:
+    # size(tokens) >= k is exactly size(_sh) > 0, but filtering on
+    # size(_sh) let Catalyst inline the whole shingle expression into a
+    # filter pushed below an upstream fan_out exchange, evaluating it
+    # twice (r10 executed-plan audit).
     return (
         df.filter(F.size(tokens(text_col)) >= F.lit(k))
-        .select(F.col(id_col).alias("_id"), sh.alias("_sh"))
+        .select(F.col(id_col).alias("_id"), word_shingles(text_col, k).alias("_sh"))
         .withColumn("_n", F.size("_sh"))
     )
 
@@ -335,7 +315,6 @@ def minhash_signatures(
     k: int = 3,
     num_hashes: int = 8,
     shingle_sets_df: DataFrame | None = None,
-    hashed: bool = False,
 ) -> DataFrame:
     """(id, _m0.._m{n-1}) — min over shingle hashes per universal hash
     function, deterministic parameters from ``minhash_coeffs`` (md5-mixed
@@ -344,35 +323,18 @@ def minhash_signatures(
     Computed per-row as ``array_min(transform(shingles, h_i))`` over the
     shingle-set array: the signature needs NO shuffle at all (the exploded
     shingle→groupBy formulation shuffles the whole shingle table — strictly
-    worse at any scale). With ``hashed=True`` the shingle sets already
-    carry integer gram hashes (``hashed_word_shingles``) and feed the
-    universal-hash transforms directly; otherwise string grams are md5'd
-    ONCE here — either way no shingle is ever digested num_hashes times.
-    (Measured at sf0.1: the hashing+minhash slice
-    is ~5% of the pipeline; the real cost was always gram-STRING
-    construction, which hashed=True eliminates at the source.)"""
-    ss = (
-        shingle_sets_df
-        if shingle_sets_df is not None
-        else shingle_sets(df, id_col, text_col, k, hashed=hashed)
+    worse at any scale). Each gram is md5'd ONCE here, never num_hashes
+    times. (Measured at sf0.1: the hashing+minhash slice is ~5% of the
+    pipeline; the real cost is gram-string construction.)"""
+    ss = shingle_sets_df if shingle_sets_df is not None else shingle_sets(df, id_col, text_col, k)
+    # Single F.expr strings (r10): the Column-DSL form cost ~15 py4j
+    # round-trips per hash function, >1 s of driver-side plan building per
+    # dedup_minhash_lsh; the parser builds the identical Catalyst tree in
+    # ONE round trip. ``_hs`` mirrors md5_int, once per gram.
+    hashed_df = ss.select(
+        "_id",
+        F.expr("transform(_sh, s -> CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT))").alias("_hs"),
     )
-    # Expressions are built as single F.expr strings (r10): the Column-DSL
-    # form cost ~15 py4j round-trips per hash function (lambda plumbing +
-    # one trip per operator), ~1 ms each — measured at >1 s of pure
-    # driver-side plan construction per dedup_minhash_lsh build. The SQL
-    # parser produces the identical Catalyst tree in ONE round trip per
-    # expression. Values are unchanged (same ops, same literals).
-    if hashed:
-        hashed_df = ss.select("_id", F.col("_sh").alias("_hs"))
-    else:
-        # mirrors md5_int: first 8 md5 hex chars as bigint, per gram, once
-        hashed_df = ss.select(
-            "_id",
-            F.expr(
-                "transform(_sh, s -> CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT))"
-            ).alias("_hs"),
-        )
-
     mins = []
     for i in range(num_hashes):
         a, b = minhash_coeffs(i)
@@ -392,17 +354,14 @@ def minhash_band_table(
     num_hashes: int = 8,
     band_size: int = 2,
     shingle_sets_df: DataFrame | None = None,
-    hashed: bool = True,
 ) -> DataFrame:
     """(_id, _band, _bh): one row per (doc, LSH band); band signature =
     md5 of the in-band minhashes in hash-index order. Built by exploding
     a literal array of per-band structs over the per-row signature — pure
-    projection, no shuffle. Shared by the batch pipeline
-    (``minhash_lsh_pairs``) and the streaming admission index
-    (``streaming.jobs.foreach_batch_lsh_ingest``)."""
-    sig = minhash_signatures(
-        df, id_col, text_col, k, num_hashes, shingle_sets_df=shingle_sets_df, hashed=hashed
-    )
+    projection, no shuffle. Shared by the batch pipelines
+    (``minhash_lsh_pairs``, ``minhash_incremental_pairs``) and the
+    streaming admission index (``streaming.jobs.foreach_batch_lsh_ingest``)."""
+    sig = minhash_signatures(df, id_col, text_col, k, num_hashes, shingle_sets_df=shingle_sets_df)
     num_bands = num_hashes // band_size
     # one parsed expression for the whole per-band struct array (see the
     # py4j-chatter note in minhash_signatures) — same tree as the former
@@ -431,12 +390,11 @@ def minhash_lsh_pairs(
     band_size: int = 2,
     threshold: float = 0.2,
     reuse: str = "recompute",
-    hashed: bool = True,
     shingle_sets_df: DataFrame | None = None,
     broadcast_candidates: bool = False,
 ) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline: signature → bands → bucket join
-    → candidate pairs → verify with true Jaccard ≥ threshold.
+    → candidate pairs → ``verified_pairs`` with true Jaccard ≥ threshold.
 
     ``broadcast_candidates=True`` hints the candidate-pair table as the
     broadcast side of both verify joins. Default False (the scale-safe
@@ -447,67 +405,18 @@ def minhash_lsh_pairs(
     LARGER side) twice: measured 0.2 s faster at sf0.1 (guide §3.1:
     broadcast the side that fits, chosen deliberately).
 
-    ``hashed=True`` (default) runs the whole pipeline on integer gram
-    hashes (``hashed_word_shingles``): signatures transform the int
-    arrays directly and verification intersects int sets — gram strings
-    are never built. Local wall clock, re-measured late r3 (interleaved
-    A/B, 4 runs each in one session, sf0.1): the integer form is ~60%
-    SLOWER end-to-end (2.33-2.45 s vs 1.48-1.74 s) — the per-token md5
-    plus two polynomial zips cost more than string building saves at
-    this scale (an earlier "neutral" reading did not hold up). Kept as
-    default anyway for the scale argument, which is about BYTES, not
-    local CPU: a gram set is 8 B/element instead of a ~25 B string, so
-    the checkpointed/persisted shingle table, the verify-side arrays,
-    and their comparisons shrink ~3× at any corpus size — the tradeoff
-    that matters when shuffle/IO, not CPU, is the bottleneck. Bench-SF
-    call sites that want local speed pass ``hashed=False`` (the
-    registered ``dedup_minhash_lsh`` does).
-    ``hashed=False`` keeps the original string-gram sets (exact gram
-    identity, zero collision tolerance).
-
-    The candidate join keys on (band, md5-of-band-signature): its size is
-    the number of truly-colliding pairs — this is the 100 TB path (Jaccard
-    is only ever computed for candidates).
-
-    Shuffle budget: signatures are shuffle-free (array form), so the only
-    shuffles are the band self-join, the candidate distinct, and the two
-    id-equi-joins that verify candidates via ``array_intersect`` on the
-    per-doc shingle sets — cost tracks near-dup density, never n².
+    The candidate join keys on (band, md5-of-band-signature), so its size
+    is the number of truly-colliding pairs. Signatures are shuffle-free
+    (array form): the only shuffles are the band self-join, the candidate
+    distinct and the two verify id-joins — cost tracks near-dup density,
+    never n². This is the 100 TB path.
     """
-    # The shingle sets are read twice (signatures + candidate verify);
-    # ``reuse`` picks how, because each strategy fails differently:
-    # - 'recompute' (default): no caching — the shingle projection runs
-    #   again on the verify branch. This is the 100 TB default on purpose:
-    #   the shingle-set table is ~k× LARGER than the raw corpus, so
-    #   materializing it (persist or checkpoint) needs more storage than
-    #   the dataset itself, while recomputing is an embarrassingly
-    #   parallel scan+projection. (Local-SF timings are version-dependent:
-    #   Spark 4.0 measured recompute fastest; 4.1 measures localCheckpoint
-    #   ~25% faster — call sites that know the data fits executor storage
-    #   may pass 'checkpoint'. localCheckpoint races the ContextCleaner
-    #   into harmless accumulator-warning log spam.)
-    # - 'checkpoint': localCheckpoint — freed by the ContextCleaner when
-    #   unreferenced (no session-lifetime cache leak), but blocks are NOT
-    #   recomputable after executor loss.
-    # - 'persist': lineage kept (executor-loss safe) but lives until the
-    #   caller unpersists — leak-prone across repeated invocations.
-    # A caller that ALSO needs the shingle sets (e.g. the estimate gate,
-    # which attaches signatures built from them) passes shingle_sets_df
-    # so the corpus is shingled once, not per consumer.
-    ss = (
-        shingle_sets_df
-        if shingle_sets_df is not None
-        else shingle_sets(df, id_col, text_col, k, hashed=hashed)
-    )
-    if reuse == "checkpoint":
-        ss = ss.localCheckpoint(eager=False)
-    elif reuse == "persist":
-        ss = ss.persist()
-    elif reuse != "recompute":
-        raise ValueError(f"unknown reuse mode {reuse!r}")
-    bands = minhash_band_table(
-        df, id_col, text_col, k, num_hashes, band_size, shingle_sets_df=ss, hashed=hashed
-    )
+    # The sets feed signatures and verify (``reuse``: see _shared_sets). A
+    # caller that ALSO needs them (the estimate gate) passes shingle_sets_df.
+    if shingle_sets_df is None:
+        shingle_sets_df = shingle_sets(df, id_col, text_col, k)
+    ss = _shared_sets(shingle_sets_df, reuse)
+    bands = minhash_band_table(df, id_col, text_col, k, num_hashes, band_size, shingle_sets_df=ss)
     a = bands.alias("a")
     b = bands.alias("b")
     candidates = (
@@ -522,26 +431,7 @@ def minhash_lsh_pairs(
     )
     if broadcast_candidates:
         candidates = F.broadcast(candidates)
-    # verify ONLY candidate pairs: bring each side's shingle SET in by id
-    # equi-join and intersect the arrays — no pair ever touches a shuffled
-    # shingle table, so verification cost is |candidates|, not n².
-    left = ss.select(
-        F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"), F.col("_n").alias("_na")
-    )
-    right = ss.select(
-        F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"), F.col("_n").alias("_nb")
-    )
-    shared = F.size(F.array_intersect(F.col("_sha"), F.col("_shb")))
-    return (
-        candidates.join(left, "id_a")
-        .join(right, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (shared / (F.col("_na") + F.col("_nb") - shared)).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return verified_pairs(candidates, "id_a", ss, "id_b", ss, threshold)
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFrame:
@@ -679,9 +569,7 @@ def duplicated_spans(
 
     Returns (id_col, span_start, span_end, span_tokens, n_grams).
     """
-    from pyspark.sql import Window
-
-    full = F.expr(_grams_or_empty(_word_array(text_col), k, JOIN_WORDS, "string"))
+    full = F.expr(_word_grams(text_col, k))
     pos_grams = df.select(
         F.col(id_col).alias("_id"), F.posexplode(full).alias("_pos", "_gram")
     )
@@ -715,8 +603,6 @@ def minhash_incremental_pairs(
     num_hashes: int = 8,
     band_size: int = 2,
     threshold: float = 0.2,
-    hashed: bool = True,
-    reuse: str = "recompute",
 ) -> DataFrame:
     """Incremental near-dup admission — the PRODUCTION dedup shape: an
     incoming batch is checked against the EXISTING corpus, not against
@@ -728,32 +614,16 @@ def minhash_incremental_pairs(
 
     Candidates are (new-band ⋈ corpus-band) bucket collisions — an
     equi-join whose LEFT side is batch-sized, so cost tracks the batch,
-    never the corpus squared; verification intersects the two sides'
-    shingle sets per candidate. Returns (new_id, dup_of, jaccard ≥
-    threshold).
-
-    Each side's shingle sets feed BOTH its band build and the
-    verification join; ``reuse`` picks the recompute/checkpoint/persist
-    strategy exactly as in ``minhash_lsh_pairs`` (see the tradeoff note
-    there — 'recompute' stays the 100 TB default because the shingle
-    table is ~k× the corpus)."""
-    ss_new = shingle_sets(new_df, id_col, text_col, k, hashed=hashed)
-    ss_cor = shingle_sets(corpus_df, id_col, text_col, k, hashed=hashed)
-    if reuse == "checkpoint":
-        ss_new = ss_new.localCheckpoint(eager=False)
-        ss_cor = ss_cor.localCheckpoint(eager=False)
-    elif reuse == "persist":
-        ss_new = ss_new.persist()
-        ss_cor = ss_cor.persist()
-    elif reuse != "recompute":
-        raise ValueError(f"unknown reuse mode {reuse!r}")
+    never the corpus squared. Each side's shingle sets feed its band
+    build and ``verified_pairs``, recomputed per branch (the shingle
+    table is ~k× the corpus). Returns (new_id, dup_of, jaccard)."""
+    ss_new = shingle_sets(new_df, id_col, text_col, k)
+    ss_cor = shingle_sets(corpus_df, id_col, text_col, k)
     bn = minhash_band_table(
-        new_df, id_col, text_col, k, num_hashes, band_size,
-        shingle_sets_df=ss_new, hashed=hashed,
+        new_df, id_col, text_col, k, num_hashes, band_size, shingle_sets_df=ss_new
     )
     bc = minhash_band_table(
-        corpus_df, id_col, text_col, k, num_hashes, band_size,
-        shingle_sets_df=ss_cor, hashed=hashed,
+        corpus_df, id_col, text_col, k, num_hashes, band_size, shingle_sets_df=ss_cor
     )
     candidates = (
         bn.alias("a")
@@ -764,23 +634,7 @@ def minhash_incremental_pairs(
         .select(F.col("a._id").alias("new_id"), F.col("b._id").alias("dup_of"))
         .distinct()
     )
-    left = ss_new.select(
-        F.col("_id").alias("new_id"), F.col("_sh").alias("_sha"), F.col("_n").alias("_na")
-    )
-    right = ss_cor.select(
-        F.col("_id").alias("dup_of"), F.col("_sh").alias("_shb"), F.col("_n").alias("_nb")
-    )
-    shared = F.size(F.array_intersect(F.col("_sha"), F.col("_shb")))
-    return (
-        candidates.join(left, "new_id")
-        .join(right, "dup_of")
-        .select(
-            "new_id",
-            "dup_of",
-            (shared / (F.col("_na") + F.col("_nb") - shared)).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return verified_pairs(candidates, "new_id", ss_new, "dup_of", ss_cor, threshold)
 
 
 def containment_pairs(
@@ -789,7 +643,6 @@ def containment_pairs(
     text_col: str,
     k: int = 3,
     threshold: float = 0.8,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Directed near-containment pairs: |A∩B| / |A| ≥ threshold over word
     k-gram shingle sets — the "document A is mostly a snippet of B"
@@ -798,80 +651,29 @@ def containment_pairs(
     why corpus pipelines run containment as its own pass to drop quoted
     excerpts and boilerplate-wrapped copies.
 
-    Scale shape: the probe side joins only each doc's PREFIX shingles —
-    under any fixed global order (df ascending here, so prefixes hold
-    the RAREST grams), a pair with overlap ≥ ⌈t·|A|⌉ must share one of
-    A's first |A| - ⌈t·|A|⌉ + 1 shingles (any-subset argument; lossless
-    for exact verification). At t = 0.8 the probe carries ~20% of the
-    shingle table. The index side needs FULL postings (the shared gram
-    can sit anywhere in B's order, and B's own prefix bound degrades to
-    |B| when A is small), so ``max_shingle_df`` is the hot-gram guard to
-    set at corpus scale. Exact containment verifies candidates via
-    per-row set intersection — no pair ever touches a shuffled shingle
-    table."""
-    from pyspark.sql import Window
-
-    # per-doc shingle SETS come from the zero-shuffle projection (the
-    # same orientation minhash verification uses); the exploded postings
-    # derive from it, so the arrays the verify step needs are never
-    # rebuilt via a collect_set shuffle of the shingle table. Only the
-    # max_shingle_df branch — which changes the universe — reassembles
-    # filtered arrays.
+    Scale shape: the probe side joins only each doc's PREFIX shingles
+    (``_prefix_postings``): a pair with overlap ≥ ⌈t·|A|⌉ must share one
+    of A's first |A| - ⌈t·|A|⌉ + 1 shingles (lossless for exact
+    verification). At t = 0.8 the probe carries ~20% of the shingle
+    table. The index side needs FULL postings (the shared gram can sit
+    anywhere in B's order, and B's own prefix bound degrades to |B| when
+    A is small), so a hot gram inside some probe prefix joins its whole
+    posting list. Exact containment verifies candidates through the same
+    id-join as ``verified_pairs`` — no pair ever touches a shuffled
+    shingle table."""
+    # per-doc shingle SETS come from the zero-shuffle projection; the
+    # exploded postings derive from them, so the arrays the verify step
+    # needs are never rebuilt via a collect_set shuffle
     ss = shingle_sets(df, id_col, text_col, k)
     sh = ss.select("_id", F.explode("_sh").alias("_s"))
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("_s")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_shingle_df)
-            .select("_s")
-        )
-        sh = sh.join(hot, "_s", "left_anti")
-        sets = sh.groupBy("_id").agg(
-            F.collect_set("_s").alias("_sh"), F.count(F.lit(1)).alias("_n")
-        )
-    else:
-        sets = ss
-    sizes = sets.select("_id", "_n")
-    dfreq = sh.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
-    ranked = (
-        sh.join(dfreq, "_s")
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("_id").orderBy(F.asc("_df"), F.asc("_s"))
-            ),
-        )
-        .join(sizes, "_id")
-    )
-    # same epsilon-before-ceil rationale as ngram_jaccard_pairs: an exact
-    # t·n landing a hair high would silently shorten the prefix
-    prefix = ranked.filter(
-        F.col("_rn")
-        <= F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n") - F.lit(1e-9)) + 1
-    ).select("_id", "_s")
+    prefix = _prefix_postings(sh, ss.select("_id", "_n"), threshold)
     cand = (
         prefix.alias("a")
         .join(sh.alias("b"), (F.col("a._s") == F.col("b._s")) & (F.col("a._id") != F.col("b._id")))
         .select(F.col("a._id").alias("contained_id"), F.col("b._id").alias("container_id"))
         .distinct()
     )
-    inter = F.size(F.array_intersect(F.col("_sha"), F.col("_shb")))
-    return (
-        cand.join(
-            sets.select(
-                F.col("_id").alias("contained_id"), F.col("_sh").alias("_sha"),
-                F.col("_n").alias("_na"),
-            ),
-            "contained_id",
-        )
-        .join(
-            sets.select(
-                F.col("_id").alias("container_id"), F.col("_sh").alias("_shb"),
-            ),
-            "container_id",
-        )
-        .withColumn("containment", inter / F.col("_na"))
-        .filter(F.col("containment") >= threshold)
-        .select("contained_id", "container_id", "containment")
+    return _verify(
+        cand, "contained_id", ss, "container_id", ss, "containment",
+        lambda shared: shared / F.col("_na"), threshold,
     )

@@ -1,6 +1,6 @@
 """Text-analysis operators for training-data pipelines (north-star
 extensions, SURVEY.md §7 module 10): language ID, quality scoring, token
-counting, document fingerprinting.
+counting, repetition signals, tf-idf terms.
 
 All pure Column expressions (JVM-side, codegen'd) — a 100 TB corpus never
 leaves the executors and never crosses into Python.
@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .dedup import normalized_fingerprint, tokens  # re-exported building blocks
+from .dedup import tokens
 
 # Minimal stopword profiles for the n-gram/stopword-ratio language
 # heuristic. Deliberately tiny: the point is the operator shape (set
@@ -95,12 +95,6 @@ def quality_score(text: Column | str) -> Column:
     return 0.4 * length_c + 0.3 * punct_c + 0.3 * stop_c
 
 
-def doc_fingerprint(text: Column | str) -> Column:
-    """Stable content fingerprint: md5 of the sorted distinct token set
-    (whitespace/order-invariant). Alias of the dedup building block."""
-    return normalized_fingerprint(text)
-
-
 def repetition_signals(text: Column | str) -> dict[str, Column]:
     """Repetition-based quality signals (the corpus-filtering family
     popularized by large-LM data pipelines: heavily repeated content is a
@@ -110,13 +104,26 @@ def repetition_signals(text: Column | str) -> dict[str, Column]:
       (``1 - distinct/total``).
     - ``top_token_share``: share of the single most frequent token.
 
-    Pure per-row array expressions — per-doc cost is bounded by document
-    length (docs are bounded; corpora are not), zero shuffle, zero UDF.
+    Pure per-row array expressions, zero shuffle, zero UDF, O(n log n)
+    per document: the top count is one run-length fold over the sorted
+    tokens (the longest run of equal neighbours), not a filter over the
+    token array per distinct token, which is O(distinct × n) and stalls
+    on long documents.
     """
     t = tokens(text)
     n = F.greatest(F.size(t), F.lit(1))
     distinct = F.array_distinct(t)
-    counts = F.transform(distinct, lambda d: F.size(F.filter(t, lambda x: x == d)))
+    # acc = (previous token, current run, longest run); the first token
+    # never equals the null start, so its run starts at 1
+    start = F.struct(
+        F.lit(None).cast("string").alias("v"), F.lit(0).alias("run"), F.lit(0).alias("top")
+    )
+
+    def step(acc, x):
+        run = F.when(x == acc["v"], acc["run"] + 1).otherwise(F.lit(1))
+        return F.struct(x.alias("v"), run.alias("run"), F.greatest(acc["top"], run).alias("top"))
+
+    top = F.aggregate(F.sort_array(t), start, step, lambda acc: acc["top"])
     # size(NULL) is -1 in Spark: propagate null for null text instead of
     # emitting garbage ratios (the SQL oracle's len(NULL) is NULL too)
     c = F.col(text) if isinstance(text, str) else text
@@ -125,7 +132,7 @@ def repetition_signals(text: Column | str) -> dict[str, Column]:
             F.lit(1.0) - F.size(distinct) / n
         ),
         "top_token_share": F.when(c.isNull(), F.lit(None).cast("double")).otherwise(
-            F.array_max(counts) / n
+            top / n
         ),
     }
 
@@ -289,7 +296,7 @@ def bigram_logprob(df, id_col: str, text_col: str):
     )
 
 
-def tfidf_topk(df, id_col: str, text_col: str, k: int = 3, reuse: str = "checkpoint"):
+def tfidf_topk(df, id_col: str, text_col: str, k: int = 3):
     """Top-k characteristic terms per document by tf·idf.
 
     Plan that scales: (1) token counts per (doc, token) — ONE shuffle
@@ -298,21 +305,16 @@ def tfidf_topk(df, id_col: str, text_col: str, k: int = 3, reuse: str = "checkpo
     top-k — window on the doc key.
 
     The tf table feeds two branches (df counts + scoring) and Catalyst
-    prunes them differently, so AQE cannot reuse the exchange. The
-    DEFAULT is ``reuse='checkpoint'``: materialize tf once via
-    localCheckpoint and feed both branches from it — one tokenize+count
-    instead of two corpus scans, dropping the plan from 9 exchanges to a
-    single-scan shape. Right whenever the (doc, token, tf) table fits
-    executor storage, which is every realistic deployment short of the
-    corpus itself being storage-bound. ``reuse='recompute'`` is the
-    escape hatch for exactly that regime (tf rivals the corpus in size:
-    re-scanning is an embarrassingly parallel projection, materializing
-    is a second copy of the dataset) and for when executor-loss
-    recomputability matters (localCheckpoint blocks are not rebuildable).
-    The rejected third form, ``count(*) over (partition by token)``,
-    would be one scan with no materialization but serializes every
-    stopword token's corpus-sized group through one task — a 100 TB skew
-    bomb.
+    prunes them differently, so AQE cannot reuse the exchange. tf is
+    therefore materialized once via localCheckpoint and feeds both
+    branches — one tokenize+count instead of two corpus scans, dropping
+    the plan from 9 exchanges to a single-scan shape. Right whenever the
+    (doc, token, tf) table fits executor storage, which is every
+    realistic deployment short of the corpus itself being storage-bound;
+    localCheckpoint blocks are not rebuildable after executor loss. The
+    rejected alternative, ``count(*) over (partition by token)``, would
+    be one scan with no materialization but serializes every stopword
+    token's corpus-sized group through one task — a 100 TB skew bomb.
 
     idf is the RATIONAL form ``(N + 1) / (df + 1)`` rather than its log:
     integer-product-then-divide is a single correctly-rounded IEEE op, so
@@ -324,11 +326,11 @@ def tfidf_topk(df, id_col: str, text_col: str, k: int = 3, reuse: str = "checkpo
     from pyspark.sql import Window
 
     tok = df.select(F.col(id_col).alias("_id"), F.explode(tokens(text_col)).alias("_tok"))
-    tf = tok.groupBy("_id", "_tok").agg(F.count(F.lit(1)).alias("tf"))
-    if reuse == "checkpoint":
-        tf = tf.localCheckpoint(eager=False)
-    elif reuse != "recompute":
-        raise ValueError(f"unknown reuse mode {reuse!r}")
+    tf = (
+        tok.groupBy("_id", "_tok")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .localCheckpoint(eager=False)
+    )
     dfreq = tf.groupBy("_tok").agg(F.count(F.lit(1)).alias("df"))
     # corpus size joins in LAZILY (broadcast 1-row cross) — a .first() here
     # would run a full corpus scan at plan-BUILD time, firing jobs from

@@ -906,7 +906,7 @@ def dedup_verdict_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     document."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
 
-    keepers = dedup.exact_dedup_groups(docs, "doc_id", "text", normalized=True)
+    keepers = dedup.exact_dedup_groups(docs, "doc_id", "text")
     fp = dedup.normalized_fingerprint("text")
     exact = (
         docs.select(F.col("doc_id"), fp.alias("fingerprint"))
@@ -917,7 +917,7 @@ def dedup_verdict_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mh = dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", k=3, num_hashes=8, band_size=2,
-        threshold=0.2, hashed=False,
+        threshold=0.2,
     )
     near = (
         mh.select(F.col("id_b").alias("doc_id"), F.col("id_a").alias("_p"))

@@ -78,7 +78,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query's one real shuffle either way. (text_pii keeps its fan_out:
     # its regex chain measures 2.3× faster parallelized.)
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.exact_dedup_groups(docs, "doc_id", "text", normalized=True)
+    return dedup.exact_dedup_groups(docs, "doc_id", "text")
 
 
 DEDUP_EXACT_SQL = r"""
@@ -116,13 +116,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint ~3.3s vs recompute ~4.5s vs persist ~5.4s at sf0.1).
     # The operator's own default stays 'recompute' — the scale-safe mode
     # when the shingle table (~k× the corpus) exceeds cluster storage.
-    # hashed=False: interleaved A/B (4 runs each, one session, sf0.1)
-    # measures the string-gram pipeline at 1.48-1.74 s vs 2.33-2.45 s for
-    # the integer-gram form — the per-token md5 + double polynomial zip
-    # costs more locally than it saves. The operator keeps hashed=True as
-    # ITS default for the cluster argument (3× smaller checkpointed/
-    # shuffled shingle bytes); the registered bench query takes the
-    # measured-fastest local form, mirroring the reuse choice above.
     # broadcast_candidates=True (r10): at bench SFs the verified candidate
     # set is tiny; without the hint the planner's static estimates pick
     # the K×-larger shingle table as BOTH verify joins' build side
@@ -130,15 +123,15 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale-safe mode where the planner sizes the build side itself.
     pairs = dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", k=3, num_hashes=8, band_size=2, threshold=0.2,
-        reuse="checkpoint", hashed=False, broadcast_candidates=True,
+        reuse="checkpoint", broadcast_candidates=True,
     )
     return pairs.select("id_a", "id_b", derive.portable_round(F.col("jaccard"), 4).alias("jaccard"))
 
 
-# Mirrors the hashed-gram pipeline (dedup.hashed_word_shingles): tokens
-# md5'd once, gram hash = rolling polynomial (g*B + h) % P with
-# B=1000003, P=4294967311 — identical int64 arithmetic in both engines;
-# signatures, banding, and Jaccard verification all run on the hash sets.
+# Mirrors the string-gram pipeline (dedup.minhash_lsh_pairs): each distinct
+# word 3-gram string is md5'd once (first 8 hex chars as a bigint), and
+# the universal hashes (a*h + b) % P with P=4294967311 are the same int64
+# arithmetic in both engines; Jaccard verification runs on the gram sets.
 # The CTE chain is shared with the estimate-gate query below, so the two
 # oracles can never drift from each other.
 _MINHASH_CTE = (
@@ -207,15 +200,15 @@ def minhash_estimate_records(
     signature attach (reuse='recompute' tells the pipeline not to stack
     a second checkpoint on them); the two id-equi-joins that attach each
     side's signature are candidate-bounded, never n²."""
-    ss = dedup.shingle_sets(docs, id_col, text_col, k, hashed=False).localCheckpoint(
+    ss = dedup.shingle_sets(docs, id_col, text_col, k).localCheckpoint(
         eager=False
     )
     pairs = dedup.minhash_lsh_pairs(
         docs, id_col, text_col, k=k, num_hashes=num_hashes, band_size=band_size,
-        threshold=threshold, reuse="recompute", hashed=False, shingle_sets_df=ss,
+        threshold=threshold, reuse="recompute", shingle_sets_df=ss,
     )
     sig = dedup.minhash_signatures(
-        docs, id_col, text_col, k, num_hashes, shingle_sets_df=ss, hashed=False
+        docs, id_col, text_col, k, num_hashes, shingle_sets_df=ss
     )
     n = num_hashes
     a = sig.select(F.col("_id").alias("id_a"), *[F.col(f"_m{i}").alias(f"_a{i}") for i in range(n)])
@@ -424,7 +417,7 @@ FROM documents
 
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id", textops.doc_fingerprint("text").alias("fingerprint"))
+    return docs.select("doc_id", dedup.normalized_fingerprint("text").alias("fingerprint"))
 
 
 TEXT_FINGERPRINT_SQL = r"""
@@ -2957,7 +2950,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.col("doc_id") % 7 != 3)
     pairs = dedup.minhash_incremental_pairs(
         batch, corpus, "doc_id", "text",
-        k=3, num_hashes=8, band_size=2, threshold=0.2, hashed=False,
+        k=3, num_hashes=8, band_size=2, threshold=0.2,
     )
     return pairs.select(
         "new_id", "dup_of", derive.portable_round(F.col("jaccard"), 4).alias("jaccard")
@@ -3660,12 +3653,11 @@ def dedup_levenshtein_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract, documented here rather than silently assumed.
 
     Scale shape: one shuffle to blocks; the self-join is equi on the
-    block key, and the ``LEV_MAX_BLOCK`` guard (the max_shingle_df
-    pattern) drops pathological blocks so per-block work is
-    O(LEV_MAX_BLOCK²·LEV_PREFIX²) bounded — no quadratic blowup on a
-    skewed key. Dropped blocks are a documented coverage cap (the
-    no-silent-caps rule: the guard is part of the operator contract,
-    like max_shingle_df)."""
+    block key, and the ``LEV_MAX_BLOCK`` guard (a hot-key cap) drops
+    pathological blocks so per-block work is O(LEV_MAX_BLOCK²·LEV_PREFIX²)
+    bounded — no quadratic blowup on a skewed key. Dropped blocks are a
+    documented coverage cap (the no-silent-caps rule: the guard is part
+    of the operator contract)."""
     docs = fan_out(load_table(spark, sf_dir, "documents")).filter(
         F.col("text").isNotNull()
     )

@@ -356,7 +356,7 @@ def dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     caught = dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", k=3, num_hashes=8, band_size=2,
-        threshold=0.2, hashed=False,
+        threshold=0.2,
     ).select("id_a", "id_b", F.lit(1).alias("_c"))
     j = truth.join(caught, ["id_a", "id_b"], "left").select(
         (F.expr("_jx DIV 1000") * 10).alias("bucket_lo_x100"),

@@ -46,6 +46,10 @@ def get_spark(
       ``FileSystemBasedCheckpointFileManager``: under a third of the
       per-batch log cost on a local disk, and the same atomicity for
       those write-once files (the argument is at the conf below).
+    - Python workers get this package's parent directory on their
+      ``PYTHONPATH`` (merged with the worker's own), so UDFs that
+      reference package functions run whatever the caller's working
+      directory or environment.
 
     ``cpus`` defaults to ``SPARK_GRAFT_CPUS``, else the CPUs this process
     may run on. ``getOrCreate`` hands back a live session as it is, master
@@ -82,6 +86,7 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
@@ -127,6 +132,9 @@ def _usable_cpus() -> int:
     except AttributeError:  # no affinity API on this platform
         return os.cpu_count() or 1
 
+
+#: the directory that holds this package: Python workers import it from here
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: (requested, live) master pairs already warned about
 _MASTER_WARNED: set[tuple[str, str]] = set()

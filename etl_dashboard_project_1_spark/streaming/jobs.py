@@ -626,7 +626,7 @@ def foreach_batch_lsh_ingest(
     executor memory (watermarked streaming state would grow without bound
     across days): the persistent index is a band store (band, bh, id) —
     bucket collisions generate candidates — and a sets store
-    (id, shingle-hash set) that verifies them. Per-batch cost tracks
+    (id, word-gram set) that verifies them. Per-batch cost tracks
     bucket collisions, never |corpus| × |batch|; at scale both stores
     partition by band / id-prefix so the joins prune to touched buckets.
 
@@ -646,24 +646,16 @@ def foreach_batch_lsh_ingest(
         from pyspark.sql import functions as SF
 
         spark = batch_df.sparkSession
-        ss = dedup.shingle_sets(batch_df, id_col, text_col, k, hashed=True)
+        ss = dedup.shingle_sets(batch_df, id_col, text_col, k)
         bands = dedup.minhash_band_table(
-            batch_df, id_col, text_col, k, num_hashes, band_size,
-            shingle_sets_df=ss, hashed=True,
+            batch_df, id_col, text_col, k, num_hashes, band_size, shingle_sets_df=ss
         )
-        left = ss.select(SF.col("_id").alias("_ida"), SF.col("_sh").alias("_sha"),
-                         SF.col("_n").alias("_na"))
-        right = ss.select(SF.col("_id").alias("_idb"), SF.col("_sh").alias("_shb"),
-                          SF.col("_n").alias("_nb"))
 
-        def verified(cand):
-            shared = SF.size(SF.array_intersect(SF.col("_sha"), SF.col("_shb")))
-            jac = shared / (SF.col("_na") + SF.col("_nb") - shared)
-            return (
-                cand.join(left, "_ida").join(right, "_idb")
-                .filter(jac >= threshold)
-                .select(SF.col("_idb").alias("_rej"))
-            )
+        def rejected_ids(cand, seen_sets):
+            # _idb: the batch doc that a verified near-dup _ida rejects
+            return dedup.verified_pairs(
+                cand, "_ida", seen_sets, "_idb", ss, threshold
+            ).select(SF.col("_idb").alias("_rej"))
 
         # (a) within-batch: smaller id wins any verified near-dup pair
         a, b = bands.alias("a"), bands.alias("b")
@@ -674,27 +666,18 @@ def foreach_batch_lsh_ingest(
             .select(SF.col("a._id").alias("_ida"), SF.col("b._id").alias("_idb"))
             .distinct()
         )
-        rejected = verified(cand_in)
+        rejected = rejected_ids(cand_in, ss)
         # (b) cross-batch: collide new bands against the persistent index
         if os.path.exists(bands_dir):
             seen_bands = spark.read.parquet(bands_dir)
-            seen_sets = spark.read.parquet(sets_dir).select(
-                SF.col("_id").alias("_ida"), SF.col("_sh").alias("_sha"),
-                SF.col("_n").alias("_na"),
-            )
             cand_x = (
                 bands.join(seen_bands, ["_band", "_bh"])
                 .select(SF.col("_seen_id").alias("_ida"), SF.col("_id").alias("_idb"))
                 .distinct()
             )
-            shared = SF.size(SF.array_intersect(SF.col("_sha"), SF.col("_shb")))
-            jac = shared / (SF.col("_na") + SF.col("_nb") - shared)
-            rej_x = (
-                cand_x.join(seen_sets, "_ida").join(right, "_idb")
-                .filter(jac >= threshold)
-                .select(SF.col("_idb").alias("_rej"))
+            rejected = rejected.unionByName(
+                rejected_ids(cand_x, spark.read.parquet(sets_dir))
             )
-            rejected = rejected.unionByName(rej_x)
         admitted = batch_df.join(
             rejected.distinct().withColumnRenamed("_rej", id_col), id_col, "left_anti"
         )
@@ -709,52 +692,3 @@ def foreach_batch_lsh_ingest(
     q = stream_df.writeStream.outputMode("append").foreachBatch(do_ingest).start()
     _drain_or_stop(q)
     return q
-
-
-def stateful_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals on Spark 4's ``transformWithStateInPandas``
-    — the NEW arbitrary-state API (typed ValueState/ListState handles,
-    timers, TTL) that supersedes ``applyInPandasWithState``. Identical
-    semantics to ``stateful_user_totals``; kept as the forward-looking
-    variant.
-
-    Environment note: the TWS Python worker speaks a protobuf protocol to
-    the JVM state server, so this path needs ``google.protobuf`` at
-    runtime (and the RocksDB state-store provider, set by the caller).
-    In containers without protobuf the query fails at stream start with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE — the test suite
-    probes for the dependency and skips; ``stateful_user_totals`` is the
-    dependency-free fallback with the same behavior."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle):
-            schema = StructType(
-                [StructField("n", LongType()), StructField("total", DoubleType())]
-            )
-            self._state = handle.getValueState("totals", schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].fillna(0.0).sum())
-            self._state.update((n, float(total)))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
-            )
-
-        def close(self):
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningTotals(),
-        outputStructType="user_id bigint, n_events bigint, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )

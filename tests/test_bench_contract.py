@@ -1,7 +1,7 @@
 """bench.py contract smoke: the driver runs it once per round, so a
-broken import, a HEADLINE name that fell out of the registry, or a
-broken extras builder would silently cost the round's external perf
-artifact. Pin the pieces cheaply (no timed passes, sf0.001 forcing)."""
+broken import or a HEADLINE name that fell out of the registry would
+break its one JSON line. Pin the pieces cheaply (no timed passes,
+sf0.001 forcing)."""
 
 import os
 import sys
@@ -24,6 +24,4 @@ def test_headline_and_extras_execute(spark):
     reg = entrymod.queries()
     for name in bench.HEADLINE:
         bench.force(reg[name](spark, SF))
-    for name, fn in bench._extra_queries(spark, SF).items():
-        bench.force(fn(spark, SF))
 

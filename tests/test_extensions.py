@@ -352,26 +352,6 @@ def test_ivf_prebuilt_index_matches_inline_fit(spark):
     assert [tuple(r) for r in prebuilt] == [tuple(r) for r in inline]
 
 
-def test_ngram_jaccard_df_cap_kills_hot_shingles(spark):
-    """Skew guard: many unrelated docs sharing one stopword gram explode
-    the df² self-join; with max_shingle_df the hot gram is dropped from
-    the universe while genuinely near-identical pairs survive."""
-    hot = "as a matter of fact"  # one shared 5-word prefix -> hot 3-grams
-    rows = [(i, f"{hot} unique{i} filler{i} tail{i}") for i in range(20)]
-    rows += [(100, "zebra quantum lattice horizon drum"),
-             (101, "zebra quantum lattice horizon drumkit")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    uncapped = dedup.ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.2)
-    capped = dedup.ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.2, max_shingle_df=5)
-    un_pairs = {(r["id_a"], r["id_b"]) for r in uncapped.collect()}
-    cap_pairs = {(r["id_a"], r["id_b"]) for r in capped.collect()}
-    # hot-gram-only pairs appear without the cap, vanish with it
-    assert any(a < 100 and b < 100 for a, b in un_pairs)
-    assert not any(a < 100 and b < 100 for a, b in cap_pairs)
-    # the true near-dup pair survives the cap
-    assert (100, 101) in cap_pairs
-
-
 def test_chunk_overlap_boundaries(spark):
     """Chunk arithmetic: short doc -> 1 chunk; a doc of exactly
     chunk_size -> 1; one token over -> 2 overlapping chunks whose token
@@ -406,6 +386,33 @@ def test_repetition_signals_extremes(spark):
     ).collect()}
     assert got[1] == (0.75, 1.0)   # all repeats of one token
     assert got[2] == (0.0, 0.25)   # all distinct
+
+
+def test_repetition_signals_long_document_matches_counter(spark):
+    """One ~50k-token document (a few thousand distinct tokens, skewed
+    frequencies): both signals must equal the exact counts that
+    ``collections.Counter`` gives. The counting is a run-length fold over
+    the sorted tokens, so a document this long finishes in seconds; a
+    per-distinct-token filter over the token array (O(distinct × len))
+    does not."""
+    import collections
+    import random
+
+    from etl_dashboard_project_1_spark.operators import textops
+
+    rng = random.Random(7)
+    # 30 % from 20 hot tokens, 70 % from 8,000 rare ones
+    words = [f"w{rng.randrange(20) if rng.random() < 0.3 else rng.randrange(8000)}"
+             for _ in range(50_000)]
+    docs = spark.createDataFrame([(1, " ".join(words))], ["doc_id", "text"])
+    sig = textops.repetition_signals("text")
+    row = docs.select(
+        sig["dup_word_ratio"].alias("dup"), sig["top_token_share"].alias("top")
+    ).first()
+    counts = collections.Counter(words)
+    assert len(counts) > 5000
+    assert row["dup"] == pytest.approx(1.0 - len(counts) / len(words), rel=1e-12)
+    assert row["top"] == pytest.approx(max(counts.values()) / len(words), rel=1e-12)
 
 
 def test_dq_check_rules_counts_and_single_pass(spark):
@@ -753,15 +760,14 @@ def test_cms_never_underestimates_any_token(spark):
 def test_minhash_signature_tracks_true_jaccard(spark):
     """Regression for the near-monotone hash family: doc pair (229, 263)
     has true 3-gram Jaccard 0.956, so a sound 8-hash signature must agree
-    on most components in BOTH shingle modes. The old a=2i+1 multipliers
-    were near-monotone on [0, P) — every hash picked the set's raw
-    minimum and this pair agreed 0/8 in hashed mode."""
+    on most components. The old a=2i+1 multipliers were near-monotone on
+    [0, P) — every hash picked the set's raw minimum and this pair agreed
+    0/8 on integer gram hashes."""
     docs = load_table(spark, SF, "documents").filter(F.col("doc_id").isin([229, 263]))
-    for hashed in (False, True):
-        sig = dedup.minhash_signatures(docs, "doc_id", "text", 3, 8, hashed=hashed).collect()
-        s = {r["_id"]: [r[f"_m{i}"] for i in range(8)] for r in sig}
-        agree = sum(int(s[229][i] == s[263][i]) for i in range(8))
-        assert agree >= 5, f"hashed={hashed}: only {agree}/8 components agree"
+    sig = dedup.minhash_signatures(docs, "doc_id", "text", 3, 8).collect()
+    s = {r["_id"]: [r[f"_m{i}"] for i in range(8)] for r in sig}
+    agree = sum(int(s[229][i] == s[263][i]) for i in range(8))
+    assert agree >= 5, f"only {agree}/8 components agree"
 
 
 def test_ngram_novelty_bounds_and_first_doc_full_novelty(spark):
@@ -1160,14 +1166,12 @@ def test_incremental_minhash_equals_cross_set_slice_of_self_join(spark):
     incr = {
         frozenset((r["new_id"], r["dup_of"]))
         for r in dedup.minhash_incremental_pairs(
-            batch, corpus, "doc_id", "text", threshold=0.2, hashed=False
+            batch, corpus, "doc_id", "text", threshold=0.2
         ).collect()
     }
     full = {
         frozenset((r["id_a"], r["id_b"]))
-        for r in dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.2, hashed=False
-        ).collect()
+        for r in dedup.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.2).collect()
         if (r["id_a"] % 7 == 3) != (r["id_b"] % 7 == 3)
     }
     assert incr == full
@@ -1178,14 +1182,14 @@ def test_containment_prefix_filter_is_lossless(spark):
     the naive all-postings join exactly (the filter is an any-subset
     bound, not an approximation)."""
     from etl_dashboard_project_1_spark.operators.dedup import (
-        _shingle_table, containment_pairs)
+        containment_pairs, shingle_sets)
 
     docs = load_table(spark, SF, "documents")
     got = {
         (r["contained_id"], r["container_id"], round(r["containment"], 6))
         for r in containment_pairs(docs, "doc_id", "text", threshold=0.8).collect()
     }
-    sh = _shingle_table(docs, "doc_id", "text", 3)
+    sh = shingle_sets(docs, "doc_id", "text", 3).select("_id", F.explode("_sh").alias("_s"))
     sizes = {r["_id"]: r["n"] for r in sh.groupBy("_id").agg(F.count(F.lit(1)).alias("n")).collect()}
     import collections
     members = collections.defaultdict(set)
@@ -1222,7 +1226,7 @@ def test_minhash_estimate_gate_twins_agree_fully(spark):
     assert [(r["id_a"], r["id_b"]) for r in rows] == [(1, 2)]
     assert rows[0]["jaccard"] == 1.0
     assert rows[0]["sig_matches"] == 8  # identical shingle set => identical signature
-    sig = dedup.minhash_signatures(docs, "doc_id", "text", 3, 8, hashed=False).collect()
+    sig = dedup.minhash_signatures(docs, "doc_id", "text", 3, 8).collect()
     s = {r["_id"]: [r[f"_m{i}"] for i in range(8)] for r in sig}
     assert s[1] == s[2]
     assert s[1] != s[3]
@@ -1431,13 +1435,11 @@ def test_fast_shingle_cte_matches_shared_cte_multiset():
 
 
 def test_shingle_expr_and_dsl_forms_identical(spark):
-    """The shingle builders render one SQL-text gram fold
+    """The shingle builder renders one SQL-text gram fold
     (``dedup.gram_fold``). On edge-shaped text (fewer than k words, empty,
-    repeated grams, whitespace runs, case) they must yield exactly the
-    distinct grams, and the md5-rolled gram hashes, that a Python split
-    computes, in first-occurrence order, including the <k-word
-    empty-array contract."""
-    import hashlib
+    repeated grams, whitespace runs, case) it must yield exactly the
+    distinct grams that a Python split computes, in first-occurrence
+    order, including the <k-word empty-array contract."""
     import re
 
     from pyspark.sql import types as T
@@ -1453,32 +1455,20 @@ def test_shingle_expr_and_dsl_forms_identical(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
 
-    def md5_int(t):
-        return int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
-
-    def grams(text, k, hashed):
+    def grams(text, k):
         w = re.split(r"\s+", text.lower())  # Java split, limit -1
         out = []
         for i in range(len(w) - k + 1):
-            if hashed:
-                g = md5_int(w[i])
-                for t in w[i + 1 : i + k]:
-                    g = (g * dedup.SHINGLE_BASE + md5_int(t)) % dedup.MINHASH_PRIME
-            else:
-                g = " ".join(w[i : i + k])
+            g = " ".join(w[i : i + k])
             if g not in out:
                 out.append(g)
         return out
 
-    for fn, hashed, elem in (
-        (dedup.word_shingles, False, T.StringType()),
-        (dedup.hashed_word_shingles, True, T.LongType()),
-    ):
-        for k in (2, 3):
-            got = df.select("doc_id", fn("text", k).alias("x")).orderBy("doc_id")
-            assert got.schema["x"].dataType.elementType == elem, (fn.__name__, k)
-            want = [grams(text, k, hashed) for _, text in rows]
-            assert [r["x"] for r in got.collect()] == want, (fn.__name__, k)
+    for k in (2, 3):
+        got = df.select("doc_id", dedup.word_shingles("text", k).alias("x")).orderBy("doc_id")
+        assert got.schema["x"].dataType.elementType == T.StringType(), k
+        want = [grams(text, k) for _, text in rows]
+        assert [r["x"] for r in got.collect()] == want, k
 
 
 def test_text_builders_quote_spaced_column_names(spark):
@@ -1488,10 +1478,9 @@ def test_text_builders_quote_spaced_column_names(spark):
         [(1, "a b c", [1.0, 0.0]), (2, "c b a", [0.0, 1.0])], ["id", "doc text", "emb v"]
     )
     plain = df.withColumnRenamed("doc text", "t")
-    for fn in (dedup.word_shingles, dedup.hashed_word_shingles):
-        got = [r[0] for r in df.select(fn("doc text", 2)).collect()]
-        assert got == [r[0] for r in plain.select(fn("t", 2)).collect()], fn.__name__
-        assert [len(g) for g in got] == [2, 2], fn.__name__
+    got = [r[0] for r in df.select(dedup.word_shingles("doc text", 2)).collect()]
+    assert got == [r[0] for r in plain.select(dedup.word_shingles("t", 2)).collect()]
+    assert [len(g) for g in got] == [2, 2]
     top = vector.cosine_topk(df, "id", "emb v", [1.0, 0.0], k=1).collect()
     assert [(r["id"], r["cosine"]) for r in top] == [(1, 1.0)]
 
@@ -1503,11 +1492,10 @@ def test_shingle_sets_tokencount_filter_matches_old_size_filter(spark):
     fan_out exchange). The predicates must keep the same kept-set: every
     emitted row has _n > 0, and every doc with >= k tokens is emitted."""
     docs = load_table(spark, SF, "documents")
-    for hashed in (False, True):
-        ss = dedup.shingle_sets(docs, "doc_id", "text", 3, hashed=hashed)
-        assert ss.filter(F.col("_n") <= 0).count() == 0
-        n_kept = ss.count()
-        n_eligible = docs.filter(
-            F.size(F.split(F.lower("text"), r"\s+")) >= 3
-        ).count()
-        assert n_kept == n_eligible
+    ss = dedup.shingle_sets(docs, "doc_id", "text", 3)
+    assert ss.filter(F.col("_n") <= 0).count() == 0
+    n_kept = ss.count()
+    n_eligible = docs.filter(
+        F.size(F.split(F.lower("text"), r"\s+")) >= 3
+    ).count()
+    assert n_kept == n_eligible

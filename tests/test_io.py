@@ -131,6 +131,33 @@ def test_get_spark_defaults_to_usable_cpus_and_warns_once_on_master_mismatch(
         assert requested in msgs[0] and live in msgs[0], msgs[0]
 
 
+def test_udf_query_runs_from_outside_the_repo(tmp_path):
+    """A process that imports the registry by putting the repo on
+    ``sys.path`` from another working directory, with ``PYTHONPATH``
+    unset, must still run the queries whose Python UDFs reference package
+    functions: the Python workers find the package through the path
+    ``get_spark`` hands them, not through the caller's environment."""
+    import subprocess
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        import __spark_entry__ as entry
+        from etl_dashboard_project_1_spark.session import get_spark
+        spark = get_spark(cpus=1)
+        print(len(entry.queries()["h9_llm_headers"](spark, {SF!r}).collect()))
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert int(out.stdout.split()[-1]) > 0
+
+
 # --- S1-S3 acquisition chain with fake transports ---------------------------
 
 _SAMPLE_HTML = """

@@ -295,7 +295,7 @@ def test_incremental_minhash_subset_of_exact_jaccard(spark, docs, split):
     batch = sdf.filter(F.col("doc_id") % 7 == split % 7)
     corpus = sdf.filter(F.col("doc_id") % 7 != split % 7)
     got = minhash_incremental_pairs(
-        batch, corpus, "doc_id", "text", threshold=0.2, hashed=False
+        batch, corpus, "doc_id", "text", threshold=0.2
     ).collect()
 
     def grams(text):

@@ -444,15 +444,15 @@ SWEEP_GATES = [
     # (307/308, only the pinned set_ops class) — the calendar mirrors
     # hold on sparse multi-decade series.
     ("longspan", 50, "longspan"),
-    # NOT YET GATED: --longtext (tools/tiny_sweep.py LONGTEXT, ~218k-char
+    # NOT GATED: --longtext (tools/tiny_sweep.py LONGTEXT, ~218k-char
     # docs) is an instrumented MANUAL axis — its runs caught and fixed
     # live O(len²) classes (boilerplate strip, span dedup, the shingle
     # oracle CTE). Every word k-gram builder now goes through the linear
-    # dedup.gram_fold; the per-document builder still quadratic in
-    # document length is textops.repetition_signals (a filter over the
-    # token array per distinct token, in the text_repetition query),
-    # so the full registry does not yet complete in bounded time under
-    # it. Staging status is documented at tools/tiny_sweep.py LONGTEXT.
+    # dedup.gram_fold, and textops.repetition_signals counts with a
+    # sorted run-length fold (O(n log n); a 50k-token document is
+    # checked in test_extensions). The axis stays out of tier-1 for its
+    # run time, which the tier-1 timeout has no margin for. Staging
+    # status is documented at tools/tiny_sweep.py LONGTEXT.
 ]
 
 #: r8 upgrade (r7 verdict item 4): the adjudicated cross-engine

@@ -358,46 +358,6 @@ def test_foreach_batch_lsh_ingest_near_dup_admission(spark, tmp_path):
     assert idx == {1, 2, 5}
 
 
-def test_transform_with_state_totals_when_available(spark):
-    """Spark 4's transformWithStateInPandas variant must agree with the
-    batch aggregate — skipped where the TWS python worker's protobuf
-    dependency is absent (this container), in which case the
-    applyInPandasWithState path (tested above) is the supported one."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf absent: TWS python worker cannot start")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    out = jobs.stateful_user_totals_tws(jobs.read_events_stream(spark, SF))
-    q = jobs.run_stream_to_memory(out, "t_tws_totals", output_mode="update")
-    try:
-        got = {
-            r["user_id"]: (r["n_events"], r["total_value"])
-            for r in spark.table("t_tws_totals").collect()
-        }
-    finally:
-        q.stop()
-    exact = {
-        r["user_id"]: (r["n"], r["s"])
-        for r in jobs.normalize_event_ts(
-            spark.read.parquet(f"{SF}/events.parquet")
-        )
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.coalesce("value", F.lit(0.0))), 2).alias("s"),
-        )
-        .collect()
-    }
-    assert got == exact
-
-
 def test_stream_left_outer_join_finalizes_unmatched(spark, tmp_path):
     """LEFT OUTER stream-stream interval join: matched rows emit
     immediately; UNMATCHED errors emit null-extended only after the
@@ -779,9 +739,7 @@ def test_lsh_ingest_single_batch_equals_batch_reject_rule(spark, tmp_path):
         r["doc_id"]
         for r in spark.read.parquet(os.path.join(target, "data")).collect()
     }
-    pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", hashed=True, **params
-    )
+    pairs = dedup.minhash_lsh_pairs(docs, "doc_id", "text", **params)
     rejected = {r["id_b"] for r in pairs.select("id_b").distinct().collect()}
     want = {r["doc_id"] for r in docs.collect()} - rejected
     assert admitted == want

@@ -223,10 +223,11 @@ LONGSPAN = {
 #: member. Its runs caught and fixed live O(len²) classes
 #: (textops.boilerplate_strip's membership scan and slice segmentation;
 #: span_dedup_repeated and dedup.duplicated_spans gram building; the
-#: shared shingle oracle CTE), but other transform-over-starts gram
-#: builders remain in operators/textops.py and operators/dedup.py
-#: (e.g. ngram_jaccard verification on 36k-token docs), and the gate
-#: lands when the full registry completes in bounded time. The
+#: shared shingle oracle CTE). Every word k-gram builder now goes
+#: through the linear dedup.gram_fold and textops.repetition_signals
+#: counts with a sorted run-length fold, O(n log n); the full registry
+#: has not been re-run under the axis since, and the gate stays out of
+#: tier-1 for its run time. The
 #: full-registry probe (tools/longtext_probe.py — per-query budget +
 #: resume; prefer it over the plain loop here, which one staller
 #: blocks) measured 291 MATCH / 15 stalls before the shingle oracle CTE
